@@ -388,7 +388,7 @@ object Bench {
       if (vecSkip.isDefined) Nil
       else {
         import org.apache.spark.sql.functions.{col, lit, pmod}
-        import graft.operators.VectorIndex
+        import graft.operators.{Codec, VectorIndex}
         def emb() = graft.sources.Tables.embeddings(spark, vecDir)
         def vq() = emb().filter(pmod(col("vec_id"), lit(390)) === 0)
         val vroot = "/root/repo/target/vecbench_tier_" +
@@ -415,14 +415,15 @@ object Bench {
             VectorIndex.topK(spark, vq(), "vec_id", "embedding",
               s"$vroot/ivf", k = 10, nprobe = 8).count()),
           "vec_sq_build" -> (() => {
-            VectorIndex.buildSq(emb(), "vec_id", "embedding",
-              fresh("sq"), nlist = 64, nInit = 2, corpusTag = vecDir)
+            VectorIndex.build(emb(), "vec_id", "embedding", fresh("sq"),
+              nlist = 64, nInit = 2, corpusTag = vecDir,
+              codec = Codec.Sq8())
             1L
           }),
           "vec_sq_probe" -> (() =>
-            VectorIndex.topKSq(spark, vq(), emb(), "vec_id",
-              "embedding", s"$vroot/sq", k = 10, nprobe = 8,
-              refine = 4).count()),
+            VectorIndex.topK(spark, vq(), "vec_id", "embedding",
+              s"$vroot/sq", k = 10, nprobe = 8, refine = 4,
+              corpus = Some(emb())).count()),
           "vec_ivf_append10k" -> (() => {
             val d = 64
             import org.apache.spark.sql.functions._

@@ -12,11 +12,14 @@ import graft.functions.VectorFns
   * Scale notes: `bruteForceTopK` broadcasts the QUERY side (queries
   * are assumed few; the corpus is the 100-TB side) and scans the
   * corpus once — O(|corpus|·|queries|) scoring but no shuffle of the
-  * corpus. `ivfTopK` is the scale path: a KMeans coarse quantizer
-  * (trained on a sample, centroid count `nlist`) buckets the corpus;
-  * each query probes only its `nprobe` nearest cells, cutting scored
-  * candidates to ~nprobe/nlist of the corpus. Both rank with a
-  * per-query window on the scored candidates only.
+  * corpus. The IVF family is the scale path: a KMeans coarse
+  * quantizer (trained on a sample, centroid count `nlist`) buckets
+  * the corpus; each query probes only its `nprobe` nearest cells,
+  * cutting scored candidates to ~nprobe/nlist of the corpus. Its
+  * in-memory operators (`ivfTopK` … `opqTopK`) are
+  * [[VectorIndex.probe]] over a memoized [[index]] frame, one
+  * [[Codec]] per quantizer. Every path ranks with the bounded top-k
+  * aggregate ([[topKPerQuery]]).
   */
 object Similarity {
 
@@ -83,13 +86,14 @@ object Similarity {
       threshold: Double, nlist: Int = 16, nprobe: Int = 2,
       seed: Long = 42L, corpusTag: String = ""): DataFrame = {
     // reuse the memoized quantizer when the corpus is tagged (the
-    // near-dup pass and ANN queries share one trained index)
-    val idx = ivfIndex(corpus, idCol, vecCol, nlist, seed, corpusTag)
+    // near-dup pass and ANN queries share one trained quantizer)
+    val centroids = coarseCentroids(corpus, idCol, vecCol, nlist, seed,
+      corpusTag = corpusTag)
     val celled = corpus
       .select(col(idCol).as("doc_id"), col(vecCol).as("v"),
         VectorFns.norm(col(vecCol)).as("nrm"))
       .withColumn("cell", explode(nearestCells(unit(col("v")),
-        idx.centroids, nprobe)))
+        centroids, nprobe)))
       .select(col("cell"), col("doc_id"), col("v"), col("nrm"))
     celled.as("a").join(celled.as("b").hint("merge"),
         col("a.cell") === col("b.cell") &&
@@ -169,19 +173,6 @@ object Similarity {
     }
   }
 
-  /** An IVF index: the centroid table (nlist rows, a plan literal —
-    * the quantizer travels inside the expression, no join needed) and
-    * the cell-assigned corpus — in production both are materialized to
-    * the lake at build time (an ANN index IS a materialized artifact);
-    * [[ivfIndex]] memoizes per (session, inputs) locally.
-    */
-  final case class IvfIndex(centroids: Seq[Seq[Double]],
-      corpusCells: DataFrame)
-
-  /** Map-side top-`nprobe` cell assignment: one native-kernel call per
-    * row against the centroid literal — no crossJoin, no window, no
-    * Exchange anywhere between the corpus scan and the celled output.
-    */
   /** Unit-normalized copy of a float-vector column (float storage —
     * the assignment kernel reads float arrays; zero vectors pass
     * through unchanged). Spherical k-means: for COSINE retrieval the
@@ -208,6 +199,10 @@ object Similarity {
       .otherwise(transform(vec, x => (x / n).cast("float")))
   }
 
+  /** Map-side top-`nprobe` cell assignment: one native-kernel call per
+    * row against the centroid literal — no crossJoin, no window, no
+    * Exchange anywhere between the corpus scan and the celled output.
+    */
   private[operators] def nearestCells(vec: org.apache.spark.sql.Column,
       centroids: Seq[Seq[Double]], nprobe: Int)
       : org.apache.spark.sql.Column = {
@@ -218,16 +213,6 @@ object Similarity {
       vec, typedLit(centroids), lit(nprobe))
   }
 
-  private val ivfMemo =
-    new graft.sources.SessionMemo[
-      (String, String, String, Int, Long, Int, Int),
-      IvfIndex](maxPerSession = 4,
-        onEvict = _.corpusCells.unpersist(blocking = false))
-
-  /** Build (or reuse) the IVF index for a corpus. `corpusTag` keys the
-    * memo — pass the data location (e.g. the sf dir) or "" to force a
-    * fresh build.
-    */
   /** Canonical bounded training feed for coarse/PQ quantizers: the
     * `trainCap` vectors with the smallest (xxhash64(id), id) — a
     * deterministic pseudo-random sample — delivered in ONE sorted
@@ -262,7 +247,7 @@ object Similarity {
     * deterministically, so re-fitting per index family was pure waste
     * (at ladder geometry the fit dominates the build). `corpusTag`
     * empty = always a fresh fit (the memo's notion of corpus identity
-    * is the tag, exactly like [[ivfIndex]]).
+    * is the tag, exactly like [[index]]).
     *
     * Fit discipline (the C8 lesson): nInit seeded restarts on the
     * canonical bounded feed, lowest inertia wins
@@ -298,25 +283,50 @@ object Similarity {
       (corpusTag, idCol, vecCol, nlist, seed, trainCap, nInit))(fit)
   }
 
-  def ivfIndex(corpus: DataFrame, idCol: String, vecCol: String,
-      nlist: Int, seed: Long, corpusTag: String = "",
-      trainCap: Int = 65536, nInit: Int = 10): IvfIndex = {
-    def build: IvfIndex = {
-      val centroids = coarseCentroids(corpus, idCol, vecCol, nlist,
-        seed, trainCap, nInit, corpusTag)
-      // corpus → cell assignment: nearest centroid, one map-side
-      // projection over a single corpus scan (no Exchange)
-      val corpusCells = corpus
-        .select(col(idCol).as("cand_id"), col(vecCol).as("cv"),
-          VectorFns.norm(col(vecCol)).as("cn"))
-        .withColumn("cell",
-          nearestCells(unit(col("cv")), centroids, 1).getItem(0))
-      IvfIndex(centroids, if (corpusTag.nonEmpty) corpusCells.cache()
-        else corpusCells)
+  /** An in-memory IVF-family index: the params (a plan literal — the
+    * quantizer travels inside the expressions, no join needed) and the
+    * encoded rows exactly as [[VectorIndex]] stores them — in
+    * production both are materialized to the lake at build time (an
+    * ANN index IS a materialized artifact); [[index]] memoizes per
+    * (session, inputs) locally.
+    */
+  final case class Index(params: VectorIndex.Params, codes: DataFrame)
+
+  private val indexMemo =
+    new graft.sources.SessionMemo[
+      (String, String, String, Int, Long, Codec), Index](
+      maxPerSession = 8, onEvict = _.codes.unpersist(blocking = false))
+
+  /** Build (or reuse) the `codec` index of a corpus: the training and
+    * the map-side encode of [[VectorIndex.build]], minus the lake.
+    * `corpusTag` keys the memo — pass the data location (e.g. the sf
+    * dir) or "" to force a fresh build.
+    */
+  def index(corpus: DataFrame, idCol: String, vecCol: String,
+      nlist: Int = 16, seed: Long = 42L, codec: Codec = Codec.Flat,
+      corpusTag: String = ""): Index = {
+    def build: Index = {
+      val p = VectorIndex.train(corpus, idCol, vecCol, nlist, seed,
+        nInit = 10, corpusTag = corpusTag, codec = codec)
+      val codes = VectorIndex.encode(corpus, idCol, vecCol, p)
+      Index(p, if (corpusTag.nonEmpty) codes.cache() else codes)
     }
     if (corpusTag.isEmpty) build
-    else ivfMemo.getOrElseUpdate(corpus.sparkSession,
-      (corpusTag, idCol, vecCol, nlist, seed, trainCap, nInit))(build)
+    else indexMemo.getOrElseUpdate(corpus.sparkSession,
+      (corpusTag, idCol, vecCol, nlist, seed, codec))(build)
+  }
+
+  /** Top-k of `queries` against the in-memory `codec` index: the
+    * persisted probe ([[VectorIndex.probe]]) with a filter over the
+    * memoized rows in place of the partition-pruned lake scan.
+    */
+  private def indexTopK(corpus: DataFrame, queries: DataFrame,
+      idCol: String, vecCol: String, k: Int, nlist: Int, nprobe: Int,
+      refine: Int, seed: Long, corpusTag: String, codec: Codec)
+      : DataFrame = {
+    val idx = index(corpus, idCol, vecCol, nlist, seed, codec, corpusTag)
+    VectorIndex.probe(idx.params, idx.codes.filter(_), queries,
+      Some(corpus), idCol, vecCol, k, nprobe, refine)
   }
 
   /** IVF-bucketed ANN: KMeans coarse quantizer, probe the `nprobe`
@@ -325,142 +335,19 @@ object Similarity {
   def ivfTopK(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
       nlist: Int = 16, nprobe: Int = 3, seed: Long = 42L,
-      corpusTag: String = ""): DataFrame = {
-    val idx = ivfIndex(corpus, idCol, vecCol, nlist, seed, corpusTag)
-    val corpusCells = idx.corpusCells
+      corpusTag: String = ""): DataFrame =
+    indexTopK(corpus, queries, idCol, vecCol, k, nlist, nprobe, 1, seed,
+      corpusTag, Codec.Flat)
 
-    // query → nprobe nearest cells, map-side (no Exchange)
-    val queryCells = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-        VectorFns.norm(col(vecCol)).as("qn"))
-      .withColumn("cell", explode(nearestCells(unit(col("qv")),
-        idx.centroids, nprobe)))
-      .select(col("query_id"), col("qv"), col("qn"), col("cell"))
-
-    // scored candidates: only corpus vectors in probed cells
-    val scored = corpusCells.join(broadcast(queryCells), Seq("cell"))
-      .filter(col("cand_id") =!= col("query_id"))
-      .select(col("query_id"), col("cand_id"),
-        VectorFns.cosine(VectorFns.dot(col("qv"), col("cv")),
-          col("qn"), col("cn")).as("cosine"))
-    topKPerQuery(scored, "cosine", k)
-  }
-
-  // ---- IVF-PQ: product-quantized ANN (E6b) --------------------------
-  // The memory/IO-compressed scale tier: the candidate scan reads m
-  // small code ints (bytes at production ks=256) + a norm per vector
-  // instead of the full float embedding — at D=1024/m=64 that is a
-  // ~64x smaller candidate side, which is what makes a 100-TB
-  // embedding corpus scannable at all. Scoring is asymmetric-distance
-  // (ADC): each query row carries its m*ks lookup table (built once,
-  // map-side), so a candidate costs m table lookups, not a D-length
-  // dot. This tier's codes are non-residual (FAISS IndexPQ-style);
-  // the residual IVFPQ default lives below as rpqIndex/rpqTopK. A
-  // final REFINE pass re-scores only the approximate shortlist
-  // against the exact vectors, so the output ranks true cosines
-  // (FAISS's RefineFlat).
-
-  /** A PQ index over a corpus: IVF coarse centroids (cell probing),
-    * the flat m*ks*dsub codebook (subspace-major, a plan literal),
-    * and the encoded corpus (cand_id, cell, codes, cn) — at
-    * production scale the codes frame IS a materialized lake table.
-    */
-  final case class PqIndex(centroids: Seq[Seq[Double]],
-      books: Seq[Double], m: Int, ks: Int, codes: DataFrame)
-
-  private val pqMemo =
-    new graft.sources.SessionMemo[(String, String, String, Int, Int, Int, Long),
-      PqIndex](maxPerSession = 4,
-        onEvict = _.codes.unpersist(blocking = false))
-
-  /** Build (or reuse, keyed by `corpusTag`) the IVF-PQ index: the
-    * coarse quantizer comes from [[ivfIndex]] (shared memo); the m
-    * per-subspace codebooks are m KMeans fits over sliced subvectors
-    * (O(m·ks·dsub) doubles on the driver — an expression literal,
-    * never a join side); encoding is one map-side kernel pass over
-    * the celled corpus.
-    */
-  /** The m per-subspace PQ codebooks over `feed`'s canonical bounded
-    * sample — the bit-reproducible book-training block, ONE
-    * implementation shared by [[pqIndex]] and the persisted
-    * [[VectorIndex.buildPq]] (r17: the builds stopped re-fitting the
-    * coarse quantizer their sibling already trained, so the book fit
-    * had to be callable without dragging a whole PqIndex along).
-    */
-  private[operators] def pqBooks(feed: DataFrame, idCol: String,
-      vecCol: String, m: Int, ks: Int, seed: Long, dim: Int)
-      : Seq[Double] = {
-    require(dim % m == 0, s"pq books: dim $dim not divisible by m=$m")
-    val dsub = dim / m
-    // same canonical feed as the coarse quantizer: the m codebook
-    // fits are bit-reproducible, so PQ codes (and the pinned
-    // ann_pq_topk oracle) are too
-    val train = canonicalTrainFeed(feed, idCol,
-      (0 until m).map(j =>
-        array_to_vector(slice(col(vecCol), j * dsub + 1, dsub)
-          .cast("array<double>")).as(s"__f$j")), trainCap = 65536)
-      .cache()
-    try (0 until m).flatMap { j =>
-      new KMeans().setK(ks).setSeed(seed + j).setMaxIter(10)
-        .setFeaturesCol(s"__f$j").fit(train)
-        .clusterCenters.flatMap(_.toArray).toSeq
-    }
-    finally train.unpersist(blocking = false)
-  }
-
-  /** Residual-space PQ codebooks — [[pqBooks]] over cell residuals of
-    * the unit vectors (see [[rpqIndex]] for the feed-layout
-    * determinism constraint the residual projection must respect).
-    */
-  private[operators] def rpqBooks(feed: DataFrame, idCol: String,
-      vecCol: String, centroids: Seq[Seq[Double]], m: Int, ks: Int,
-      seed: Long, dim: Int): Seq[Double] = {
-    require(dim % m == 0, s"rpq books: dim $dim not divisible by m=$m")
-    val dsub = dim / m
-    val centsLit = typedLit(centroids.flatten)
-    // residual features computed INSIDE the canonical feed's
-    // pre-sort select: projections stacked ABOVE the sort+limit
-    // break the TakeOrderedAndProject pattern and the limit
-    // degrades to a GlobalLimit shuffle whose row order follows
-    // fetch order — the C8 nondeterminism, measured here as
-    // CPU-count-dependent codebooks before this layout
-    val uv = unit(col(vecCol))
-    val cellC = nearestCells(uv, centroids, 1).getItem(0)
-    val rC = graft.expressions.NativeKernels
-      .vecResidualCol(uv, cellC, centsLit)
-    val train = canonicalTrainFeed(feed, idCol,
-      (0 until m).map(j =>
-        array_to_vector(slice(rC, j * dsub + 1, dsub)
-          .cast("array<double>")).as(s"__f$j")), trainCap = 65536)
-      .cache()
-    try (0 until m).flatMap { j =>
-      new KMeans().setK(ks).setSeed(seed + j).setMaxIter(10)
-        .setFeaturesCol(s"__f$j").fit(train)
-        .clusterCenters.flatMap(_.toArray).toSeq
-    }
-    finally train.unpersist(blocking = false)
-  }
-
-  def pqIndex(corpus: DataFrame, idCol: String, vecCol: String,
-      nlist: Int = 16, m: Int = 8, ks: Int = 16, seed: Long = 42L,
-      corpusTag: String = "", nInit: Int = 10): PqIndex = {
-    def build: PqIndex = {
-      val ivf = ivfIndex(corpus, idCol, vecCol, nlist, seed, corpusTag,
-        nInit = nInit)
-      val dim = corpus.select(size(col(vecCol))).head().getInt(0)
-      val books = pqBooks(corpus, idCol, vecCol, m, ks, seed, dim)
-      val booksLit = typedLit(books)
-      val codes = ivf.corpusCells.select(col("cand_id"), col("cell"),
-        graft.expressions.NativeKernels
-          .pqEncodeCol(col("cv"), booksLit, m, ks).as("codes"),
-        col("cn"))
-      PqIndex(ivf.centroids, books, m, ks,
-        if (corpusTag.nonEmpty) codes.cache() else codes)
-    }
-    if (corpusTag.isEmpty) build
-    else pqMemo.getOrElseUpdate(corpus.sparkSession,
-      (corpusTag, idCol, vecCol, nlist, m, ks, seed))(build)
-  }
+  // ---- The quantized tiers (E6b-e) ---------------------------------
+  // The memory/IO-compressed scale ladder: the candidate scan reads
+  // codes instead of the float embedding — SQ8 one byte per dimension
+  // (4×), BQ one bit (32×), PQ m small ints (~64× at D=1024/m=64) —
+  // which is what makes a 100-TB embedding corpus scannable at all.
+  // Each shortlists the top k·refine per query by its approximate
+  // score, then REFINES: re-scores only the shortlist against the
+  // exact vectors, so the output ranks true cosines (FAISS's
+  // RefineFlat). The codecs are documented in [[Codec]].
 
   /** IVF-PQ top-k with exact refine: probe `nprobe` cells per query,
     * score candidates from CODES via the query's ADC table (m lookups
@@ -474,56 +361,111 @@ object Similarity {
       idCol: String, vecCol: String, k: Int,
       nlist: Int = 16, nprobe: Int = 3, m: Int = 8, ks: Int = 16,
       refine: Int = 4, seed: Long = 42L, corpusTag: String = "")
-      : DataFrame = {
-    require(refine >= 1, s"refine must be >= 1, got $refine")
-    val idx = pqIndex(corpus, idCol, vecCol, nlist, m, ks, seed,
-      corpusTag)
-    val booksLit = typedLit(idx.books)
-    val queryCells = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-        VectorFns.norm(col(vecCol)).as("qn"))
-      .withColumn("cell", explode(nearestCells(unit(col("qv")),
-        idx.centroids, nprobe)))
-      .withColumn("tbl", graft.expressions.NativeKernels
-        .adcTableCol(col("qv"), booksLit, idx.m, idx.ks))
-      .select(col("query_id"), col("qn"), col("cell"), col("tbl"))
-    adcShortlistRefine(idx.codes, queryCells, idx.ks, corpus, queries,
-      idCol, vecCol, k, refine)
+      : DataFrame =
+    indexTopK(corpus, queries, idCol, vecCol, k, nlist, nprobe, refine,
+      seed, corpusTag, Codec.Pq(m, ks))
+
+  /** Residual IVF-PQ top-k with exact refine — [[pqTopK]] with codes
+    * of unit(v) − centroid(cell): same m·ks budget, measurably lower
+    * cosine-approximation error on clustered corpora (spec-gated).
+    * Price: the ADC table is per (query, PROBED CELL), not per query —
+    * nprobe·ks·dim extra doubles on the broadcast side, nothing
+    * against the candidate-code scan.
+    */
+  def rpqTopK(corpus: DataFrame, queries: DataFrame,
+      idCol: String, vecCol: String, k: Int,
+      nlist: Int = 16, nprobe: Int = 3, m: Int = 8, ks: Int = 16,
+      refine: Int = 4, seed: Long = 42L, corpusTag: String = "")
+      : DataFrame =
+    indexTopK(corpus, queries, idCol, vecCol, k, nlist, nprobe, refine,
+      seed, corpusTag, Codec.Pq(m, ks, residual = true))
+
+  /** OPQ-rotated residual IVF-PQ top-k: the WHOLE residual tier —
+    * coarse quantizer, residual codebooks, per-(query, cell) ADC
+    * tables — runs in rotated space (rotation preserves norms and dot
+    * products, so the ADC dot is still the approximate cosine), then
+    * the refine re-scores against the ORIGINAL vectors: reported
+    * cosines are bit-identical to brute force over the raw
+    * embeddings, which is what lets the query carry the same
+    * pinned-picks oracle as the rest of the ANN family.
+    */
+  def opqTopK(corpus: DataFrame, queries: DataFrame,
+      idCol: String, vecCol: String, k: Int,
+      nlist: Int = 16, nprobe: Int = 3, m: Int = 8, ks: Int = 16,
+      refine: Int = 4, seed: Long = 42L, corpusTag: String = "")
+      : DataFrame =
+    indexTopK(corpus, queries, idCol, vecCol, k, nlist, nprobe, refine,
+      seed, corpusTag, Codec.Pq(m, ks, residual = true, opq = true))
+
+  /** IVF-SQ8 top-k with exact refine: score the byte codes with the
+    * decode-folded dot (both sides unit, so the dot IS the
+    * approximate cosine), shortlist, re-score exactly — a 4×-smaller
+    * candidate payload and no codebook at all.
+    */
+  def sqTopK(corpus: DataFrame, queries: DataFrame,
+      idCol: String, vecCol: String, k: Int,
+      nlist: Int = 16, nprobe: Int = 3, refine: Int = 4,
+      seed: Long = 42L, corpusTag: String = ""): DataFrame =
+    indexTopK(corpus, queries, idCol, vecCol, k, nlist, nprobe, refine,
+      seed, corpusTag, Codec.Sq8())
+
+  /** IVF-BQ top-k with exact refine: rank sign-bit codes by the
+    * Hamming-angle estimator, shortlist, re-score exactly. The
+    * candidate payload is d/8 bytes — 32× smaller than the float
+    * vector — and the scorer is xor+popcount.
+    */
+  def bqTopK(corpus: DataFrame, queries: DataFrame,
+      idCol: String, vecCol: String, k: Int,
+      nlist: Int = 16, nprobe: Int = 3, refine: Int = 4,
+      seed: Long = 42L, corpusTag: String = ""): DataFrame =
+    indexTopK(corpus, queries, idCol, vecCol, k, nlist, nprobe, refine,
+      seed, corpusTag, Codec.Bq)
+
+  /** The m per-subspace PQ codebooks over `feed`'s canonical bounded
+    * sample — the bit-reproducible book-training block of
+    * [[Codec.Pq]]. With `residualOf` the books quantize cell
+    * residuals of the unit vectors against those centroids.
+    */
+  private[operators] def pqBooks(feed: DataFrame, idCol: String,
+      vecCol: String, m: Int, ks: Int, seed: Long, dim: Int,
+      residualOf: Option[Seq[Seq[Double]]]): Seq[Double] = {
+    require(dim % m == 0, s"pq books: dim $dim not divisible by m=$m")
+    val dsub = dim / m
+    // features computed INSIDE the canonical feed's pre-sort select:
+    // projections stacked ABOVE the sort+limit break the
+    // TakeOrderedAndProject pattern and the limit degrades to a
+    // GlobalLimit shuffle whose row order follows fetch order — the
+    // C8 nondeterminism, measured as CPU-count-dependent residual
+    // codebooks before this layout
+    val v = residualOf.fold(col(vecCol)) { centroids =>
+      val uv = unit(col(vecCol))
+      graft.expressions.NativeKernels.vecResidualCol(uv,
+        nearestCells(uv, centroids, 1).getItem(0),
+        typedLit(centroids.flatten))
+    }
+    val train = canonicalTrainFeed(feed, idCol,
+      (0 until m).map(j =>
+        array_to_vector(slice(v, j * dsub + 1, dsub)
+          .cast("array<double>")).as(s"__f$j")), trainCap = 65536)
+      .cache()
+    try (0 until m).flatMap { j =>
+      new KMeans().setK(ks).setSeed(seed + j).setMaxIter(10)
+        .setFeaturesCol(s"__f$j").fit(train)
+        .clusterCenters.flatMap(_.toArray).toSeq
+    }
+    finally train.unpersist(blocking = false)
   }
 
-  /** The shared ADC tail of [[pqTopK]]/[[rpqTopK]]: score probed-cell
-    * candidates from codes via each (query, cell) row's lookup table,
-    * shortlist top `k·refine` per query, re-score ONLY the shortlist
-    * against exact vectors, rank true cosines.
+  /** Shared shortlist+refine tail for every quantized tier, in memory
+    * and served from the lake: keep the top k·refine candidates per
+    * query by `approx_cosine` (bounded top-k aggregate — never a full
+    * sort), then re-score ONLY the shortlist against the exact vectors
+    * (broadcast point lookups), so reported cosines are bit-identical
+    * to brute force regardless of which coding produced the shortlist.
     */
-  private def adcShortlistRefine(codes: DataFrame,
-      queryCells: DataFrame, ks: Int, corpus: DataFrame,
-      queries: DataFrame, idCol: String, vecCol: String, k: Int,
-      refine: Int, adcIsCosine: Boolean = false): DataFrame = {
-    // non-residual codes approximate the RAW vector, so the ADC dot
-    // needs the norm division; residual codes approximate the UNIT
-    // vector (unit-space residuals — see rpqIndex), so the ADC dot
-    // of a unit query IS the approximate cosine already
-    val adc = graft.expressions.NativeKernels
-      .adcDotCol(col("codes"), col("tbl"), ks)
-    val approx = codes.join(broadcast(queryCells), Seq("cell"))
-      .filter(col("cand_id") =!= col("query_id"))
-      .select(col("query_id"), col("cand_id"),
-        (if (adcIsCosine) adc else adc / (col("qn") * col("cn")))
-          .as("approx_cosine"))
-    shortlistRefine(approx, corpus, queries, idCol, vecCol, k, refine)
-  }
-
-  /** Shared shortlist+refine tail for every quantized tier: keep the
-    * top k·refine candidates per query by `approx_cosine` (bounded
-    * top-k aggregate — never a full sort), then
-    * re-score ONLY the shortlist against the exact vectors (broadcast
-    * point lookups), so reported cosines are bit-identical to brute
-    * force regardless of which coding produced the shortlist.
-    */
-  private def shortlistRefine(approx: DataFrame, corpus: DataFrame,
-      queries: DataFrame, idCol: String, vecCol: String, k: Int,
-      refine: Int): DataFrame = {
+  private[operators] def shortlistRefine(approx: DataFrame,
+      corpus: DataFrame, queries: DataFrame, idCol: String,
+      vecCol: String, k: Int, refine: Int): DataFrame = {
     // corpus-sized approx ranking — the bounded-aggregate form; the
     // exact re-rank reuses it on the <= k*refine shortlist
     val short = topKPerQuery(approx, "approx_cosine", k * refine,
@@ -541,111 +483,9 @@ object Similarity {
     topKPerQuery(exact, "cosine", k)
   }
 
-  // ---- Residual IVF-PQ (E6b's residual variant — FAISS IVFPQ) ------
-  // Same plan shape as the non-residual tier; the codebooks quantize
-  // the residual AGAINST THE PROBED CELL'S CENTROID instead of the
-  // raw vector. Everything lives in UNIT space — the coarse
-  // quantizer is spherical (unit-trained centroids), so the residual
-  // that is actually small is unit(v) − centroid, the directional
-  // noise the cell has not explained; a raw-space subtraction would
-  // leave magnitude-sized residuals and buy nothing (measured). The
-  // codes therefore approximate unit(v), the ADC table is built from
-  // unit(q) with the centroid folded into every entry, and the ADC
-  // dot IS the approximate cosine — no norm division. Same m·ks
-  // budget, measurably lower cosine-approximation error on clustered
-  // corpora (spec-gated, with the recall gain that follows). Price:
-  // the ADC table is per (query, PROBED CELL), not per query —
-  // nprobe·ks·dim extra doubles on the broadcast side, nothing
-  // against the candidate-code scan both variants share.
-
-  private val rpqMemo =
-    new graft.sources.SessionMemo[(String, String, String, Int, Int, Int, Long),
-      PqIndex](maxPerSession = 4,
-        onEvict = _.codes.unpersist(blocking = false))
-
-  /** Build (or reuse, keyed by `corpusTag`) the residual IVF-PQ
-    * index: coarse quantizer from [[ivfIndex]] (shared memo), m
-    * per-subspace codebooks trained on cell-residuals of the
-    * canonical bounded feed (bit-reproducible, like every quantizer
-    * fit since r11), corpus encoded map-side via
-    * [[graft.expressions.NativeKernels.pqEncodeResidual]].
-    */
-  def rpqIndex(corpus: DataFrame, idCol: String, vecCol: String,
-      nlist: Int = 16, m: Int = 8, ks: Int = 16, seed: Long = 42L,
-      corpusTag: String = "", nInit: Int = 10): PqIndex = {
-    def build: PqIndex = {
-      val ivf = ivfIndex(corpus, idCol, vecCol, nlist, seed, corpusTag,
-        nInit = nInit)
-      val dim = corpus.select(size(col(vecCol))).head().getInt(0)
-      val books = rpqBooks(corpus, idCol, vecCol, ivf.centroids, m, ks,
-        seed, dim)
-      val centsLit = typedLit(ivf.centroids.flatten)
-      val booksLit = typedLit(books)
-      // encode unit(cv): the codes approximate the DIRECTION, the
-      // only thing cosine scoring needs (cn rides along for the
-      // non-residual-shaped consumers of the codes frame)
-      val codes = ivf.corpusCells.select(col("cand_id"), col("cell"),
-        graft.expressions.NativeKernels.pqEncodeResidualCol(
-          unit(col("cv")), col("cell"), centsLit, booksLit, m, ks)
-          .as("codes"),
-        col("cn"))
-      PqIndex(ivf.centroids, books, m, ks,
-        if (corpusTag.nonEmpty) codes.cache() else codes)
-    }
-    if (corpusTag.isEmpty) build
-    else rpqMemo.getOrElseUpdate(corpus.sparkSession,
-      (corpusTag, idCol, vecCol, nlist, m, ks, seed))(build)
-  }
-
-  /** Residual IVF-PQ top-k with exact refine — [[pqTopK]] with
-    * residual codes: the ADC table is built per (query, probed cell)
-    * from the UNIT query with the centroid contribution folded in
-    * ([[graft.expressions.NativeKernels.adcTableResidual]]), so each
-    * ADC dot is directly the approximate cosine; the shared
-    * shortlist/refine tail is reused with `adcIsCosine`.
-    */
-  def rpqTopK(corpus: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int,
-      nlist: Int = 16, nprobe: Int = 3, m: Int = 8, ks: Int = 16,
-      refine: Int = 4, seed: Long = 42L, corpusTag: String = "")
-      : DataFrame = {
-    require(refine >= 1, s"refine must be >= 1, got $refine")
-    val idx = rpqIndex(corpus, idCol, vecCol, nlist, m, ks, seed,
-      corpusTag)
-    val centsLit = typedLit(idx.centroids.flatten)
-    val booksLit = typedLit(idx.books)
-    val queryCells = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-        VectorFns.norm(col(vecCol)).as("qn"))
-      .withColumn("cell", explode(nearestCells(unit(col("qv")),
-        idx.centroids, nprobe)))
-      .withColumn("tbl", graft.expressions.NativeKernels
-        .adcTableResidualCol(unit(col("qv")), col("cell"), centsLit,
-          booksLit, idx.m, idx.ks))
-      .select(col("query_id"), col("qn"), col("cell"), col("tbl"))
-    adcShortlistRefine(idx.codes, queryCells, idx.ks, corpus, queries,
-      idCol, vecCol, k, refine, adcIsCosine = true)
-  }
-
-  // ---- IVF-SQ8 (E6d — FAISS IndexIVFScalarQuantizer QT_8bit) -------
-  // The near-exact middle rung of the quantization ladder: one affine
-  // uint8 code per DIMENSION (4× smaller scan payload than floats;
-  // PQ is ~64× but lossier), decoded on the fly inside the dot. The
-  // bounds are the elementwise min/max of the UNIT corpus — computed
-  // in ONE treeAggregate pass, and because min/max commute the fit is
-  // deterministic at ANY scale with no bounded feed at all (the only
-  // trainable artifact in the family with that property).
-
-  final case class SqIndex(centroids: Seq[Seq[Double]],
-      vmin: Seq[Double], vmax: Seq[Double], codes: DataFrame)
-
-  private val sqMemo =
-    new graft.sources.SessionMemo[(String, String, String, Int, Long),
-      SqIndex](maxPerSession = 4,
-        onEvict = _.codes.unpersist(blocking = false))
-
-  /** Per-dimension [vmin, vmax] of the unit corpus: one exact
-    * order-independent treeAggregate (the Pca.fit shape).
+  /** Per-dimension [vmin, vmax] of the unit corpus — the SQ8 bounds:
+    * one exact order-independent treeAggregate (the Pca.fit shape),
+    * so the fit is deterministic at ANY scale with no bounded feed.
     */
   private[operators] def unitBounds(corpus: DataFrame, vecCol: String)
       : (Array[Double], Array[Double]) = {
@@ -678,102 +518,6 @@ object Similarity {
         (alo, ahi)
       },
       depth = 2)
-  }
-
-  /** Build (or reuse, keyed by `corpusTag`) the IVF-SQ8 index: the
-    * shared coarse quantizer plus byte codes of every unit vector —
-    * (cand_id, cell, codes BINARY, cn), one map-side encode pass.
-    */
-  def sqIndex(corpus: DataFrame, idCol: String, vecCol: String,
-      nlist: Int = 16, seed: Long = 42L, corpusTag: String = "",
-      nInit: Int = 10): SqIndex = {
-    def build: SqIndex = {
-      val ivf = ivfIndex(corpus, idCol, vecCol, nlist, seed, corpusTag,
-        nInit = nInit)
-      val (lo, hi) = unitBounds(corpus, vecCol)
-      val loLit = typedLit(lo.toSeq)
-      val hiLit = typedLit(hi.toSeq)
-      val codes = ivf.corpusCells.select(col("cand_id"), col("cell"),
-        graft.expressions.NativeKernels
-          .sq8EncodeCol(unit(col("cv")), loLit, hiLit).as("codes"),
-        col("cn"))
-      SqIndex(ivf.centroids, lo.toSeq, hi.toSeq,
-        if (corpusTag.nonEmpty) codes.cache() else codes)
-    }
-    if (corpusTag.isEmpty) build
-    else sqMemo.getOrElseUpdate(corpus.sparkSession,
-      (corpusTag, idCol, vecCol, nlist, seed))(build)
-  }
-
-  /** IVF-SQ8 top-k with exact refine: probe cells map-side, score the
-    * byte codes with the decode-folded dot (both sides unit, so the
-    * dot IS the approximate cosine), shortlist, re-score exactly —
-    * the rpqTopK plan with a 4×-smaller candidate payload and no
-    * codebook at all.
-    */
-  def sqTopK(corpus: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int,
-      nlist: Int = 16, nprobe: Int = 3, refine: Int = 4,
-      seed: Long = 42L, corpusTag: String = ""): DataFrame = {
-    require(refine >= 1, s"refine must be >= 1, got $refine")
-    val idx = sqIndex(corpus, idCol, vecCol, nlist, seed, corpusTag)
-    val loLit = typedLit(idx.vmin)
-    val hiLit = typedLit(idx.vmax)
-    val queryCells = queries
-      .select(col(idCol).as("query_id"),
-        unit(col(vecCol)).as("uq"))
-      .withColumn("cell", explode(nearestCells(col("uq"),
-        idx.centroids, nprobe)))
-      .select(col("query_id"), col("uq"), col("cell"))
-    val approx = idx.codes.join(broadcast(queryCells), Seq("cell"))
-      .filter(col("cand_id") =!= col("query_id"))
-      .select(col("query_id"), col("cand_id"),
-        graft.expressions.NativeKernels
-          .sq8DotCol(col("uq"), col("codes"), loLit, hiLit)
-          .as("approx_cosine"))
-    shortlistRefine(approx, corpus, queries, idCol, vecCol, k, refine)
-  }
-
-  // ---- IVF-BQ (E6e — binary / sign quantization, SRP-LSH) ----------
-  // The 32× rung below SQ8: one SIGN BIT per dimension, scored by
-  // Hamming distance, with cosine estimated by Charikar's
-  // random-hyperplane bound cos(π·hamming/d) — here the "hyperplanes"
-  // are the coordinate axes, the degenerate-but-standard BQ used by
-  // production vector stores as the in-memory hot tier. NOTHING is
-  // trained: sign is scale-invariant, so the codes stay valid as the
-  // corpus grows and the only shared artifact is the IVF coarse
-  // quantizer. Refine does the exact re-score as everywhere else.
-
-  /** IVF-BQ top-k with exact refine: probe cells map-side, rank byte
-    * codes by the Hamming-angle estimator, shortlist, re-score
-    * exactly. The candidate payload is d/8 bytes — 32× smaller than
-    * the float vector — and the scorer is xor+popcount.
-    */
-  def bqTopK(corpus: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int,
-      nlist: Int = 16, nprobe: Int = 3, refine: Int = 4,
-      seed: Long = 42L, corpusTag: String = ""): DataFrame = {
-    require(refine >= 1, s"refine must be >= 1, got $refine")
-    val idx = ivfIndex(corpus, idCol, vecCol, nlist, seed, corpusTag)
-    val d = idx.centroids.head.length
-    val codes = idx.corpusCells.select(col("cand_id"), col("cell"),
-      graft.expressions.NativeKernels.bqEncodeCol(col("cv"))
-        .as("codes"))
-    val queryCells = queries
-      .select(col(idCol).as("query_id"),
-        graft.expressions.NativeKernels.bqEncodeCol(col(vecCol))
-          .as("qcodes"),
-        unit(col(vecCol)).as("uq"))
-      .withColumn("cell", explode(nearestCells(col("uq"),
-        idx.centroids, nprobe)))
-      .select(col("query_id"), col("qcodes"), col("cell"))
-    val approx = codes.join(broadcast(queryCells), Seq("cell"))
-      .filter(col("cand_id") =!= col("query_id"))
-      .select(col("query_id"), col("cand_id"),
-        cos(lit(math.Pi) * graft.expressions.NativeKernels
-          .bqHammingCol(col("codes"), col("qcodes"))
-          .cast("double") / lit(d.toDouble)).as("approx_cosine"))
-    shortlistRefine(approx, corpus, queries, idCol, vecCol, k, refine)
   }
 
   // ---- OPQ rotation tier (E6c — parametric OPQ, Ge et al. 2013) ----
@@ -856,47 +600,5 @@ object Similarity {
     if (corpusTag.isEmpty) build
     else opqMemo.getOrElseUpdate(corpus.sparkSession,
       (corpusTag, idCol, vecCol, m, cap))(build)
-  }
-
-  /** OPQ-rotated residual IVF-PQ top-k: rotate corpus and queries
-    * map-side (one codegen kernel, the PCA projector with zero mean),
-    * run the WHOLE residual tier — coarse quantizer, residual
-    * codebooks, per-(query, cell) ADC tables — in rotated space
-    * (rotation preserves norms and dot products, so the ADC dot is
-    * still the approximate cosine), then refine the shortlist against
-    * the ORIGINAL vectors: reported cosines are bit-identical to
-    * brute force over the raw embeddings, exactly the pqTopK/rpqTopK
-    * refine contract, which is what lets the query carry the same
-    * pinned-picks oracle as the rest of the ANN family.
-    */
-  def opqTopK(corpus: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int,
-      nlist: Int = 16, nprobe: Int = 3, m: Int = 8, ks: Int = 16,
-      refine: Int = 4, seed: Long = 42L, corpusTag: String = "")
-      : DataFrame = {
-    require(refine >= 1, s"refine must be >= 1, got $refine")
-    val rot = opqRotation(corpus, idCol, vecCol, m,
-      corpusTag = corpusTag)
-    val d = math.sqrt(rot.length.toDouble).round.toInt
-    val zero = new Array[Double](d)
-    def rotate(df: DataFrame): DataFrame = df.select(col(idCol),
-      graft.expressions.NativeKernels
-        .pcaProjectCol(col(vecCol), zero, rot, d).as(vecCol))
-    val tag = if (corpusTag.isEmpty) "" else s"$corpusTag:opq"
-    val idx = rpqIndex(rotate(corpus), idCol, vecCol, nlist, m, ks,
-      seed, tag)
-    val centsLit = typedLit(idx.centroids.flatten)
-    val booksLit = typedLit(idx.books)
-    val queryCells = rotate(queries)
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-        VectorFns.norm(col(vecCol)).as("qn"))
-      .withColumn("cell", explode(nearestCells(unit(col("qv")),
-        idx.centroids, nprobe)))
-      .withColumn("tbl", graft.expressions.NativeKernels
-        .adcTableResidualCol(unit(col("qv")), col("cell"), centsLit,
-          booksLit, idx.m, idx.ks))
-      .select(col("query_id"), col("qn"), col("cell"), col("tbl"))
-    adcShortlistRefine(idx.codes, queryCells, idx.ks, corpus, queries,
-      idCol, vecCol, k, refine, adcIsCosine = true)
   }
 }

@@ -1,34 +1,39 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.functions.array_to_vector
 
 import graft.functions.VectorFns
 import graft.sources.{AtomicLake, CommitStore, HardlinkCommitStore}
 
-/** Persistent IVF vector index over the ACID lake (SURVEY.md §2 E14)
-  * — the vector twin of [[NearDupIndex]]: a corpus is indexed ONCE,
-  * then every probe batch and every ingest batch works against the
-  * PERSISTED index without re-reading or re-training on the corpus.
+/** Persistent IVF-family vector index over the ACID lake (SURVEY.md §2
+  * E14) — the vector twin of [[NearDupIndex]]: a corpus is indexed
+  * ONCE, then every probe batch and every ingest batch works against
+  * the PERSISTED index without re-reading or re-training on the corpus.
+  * What differs between quantizers — flat IVF, PQ (raw, residual,
+  * OPQ), SQ8, BQ — is a [[Codec]]; everything below is one
+  * implementation over it, and the in-memory [[Similarity]] operators
+  * run the same [[probe]] over an unpersisted frame.
   *
-  * Layout is the scale story: the assignments table is an
-  * [[AtomicLake]] PARTITIONED BY CELL, so a probe of `nprobe` cells
-  * is a partition-pruned scan — the manifest plans only those cells'
-  * files and the other `nlist - nprobe` cells' bytes are never
-  * opened (spec proves planned < total via scanInfo). The coarse
-  * quantizer (nlist×d doubles) is a version-1 params claim through
-  * the same [[CommitStore]] CAS as the tables — committed BEFORE any
-  * data, so a crash leaves params that describe whatever exists, and
-  * a rebuild against different geometry refuses loudly instead of
-  * silently mixing assignments from two quantizers.
+  * Layout is the scale story: the stored rows are an [[AtomicLake]]
+  * PARTITIONED BY CELL, so a probe of `nprobe` cells is a
+  * partition-pruned scan — the manifest plans only those cells' files
+  * and the other `nlist - nprobe` cells' bytes are never opened (spec
+  * proves planned < total via scanInfo). At 100 TB the quantized
+  * codecs are the ANN shape: probes scan a pruned slice of a table
+  * 4-64× smaller than the embeddings, and the full vectors are touched
+  * only by the refine's point lookups against the SOURCE corpus. The
+  * params (coarse quantizer plus the codec's trained fields) are a
+  * version-1 claim through the same [[CommitStore]] CAS as the tables
+  * — committed BEFORE any data, so a crash leaves params that describe
+  * whatever exists, and a rebuild against different geometry refuses
+  * loudly instead of silently mixing rows from two quantizers.
   *
-  * [[append]] is the incremental path: new vectors are assigned
-  * MAP-SIDE with the persisted centroids (no retraining — cell
-  * quality for appended data is the same boundary-error argument
-  * probing already covers) and upserted idempotently by id (keys-only
-  * anti join), landing as new files in their cells' partitions.
+  * [[append]] is the incremental path: new vectors are encoded
+  * MAP-SIDE with the persisted params (no retraining — cell quality
+  * for appended data is the same boundary-error argument probing
+  * already covers) and upserted idempotently by id (keys-only anti
+  * join), landing as new files in their cells' partitions.
   */
 object VectorIndex {
 
@@ -37,82 +42,83 @@ object VectorIndex {
     * the cosine-retrieval shape). Pre-metric params files read back
     * as "l2" and REFUSE to serve a spherical build: mixing
     * assignments from two geometries silently corrupts probe recall.
+    * `codec` carries the quantizer's pinned and trained fields.
     */
   final case class Params(nlist: Int, seed: Long, dim: Int,
-      centroids: Seq[Seq[Double]], metric: String = "unit-l2")
+      centroids: Seq[Seq[Double]], metric: String = "unit-l2",
+      codec: Codec = Codec.Flat)
 
-  private def cellsRoot(root: String) = s"$root/cells"
-  private def paramsRoot(root: String) = s"$root/params"
+  private def paramsRoot(root: String, c: Codec) = s"$root/${c.paramsDir}"
+  private def codesRoot(root: String, c: Codec) = s"$root/${c.codesDir}"
 
   private def paramsJson(p: Params): String = {
     val cents = p.centroids.map(_.mkString("[", ",", "]"))
       .mkString("[", ",", "]")
     s"""{"nlist":${p.nlist},"seed":${p.seed},"dim":${p.dim},""" +
-      s""""metric":"${p.metric}","centroids":$cents}"""
+      s""""metric":"${p.metric}"${p.codec.json},"centroids":$cents}"""
   }
 
-  private def parseParams(s: String): Params = {
-    import org.json4s._
-    val j = org.json4s.jackson.JsonMethods.parse(s)
-    def long(v: JValue): Long = v match {
-      case JInt(x) => x.toLong
-      case JLong(x) => x
-      case other => throw new IllegalStateException(
-        s"vector-index params: expected number, got $other")
-    }
-    def dbl(v: JValue): Double = v match {
-      case JDouble(x) => x
-      case JInt(x) => x.toDouble
-      case JLong(x) => x.toDouble
-      case JDecimal(x) => x.toDouble
-      case other => throw new IllegalStateException(
-        s"vector-index params: expected double, got $other")
-    }
-    val JArray(cents) = j \ "centroids"
-    val metric = j \ "metric" match {
-      case JString(s) => s
-      case _ => "l2" // pre-metric params: raw-magnitude geometry
-    }
-    Params(long(j \ "nlist").toInt, long(j \ "seed"),
-      long(j \ "dim").toInt,
-      cents.map {
-        case JArray(xs) => xs.map(dbl)
-        case other => throw new IllegalStateException(
-          s"vector-index params: expected centroid array, got $other")
-      }, metric)
+  private def parseParams(root: String, kind: Codec, body: String)
+      : Params = {
+    val f = new Codec.Fields(root, body)
+    Params(f.int("nlist"), f.long("seed"), f.int("dim"),
+      f.rows("centroids"),
+      f.string("metric", "l2"), // pre-metric: raw-magnitude geometry
+      kind.parse(f))
   }
+
+  /** The codec kinds whose params are committed under `root`. */
+  private def kindsAt(root: String, store: CommitStore): Seq[Codec] =
+    Codec.kinds.filter(c =>
+      store.listVersions(paramsRoot(root, c)).nonEmpty)
 
   /** Commit params as version 1 — or, if already claimed, verify the
-    * GEOMETRY matches (nlist/seed/dim; centroids are a function of
-    * them plus the build corpus) and return the EXISTING params, so a
-    * re-build against a grown corpus keeps the original quantizer and
-    * existing assignments stay valid.
+    * GEOMETRY matches (nlist/seed/dim/metric plus the codec's request
+    * fields; trained fields are a function of them plus the build
+    * corpus) and return the EXISTING params, so a re-build against a
+    * grown corpus keeps the original quantizer and existing rows stay
+    * valid. One root holds one codec kind.
     */
   private def claimOrRead(root: String, p: Params,
-      store: CommitStore): Params =
-    if (store.tryCommit(paramsRoot(root), 1L, paramsJson(p))) p
+      store: CommitStore): Params = {
+    kindsAt(root, store).foreach(k => require(k.name == p.codec.name,
+      s"vector index at $root is a ${k.name} index; refusing a " +
+        s"${p.codec.name} build — delete the index root to change " +
+        "geometry"))
+    if (store.tryCommit(paramsRoot(root, p.codec), 1L, paramsJson(p))) p
     else {
-      val existing = parseParams(store.readBody(paramsRoot(root), 1L))
-      require(existing.nlist == p.nlist && existing.seed == p.seed &&
-        existing.dim == p.dim && existing.metric == p.metric,
-        s"vector index at $root is pinned to nlist=${existing.nlist} " +
-          s"seed=${existing.seed} dim=${existing.dim} " +
-          s"metric=${existing.metric}; refusing nlist=${p.nlist} " +
-          s"seed=${p.seed} dim=${p.dim} metric=${p.metric} — delete " +
-          "the index root to change geometry")
-      existing
+      val e = parseParams(root, p.codec,
+        store.readBody(paramsRoot(root, p.codec), 1L))
+      def geometry(q: Params) = s"nlist=${q.nlist} seed=${q.seed} " +
+        s"dim=${q.dim} metric=${q.metric}${q.codec.geometry}"
+      require(geometry(e) == geometry(p),
+        s"${p.codec.name} index at $root is pinned to ${geometry(e)}; " +
+          s"refusing ${geometry(p)} — delete the index root to change " +
+          "geometry")
+      e
     }
+  }
 
   def exists(root: String,
       store: CommitStore = HardlinkCommitStore): Boolean =
-    store.listVersions(paramsRoot(root)).nonEmpty
+    kindsAt(root, store).nonEmpty
+
+  private def kindAt(root: String, store: CommitStore): Codec =
+    kindsAt(root, store) match {
+      case Seq(k) => k
+      case Seq() => throw new IllegalArgumentException(
+        s"no vector index at $root: params never committed (build() " +
+          "writes them before any table data)")
+      case ks => throw new IllegalStateException(s"vector index at " +
+        s"$root holds ${ks.map(_.name).mkString(" and ")} params")
+    }
 
   def readParams(root: String,
       store: CommitStore = HardlinkCommitStore): Params = {
-    val vs = store.listVersions(paramsRoot(root))
-    require(vs.nonEmpty, s"no vector index at $root: params never " +
-      "committed (build() writes them before any table data)")
-    parseParams(store.readBody(paramsRoot(root), vs.max))
+    val kind = kindAt(root, store)
+    val vs = store.listVersions(paramsRoot(root, kind))
+    parseParams(root, kind, store.readBody(paramsRoot(root, kind),
+      vs.max))
   }
 
   /** Serving guard: every read/assign path refuses params whose
@@ -127,57 +133,66 @@ object VectorIndex {
         "serves only unit-l2 (spherical) geometry — delete the " +
         "index root and rebuild")
 
-  /** (cell, vec_id, cv, cn) assignment frame — one map-side pass. */
-  private def assign(df: DataFrame, idCol: String, vecCol: String,
-      p: Params): DataFrame =
-    df.select(col(idCol).as("vec_id"), col(vecCol).as("cv"),
+  /** Train the coarse quantizer and the codec on `corpus`. */
+  private[operators] def train(corpus: DataFrame, idCol: String,
+      vecCol: String, nlist: Int, seed: Long, nInit: Int,
+      corpusTag: String, codec: Codec): Params = {
+    val (centroids, trained) = codec.train(corpus, idCol, vecCol, nlist,
+      seed, nInit, corpusTag)
+    Params(nlist, seed, centroids.head.length, centroids,
+      codec = trained)
+  }
+
+  /** The stored rows of `df` — one map-side assign+encode pass with
+    * the params' literals (rotated first when the codec rotates); no
+    * Exchange. `cn` is the raw norm: rotation preserves it, and the
+    * refine needs the raw-space value.
+    */
+  private[operators] def encode(df: DataFrame, idCol: String,
+      vecCol: String, p: Params): DataFrame =
+    p.codec.encode(df
+      .select(col(idCol).as("vec_id"), p.codec.rotate(col(vecCol)).as("cv"),
         VectorFns.norm(col(vecCol)).as("cn"))
       .withColumn("cell",
         Similarity.nearestCells(Similarity.unit(col("cv")),
-          p.centroids, 1).getItem(0))
+          p.centroids, 1).getItem(0)), p.centroids)
 
   /** Build (or rebuild over the SAME geometry) the index: train the
-    * coarse quantizer, claim params, overwrite the cell-partitioned
-    * assignments lake. Returns the committed params.
+    * coarse quantizer and the codec, claim params, overwrite the
+    * cell-partitioned rows lake. Returns the committed params.
+    *
+    * Training runs through [[Similarity.coarseCentroids]] — the
+    * canonical bounded feed on UNIT vectors (bit-reproducible, so
+    * index probes can carry pinned oracles) with nInit seeded restarts
+    * (a training dial, not geometry: the centroids freeze in the
+    * params). When `corpusTag` names the corpus the fit is memoized
+    * per session, so sibling builds of other codecs over the same
+    * corpus and geometry stop re-fitting identical centroids (SURVEY
+    * §5.3 finding 2: at ladder geometry the fit dominates the build).
     */
   def build(corpus: DataFrame, idCol: String, vecCol: String,
       root: String, nlist: Int = 16, seed: Long = 42L,
       filesPerPartition: Int = 1, nInit: Int = 10,
-      corpusTag: String = "",
+      corpusTag: String = "", codec: Codec = Codec.Flat,
       store: CommitStore = HardlinkCommitStore): Params = {
     import corpus.sparkSession.implicits._
     val dim = corpus.select(col(vecCol)).na.drop()
       .as[Seq[Float]].head().length
-    val p0 =
-      if (exists(root, store)) readParams(root, store)
-      else
-        // Shared coarse quantizer (r17, verdict #8): the fit runs
-        // through Similarity.coarseCentroids — canonical bounded feed
-        // on UNIT vectors (bit-reproducible, so index probes can
-        // carry pinned oracles), nInit seeded restarts (the C8
-        // discipline; a training dial, not geometry — the resulting
-        // centroids freeze in the params and the claim compares them)
-        // — and, when `corpusTag` names the corpus, is MEMOIZED per
-        // session so the sibling SQ/PQ builds over the same corpus
-        // and geometry stop re-fitting the identical centroids
-        // (SURVEY §5.3 finding 2: at ladder geometry the fit
-        // dominates the build). A memo hit is bit-identical to
-        // retraining by the determinism contract above.
-        Params(nlist, seed, dim, Similarity.coarseCentroids(corpus,
-          idCol, vecCol, nlist, seed, nInit = nInit,
-          corpusTag = corpusTag))
     // the claim carries the REQUESTED geometry — including the metric
     // THIS code implements — never the stored one, so a pre-metric
-    // ("l2") index on disk refuses here instead of being silently
-    // re-served under unit-vector probing
-    val p = claimOrRead(root, p0.copy(nlist = nlist, seed = seed,
-      dim = dim, centroids = p0.centroids, metric = "unit-l2"), store)
-    AtomicLake.overwrite(assign(corpus, idCol, vecCol, p),
-      cellsRoot(root), Seq("cell"), filesPerPartition, store)
+    // ("l2") index or a flipped codec flag on disk refuses here
+    // instead of being silently re-served
+    val p = claimOrRead(root,
+      if (exists(root, store)) readParams(root, store).copy(nlist = nlist,
+        seed = seed, dim = dim, metric = "unit-l2", codec = codec)
+      else train(corpus, idCol, vecCol, nlist, seed, nInit, corpusTag,
+        codec), store)
+    AtomicLake.overwrite(encode(corpus, idCol, vecCol, p),
+      codesRoot(root, p.codec), Seq("cell"), filesPerPartition, store)
     p
   }
 
-  /** Incremental ingest: assign `batch` with the PERSISTED centroids
+  /** Incremental ingest: encode `batch` with the PERSISTED params
     * (map-side, no retraining), drop ids already indexed (idempotent
     * re-delivery), append into the cell partitions. Returns the lake
     * version (unchanged when everything was already indexed).
@@ -187,47 +202,64 @@ object VectorIndex {
       store: CommitStore = HardlinkCommitStore): Long = {
     val p = readParams(root, store)
     requireServable(p, root)
-    val existing = AtomicLake.read(spark, cellsRoot(root), store)
+    val rows = codesRoot(root, p.codec)
+    val existing = AtomicLake.read(spark, rows, store)
       .select(col("vec_id"))
-    val fresh = assign(batch, idCol, vecCol, p)
+    val fresh = encode(batch, idCol, vecCol, p)
       .join(existing, Seq("vec_id"), "left_anti")
-    if (fresh.isEmpty)
-      AtomicLake.currentVersion(cellsRoot(root), store).get
-    else AtomicLake.append(fresh, cellsRoot(root), Seq("cell"),
-      filesPerPartition, store)
+    if (fresh.isEmpty) AtomicLake.currentVersion(rows, store).get
+    else AtomicLake.append(fresh, rows, Seq("cell"), filesPerPartition,
+      store)
   }
 
-  /** Top-k cosine neighbors of each query against the index: queries
-    * probe their `nprobe` nearest cells map-side, the probed cell SET
-    * (bounded by nlist) prunes the lake scan to those PARTITIONS, and
-    * only the surviving candidates pay the exact-cosine verify. The
-    * query side broadcasts (a probe batch is bounded); the corpus
-    * side is the partition-pruned scan.
+  /** Top-k cosine neighbors of each query against the index at `root`
+    * ([[probe]] over the partition-pruned lake scan). A refining codec
+    * re-scores its shortlist against `corpus`'s exact vectors.
     */
   def topK(spark: SparkSession, queries: DataFrame, idCol: String,
       vecCol: String, root: String, k: Int, nprobe: Int = 3,
+      refine: Int = 4, corpus: Option[DataFrame] = None,
       store: CommitStore = HardlinkCommitStore): DataFrame = {
     val p = readParams(root, store)
     requireServable(p, root)
-    val qc = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"),
+    probe(p, AtomicLake.scan(spark, codesRoot(root, p.codec), store)(_),
+      queries, corpus, idCol, vecCol, k, nprobe, refine)
+  }
+
+  /** The ONE probe of the IVF family: queries probe their `nprobe`
+    * nearest cells map-side, the probed cell SET (bounded by nlist,
+    * collected by design) becomes the predicate of `scan` — a
+    * partition-pruned lake scan, or a filter over an in-memory rows
+    * frame — and the stored rows join the broadcast query side (a
+    * probe batch is bounded) and take the codec's score. An exact
+    * codec ranks its cosines; an approximate one hands its scores to
+    * [[Similarity.shortlistRefine]].
+    */
+  private[operators] def probe(p: Params, scan: Column => DataFrame,
+      queries: DataFrame, corpus: Option[DataFrame], idCol: String,
+      vecCol: String, k: Int, nprobe: Int, refine: Int): DataFrame = {
+    val c = p.codec
+    require(!c.refines || refine >= 1,
+      s"refine must be >= 1, got $refine")
+    require(!c.refines || corpus.nonEmpty, s"a ${c.name} probe " +
+      "re-scores its shortlist against the exact vectors: pass corpus")
+    val qc = c.query(queries
+      .select(col(idCol).as("query_id"), c.rotate(col(vecCol)).as("qv"),
         VectorFns.norm(col(vecCol)).as("qn"))
       .withColumn("cell", explode(
         Similarity.nearestCells(Similarity.unit(col("qv")),
-          p.centroids, nprobe)))
-    // the distinct probed cells: bounded by nlist, driver-side by
-    // design — they BECOME the partition-pruning predicate
-    import spark.implicits._
+          p.centroids, nprobe))), p.centroids)
+    import queries.sparkSession.implicits._
     val probed = qc.select(col("cell")).distinct().as[Int]
       .collect().sorted
-    val cand = AtomicLake.scan(spark, cellsRoot(root), store)(
-      col("cell").isin(probed.map(Int.box): _*))
-    val scored = cand.join(broadcast(qc), Seq("cell"))
+    val scored = scan(col("cell").isin(probed.map(Int.box): _*))
+      .join(broadcast(qc), Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("cand_id"),
-        VectorFns.cosine(VectorFns.dot(col("qv"), col("cv")),
-          col("qn"), col("cn")).as("cosine"))
-    Similarity.topKPerQuery(scored, "cosine", k)
+        c.score(p.dim).as(if (c.refines) "approx_cosine" else "cosine"))
+    if (c.refines) Similarity.shortlistRefine(scored, corpus.get,
+      queries, idCol, vecCol, k, refine)
+    else Similarity.topKPerQuery(scored, "cosine", k)
   }
 
   /** (files planned, files total) for a probe of `cells` — the
@@ -235,525 +267,6 @@ object VectorIndex {
     */
   def probeScanInfo(root: String, cells: Seq[Int],
       store: CommitStore = HardlinkCommitStore): (Int, Int) =
-    AtomicLake.scanInfo(cellsRoot(root), store)(
-      col("cell").isin(cells.map(Int.box): _*))
-
-  // ------------------------------------------------------------------
-  // PQ tier (E6b ∘ E14): the persisted form of Similarity.pqIndex.
-  // The codebooks (m per-subspace KMeans fits) are a version-1 params
-  // claim through the CommitStore CAS — committed before any data,
-  // geometry-refused on mismatch, exactly the coarse-quantizer
-  // contract above — and the ENCODED corpus is a cell-partitioned
-  // AtomicLake of (cell, vec_id, codes, cn): m small ints + a norm
-  // per vector instead of the full embedding. At 100 TB this is the
-  // at-scale ANN shape: probes scan a partition-pruned slice of the
-  // ~64×-smaller codes table; the full vectors are touched only by
-  // the refine step's point lookups against the SOURCE corpus, never
-  // scanned.
-  // ------------------------------------------------------------------
-
-  /** PQ index parameters: the coarse quantizer (`base`) plus the flat
-    * subspace-major codebook (m·ks·dsub doubles). `residual` names
-    * the coding tier: false = codes quantize the raw vector
-    * (IndexPQ-style), true = codes quantize unit(v) − centroid(cell)
-    * (the FAISS IVFPQ default — see Similarity.rpqIndex). `rotation`
-    * (r12, empty = none) is the OPQ-P orthogonal rotation (d×d
-    * row-major — see Similarity.opqRotation) applied to every vector
-    * BEFORE cell assignment and coding; the whole index lives in
-    * rotated space, and only the refine step touches raw vectors.
-    * Both flags are pinned geometry: codes from different tiers are
-    * mutually meaningless, so a rebuild flipping either must refuse.
-    */
-  final case class PqParams(base: Params, m: Int, ks: Int,
-      books: Seq[Double], residual: Boolean = false,
-      rotation: Seq[Double] = Nil)
-
-  private def pqParamsRoot(root: String) = s"$root/pq_params"
-  private def codesRoot(root: String) = s"$root/codes"
-
-  private def pqParamsJson(p: PqParams): String = {
-    val cents = p.base.centroids.map(_.mkString("[", ",", "]"))
-      .mkString("[", ",", "]")
-    s"""{"nlist":${p.base.nlist},"seed":${p.base.seed},""" +
-      s""""dim":${p.base.dim},"metric":"${p.base.metric}",""" +
-      s""""m":${p.m},"ks":${p.ks},"residual":${p.residual},""" +
-      s""""rotation":${p.rotation.mkString("[", ",", "]")},""" +
-      s""""books":${p.books.mkString("[", ",", "]")},""" +
-      s""""centroids":$cents}"""
-  }
-
-  private def parsePqParams(s: String): PqParams = {
-    import org.json4s._
-    val base = parseParams(s)
-    val j = org.json4s.jackson.JsonMethods.parse(s)
-    def int(v: JValue): Int = v match {
-      case JInt(x) => x.toInt
-      case JLong(x) => x.toInt
-      case other => throw new IllegalStateException(
-        s"pq params: expected int, got $other")
-    }
-    def dbl(v: JValue): Double = v match {
-      case JDouble(x) => x
-      case JInt(x) => x.toDouble
-      case JLong(x) => x.toDouble
-      case JDecimal(x) => x.toDouble
-      case other => throw new IllegalStateException(
-        s"pq params: expected double, got $other")
-    }
-    val JArray(books) = j \ "books"
-    val residual = j \ "residual" match {
-      case JBool(b) => b
-      case _ => false // pre-residual params: raw-vector codes
-    }
-    val rotation = j \ "rotation" match {
-      case JArray(rs) => rs.map(dbl)
-      case _ => Nil // pre-rotation params: unrotated coding
-    }
-    PqParams(base, int(j \ "m"), int(j \ "ks"), books.map(dbl),
-      residual, rotation)
-  }
-
-  private def claimOrReadPq(root: String, p: PqParams,
-      store: CommitStore): PqParams =
-    if (store.tryCommit(pqParamsRoot(root), 1L, pqParamsJson(p))) p
-    else {
-      val e = parsePqParams(store.readBody(pqParamsRoot(root), 1L))
-      // rotation compares at the FLAG level (like centroids/books,
-      // the matrix itself is a function of geometry + build corpus)
-      require(e.base.nlist == p.base.nlist &&
-        e.base.seed == p.base.seed && e.base.dim == p.base.dim &&
-        e.base.metric == p.base.metric && e.m == p.m && e.ks == p.ks &&
-        e.residual == p.residual &&
-        e.rotation.nonEmpty == p.rotation.nonEmpty,
-        s"pq index at $root is pinned to nlist=${e.base.nlist} " +
-          s"seed=${e.base.seed} dim=${e.base.dim} " +
-          s"metric=${e.base.metric} m=${e.m} ks=${e.ks} " +
-          s"residual=${e.residual} opq=${e.rotation.nonEmpty}; " +
-          s"refusing nlist=${p.base.nlist} seed=${p.base.seed} " +
-          s"dim=${p.base.dim} metric=${p.base.metric} m=${p.m} " +
-          s"ks=${p.ks} residual=${p.residual} " +
-          s"opq=${p.rotation.nonEmpty} — delete the index root to " +
-          "change geometry")
-      e
-    }
-
-  def existsPq(root: String,
-      store: CommitStore = HardlinkCommitStore): Boolean =
-    store.listVersions(pqParamsRoot(root)).nonEmpty
-
-  def readPqParams(root: String,
-      store: CommitStore = HardlinkCommitStore): PqParams = {
-    val vs = store.listVersions(pqParamsRoot(root))
-    require(vs.nonEmpty, s"no pq index at $root: params never " +
-      "committed (buildPq() writes them before any table data)")
-    parsePqParams(store.readBody(pqParamsRoot(root), vs.max))
-  }
-
-  /** Apply the params' OPQ rotation map-side (identity when none):
-    * the PCA projector kernel with zero mean IS the rotation.
-    */
-  private def rotatedCol(vec: org.apache.spark.sql.Column,
-      p: PqParams): org.apache.spark.sql.Column =
-    if (p.rotation.isEmpty) vec
-    else graft.expressions.NativeKernels.pcaProjectCol(vec,
-      new Array[Double](p.base.dim), p.rotation.toArray, p.base.dim)
-
-  /** (cell, vec_id, codes, cn) — one map-side assign+encode pass with
-    * the params' centroid and codebook literals (rotated first when
-    * the index is OPQ); no Exchange. `cn` is the raw norm — rotation
-    * preserves it, and refine consumers need the raw-space value.
-    */
-  private def encodePq(df: DataFrame, idCol: String, vecCol: String,
-      p: PqParams): DataFrame = {
-    val booksLit = org.apache.spark.sql.functions.typedLit(p.books)
-    val celled = df
-      .select(col(idCol).as("vec_id"),
-        rotatedCol(col(vecCol), p).as("cv"),
-        VectorFns.norm(col(vecCol)).as("cn"))
-      .withColumn("cell",
-        Similarity.nearestCells(Similarity.unit(col("cv")),
-          p.base.centroids, 1).getItem(0))
-    val codes =
-      if (p.residual) graft.expressions.NativeKernels
-        .pqEncodeResidualCol(Similarity.unit(col("cv")), col("cell"),
-          org.apache.spark.sql.functions
-            .typedLit(p.base.centroids.flatten),
-          booksLit, p.m, p.ks)
-      else graft.expressions.NativeKernels
-        .pqEncodeCol(col("cv"), booksLit, p.m, p.ks)
-    celled.select(col("cell"), col("vec_id"), codes.as("codes"),
-      col("cn"))
-  }
-
-  /** Build (or rebuild over the SAME geometry) the PQ index: train
-    * coarse quantizer + codebooks (both on the canonical bounded feed
-    * — bit-reproducible), claim params, overwrite the
-    * cell-partitioned codes lake. `opq = true` (requires `residual`)
-    * learns the OPQ-P rotation first (Similarity.opqRotation — also
-    * canonical-feed deterministic) and trains/encodes everything in
-    * rotated space; the rotation persists in the params, so probes
-    * and appends rotate map-side with the SAME matrix forever.
-    */
-  def buildPq(corpus: DataFrame, idCol: String, vecCol: String,
-      root: String, nlist: Int = 16, m: Int = 8, ks: Int = 16,
-      seed: Long = 42L, filesPerPartition: Int = 1,
-      residual: Boolean = false, opq: Boolean = false,
-      nInit: Int = 10, corpusTag: String = "",
-      store: CommitStore = HardlinkCommitStore): PqParams = {
-    require(!opq || residual,
-      "opq composes with residual coding (Similarity.opqTopK's shape)")
-    import corpus.sparkSession.implicits._
-    val dim = corpus.select(col(vecCol)).na.drop()
-      .as[Seq[Float]].head().length
-    val p0 =
-      if (existsPq(root, store)) readPqParams(root, store)
-      else {
-        val rotation: Seq[Double] =
-          if (opq) Similarity.opqRotation(corpus, idCol, vecCol, m)
-            .toSeq
-          else Nil
-        val feed =
-          if (opq) corpus.select(col(idCol),
-            graft.expressions.NativeKernels.pcaProjectCol(col(vecCol),
-              new Array[Double](dim), rotation.toArray, dim)
-              .as(vecCol))
-          else corpus
-        // coarse quantizer via the shared (tag-memoized) fit — see
-        // build(). An OPQ build trains in ROTATED space: its
-        // quantizer is a different function than the raw corpus's, so
-        // the tag is salted with the rotation identity to keep the
-        // two memo slots apart.
-        val tag =
-          if (corpusTag.isEmpty) ""
-          else if (opq) s"$corpusTag#opq-m$m" else corpusTag
-        val centroids = Similarity.coarseCentroids(feed, idCol, vecCol,
-          nlist, seed, nInit = nInit, corpusTag = tag)
-        val books =
-          if (residual) Similarity.rpqBooks(feed, idCol, vecCol,
-            centroids, m, ks, seed, dim)
-          else Similarity.pqBooks(feed, idCol, vecCol, m, ks, seed,
-            dim)
-        PqParams(Params(nlist, seed, dim, centroids), m, ks,
-          books, residual, rotation)
-      }
-    // claim carries the REQUESTED geometry (not the stored one) —
-    // including metric and the opq flag, so a rebuild asking for
-    // different nlist/m/ks/residual/opq, or against a pre-metric
-    // ("l2") index, refuses instead of silently reusing the pinned
-    // index
-    val p = claimOrReadPq(root, p0.copy(
-      base = p0.base.copy(nlist = nlist, seed = seed, dim = dim,
-        metric = "unit-l2"),
-      m = m, ks = ks, residual = residual,
-      rotation = if (opq) p0.rotation else Nil), store)
-    // the flag compare above can't catch "opq requested against a
-    // stored non-opq index" (both claims carry an empty rotation
-    // then) — refuse it here
-    require(p.rotation.nonEmpty == opq,
-      s"pq index at $root is pinned to opq=${p.rotation.nonEmpty}; " +
-        s"refusing opq=$opq — delete the index root to change " +
-        "geometry")
-    AtomicLake.overwrite(encodePq(corpus, idCol, vecCol, p),
-      codesRoot(root), Seq("cell"), filesPerPartition, store)
-    p
-  }
-
-  /** Incremental PQ ingest: encode `batch` with the PERSISTED
-    * codebooks (map-side, no retraining), drop already-indexed ids
-    * (idempotent re-delivery), append into the cell partitions.
-    */
-  def appendPq(spark: SparkSession, batch: DataFrame, idCol: String,
-      vecCol: String, root: String, filesPerPartition: Int = 1,
-      store: CommitStore = HardlinkCommitStore): Long = {
-    val p = readPqParams(root, store)
-    requireServable(p.base, root)
-    val existing = AtomicLake.read(spark, codesRoot(root), store)
-      .select(col("vec_id"))
-    val fresh = encodePq(batch, idCol, vecCol, p)
-      .join(existing, Seq("vec_id"), "left_anti")
-    if (fresh.isEmpty)
-      AtomicLake.currentVersion(codesRoot(root), store).get
-    else AtomicLake.append(fresh, codesRoot(root), Seq("cell"),
-      filesPerPartition, store)
-  }
-
-  /** IVF-PQ top-k served FROM THE LAKE, bit-identical to the
-    * in-memory [[Similarity.pqTopK]] on the same build inputs (codes
-    * and norms round-trip parquet exactly): probe cells map-side, ADC
-    * against the partition-pruned codes scan, shortlist top
-    * k·refine, re-score ONLY the shortlist against `corpus`'s exact
-    * vectors (point lookups — the only place full embeddings appear).
-    */
-  def topKPq(spark: SparkSession, queries: DataFrame,
-      corpus: DataFrame, idCol: String, vecCol: String, root: String,
-      k: Int, nprobe: Int = 3, refine: Int = 4,
-      store: CommitStore = HardlinkCommitStore): DataFrame = {
-    require(refine >= 1, s"refine must be >= 1, got $refine")
-    val p = readPqParams(root, store)
-    requireServable(p.base, root)
-    val booksLit = org.apache.spark.sql.functions.typedLit(p.books)
-    // residual tier: the table is per (query, probed cell) from the
-    // UNIT query with the centroid folded in, and the ADC dot IS the
-    // approximate cosine (Similarity.rpqTopK's shape)
-    val tbl =
-      if (p.residual) graft.expressions.NativeKernels
-        .adcTableResidualCol(Similarity.unit(col("qv")), col("cell"),
-          org.apache.spark.sql.functions
-            .typedLit(p.base.centroids.flatten),
-          booksLit, p.m, p.ks)
-      else graft.expressions.NativeKernels
-        .adcTableCol(col("qv"), booksLit, p.m, p.ks)
-    // OPQ indexes probe in rotated space: `qv` here feeds only cell
-    // assignment and the ADC table; the refine below re-scores the
-    // shortlist against the RAW corpus/query vectors either way
-    val qc = queries
-      .select(col(idCol).as("query_id"),
-        rotatedCol(col(vecCol), p).as("qv"),
-        VectorFns.norm(col(vecCol)).as("qn"))
-      .withColumn("cell", explode(
-        Similarity.nearestCells(Similarity.unit(col("qv")),
-          p.base.centroids, nprobe)))
-      .withColumn("tbl", tbl)
-      .select(col("query_id"), col("qn"), col("cell"), col("tbl"))
-    import spark.implicits._
-    val probed = qc.select(col("cell")).distinct().as[Int]
-      .collect().sorted
-    val codes = AtomicLake.scan(spark, codesRoot(root), store)(
-      col("cell").isin(probed.map(Int.box): _*))
-    val adc = graft.expressions.NativeKernels
-      .adcDotCol(col("codes"), col("tbl"), p.ks)
-    val approx = codes.join(broadcast(qc), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("cand_id"),
-        (if (p.residual) adc else adc / (col("qn") * col("cn")))
-          .as("approx_cosine"))
-    // bounded-aggregate corpus-sized approx ranking
-    // (Similarity.topKPerQuery — the spilling-window §5.3 finding);
-    // the exact refine reuses the same aggregate on the shortlist
-    val short = Similarity.topKPerQuery(approx, "approx_cosine",
-        k * refine, rankCol = "arank")
-      .select(col("query_id"), col("cand_id"))
-    val cand = corpus.select(col(idCol).as("cand_id"),
-      col(vecCol).as("cv"), VectorFns.norm(col(vecCol)).as("cn"))
-    val q = queries.select(col(idCol).as("query_id"),
-      col(vecCol).as("qv"), VectorFns.norm(col(vecCol)).as("qn"))
-    val exact = cand.join(broadcast(short), Seq("cand_id"))
-      .join(broadcast(q), Seq("query_id"))
-      .select(col("query_id"), col("cand_id"),
-        VectorFns.cosine(VectorFns.dot(col("qv"), col("cv")),
-          col("qn"), col("cn")).as("cosine"))
-    Similarity.topKPerQuery(exact, "cosine", k)
-  }
-
-  /** (files planned, files total) for a PQ probe of `cells`. */
-  def pqProbeScanInfo(root: String, cells: Seq[Int],
-      store: CommitStore = HardlinkCommitStore): (Int, Int) =
-    AtomicLake.scanInfo(codesRoot(root), store)(
-      col("cell").isin(cells.map(Int.box): _*))
-
-  // ------------------------------------------------------------------
-  // SQ8 tier (E6d ∘ E14): the persisted form of Similarity.sqIndex.
-  // Same contracts as the PQ tier — params (coarse quantizer + the
-  // per-dim [vmin, vmax] bounds) CAS-committed version-1 before any
-  // data, geometry-refused on mismatch, codes in a cell-partitioned
-  // AtomicLake of (cell, vec_id, codes BINARY, cn): one byte per
-  // dimension instead of a 4-byte float — the near-exact 4× scan
-  // tier a serving fleet keeps hot while the PQ tiers cover the
-  // cold bulk.
-  // ------------------------------------------------------------------
-
-  /** SQ8 index parameters: coarse quantizer plus the per-dimension
-    * affine bounds codes decode against. Like centroids, the bounds
-    * are a function of geometry + build corpus and compare only
-    * implicitly (via nlist/seed/dim/metric).
-    */
-  final case class SqParams(base: Params, vmin: Seq[Double],
-      vmax: Seq[Double])
-
-  private def sqParamsRoot(root: String) = s"$root/sq_params"
-  private def sqCodesRoot(root: String) = s"$root/sq_codes"
-
-  private def sqParamsJson(p: SqParams): String = {
-    val cents = p.base.centroids.map(_.mkString("[", ",", "]"))
-      .mkString("[", ",", "]")
-    s"""{"nlist":${p.base.nlist},"seed":${p.base.seed},""" +
-      s""""dim":${p.base.dim},"metric":"${p.base.metric}",""" +
-      s""""vmin":${p.vmin.mkString("[", ",", "]")},""" +
-      s""""vmax":${p.vmax.mkString("[", ",", "]")},""" +
-      s""""centroids":$cents}"""
-  }
-
-  private def parseSqParams(s: String): SqParams = {
-    import org.json4s._
-    val base = parseParams(s)
-    val j = org.json4s.jackson.JsonMethods.parse(s)
-    def dbl(v: JValue): Double = v match {
-      case JDouble(x) => x
-      case JInt(x) => x.toDouble
-      case JLong(x) => x.toDouble
-      case JDecimal(x) => x.toDouble
-      case other => throw new IllegalStateException(
-        s"sq params: expected double, got $other")
-    }
-    def darr(v: JValue): Seq[Double] = v match {
-      case JArray(xs) => xs.map(dbl)
-      case other => throw new IllegalStateException(
-        s"sq params: expected array, got $other")
-    }
-    SqParams(base, darr(j \ "vmin"), darr(j \ "vmax"))
-  }
-
-  private def claimOrReadSq(root: String, p: SqParams,
-      store: CommitStore): SqParams =
-    if (store.tryCommit(sqParamsRoot(root), 1L, sqParamsJson(p))) p
-    else {
-      val e = parseSqParams(store.readBody(sqParamsRoot(root), 1L))
-      require(e.base.nlist == p.base.nlist &&
-        e.base.seed == p.base.seed && e.base.dim == p.base.dim &&
-        e.base.metric == p.base.metric,
-        s"sq index at $root is pinned to nlist=${e.base.nlist} " +
-          s"seed=${e.base.seed} dim=${e.base.dim} " +
-          s"metric=${e.base.metric}; refusing nlist=${p.base.nlist} " +
-          s"seed=${p.base.seed} dim=${p.base.dim} " +
-          s"metric=${p.base.metric} — delete the index root to " +
-          "change geometry")
-      e
-    }
-
-  def existsSq(root: String,
-      store: CommitStore = HardlinkCommitStore): Boolean =
-    store.listVersions(sqParamsRoot(root)).nonEmpty
-
-  def readSqParams(root: String,
-      store: CommitStore = HardlinkCommitStore): SqParams = {
-    val vs = store.listVersions(sqParamsRoot(root))
-    require(vs.nonEmpty, s"no sq index at $root: params never " +
-      "committed (buildSq() writes them before any table data)")
-    parseSqParams(store.readBody(sqParamsRoot(root), vs.max))
-  }
-
-  /** (cell, vec_id, codes BINARY, cn) — one map-side assign+encode
-    * pass with the params' centroid and bounds literals; no Exchange.
-    */
-  private def encodeSq(df: DataFrame, idCol: String, vecCol: String,
-      p: SqParams): DataFrame = {
-    val loLit = org.apache.spark.sql.functions.typedLit(p.vmin)
-    val hiLit = org.apache.spark.sql.functions.typedLit(p.vmax)
-    df.select(col(idCol).as("vec_id"), col(vecCol).as("cv"),
-        VectorFns.norm(col(vecCol)).as("cn"))
-      .withColumn("cell",
-        Similarity.nearestCells(Similarity.unit(col("cv")),
-          p.base.centroids, 1).getItem(0))
-      .select(col("cell"), col("vec_id"),
-        graft.expressions.NativeKernels.sq8EncodeCol(
-          Similarity.unit(col("cv")), loLit, hiLit).as("codes"),
-        col("cn"))
-  }
-
-  /** Build (or rebuild over the SAME geometry) the SQ8 index: train
-    * the coarse quantizer (canonical feed) and the bounds (one exact
-    * min/max pass — deterministic at any scale), claim params,
-    * overwrite the cell-partitioned codes lake.
-    */
-  def buildSq(corpus: DataFrame, idCol: String, vecCol: String,
-      root: String, nlist: Int = 16, seed: Long = 42L,
-      filesPerPartition: Int = 1, nInit: Int = 10,
-      corpusTag: String = "",
-      store: CommitStore = HardlinkCommitStore): SqParams = {
-    import corpus.sparkSession.implicits._
-    val dim = corpus.select(col(vecCol)).na.drop()
-      .as[Seq[Float]].head().length
-    val p0 =
-      if (existsSq(root, store)) readSqParams(root, store)
-      else {
-        // coarse quantizer via the shared (tag-memoized) fit — see
-        // build(); the bounds pass is the only SQ-specific training
-        val centroids = Similarity.coarseCentroids(corpus, idCol,
-          vecCol, nlist, seed, nInit = nInit, corpusTag = corpusTag)
-        val (lo, hi) = Similarity.unitBounds(corpus, vecCol)
-        SqParams(Params(nlist, seed, dim, centroids), lo.toSeq,
-          hi.toSeq)
-      }
-    val p = claimOrReadSq(root, p0.copy(
-      base = p0.base.copy(nlist = nlist, seed = seed, dim = dim,
-        metric = "unit-l2")), store)
-    AtomicLake.overwrite(encodeSq(corpus, idCol, vecCol, p),
-      sqCodesRoot(root), Seq("cell"), filesPerPartition, store)
-    p
-  }
-
-  /** Incremental SQ8 ingest: encode `batch` with the PERSISTED
-    * bounds (map-side, no retraining), drop already-indexed ids,
-    * append into the cell partitions.
-    */
-  def appendSq(spark: SparkSession, batch: DataFrame, idCol: String,
-      vecCol: String, root: String, filesPerPartition: Int = 1,
-      store: CommitStore = HardlinkCommitStore): Long = {
-    val p = readSqParams(root, store)
-    requireServable(p.base, root)
-    val existing = AtomicLake.read(spark, sqCodesRoot(root), store)
-      .select(col("vec_id"))
-    val fresh = encodeSq(batch, idCol, vecCol, p)
-      .join(existing, Seq("vec_id"), "left_anti")
-    if (fresh.isEmpty)
-      AtomicLake.currentVersion(sqCodesRoot(root), store).get
-    else AtomicLake.append(fresh, sqCodesRoot(root), Seq("cell"),
-      filesPerPartition, store)
-  }
-
-  /** SQ8 top-k served FROM THE LAKE, bit-identical to the in-memory
-    * [[Similarity.sqTopK]] on the same build inputs: probe cells
-    * map-side, score the partition-pruned byte codes with the
-    * decode-folded dot, shortlist top k·refine, re-score ONLY the
-    * shortlist against `corpus`'s exact vectors.
-    */
-  def topKSq(spark: SparkSession, queries: DataFrame,
-      corpus: DataFrame, idCol: String, vecCol: String, root: String,
-      k: Int, nprobe: Int = 3, refine: Int = 4,
-      store: CommitStore = HardlinkCommitStore): DataFrame = {
-    require(refine >= 1, s"refine must be >= 1, got $refine")
-    val p = readSqParams(root, store)
-    requireServable(p.base, root)
-    val loLit = org.apache.spark.sql.functions.typedLit(p.vmin)
-    val hiLit = org.apache.spark.sql.functions.typedLit(p.vmax)
-    val qc = queries
-      .select(col(idCol).as("query_id"),
-        Similarity.unit(col(vecCol)).as("uq"))
-      .withColumn("cell", explode(
-        Similarity.nearestCells(col("uq"), p.base.centroids, nprobe)))
-      .select(col("query_id"), col("uq"), col("cell"))
-    import spark.implicits._
-    val probed = qc.select(col("cell")).distinct().as[Int]
-      .collect().sorted
-    val codes = AtomicLake.scan(spark, sqCodesRoot(root), store)(
-      col("cell").isin(probed.map(Int.box): _*))
-    val approx = codes.join(broadcast(qc), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("cand_id"),
-        graft.expressions.NativeKernels
-          .sq8DotCol(col("uq"), col("codes"), loLit, hiLit)
-          .as("approx_cosine"))
-    // bounded-aggregate corpus-sized approx ranking
-    // (Similarity.topKPerQuery — the spilling-window §5.3 finding);
-    // the exact refine reuses the same aggregate on the shortlist
-    val short = Similarity.topKPerQuery(approx, "approx_cosine",
-        k * refine, rankCol = "arank")
-      .select(col("query_id"), col("cand_id"))
-    val cand = corpus.select(col(idCol).as("cand_id"),
-      col(vecCol).as("cv"), VectorFns.norm(col(vecCol)).as("cn"))
-    val q = queries.select(col(idCol).as("query_id"),
-      col(vecCol).as("qv"), VectorFns.norm(col(vecCol)).as("qn"))
-    val exact = cand.join(broadcast(short), Seq("cand_id"))
-      .join(broadcast(q), Seq("query_id"))
-      .select(col("query_id"), col("cand_id"),
-        VectorFns.cosine(VectorFns.dot(col("qv"), col("cv")),
-          col("qn"), col("cn")).as("cosine"))
-    Similarity.topKPerQuery(exact, "cosine", k)
-  }
-
-  /** (files planned, files total) for an SQ probe of `cells`. */
-  def sqProbeScanInfo(root: String, cells: Seq[Int],
-      store: CommitStore = HardlinkCommitStore): (Int, Int) =
-    AtomicLake.scanInfo(sqCodesRoot(root), store)(
+    AtomicLake.scanInfo(codesRoot(root, kindAt(root, store)), store)(
       col("cell").isin(cells.map(Int.box): _*))
 }

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 import graft.lakehouse.Silver
-import graft.operators.{Clustering, Similarity}
+import graft.operators.{Clustering, Codec, Similarity, VectorIndex}
 
 /** Vector similarity + clustering query family (SURVEY.md §2 E5/E6,
   * C8-C10). `ann_topk` is oracle-gated (its ordered-fold dot product
@@ -16,6 +16,14 @@ object VectorQueries {
 
   private def fact(s: org.apache.spark.sql.SparkSession, dir: String) =
     Silver.factEventsCached(s, dir)
+
+  /** The persisted index root of an ann_* entry:
+    * `target/lake/<name>/<dir>` resolved against the working directory
+    * (the checkout root under sbt, `graft.Verify` and `tools/check.py`).
+    */
+  private def indexRoot(name: String, dir: String): String =
+    java.nio.file.Paths.get("target", "lake", name,
+      dir.replaceAll("[^A-Za-z0-9.]", "_")).toAbsolutePath.toString
 
   val queries: Map[String, Q] = Map(
 
@@ -52,16 +60,14 @@ object VectorQueries {
     // code ints + a norm instead of 64 floats; ADC scores cost m
     // table lookups; only the k*refine shortlist touches real vectors.
     "ann_pq_topk" -> { (s, dir) =>
-      val root = "/root/repo/target/lake/pq_index_q2/" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
+      val root = indexRoot("pq_index_q2", dir)
       val emb = Tables.embeddings(s, dir)
-      if (!graft.operators.VectorIndex.existsPq(root))
-        graft.operators.VectorIndex.buildPq(emb, "vec_id", "embedding",
-          root, nlist = 16, m = 8, ks = 16, seed = 42L,
-          corpusTag = dir)
-      graft.operators.VectorIndex.topKPq(s,
-        emb.filter(col("vec_id") < 8), emb, "vec_id", "embedding",
-        root, k = 10, nprobe = 8, refine = 8)
+      if (!VectorIndex.exists(root))
+        VectorIndex.build(emb, "vec_id", "embedding", root, nlist = 16,
+          seed = 42L, corpusTag = dir, codec = Codec.Pq(m = 8, ks = 16))
+      VectorIndex.topK(s, emb.filter(col("vec_id") < 8), "vec_id",
+        "embedding", root, k = 10, nprobe = 8, refine = 8,
+        corpus = Some(emb))
     },
 
     // E6e — IVF binary (sign) quantization: one bit per dimension,
@@ -91,15 +97,14 @@ object VectorQueries {
     // to the in-memory Similarity.sqTopK. Recall/bound/kernel
     // contracts spec-gated in SimilaritySpec.
     "ann_sq_topk" -> { (s, dir) =>
-      val root = "/root/repo/target/lake/sq_index_q1/" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
+      val root = indexRoot("sq_index_q1", dir)
       val emb = Tables.embeddings(s, dir)
-      if (!graft.operators.VectorIndex.existsSq(root))
-        graft.operators.VectorIndex.buildSq(emb, "vec_id", "embedding",
-          root, nlist = 16, seed = 42L, corpusTag = dir)
-      graft.operators.VectorIndex.topKSq(s,
-        emb.filter(col("vec_id") < 8), emb, "vec_id", "embedding",
-        root, k = 10, nprobe = 8, refine = 8)
+      if (!VectorIndex.exists(root))
+        VectorIndex.build(emb, "vec_id", "embedding", root, nlist = 16,
+          seed = 42L, corpusTag = dir, codec = Codec.Sq8())
+      VectorIndex.topK(s, emb.filter(col("vec_id") < 8), "vec_id",
+        "embedding", root, k = 10, nprobe = 8, refine = 8,
+        corpus = Some(emb))
     },
 
     // E6c — OPQ-P rotation tier (parametric OPQ, Ge et al. 2013),
@@ -121,16 +126,15 @@ object VectorQueries {
       // q2: r13 rotation-allocation fix (ascending-LPT eigenvalue
       // balancing) — the persisted rotation changed, so the root
       // bumps and the picks re-pin
-      val root = "/root/repo/target/lake/opq_index_q2/" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
+      val root = indexRoot("opq_index_q2", dir)
       val emb = Tables.embeddings(s, dir)
-      if (!graft.operators.VectorIndex.existsPq(root))
-        graft.operators.VectorIndex.buildPq(emb, "vec_id", "embedding",
-          root, nlist = 16, m = 8, ks = 16, seed = 42L,
-          residual = true, opq = true, corpusTag = dir)
-      graft.operators.VectorIndex.topKPq(s,
-        emb.filter(col("vec_id") < 8), emb, "vec_id", "embedding",
-        root, k = 10, nprobe = 8, refine = 8)
+      if (!VectorIndex.exists(root))
+        VectorIndex.build(emb, "vec_id", "embedding", root, nlist = 16,
+          seed = 42L, corpusTag = dir, codec = Codec.Pq(m = 8, ks = 16,
+            residual = true, opq = true))
+      VectorIndex.topK(s, emb.filter(col("vec_id") < 8), "vec_id",
+        "embedding", root, k = 10, nprobe = 8, refine = 8,
+        corpus = Some(emb))
     },
 
     // E6b residual variant — FAISS-IVFPQ-shape residual coding,
@@ -146,16 +150,15 @@ object VectorQueries {
     // uniform corpora like this one are the variant's no-win case,
     // clustered real embeddings are where it pays).
     "ann_rpq_topk" -> { (s, dir) =>
-      val root = "/root/repo/target/lake/rpq_index_q1/" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
+      val root = indexRoot("rpq_index_q1", dir)
       val emb = Tables.embeddings(s, dir)
-      if (!graft.operators.VectorIndex.existsPq(root))
-        graft.operators.VectorIndex.buildPq(emb, "vec_id", "embedding",
-          root, nlist = 16, m = 8, ks = 16, seed = 42L,
-          residual = true, corpusTag = dir)
-      graft.operators.VectorIndex.topKPq(s,
-        emb.filter(col("vec_id") < 8), emb, "vec_id", "embedding",
-        root, k = 10, nprobe = 8, refine = 8)
+      if (!VectorIndex.exists(root))
+        VectorIndex.build(emb, "vec_id", "embedding", root, nlist = 16,
+          seed = 42L, corpusTag = dir, codec = Codec.Pq(m = 8, ks = 16,
+            residual = true))
+      VectorIndex.topK(s, emb.filter(col("vec_id") < 8), "vec_id",
+        "embedding", root, k = 10, nprobe = 8, refine = 8,
+        corpus = Some(emb))
     },
 
     // E2-family — embedding-cosine near-dup over the whole corpus via
@@ -209,15 +212,13 @@ object VectorQueries {
       // q3: the quantizer now trains on UNIT vectors (the ivfIndex
       // metric contract; q2 trained raw) — a stale q2 index must
       // rebuild, not serve the pinned oracle
-      val root = "/root/repo/target/lake/vector_index_q3/" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
+      val root = indexRoot("vector_index_q3", dir)
       val emb = Tables.embeddings(s, dir)
-      if (!graft.operators.VectorIndex.exists(root))
-        graft.operators.VectorIndex.build(emb, "vec_id", "embedding",
-          root, nlist = 8, seed = 42L, corpusTag = dir)
-      graft.operators.VectorIndex.topK(s,
-        emb.filter(col("vec_id") < 8), "vec_id", "embedding", root,
-        k = 10, nprobe = 3)
+      if (!VectorIndex.exists(root))
+        VectorIndex.build(emb, "vec_id", "embedding", root, nlist = 8,
+          seed = 42L, corpusTag = dir)
+      VectorIndex.topK(s, emb.filter(col("vec_id") < 8), "vec_id",
+        "embedding", root, k = 10, nprobe = 3)
     },
 
     // E13 — PCA projection of the embedding corpus to 16 dims. One

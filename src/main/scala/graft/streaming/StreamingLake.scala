@@ -114,14 +114,15 @@ object StreamingLake {
 
   /** Streaming vector ingest ∘ live ANN index (the embedding twin of
     * [[ingestWithIndexSink]]): each micro-batch of (id, vector) rows
-    * is assigned MAP-SIDE with the index's persisted centroids and
-    * appended into the cell-partitioned index lake
+    * is encoded MAP-SIDE with the index's persisted params — whatever
+    * its codec — and appended into the cell-partitioned index lake
     * ([[graft.operators.VectorIndex.append]] — idempotent by id, so a
-    * redelivered micro-batch converges with no duplicate
-    * assignments). The index must exist (built from a seed corpus —
-    * a quantizer trained on a single first micro-batch would pin
-    * arbitrary geometry); the build-first contract is checked per
-    * batch and fails the query loudly instead of training silently.
+    * redelivered micro-batch converges with no duplicate rows). The
+    * index must exist (built from a seed corpus — a quantizer or
+    * codebook trained on a drip of early micro-batches would pin
+    * unrepresentative geometry); the build-first contract is checked
+    * per batch and fails the query loudly instead of training
+    * silently.
     */
   def vectorIndexSink(stream: DataFrame, idCol: String,
       vecCol: String, indexRoot: String, checkpoint: String,
@@ -137,58 +138,6 @@ object StreamingLake {
               "corpus before streaming into it")
           VectorIndex.append(batch.sparkSession, batch, idCol, vecCol,
             indexRoot, store = store)
-          ()
-        }
-      }
-
-  /** [[vectorIndexSink]]'s PQ twin: each micro-batch encodes with the
-    * PERSISTED codebooks ([[graft.operators.VectorIndex.appendPq]] —
-    * map-side, no retraining, idempotent by id, so a re-delivered
-    * batch is a no-op) and appends into the cell-partitioned codes
-    * lake. The index must be built from a seed corpus first — the
-    * codebooks ARE the corpus↔codes contract, and training them on a
-    * drip of micro-batches would quantize early batches with
-    * unrepresentative centroids.
-    */
-  def pqIndexSink(stream: DataFrame, idCol: String,
-      vecCol: String, indexRoot: String, checkpoint: String,
-      store: graft.sources.CommitStore =
-        graft.sources.HardlinkCommitStore): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          import graft.operators.VectorIndex
-          require(VectorIndex.existsPq(indexRoot, store),
-            s"no pq index at $indexRoot: buildPq() one from a seed " +
-              "corpus before streaming into it")
-          VectorIndex.appendPq(batch.sparkSession, batch, idCol,
-            vecCol, indexRoot, store = store)
-          ()
-        }
-      }
-
-  /** [[vectorIndexSink]]'s SQ8 twin: each micro-batch encodes with
-    * the PERSISTED bounds ([[graft.operators.VectorIndex.appendSq]] —
-    * map-side, no retraining, idempotent by id) and appends into the
-    * cell-partitioned byte-codes lake. Build-first contract as the
-    * other tiers: bounds trained on a drip of early micro-batches
-    * would clip later vectors' codes.
-    */
-  def sqIndexSink(stream: DataFrame, idCol: String,
-      vecCol: String, indexRoot: String, checkpoint: String,
-      store: graft.sources.CommitStore =
-        graft.sources.HardlinkCommitStore): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          import graft.operators.VectorIndex
-          require(VectorIndex.existsSq(indexRoot, store),
-            s"no sq index at $indexRoot: buildSq() one from a seed " +
-              "corpus before streaming into it")
-          VectorIndex.appendSq(batch.sparkSession, batch, idCol,
-            vecCol, indexRoot, store = store)
           ()
         }
       }

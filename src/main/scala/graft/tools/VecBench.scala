@@ -43,7 +43,7 @@ object VecBench {
     sys.env.get("SPARK_GRAFT_VEC_SPLIT_MB").foreach(mb =>
       spark.conf.set("spark.sql.files.maxPartitionBytes",
         (mb.toLong << 20).toString))
-    import graft.operators.{Similarity, VectorIndex}
+    import graft.operators.{Codec, Similarity, VectorIndex}
     import spark.implicits._
 
     def emb() = graft.sources.Tables.embeddings(spark, dir)
@@ -52,7 +52,7 @@ object VecBench {
       Integer.highestOneBit(math.sqrt(n.toDouble).toInt))
     val nprobe = sys.env.get("SPARK_GRAFT_VEC_NPROBE").map(_.toInt)
       .getOrElse(math.max(3, nlist / 16))
-    // restart dial for the quantizer fits (see Similarity.ivfIndex):
+    // restart dial for the quantizer fits (see Similarity.coarseCentroids):
     // the ladder's default keeps the production best-of-10 discipline;
     // SPARK_GRAFT_VEC_NINIT=1 prices the FAISS-default single fit
     val nInit = sys.env.get("SPARK_GRAFT_VEC_NINIT").map(_.toInt)
@@ -153,29 +153,30 @@ object VecBench {
       }),
       "vec_pq_build" -> (() => {
         fresh("pq")
-        VectorIndex.buildPq(emb(), "vec_id", "embedding", pqRoot,
-          nlist = nlist, m = 8, ks = 16, residual = true,
-          nInit = nInit, corpusTag = dir)
+        VectorIndex.build(emb(), "vec_id", "embedding", pqRoot,
+          nlist = nlist, nInit = nInit, corpusTag = dir,
+          codec = Codec.Pq(m = 8, ks = 16, residual = true))
         (graft.sources.AtomicLake.read(spark, s"$pqRoot/codes")
           .count(), "")
       }),
       "vec_pq_probe" -> (() => {
-        val got = topSets(VectorIndex.topKPq(spark, queries(), emb(),
-          "vec_id", "embedding", pqRoot, k = k, nprobe = nprobe,
-          refine = 4))
+        val got = topSets(VectorIndex.topK(spark, queries(), "vec_id",
+          "embedding", pqRoot, k = k, nprobe = nprobe, refine = 4,
+          corpus = Some(emb())))
         (got.size.toLong * k, f"recall=${recall(got)}%.3f")
       }),
       "vec_sq_build" -> (() => {
         fresh("sq")
-        VectorIndex.buildSq(emb(), "vec_id", "embedding", sqRoot,
-          nlist = nlist, nInit = nInit, corpusTag = dir)
+        VectorIndex.build(emb(), "vec_id", "embedding", sqRoot,
+          nlist = nlist, nInit = nInit, corpusTag = dir,
+          codec = Codec.Sq8())
         (graft.sources.AtomicLake.read(spark, s"$sqRoot/sq_codes")
           .count(), "")
       }),
       "vec_sq_probe" -> (() => {
-        val got = topSets(VectorIndex.topKSq(spark, queries(), emb(),
-          "vec_id", "embedding", sqRoot, k = k, nprobe = nprobe,
-          refine = 4))
+        val got = topSets(VectorIndex.topK(spark, queries(), "vec_id",
+          "embedding", sqRoot, k = k, nprobe = nprobe, refine = 4,
+          corpus = Some(emb())))
         (got.size.toLong * k, f"recall=${recall(got)}%.3f")
       }),
       "vec_ivf_append10k" -> (() => {

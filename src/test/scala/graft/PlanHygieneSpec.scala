@@ -138,9 +138,9 @@ class PlanHygieneSpec extends SparkSpec {
     it("no Exchange between the corpus scan and the celled output") {
       import graft.operators.Similarity
       val emb = Tables.embeddings(spark, sf)
-      val idx = Similarity.ivfIndex(emb, "vec_id", "embedding",
+      val idx = Similarity.index(emb, "vec_id", "embedding",
         nlist = 8, seed = 42L)
-      val plan = idx.corpusCells.queryExecution.executedPlan.toString
+      val plan = idx.codes.queryExecution.executedPlan.toString
       plan should not include "Exchange"
       plan should not include "Window"
       plan should include("static_invoke") // the nearestCells kernel

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Similarity
+import graft.operators.{Codec, Similarity}
 import graft.sources.Tables
 
 class SimilaritySpec extends SparkSpec {
@@ -246,20 +246,21 @@ class SimilaritySpec extends SparkSpec {
       // dot declaratively; the kernel must match bit-for-bit (both
       // sum subspace partials in the same order)
       import org.apache.spark.sql.functions._
-      val idx = Similarity.pqIndex(emb, "vec_id", "embedding",
-        nlist = 4, m = 8, ks = 16)
+      val ix = Similarity.index(emb, "vec_id", "embedding", nlist = 4,
+        codec = Codec.Pq(m = 8, ks = 16))
+      val idx = ix.params.codec.asInstanceOf[Codec.Pq]
       val dim = 64
       val dsub = dim / idx.m
       val booksLit = typedLit(idx.books)
       val q1 = emb.filter($"vec_id" === 0)
-        .select($"embedding".as("qv")).crossJoin(idx.codes)
-      val kernel = q1.select($"cand_id",
+        .select($"embedding".as("qv")).crossJoin(ix.codes)
+      val kernel = q1.select($"vec_id",
         graft.expressions.NativeKernels.adcDotCol(
           $"codes",
           graft.expressions.NativeKernels.adcTableCol(
             $"qv", booksLit, idx.m, idx.ks), idx.ks).as("d"))
         .as[(Long, Double)].collect().toMap
-      val reference = q1.select($"cand_id",
+      val reference = q1.select($"vec_id",
         aggregate(
           transform(sequence(lit(0), lit(idx.m - 1)), j =>
             aggregate(sequence(lit(0), lit(dsub - 1)), lit(0.0),
@@ -317,21 +318,22 @@ class SimilaritySpec extends SparkSpec {
     it("the ADC kernel path equals the declarative codebook dot with " +
         "256-entry tables") {
       import org.apache.spark.sql.functions._
-      val idx = Similarity.pqIndex(emb, "vec_id", "embedding",
-        nlist = 4, m = 8, ks = 256)
+      val ix = Similarity.index(emb, "vec_id", "embedding", nlist = 4,
+        codec = Codec.Pq(m = 8, ks = 256))
+      val idx = ix.params.codec.asInstanceOf[Codec.Pq]
       val dim = 64
       val dsub = dim / idx.m
       idx.books.length shouldBe idx.m * idx.ks * dsub // 16384 doubles
       val booksLit = typedLit(idx.books)
       val q1 = emb.filter($"vec_id" === 0)
-        .select($"embedding".as("qv")).crossJoin(idx.codes)
-      val kernel = q1.select($"cand_id",
+        .select($"embedding".as("qv")).crossJoin(ix.codes)
+      val kernel = q1.select($"vec_id",
         graft.expressions.NativeKernels.adcDotCol(
           $"codes",
           graft.expressions.NativeKernels.adcTableCol(
             $"qv", booksLit, idx.m, idx.ks), idx.ks).as("d"))
         .as[(Long, Double)].collect().toMap
-      val reference = q1.select($"cand_id",
+      val reference = q1.select($"vec_id",
         aggregate(
           transform(sequence(lit(0), lit(idx.m - 1)), j =>
             aggregate(sequence(lit(0), lit(dsub - 1)), lit(0.0),
@@ -422,8 +424,8 @@ class SimilaritySpec extends SparkSpec {
       // per-dim decode error is <= Δ_i/510 (half a step), so
       // |approx − exact unit-dot| <= Σ|uq_i|·Δ_i/510 — assert the
       // worst observed error against that analytic bound
-      val idx = Similarity.sqIndex(emb, "vec_id", "embedding",
-        nlist = 8)
+      val idx = Similarity.index(emb, "vec_id", "embedding", nlist = 8,
+        codec = Codec.Sq8()).params.codec.asInstanceOf[Codec.Sq8]
       val loLit = typedLit(idx.vmin)
       val hiLit = typedLit(idx.vmax)
       val pairs = emb.filter($"vec_id" === 0)
@@ -457,21 +459,22 @@ class SimilaritySpec extends SparkSpec {
         "round-trip within half a step, dot equals the declarative " +
         "decode-and-fold bit-for-bit") {
       import org.apache.spark.sql.functions._
-      val idx = Similarity.sqIndex(emb, "vec_id", "embedding",
-        nlist = 4)
+      val ix = Similarity.index(emb, "vec_id", "embedding", nlist = 4,
+        codec = Codec.Sq8())
+      val idx = ix.params.codec.asInstanceOf[Codec.Sq8]
       val loLit = typedLit(idx.vmin)
       val hiLit = typedLit(idx.vmax)
       val q1 = emb.filter($"vec_id" === 0)
         .select(unitCol($"embedding").as("uq"))
-        .crossJoin(idx.codes)
-      val kernel = q1.select($"cand_id",
+        .crossJoin(ix.codes)
+      val kernel = q1.select($"vec_id",
         graft.expressions.NativeKernels.sq8DotCol(
           $"uq", $"codes", loLit, hiLit).as("d"))
         .as[(Long, Double)].collect().toMap
       // declarative replay: decode each byte with the same affine,
       // fold in dimension order
       val dim = idx.vmin.length
-      val reference = q1.select($"cand_id",
+      val reference = q1.select($"vec_id",
         aggregate(sequence(lit(0), lit(dim - 1)), lit(0.0),
           (acc, i) => acc +
             element_at($"uq", i + 1).cast("double") *
@@ -684,10 +687,12 @@ class SimilaritySpec extends SparkSpec {
         .select($"query_id", $"cand_id", $"cosine")
         .as[(Long, Long, Double)].collect()
         .map(r => (r._1, r._2) -> r._3).toMap
-      val pqi = Similarity.pqIndex(corpus, "vec_id", "embedding",
-        nlist = 8, m = 8, ks = 16)
-      val rpqi = Similarity.rpqIndex(corpus, "vec_id", "embedding",
-        nlist = 8, m = 8, ks = 16)
+      val pqx = Similarity.index(corpus, "vec_id", "embedding",
+        nlist = 8, codec = Codec.Pq(m = 8, ks = 16))
+      val pqi = pqx.params.codec.asInstanceOf[Codec.Pq]
+      val rpqx = Similarity.index(corpus, "vec_id", "embedding",
+        nlist = 8, codec = Codec.Pq(m = 8, ks = 16, residual = true))
+      val rpqi = rpqx.params.codec.asInstanceOf[Codec.Pq]
       val qside = qs.select($"vec_id".as("query_id"),
         $"embedding".as("qv"),
         VectorFns.norm($"embedding").as("qn"),
@@ -699,21 +704,21 @@ class SimilaritySpec extends SparkSpec {
           case (k, a) if truth.contains(k) => math.abs(a - truth(k)) }
         errs.sum / errs.size
       }
-      val pqApprox = qside.crossJoin(pqi.codes)
-        .filter($"query_id" =!= $"cand_id")
-        .select($"query_id", $"cand_id",
+      val pqApprox = qside.crossJoin(pqx.codes)
+        .filter($"query_id" =!= $"vec_id")
+        .select($"query_id", $"vec_id",
           (graft.expressions.NativeKernels.adcDotCol($"codes",
             graft.expressions.NativeKernels.adcTableCol($"qv",
               typedLit(pqi.books), pqi.m, pqi.ks), pqi.ks) /
             ($"qn" * $"cn")).as("a"))
         .as[(Long, Long, Double)].collect()
         .map(r => (r._1, r._2) -> r._3).toMap
-      val rpqApprox = qside.crossJoin(rpqi.codes)
-        .filter($"query_id" =!= $"cand_id")
-        .select($"query_id", $"cand_id",
+      val rpqApprox = qside.crossJoin(rpqx.codes)
+        .filter($"query_id" =!= $"vec_id")
+        .select($"query_id", $"vec_id",
           graft.expressions.NativeKernels.adcDotCol($"codes",
             graft.expressions.NativeKernels.adcTableResidualCol($"uq",
-              $"cell", typedLit(rpqi.centroids.flatten),
+              $"cell", typedLit(rpqx.params.centroids.flatten),
               typedLit(rpqi.books), rpqi.m, rpqi.ks), rpqi.ks).as("a"))
         .as[(Long, Long, Double)].collect()
         .map(r => (r._1, r._2) -> r._3).toMap
@@ -755,25 +760,26 @@ class SimilaritySpec extends SparkSpec {
       // (i-within-j, then j) order, bit-for-bit
       import org.apache.spark.sql.functions._
       import graft.functions.VectorFns
-      val idx = Similarity.rpqIndex(emb, "vec_id", "embedding",
-        nlist = 4, m = 8, ks = 16)
+      val ix = Similarity.index(emb, "vec_id", "embedding", nlist = 4,
+        codec = Codec.Pq(m = 8, ks = 16, residual = true))
+      val idx = ix.params.codec.asInstanceOf[Codec.Pq]
       val dim = 64
       val dsub = dim / idx.m
       val booksLit = typedLit(idx.books)
-      val centsLit = typedLit(idx.centroids.flatten)
+      val centsLit = typedLit(ix.params.centroids.flatten)
       val q1 = emb.filter($"vec_id" === 0)
         .select(transform($"embedding",
           x => (x / VectorFns.norm($"embedding")).cast("float"))
           .as("qv"))
-        .crossJoin(idx.codes)
-      val kernel = q1.select($"cand_id",
+        .crossJoin(ix.codes)
+      val kernel = q1.select($"vec_id",
         graft.expressions.NativeKernels.adcDotCol(
           $"codes",
           graft.expressions.NativeKernels.adcTableResidualCol(
             $"qv", $"cell", centsLit, booksLit, idx.m, idx.ks),
           idx.ks).as("d"))
         .as[(Long, Double)].collect().toMap
-      val reference = q1.select($"cand_id",
+      val reference = q1.select($"vec_id",
         aggregate(
           transform(sequence(lit(0), lit(idx.m - 1)), j =>
             aggregate(sequence(lit(0), lit(dsub - 1)), lit(0.0),

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Similarity, VectorIndex}
+import graft.operators.{Codec, Similarity, VectorIndex}
 import graft.sources.Tables
 
 /** Persistent IVF vector index (SURVEY.md §2 E14): build/probe parity
@@ -20,6 +20,9 @@ class VectorIndexSpec extends SparkSpec {
   }
 
   private def emb = Tables.embeddings(spark, sf)
+
+  private def pq(root: String): Codec.Pq =
+    VectorIndex.readParams(root).codec.asInstanceOf[Codec.Pq]
 
   describe("VectorIndex") {
     it("probe equals the in-memory IVF operator on the same corpus " +
@@ -54,17 +57,18 @@ class VectorIndexSpec extends SparkSpec {
       // tagged chain: ivf pays the fit, sq/pq reuse it
       val pI = VectorIndex.build(emb, "vec_id", "embedding", rI,
         nlist = 8, corpusTag = tag)
-      val pS = VectorIndex.buildSq(emb, "vec_id", "embedding", rS,
-        nlist = 8, corpusTag = tag)
-      val pP = VectorIndex.buildPq(emb, "vec_id", "embedding", rP,
-        nlist = 8, m = 8, ks = 16, residual = true, corpusTag = tag)
+      val pS = VectorIndex.build(emb, "vec_id", "embedding", rS,
+        nlist = 8, corpusTag = tag, codec = Codec.Sq8())
+      val pP = VectorIndex.build(emb, "vec_id", "embedding", rP,
+        nlist = 8, corpusTag = tag,
+        codec = Codec.Pq(m = 8, ks = 16, residual = true))
       // untagged = always-fresh fits
-      val pS0 = VectorIndex.buildSq(emb, "vec_id", "embedding", rS0,
-        nlist = 8)
-      val pP0 = VectorIndex.buildPq(emb, "vec_id", "embedding", rP0,
-        nlist = 8, m = 8, ks = 16, residual = true)
-      pS.base.centroids shouldBe pI.centroids
-      pP.base.centroids shouldBe pI.centroids
+      val pS0 = VectorIndex.build(emb, "vec_id", "embedding", rS0,
+        nlist = 8, codec = Codec.Sq8())
+      val pP0 = VectorIndex.build(emb, "vec_id", "embedding", rP0,
+        nlist = 8, codec = Codec.Pq(m = 8, ks = 16, residual = true))
+      pS.centroids shouldBe pI.centroids
+      pP.centroids shouldBe pI.centroids
       pS0 shouldBe pS
       pP0 shouldBe pP
     }
@@ -145,6 +149,35 @@ class VectorIndexSpec extends SparkSpec {
         VectorIndex.build(emb, "vec_id", "embedding", root, nlist = 4)
     }
 
+    it("a params body that is truncated or missing a field refuses " +
+        "to read with an IllegalStateException naming root and field") {
+      val store = graft.sources.HardlinkCommitStore
+      val root = freshRoot("no_centroids")
+      store.tryCommit(s"$root/params", 1L,
+        """{"nlist":4,"seed":42,"dim":8,"metric":"unit-l2"}"""
+      ) shouldBe true
+      val e = the[IllegalStateException] thrownBy
+        VectorIndex.readParams(root)
+      e.getMessage should (include(root) and include("centroids"))
+      val probe = the[IllegalStateException] thrownBy
+        VectorIndex.topK(spark, emb.filter(col("vec_id") < 2), "vec_id",
+          "embedding", root, k = 3)
+      probe.getMessage shouldBe e.getMessage
+      val pqRoot = freshRoot("no_books")
+      store.tryCommit(s"$pqRoot/pq_params", 1L,
+        """{"nlist":1,"seed":42,"dim":2,"metric":"unit-l2","m":1,""" +
+          """"ks":2,"centroids":[[1,0]]}""") shouldBe true
+      val ePq = the[IllegalStateException] thrownBy
+        VectorIndex.readParams(pqRoot)
+      ePq.getMessage should (include(pqRoot) and include("books"))
+      val cut = freshRoot("truncated")
+      store.tryCommit(s"$cut/sq_params", 1L,
+        """{"nlist":4,"seed":42,"di""") shouldBe true
+      val eCut = the[IllegalStateException] thrownBy
+        VectorIndex.readParams(cut)
+      eCut.getMessage should include(cut)
+    }
+
     it("streams micro-batches into the live index, replay-safe") {
       implicit val sqlCtx = spark.sqlContext
       val root = freshRoot("stream")
@@ -217,11 +250,11 @@ class VectorIndexSpec extends SparkSpec {
     it("lake-served topKSq equals the in-memory sqTopK EXACTLY " +
         "(ids, ranks, and cosines)") {
       val root = freshRoot("sq_parity")
-      VectorIndex.buildSq(emb, "vec_id", "embedding", root,
-        nlist = 8, seed = 42L)
+      VectorIndex.build(emb, "vec_id", "embedding", root,
+        nlist = 8, seed = 42L, codec = Codec.Sq8())
       val queries = emb.filter(col("vec_id") < 5)
-      val got = VectorIndex.topKSq(spark, queries, emb, "vec_id",
-          "embedding", root, k = 10, nprobe = 3, refine = 4)
+      val got = VectorIndex.topK(spark, queries, "vec_id", "embedding",
+          root, k = 10, nprobe = 3, refine = 4, corpus = Some(emb))
         .select("query_id", "cand_id", "cosine", "rank")
         .as[(Long, Long, Double, Int)].collect().toSet
       val want = Similarity.sqTopK(emb, queries, "vec_id", "embedding",
@@ -235,15 +268,16 @@ class VectorIndexSpec extends SparkSpec {
     it("SQ probes are partition-pruned on the byte-codes lake, and " +
         "the geometry pins") {
       val root = freshRoot("sq_prune")
-      VectorIndex.buildSq(emb, "vec_id", "embedding", root, nlist = 8)
-      val (planned, total) = VectorIndex.sqProbeScanInfo(root,
+      VectorIndex.build(emb, "vec_id", "embedding", root, nlist = 8,
+        codec = Codec.Sq8())
+      val (planned, total) = VectorIndex.probeScanInfo(root,
         Seq(0, 1))
       total should be >= 8
       planned should be <= (total / 2)
       planned should be >= 1
       an[IllegalArgumentException] should be thrownBy
-        VectorIndex.buildSq(emb, "vec_id", "embedding", root,
-          nlist = 16)
+        VectorIndex.build(emb, "vec_id", "embedding", root,
+          nlist = 16, codec = Codec.Sq8())
     }
 
     it("appendSq encodes with the PERSISTED bounds, idempotently; " +
@@ -251,14 +285,15 @@ class VectorIndexSpec extends SparkSpec {
       val root = freshRoot("sq_append")
       val base = emb.filter(col("vec_id") < 400)
       val batch = emb.filter(col("vec_id") >= 400)
-      VectorIndex.buildSq(base, "vec_id", "embedding", root, nlist = 8)
-      val v1 = VectorIndex.appendSq(spark, batch, "vec_id",
+      VectorIndex.build(base, "vec_id", "embedding", root, nlist = 8,
+        codec = Codec.Sq8())
+      val v1 = VectorIndex.append(spark, batch, "vec_id",
         "embedding", root)
-      VectorIndex.appendSq(spark, batch, "vec_id", "embedding",
+      VectorIndex.append(spark, batch, "vec_id", "embedding",
         root) shouldBe v1 // re-delivery: no new version
       val queries = emb.filter(col("vec_id") < 3)
-      val got = VectorIndex.topKSq(spark, queries, emb, "vec_id",
-          "embedding", root, k = 10, nprobe = 8, refine = 50)
+      val got = VectorIndex.topK(spark, queries, "vec_id", "embedding",
+          root, k = 10, nprobe = 8, refine = 50, corpus = Some(emb))
         .select("query_id", "cand_id", "rank")
         .as[(Long, Long, Int)].collect().toSet
       val exact = Similarity.bruteForceTopK(emb, queries, "vec_id",
@@ -275,12 +310,12 @@ class VectorIndexSpec extends SparkSpec {
       implicit val sqlCtx = spark.sqlContext
       val root = freshRoot("sq_stream")
       val ckpt = freshRoot("sq_stream_ckpt")
-      VectorIndex.buildSq(emb.filter(col("vec_id") < 300), "vec_id",
-        "embedding", root, nlist = 8)
+      VectorIndex.build(emb.filter(col("vec_id") < 300), "vec_id",
+        "embedding", root, nlist = 8, codec = Codec.Sq8())
       val in = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(Long, Seq[Float])]
       val stream = in.toDF().toDF("vec_id", "embedding")
-      val q = graft.streaming.StreamingLake.sqIndexSink(stream,
+      val q = graft.streaming.StreamingLake.vectorIndexSink(stream,
         "vec_id", "embedding", root, ckpt).start()
       try {
         val tail = emb.filter(col("vec_id") >= 300)
@@ -290,7 +325,7 @@ class VectorIndexSpec extends SparkSpec {
         in.addData(b1.toIndexedSeq)
         q.processAllAvailable()
         in.addData(b2.toIndexedSeq)
-        // overlap re-delivers some of b1: appendSq must dedup
+        // overlap re-delivers some of b1: append must dedup
         in.addData(b1.take(5).toIndexedSeq)
         q.processAllAvailable()
         val ids = graft.sources.AtomicLake
@@ -300,14 +335,14 @@ class VectorIndexSpec extends SparkSpec {
         ids.toSet shouldBe (0L until 500L).toSet
       } finally q.stop()
       val bare = freshRoot("sq_stream_refuse")
-      val q2 = graft.streaming.StreamingLake.sqIndexSink(
+      val q2 = graft.streaming.StreamingLake.vectorIndexSink(
         in.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
         bare, freshRoot("sq_stream_refuse_ckpt")).start()
       try {
         in.addData((9999L, Seq.fill(64)(0.1f)))
         val e = intercept[org.apache.spark.sql.streaming
           .StreamingQueryException] { q2.processAllAvailable() }
-        e.getMessage should include("buildSq() one from a seed corpus")
+        e.getMessage should include("build() one from a seed corpus")
       } finally q2.stop()
     }
   }
@@ -316,11 +351,11 @@ class VectorIndexSpec extends SparkSpec {
     it("lake-served topKPq equals the in-memory pqTopK EXACTLY " +
         "(ids, ranks, and cosines)") {
       val root = freshRoot("pq_parity")
-      VectorIndex.buildPq(emb, "vec_id", "embedding", root,
-        nlist = 8, m = 8, ks = 16, seed = 42L)
+      VectorIndex.build(emb, "vec_id", "embedding", root,
+        nlist = 8, seed = 42L, codec = Codec.Pq(m = 8, ks = 16))
       val queries = emb.filter(col("vec_id") < 5)
-      val got = VectorIndex.topKPq(spark, queries, emb, "vec_id",
-          "embedding", root, k = 10, nprobe = 3, refine = 4)
+      val got = VectorIndex.topK(spark, queries, "vec_id", "embedding",
+          root, k = 10, nprobe = 3, refine = 4, corpus = Some(emb))
         .select("query_id", "cand_id", "cosine", "rank")
         .as[(Long, Long, Double, Int)].collect().toSet
       val want = Similarity.pqTopK(emb, queries, "vec_id", "embedding",
@@ -334,8 +369,9 @@ class VectorIndexSpec extends SparkSpec {
 
     it("PQ probes are partition-pruned on the CODES lake") {
       val root = freshRoot("pq_prune")
-      VectorIndex.buildPq(emb, "vec_id", "embedding", root, nlist = 8)
-      val (planned, total) = VectorIndex.pqProbeScanInfo(root, Seq(0, 1))
+      VectorIndex.build(emb, "vec_id", "embedding", root, nlist = 8,
+        codec = Codec.Pq())
+      val (planned, total) = VectorIndex.probeScanInfo(root, Seq(0, 1))
       total should be >= 8
       planned should be <= (total / 2)
       planned should be >= 1
@@ -345,11 +381,12 @@ class VectorIndexSpec extends SparkSpec {
       val root = freshRoot("pq_append")
       val base = emb.filter(col("vec_id") < 400)
       val batch = emb.filter(col("vec_id") >= 400)
-      VectorIndex.buildPq(base, "vec_id", "embedding", root, nlist = 8)
-      val v1 = VectorIndex.appendPq(spark, batch, "vec_id",
+      VectorIndex.build(base, "vec_id", "embedding", root, nlist = 8,
+        codec = Codec.Pq())
+      val v1 = VectorIndex.append(spark, batch, "vec_id",
         "embedding", root)
       // re-delivery: nothing new, no new version
-      VectorIndex.appendPq(spark, batch, "vec_id", "embedding",
+      VectorIndex.append(spark, batch, "vec_id", "embedding",
         root) shouldBe v1
       // the appended rows carry codes from the SAME codebooks a
       // fresh same-training-corpus build would produce
@@ -358,9 +395,9 @@ class VectorIndexSpec extends SparkSpec {
         .as[(Long, Seq[Int])].collect().toMap
       all.size shouldBe 500
       val fullRoot = freshRoot("pq_append_full")
-      VectorIndex.buildPq(base, "vec_id", "embedding", fullRoot,
-        nlist = 8)
-      VectorIndex.appendPq(spark, emb, "vec_id", "embedding", fullRoot)
+      VectorIndex.build(base, "vec_id", "embedding", fullRoot,
+        nlist = 8, codec = Codec.Pq())
+      VectorIndex.append(spark, emb, "vec_id", "embedding", fullRoot)
       val full = graft.sources.AtomicLake
         .read(spark, s"$fullRoot/codes").select("vec_id", "codes")
         .as[(Long, Seq[Int])].collect().toMap
@@ -372,12 +409,12 @@ class VectorIndexSpec extends SparkSpec {
       implicit val sqlCtx = spark.sqlContext
       val root = freshRoot("pq_stream")
       val ckpt = freshRoot("pq_stream_ckpt")
-      VectorIndex.buildPq(emb.filter(col("vec_id") < 300), "vec_id",
-        "embedding", root, nlist = 8)
+      VectorIndex.build(emb.filter(col("vec_id") < 300), "vec_id",
+        "embedding", root, nlist = 8, codec = Codec.Pq())
       val in = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(Long, Seq[Float])]
       val stream = in.toDF().toDF("vec_id", "embedding")
-      val q = graft.streaming.StreamingLake.pqIndexSink(stream,
+      val q = graft.streaming.StreamingLake.vectorIndexSink(stream,
         "vec_id", "embedding", root, ckpt).start()
       try {
         val tail = emb.filter(col("vec_id") >= 300)
@@ -387,7 +424,7 @@ class VectorIndexSpec extends SparkSpec {
         in.addData(b1.toIndexedSeq)
         q.processAllAvailable()
         in.addData(b2.toIndexedSeq)
-        // overlap re-delivers some of b1: appendPq must dedup
+        // overlap re-delivers some of b1: append must dedup
         in.addData(b1.take(5).toIndexedSeq)
         q.processAllAvailable()
         val ids = graft.sources.AtomicLake
@@ -398,39 +435,39 @@ class VectorIndexSpec extends SparkSpec {
       } finally q.stop()
       // unbuilt refusal
       val bare = freshRoot("pq_stream_refuse")
-      val q2 = graft.streaming.StreamingLake.pqIndexSink(
+      val q2 = graft.streaming.StreamingLake.vectorIndexSink(
         in.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
         bare, freshRoot("pq_stream_refuse_ckpt")).start()
       try {
         in.addData((9999L, Seq.fill(64)(0.1f)))
         val e = intercept[org.apache.spark.sql.streaming
           .StreamingQueryException] { q2.processAllAvailable() }
-        e.getMessage should include("buildPq() one from a seed corpus")
+        e.getMessage should include("build() one from a seed corpus")
       } finally q2.stop()
     }
 
     it("pins PQ geometry: a rebuild with different m refuses loudly") {
       val root = freshRoot("pq_pin")
-      VectorIndex.buildPq(emb, "vec_id", "embedding", root,
-        nlist = 8, m = 8)
+      VectorIndex.build(emb, "vec_id", "embedding", root,
+        nlist = 8, codec = Codec.Pq(m = 8))
       an[IllegalArgumentException] should be thrownBy
-        VectorIndex.buildPq(emb, "vec_id", "embedding", root,
-          nlist = 8, m = 16)
+        VectorIndex.build(emb, "vec_id", "embedding", root,
+          nlist = 8, codec = Codec.Pq(m = 16))
       // same geometry: rebuild reuses the claimed codebooks
-      VectorIndex.buildPq(emb, "vec_id", "embedding", root,
-        nlist = 8, m = 8)
-      VectorIndex.readPqParams(root).m shouldBe 8
+      VectorIndex.build(emb, "vec_id", "embedding", root,
+        nlist = 8, codec = Codec.Pq(m = 8))
+      pq(root).m shouldBe 8
     }
 
     it("lake-served RESIDUAL topKPq equals the in-memory rpqTopK " +
         "EXACTLY (ids, ranks, and cosines)") {
       val root = freshRoot("rpq_parity")
-      VectorIndex.buildPq(emb, "vec_id", "embedding", root,
-        nlist = 8, m = 8, ks = 16, seed = 42L, residual = true)
-      VectorIndex.readPqParams(root).residual shouldBe true
+      VectorIndex.build(emb, "vec_id", "embedding", root, nlist = 8,
+        seed = 42L, codec = Codec.Pq(m = 8, ks = 16, residual = true))
+      pq(root).residual shouldBe true
       val queries = emb.filter(col("vec_id") < 5)
-      val got = VectorIndex.topKPq(spark, queries, emb, "vec_id",
-          "embedding", root, k = 10, nprobe = 3, refine = 4)
+      val got = VectorIndex.topK(spark, queries, "vec_id", "embedding",
+          root, k = 10, nprobe = 3, refine = 4, corpus = Some(emb))
         .select("query_id", "cand_id", "cosine", "rank")
         .as[(Long, Long, Double, Int)].collect().toSet
       val want = Similarity.rpqTopK(emb, queries, "vec_id",
@@ -445,14 +482,14 @@ class VectorIndexSpec extends SparkSpec {
     it("lake-served OPQ topKPq equals the in-memory opqTopK EXACTLY " +
         "(ids, ranks, and cosines)") {
       val root = freshRoot("opq_parity")
-      VectorIndex.buildPq(emb, "vec_id", "embedding", root,
-        nlist = 8, m = 8, ks = 16, seed = 42L, residual = true,
-        opq = true)
-      val p = VectorIndex.readPqParams(root)
+      VectorIndex.build(emb, "vec_id", "embedding", root, nlist = 8,
+        seed = 42L, codec = Codec.Pq(m = 8, ks = 16, residual = true,
+          opq = true))
+      val p = pq(root)
       p.rotation should have length (64 * 64)
       val queries = emb.filter(col("vec_id") < 5)
-      val got = VectorIndex.topKPq(spark, queries, emb, "vec_id",
-          "embedding", root, k = 10, nprobe = 3, refine = 4)
+      val got = VectorIndex.topK(spark, queries, "vec_id", "embedding",
+          root, k = 10, nprobe = 3, refine = 4, corpus = Some(emb))
         .select("query_id", "cand_id", "cosine", "rank")
         .as[(Long, Long, Double, Int)].collect().toSet
       val want = Similarity.opqTopK(emb, queries, "vec_id",
@@ -467,22 +504,22 @@ class VectorIndexSpec extends SparkSpec {
     it("the opq flag is pinned geometry: flipping it either way " +
         "refuses, and appends rotate with the persisted matrix") {
       val root = freshRoot("opq_pin")
-      VectorIndex.buildPq(emb, "vec_id", "embedding", root,
-        nlist = 8, m = 8, residual = true, opq = true)
+      VectorIndex.build(emb, "vec_id", "embedding", root, nlist = 8,
+        codec = Codec.Pq(m = 8, residual = true, opq = true))
       an[IllegalArgumentException] should be thrownBy
-        VectorIndex.buildPq(emb, "vec_id", "embedding", root,
-          nlist = 8, m = 8, residual = true, opq = false)
+        VectorIndex.build(emb, "vec_id", "embedding", root, nlist = 8,
+          codec = Codec.Pq(m = 8, residual = true, opq = false))
       val root2 = freshRoot("opq_pin2")
-      VectorIndex.buildPq(emb, "vec_id", "embedding", root2,
-        nlist = 8, m = 8, residual = true, opq = false)
+      VectorIndex.build(emb, "vec_id", "embedding", root2, nlist = 8,
+        codec = Codec.Pq(m = 8, residual = true, opq = false))
       an[IllegalArgumentException] should be thrownBy
-        VectorIndex.buildPq(emb, "vec_id", "embedding", root2,
-          nlist = 8, m = 8, residual = true, opq = true)
+        VectorIndex.build(emb, "vec_id", "embedding", root2, nlist = 8,
+          codec = Codec.Pq(m = 8, residual = true, opq = true))
       // opq requires the residual coding tier
       an[IllegalArgumentException] should be thrownBy
-        VectorIndex.buildPq(emb, "vec_id", "embedding",
-          freshRoot("opq_nores"), nlist = 8, m = 8, residual = false,
-          opq = true)
+        VectorIndex.build(emb, "vec_id", "embedding",
+          freshRoot("opq_nores"), nlist = 8,
+          codec = Codec.Pq(m = 8, residual = false, opq = true))
       // append encodes through the persisted rotation: with all
       // cells probed and a corpus-wide refine, the probe must equal
       // brute force over the full union — mis-rotated appended codes
@@ -490,12 +527,12 @@ class VectorIndexSpec extends SparkSpec {
       val base = emb.filter(col("vec_id") < 400)
       val batch = emb.filter(col("vec_id") >= 400)
       val root3 = freshRoot("opq_append")
-      VectorIndex.buildPq(base, "vec_id", "embedding", root3,
-        nlist = 8, m = 8, residual = true, opq = true)
-      VectorIndex.appendPq(spark, batch, "vec_id", "embedding", root3)
+      VectorIndex.build(base, "vec_id", "embedding", root3, nlist = 8,
+        codec = Codec.Pq(m = 8, residual = true, opq = true))
+      VectorIndex.append(spark, batch, "vec_id", "embedding", root3)
       val queries = emb.filter(col("vec_id") < 3)
-      val got = VectorIndex.topKPq(spark, queries, emb, "vec_id",
-          "embedding", root3, k = 10, nprobe = 8, refine = 50)
+      val got = VectorIndex.topK(spark, queries, "vec_id", "embedding",
+          root3, k = 10, nprobe = 8, refine = 50, corpus = Some(emb))
         .select("query_id", "cand_id", "rank")
         .as[(Long, Long, Int)].collect().toSet
       val exact = Similarity.bruteForceTopK(emb, queries, "vec_id",
@@ -507,27 +544,27 @@ class VectorIndexSpec extends SparkSpec {
 
     it("the residual flag is pinned geometry: flipping it refuses") {
       val root = freshRoot("rpq_pin")
-      VectorIndex.buildPq(emb, "vec_id", "embedding", root,
-        nlist = 8, m = 8, residual = true)
+      VectorIndex.build(emb, "vec_id", "embedding", root, nlist = 8,
+        codec = Codec.Pq(m = 8, residual = true))
       an[IllegalArgumentException] should be thrownBy
-        VectorIndex.buildPq(emb, "vec_id", "embedding", root,
-          nlist = 8, m = 8, residual = false)
-      // appendPq reads the persisted flag: appended codes join the
+        VectorIndex.build(emb, "vec_id", "embedding", root, nlist = 8,
+          codec = Codec.Pq(m = 8, residual = false))
+      // append reads the persisted flag: appended codes join the
       // residual tier, so a probe covering only appended ids still
       // equals the in-memory operator on the full corpus
       val base = emb.filter(col("vec_id") < 400)
       val batch = emb.filter(col("vec_id") >= 400)
       val root2 = freshRoot("rpq_append")
-      VectorIndex.buildPq(base, "vec_id", "embedding", root2,
-        nlist = 8, m = 8, residual = true)
-      VectorIndex.appendPq(spark, batch, "vec_id", "embedding", root2)
+      VectorIndex.build(base, "vec_id", "embedding", root2, nlist = 8,
+        codec = Codec.Pq(m = 8, residual = true))
+      VectorIndex.append(spark, batch, "vec_id", "embedding", root2)
       val queries = emb.filter(col("vec_id") < 3)
       // all cells probed + corpus-wide refine ⇒ the probe MUST equal
       // brute force over the FULL union corpus exactly — which fails
       // if the appended codes are missing or mis-encoded (they would
       // never surface through the shortlist)
-      val got = VectorIndex.topKPq(spark, queries, emb, "vec_id",
-          "embedding", root2, k = 10, nprobe = 8, refine = 50)
+      val got = VectorIndex.topK(spark, queries, "vec_id", "embedding",
+          root2, k = 10, nprobe = 8, refine = 50, corpus = Some(emb))
         .select("query_id", "cand_id", "rank")
         .as[(Long, Long, Int)].collect().toSet
       val exact = Similarity.bruteForceTopK(emb, queries, "vec_id",
