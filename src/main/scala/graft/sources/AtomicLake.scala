@@ -116,19 +116,174 @@ object AtomicLake {
       // [[lastTxn]], turning at-least-once micro-batch redelivery
       // into exactly-once lake appends. Carried manifest-to-manifest
       // like the schema; absent on older manifests
-      txns: Map[String, Long] = Map.empty)
+      txns: Map[String, Long] = Map.empty) {
+
+    def allFiles: Seq[String] = files.values.flatten.toSeq
+
+    /** This snapshot with the `touched` partitions replaced and the
+      * `removed` files dropped, then `added`'s files (and zone maps)
+      * joined per partition — so touched = ∅ is an append: new files
+      * join the survivors instead of clobbering their partition.
+      */
+    private[graft] def swap(added: Staged, touched: Set[String] = Set.empty,
+        removed: Set[String] = Set.empty): Snapshot = {
+      val kept = (files -- touched)
+        .map { case (p, fs) => p -> fs.filterNot(removed) }
+        .filter(_._2.nonEmpty)
+      copy(files = (kept.keySet ++ added.files.keySet).iterator.map(k =>
+          k -> (kept.getOrElse(k, Nil) ++ added.files.getOrElse(k, Nil)))
+          .toMap,
+        stats = stats ++ added.stats)
+    }
+
+    /** This snapshot's schema evolved by a write batch's
+      * ([[mergeSchemas]]). Columns NEW to the table must not take a
+      * physical name that would read someone else's bytes: a dropped
+      * column's (resurrection) or a renamed column's storage slot
+      * (e.g. re-adding 'a' after RENAME a TO b).
+      */
+    private[graft] def evolve(
+        batch: org.apache.spark.sql.types.StructType): Snapshot = {
+      val merged = schema.fold(batch)(mergeSchemas(_, batch))
+      for (prevSch <- schema) {
+        def nrm(s: String) = s.toLowerCase(java.util.Locale.ROOT)
+        val prevNames = prevSch.fieldNames.map(nrm).toSet
+        val physInUse = prevSch.fieldNames
+          .map(n => nrm(colMap.getOrElse(n, n))).toSet
+        for (n <- merged.fieldNames if !prevNames(nrm(n))) {
+          if (dropped.exists(d => nrm(d) == nrm(n)))
+            throw new IllegalArgumentException(
+              s"cannot add column '$n': a dropped column's data " +
+                "still lives under that physical name in committed " +
+                "files and would silently resurrect; rewrite the " +
+                "table to reuse the name")
+          if (physInUse(nrm(n)))
+            throw new IllegalArgumentException(
+              s"cannot add column '$n': the physical slot '$n' is " +
+                "the storage of a renamed column; rewrite the table " +
+                "to reuse the name")
+        }
+      }
+      copy(schema = Some(merged))
+    }
+  }
+
+  /** The one manifest codec. A body is `partition_cols=` then the
+    * optional headers in a fixed order (`schema=`, `kind=` — omitted
+    * for "write" —, `constraint=`, `ts=`, `bloom=`, `colmap=`,
+    * `dropped=`, `generated=`, `txn=`, each repeated key sorted), then
+    * one sorted line per file. Bodies written before a header existed
+    * parse unchanged: every header is optional.
+    */
+  object Snapshot {
+
+    private val HeaderKeys = Seq("schema", "kind", "constraint", "ts",
+      "bloom", "colmap", "dropped", "generated", "txn")
+
+    def parse(version: Long, body: String): Snapshot = {
+      val lines = body.linesIterator.toSeq
+      val partitionCols = lines.head.split("=", 2)(1) match {
+        case "" => Nil
+        case s => s.split(",").toSeq
+      }
+      val (headers, fileLines) = lines.tail.span(l =>
+        HeaderKeys.exists(k => l.startsWith(k + "=")))
+      var s = Snapshot(version, partitionCols, Map.empty)
+      for (h <- headers) {
+        val i = h.indexOf('=')
+        val v = h.drop(i + 1)
+        // <key>=<a>\t<b> headers: colmap (logical, physical), generated
+        // (column, expression), txn (appId, version)
+        def pair: Option[(String, String)] = v.split("\t", 2) match {
+          case Array(x, y) => Some((x, y))
+          case _ => None
+        }
+        h.take(i) match {
+          case "schema" =>
+            s = s.copy(schema = Some(org.apache.spark.sql.types.DataType
+              .fromJson(v).asInstanceOf[org.apache.spark.sql.types.StructType]))
+          case "kind" => s = s.copy(kind = v)
+          case "constraint" =>
+            val c = v.indexOf(':')
+            s = s.copy(constraints = s.constraints + (v.take(c) -> v.drop(c + 1)))
+          case "ts" => s = s.copy(ts = v.toLongOption)
+          case "bloom" => v.split("\t", 3) match { // <col>\t<sidecar>\t<file>
+            case Array(c, p, f) =>
+              s = s.copy(blooms = s.blooms + (f ->
+                (s.blooms.getOrElse(f, Map.empty) + (c -> BloomIndex.Ref(p)))))
+            case _ => ()
+          }
+          case "colmap" => pair.foreach(m => s = s.copy(colMap = s.colMap + m))
+          case "dropped" => s = s.copy(dropped = s.dropped + v)
+          case "generated" =>
+            pair.foreach(g => s = s.copy(generated = s.generated + g))
+          case _ => // txn
+            for ((a, n) <- pair; x <- n.toLongOption)
+              s = s.copy(txns = s.txns + (a -> x))
+        }
+      }
+      // part \t file [\t statsJson [\t dvField]] — fields 3/4 optional
+      // (pre-stats and pre-DV manifests parse unchanged); a file with a
+      // deletion vector but no stats writes an EMPTY third field so the
+      // dv field keeps its position. dvField = "dv:<n>:<p1>[,<p2>...]"
+      val parsed = fileLines.filter(_.nonEmpty).map { l =>
+        l.split("\t", 4) match {
+          case Array(part, file) => (part, file, None, None)
+          case Array(part, file, json) =>
+            (part, file, LakeStats.fromJson(json), None)
+          case Array(part, file, json, dvField) =>
+            val dv = dvField.split(":", 3) match {
+              case Array("dv", n, paths) =>
+                Some(DvRef(paths.split(",").toSeq, n.toLong))
+              case _ => None
+            }
+            (part, file,
+              if (json.isEmpty) None else LakeStats.fromJson(json), dv)
+        }
+      }
+      s.copy(
+        files = parsed.groupBy(_._1).map { case (p, fs) => p -> fs.map(_._2) },
+        stats = parsed.iterator
+          .flatMap { case (_, f, st, _) => st.map(f -> _) }.toMap,
+        dvs = parsed.iterator
+          .flatMap { case (_, f, _, dv) => dv.map(f -> _) }.toMap)
+    }
+
+    def render(s: Snapshot): String = {
+      val b = new StringBuilder
+      def line(parts: Any*): Unit = { parts.foreach(b.append); b.append('\n') }
+      line("partition_cols=", s.partitionCols.mkString(","))
+      s.schema.foreach(sc => line("schema=", sc.json))
+      if (s.kind != "write") line("kind=", s.kind)
+      for ((n, e) <- s.constraints.toSeq.sortBy(_._1))
+        line("constraint=", n, ":", e)
+      s.ts.foreach(line("ts=", _))
+      for ((f, cs) <- s.blooms.toSeq.sortBy(_._1);
+           (c, ref) <- cs.toSeq.sortBy(_._1))
+        line("bloom=", c, "\t", ref.path, "\t", f)
+      for ((l, p) <- s.colMap.toSeq.sortBy(_._1)) line("colmap=", l, "\t", p)
+      for (d <- s.dropped.toSeq.sorted) line("dropped=", d)
+      for ((c, e) <- s.generated.toSeq.sortBy(_._1))
+        line("generated=", c, "\t", e)
+      for ((a, v) <- s.txns.toSeq.sortBy(_._1)) line("txn=", a, "\t", v)
+      for ((p, fs) <- s.files.toSeq.sortBy(_._1); f <- fs.sorted) {
+        val st = s.stats.get(f)
+        b.append(p).append('\t').append(f)
+        st.foreach(x => b.append('\t').append(LakeStats.toJson(x)))
+        s.dvs.get(f).foreach { dv =>
+          if (st.isEmpty) b.append('\t') // keep the dv field fourth
+          b.append("\tdv:").append(dv.n).append(':')
+            .append(dv.paths.mkString(","))
+        }
+        b.append('\n')
+      }
+      b.toString
+    }
+  }
 
   /** `logical` column's physical parquet name under this snapshot. */
   private def physicalOf(snap: Snapshot, logical: String): String =
     snap.colMap.getOrElse(logical, logical)
-
-  /** Current column mapping for writers staging against `root` (empty
-    * before any rename — the overwhelmingly common case pays one
-    * manifest read it was already paying for constraints/schema).
-    */
-  private def currentColMap(root: String,
-      store: CommitStore): Map[String, String] =
-    currentSnapshot(root, store).map(_.colMap).getOrElse(Map.empty)
 
   /** A file's deletion-vector reference: `paths` are position
     * sidecars (parquet dirs of (file, pos) rows, lake-root-relative —
@@ -155,109 +310,19 @@ object AtomicLake {
     else Some(readManifest(root, versions.max, store))
   }
 
+  /** The newest committed snapshot; refuses a root with no commits. */
+  private[graft] def latest(root: String,
+      store: CommitStore = HardlinkCommitStore): Snapshot =
+    currentSnapshot(root, store).getOrElse(
+      throw new IllegalStateException(s"no commits at $root"))
+
   def currentVersion(root: String,
       store: CommitStore = HardlinkCommitStore): Option[Long] =
     currentSnapshot(root, store).map(_.version)
 
   private def readManifest(root: String, v: Long,
-      store: CommitStore): Snapshot = {
-    val lines = store.readBody(root, v).linesIterator.toSeq
-    val partitionCols = lines.head.split("=", 2)(1) match {
-      case "" => Nil
-      case s => s.split(",").toSeq
-    }
-    // optional headers (absent on older manifests): schema=, kind=
-    var rest = lines.tail
-    var schema: Option[org.apache.spark.sql.types.StructType] = None
-    var kind = "write"
-    var constraints = Map.empty[String, String]
-    var ts: Option[Long] = None
-    var blooms = Map.empty[String, Map[String, BloomIndex.Ref]]
-    var colMap = Map.empty[String, String]
-    var dropped = Set.empty[String]
-    var generated = Map.empty[String, String]
-    var txns = Map.empty[String, Long]
-    var headers = true
-    while (headers) rest match {
-      case h +: tl if h.startsWith("schema=") =>
-        schema = Some(org.apache.spark.sql.types.DataType
-          .fromJson(h.drop("schema=".length))
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-        rest = tl
-      case h +: tl if h.startsWith("kind=") =>
-        kind = h.drop("kind=".length); rest = tl
-      case h +: tl if h.startsWith("constraint=") =>
-        val body = h.drop("constraint=".length)
-        val i = body.indexOf(':')
-        constraints += body.take(i) -> body.drop(i + 1)
-        rest = tl
-      case h +: tl if h.startsWith("ts=") =>
-        ts = h.drop("ts=".length).toLongOption; rest = tl
-      case h +: tl if h.startsWith("bloom=") =>
-        // bloom=<col>\t<sidecar path>\t<file>
-        h.drop("bloom=".length).split("\t", 3) match {
-          case Array(c, p, f) =>
-            blooms += f -> (blooms.getOrElse(f, Map.empty) +
-              (c -> BloomIndex.Ref(p)))
-          case _ => ()
-        }
-        rest = tl
-      case h +: tl if h.startsWith("colmap=") =>
-        // colmap=<logical>\t<physical>
-        h.drop("colmap=".length).split("\t", 2) match {
-          case Array(l, p) => colMap += l -> p
-          case _ => ()
-        }
-        rest = tl
-      case h +: tl if h.startsWith("dropped=") =>
-        dropped += h.drop("dropped=".length)
-        rest = tl
-      case h +: tl if h.startsWith("generated=") =>
-        // generated=<col>\t<expr>
-        h.drop("generated=".length).split("\t", 2) match {
-          case Array(c, e) => generated += c -> e
-          case _ => ()
-        }
-        rest = tl
-      case h +: tl if h.startsWith("txn=") =>
-        // txn=<appId>\t<version>
-        h.drop("txn=".length).split("\t", 2) match {
-          case Array(a, v) => v.toLongOption.foreach(txns += a -> _)
-          case _ => ()
-        }
-        rest = tl
-      case _ => headers = false
-    }
-    val fileLines = rest
-    // part \t file [\t statsJson [\t dvField]] — fields 3/4 optional
-    // (pre-stats and pre-DV manifests parse unchanged); a file with a
-    // deletion vector but no stats writes an EMPTY third field so the
-    // dv field keeps its position. dvField = "dv:<n>:<p1>[,<p2>...]"
-    val parsed = fileLines.filter(_.nonEmpty).map { l =>
-      l.split("\t", 4) match {
-        case Array(part, file) =>
-          (part, file, None, None)
-        case Array(part, file, json) =>
-          (part, file, LakeStats.fromJson(json), None)
-        case Array(part, file, json, dvField) =>
-          val dv = dvField.split(":", 3) match {
-            case Array("dv", n, paths) =>
-              Some(DvRef(paths.split(",").toSeq, n.toLong))
-            case _ => None
-          }
-          (part, file,
-            if (json.isEmpty) None else LakeStats.fromJson(json), dv)
-      }
-    }
-    val files = parsed.groupBy(_._1)
-      .map { case (p, fs) => p -> fs.map(_._2) }
-    val stats = parsed.iterator
-      .flatMap { case (_, f, st, _) => st.map(f -> _) }.toMap
-    val dvs = parsed.iterator
-      .flatMap { case (_, f, _, dv) => dv.map(f -> _) }.toMap
-    Snapshot(v, partitionCols, files, schema, kind, stats, constraints,
-      ts, dvs, blooms, colMap, dropped, generated, txns)
-  }
+      store: CommitStore): Snapshot =
+    Snapshot.parse(v, store.readBody(root, v))
 
   /** Lossless widenings the parquet read path upcasts natively
     * (Spark 4.x vectorized reader: int32 pages read as long, float as
@@ -352,14 +417,6 @@ object AtomicLake {
     def keySet: Set[String] = files.keySet
   }
 
-  /** Stage `batch` and move its files into the data plane with
-    * commit-unique names — VISIBLE TO NO READER yet (readers only
-    * follow manifests). Returns partition-relative-dir -> new file
-    * relative paths plus per-file stats ([[LakeStats.collect]] over
-    * the just-written footers — metadata-only, no data re-read).
-    * Exposed package-private so the crash-recovery spec can create
-    * exactly the state a killed writer leaves.
-    */
   /** Parquet-bytes target for AUTO file sizing (`filesPerPartition
     * = 0`) and the in-memory→parquet compression guess the estimate
     * divides by (plan statistics report uncompressed widths).
@@ -368,6 +425,14 @@ object AtomicLake {
   private val AutoCompressionGuess = 3L
   private val AutoMaxFiles = 256
 
+  /** Stage `batch` and move its files into the data plane with
+    * commit-unique names — VISIBLE TO NO READER yet (readers only
+    * follow manifests). Returns partition-relative-dir -> new file
+    * relative paths plus per-file stats ([[LakeStats.collect]] over
+    * the just-written footers — metadata-only, no data re-read).
+    * Exposed package-private so the crash-recovery spec can create
+    * exactly the state a killed writer leaves.
+    */
   private[graft] def stageFiles(batch: DataFrame, root: String,
       partitionCols: Seq[String], filesPerPartition: Int,
       // false = the caller already distributed/sorted the frame for
@@ -503,74 +568,34 @@ object AtomicLake {
       stats)
   }
 
-  /** Publish a new manifest = previous snapshot with `touched`
-    * partitions replaced by `newFiles`. The commit point is ONE
-    * atomic claim through the [[CommitStore]]; on a version race the
-    * loser recomputes against the winner's snapshot and retries.
-    * Exposed package-private for the spec's interleaving tests.
+  /** The one commit. `edit` maps the snapshot the CAS lands on (an
+    * empty one before the first commit) to the next snapshot; the
+    * commit point is ONE atomic claim through the [[CommitStore]], and
+    * on a version race the loser re-reads the winner's snapshot and
+    * re-runs `edit` against it — so every change (files, schema,
+    * constraints, mapping) is computed from the state it lands on,
+    * never from a snapshot read before the race. Zone maps, deletion
+    * vectors and bloom refs of files the next snapshot no longer lists
+    * are shed here, once (a rewritten file's entries say nothing about
+    * its replacement).
+    *
+    * Read-modify-write commits name what they derived from
+    * `expectedBase` and abort (ConcurrentModificationException) when a
+    * concurrent commit changed it: `touched` partitions' file lists,
+    * the deletion vectors of everything they read, and the presence
+    * of `removeFiles` (copy-on-write rewrites: a file a concurrent
+    * compaction already replaced would resurrect its rows) and
+    * `dvFiles` (deletion-vector commits). Blind writes pass no base
+    * and never conflict. Exposed package-private for the spec's
+    * interleaving tests.
     */
-  private[graft] def commitReplacing(root: String, touched: Set[String],
-      newFiles: Map[String, Seq[String]], partitionCols: Seq[String],
+  private[graft] def commit(root: String, partitionCols: Seq[String],
+      kind: String = "write", store: CommitStore = HardlinkCommitStore,
       expectedBase: Option[Snapshot] = None,
-      batchSchema: Option[org.apache.spark.sql.types.StructType] = None,
-      store: CommitStore = HardlinkCommitStore,
-      kind: String = "write",
-      newStats: Map[String, LakeStats.FileStats] = Map.empty,
-      // replace EVERY partition of whatever snapshot this commit
-      // lands on — recomputed inside the retry loop, so an overwrite
-      // that races a concurrent upsert still clears the partition the
-      // racer added (a pre-computed `touched` set would let it
-      // survive a "whole table" overwrite)
-      replaceAll: Boolean = false,
-      // FILE-level removals (copy-on-write row rewrites: deleteWhere/
-      // merge): exactly these root-relative files drop out of their
-      // partitions' lists while the partitions otherwise survive.
-      // Every removed file must still be referenced by the snapshot
-      // the commit lands on — a concurrent compaction or rewrite that
-      // already replaced one would make this commit resurrect its old
-      // rows (the rewritten survivors duplicate what the winner kept)
-      // — else ConcurrentModificationException, and the caller
-      // re-derives against the new snapshot
+      touched: Set[String] = Set.empty,
       removeFiles: Set[String] = Set.empty,
-      // None = inherit the previous snapshot's CHECK constraints;
-      // Some = this commit SETS the table's constraint map (the
-      // add/dropConstraint metadata commits)
-      newConstraints: Option[Map[String, String]] = None,
-      // true = batchSchema is committed AS-IS instead of merged with
-      // the previous snapshot's (restore: rolling back must shed a
-      // column added after the target version, where the evolution
-      // merge would keep it)
-      schemaOverride: Boolean = false,
-      // deletion-vector updates: file -> new DvRef to SET on that
-      // file's line (deleteWhereDV). Keys must still be present in
-      // the snapshot the commit lands on, with the SAME DvRef the
-      // caller derived from (expectedBase) — a concurrent rewrite or
-      // dv commit on one of them means the caller's position set was
-      // computed against stale data
-      newDvs: Map[String, DvRef] = Map.empty,
-      // Some = this commit SETS the table's whole dv map (restore
-      // rolls dv state back with the file list; clone absolutizes);
-      // None = carry the previous snapshot's entries for surviving
-      // files, overlaid with newDvs
-      dvOverride: Option[Map[String, DvRef]] = None,
-      // bloom-index refs: same carry/overlay/override contract as
-      // dvs — entries for files absent from the committed file list
-      // are shed by construction (a rewritten file's bloom no longer
-      // bounds its replacement's keys)
-      newBlooms: Map[String, Map[String, BloomIndex.Ref]] = Map.empty,
-      bloomOverride: Option[Map[String, Map[String, BloomIndex.Ref]]] =
-        None,
-      // column mapping: Some = this commit SETS the logical->physical
-      // map (rename/drop/restore/clone); None = inherit
-      newColMap: Option[Map[String, String]] = None,
-      // dropped-column tombstones (physical names): same contract
-      newDropped: Option[Set[String]] = None,
-      // generated-column expressions: same Some-sets/None-inherits
-      newGenerated: Option[Map[String, String]] = None,
-      // writer-transaction watermarks to RECORD with this commit
-      // (appId -> version); merged over the previous snapshot's map —
-      // a txn entry never disappears, only advances
-      newTxns: Map[String, Long] = Map.empty): Long = {
+      dvFiles: Set[String] = Set.empty)(
+      edit: Snapshot => Snapshot): Long = {
     var attempts = 0
     while (attempts < 50) {
       attempts += 1
@@ -580,24 +605,16 @@ object AtomicLake {
           s"partitioning mismatch: table has ${s.partitionCols}, " +
             s"upsert uses $partitionCols")
       }
-      // optimistic concurrency for read-modify-write commits
-      // (compaction): the result was DERIVED from expectedBase, so if
-      // any partition we are about to replace changed since, merging
-      // would resurrect stale data — abort instead. Blind upserts
-      // (last-writer-wins by design) pass None and never conflict.
       for (base <- expectedBase; cur <- prev; p <- touched)
         if (cur.files.getOrElse(p, Nil) != base.files.getOrElse(p, Nil))
           throw new java.util.ConcurrentModificationException(
             s"partition $p changed (v${base.version} -> v${cur.version}) " +
               "since this rewrite read it; re-run against the new snapshot")
-      // deletion-vector conflicts: a rewrite/dv commit derived its row
-      // set from expectedBase's dv state — if a concurrent dv commit
-      // changed any file it read (rewrites: removeFiles + touched
-      // partitions; dv commits: newDvs keys), committing would
-      // resurrect the concurrently-deleted rows (or drop the
+      // a concurrent dv commit on any file this commit read: committing
+      // would resurrect the concurrently-deleted rows (or drop the
       // concurrent writer's positions)
       for (base <- expectedBase; cur <- prev) {
-        val watched = newDvs.keySet ++ removeFiles ++
+        val watched = dvFiles ++ removeFiles ++
           touched.flatMap(p => base.files.getOrElse(p, Nil))
         for (f <- watched if cur.dvs.get(f) != base.dvs.get(f))
           throw new java.util.ConcurrentModificationException(
@@ -605,149 +622,32 @@ object AtomicLake {
               s"v${cur.version}) since this rewrite read it; re-run " +
               "against the new snapshot")
       }
-      if (newDvs.nonEmpty) {
-        val present =
-          prev.map(_.files.values.flatten.toSet).getOrElse(Set.empty)
-        val gone = newDvs.keySet -- present
-        if (gone.nonEmpty)
-          throw new java.util.ConcurrentModificationException(
-            s"${gone.size} file(s) this dv commit read were replaced " +
-              s"since (e.g. ${gone.head}); re-run against the new snapshot")
-      }
-      val version = prev.map(_.version + 1).getOrElse(1L)
-      val effectiveTouched =
-        if (replaceAll) prev.map(_.files.keySet).getOrElse(Set.empty) ++
-          newFiles.keySet
-        else touched
-      // this commit's schema: previous schema evolved by the batch's
-      // (see [[mergeSchemas]]); recomputed INSIDE the retry loop so a
-      // lost race against a schema-changing winner still merges right
-      val schema =
-        if (schemaOverride) batchSchema
-        else (prev.flatMap(_.schema), batchSchema) match {
-          case (Some(p), Some(b)) => Some(mergeSchemas(p, b))
-          case (p, b) => b.orElse(p)
-        }
-      val colMap = newColMap.getOrElse(
-        prev.map(_.colMap).getOrElse(Map.empty))
-      val droppedSet = newDropped.getOrElse(
-        prev.map(_.dropped).getOrElse(Set.empty))
-      // column-mapping guards on columns NEW in this commit: their
-      // physical name (their own name) must not resurrect a dropped
-      // column's bytes, nor collide with an existing column's mapped
-      // physical slot (e.g. re-adding 'a' after RENAME a TO b — the
-      // old files' physical 'a' is b's storage)
-      if (newColMap.isEmpty)
-        for (prevSch <- prev.flatMap(_.schema); sch <- schema) {
-          def nrm(s: String) = s.toLowerCase(java.util.Locale.ROOT)
-          val prevNames = prevSch.fieldNames.map(nrm).toSet
-          val physInUse = prevSch.fieldNames
-            .map(n => nrm(colMap.getOrElse(n, n))).toSet
-          for (n <- sch.fieldNames if !prevNames(nrm(n))) {
-            if (droppedSet.exists(d => nrm(d) == nrm(n)))
-              throw new IllegalArgumentException(
-                s"cannot add column '$n': a dropped column's data " +
-                  "still lives under that physical name in committed " +
-                  "files and would silently resurrect; rewrite the " +
-                  "table to reuse the name")
-            if (physInUse(nrm(n)))
-              throw new IllegalArgumentException(
-                s"cannot add column '$n': the physical slot '$n' is " +
-                  "the storage of a renamed column; rewrite the table " +
-                  "to reuse the name")
-          }
-        }
-      if (removeFiles.nonEmpty) {
-        val present =
-          prev.map(_.files.values.flatten.toSet).getOrElse(Set.empty)
-        val gone = removeFiles -- present
-        if (gone.nonEmpty)
-          throw new java.util.ConcurrentModificationException(
-            s"${gone.size} file(s) this rewrite read were replaced " +
-              s"since (e.g. ${gone.head}); re-run against the new snapshot")
-      }
-      // drop the replaced partitions, then UNION per-partition file
-      // lists — so touched = ∅ is an append commit (new files join
-      // the survivors instead of clobbering their partition entry)
-      val base0 = prev.map(_.files).getOrElse(Map.empty) -- effectiveTouched
-      val base =
-        if (removeFiles.isEmpty) base0
-        else base0.map { case (p, fs) =>
-          p -> fs.filterNot(removeFiles)
-        }.filter(_._2.nonEmpty)
-      val merged = (base.keySet ++ newFiles.keySet).iterator.map { k =>
-        k -> (base.getOrElse(k, Nil) ++ newFiles.getOrElse(k, Nil))
-      }.toMap
-      val body = new StringBuilder(s"partition_cols=${partitionCols.mkString(",")}\n")
-      schema.foreach(s => body.append("schema=").append(s.json).append('\n'))
-      if (kind != "write") body.append("kind=").append(kind).append('\n')
-      val constraints = newConstraints.getOrElse(
-        prev.map(_.constraints).getOrElse(Map.empty))
-      for ((n, e) <- constraints.toSeq.sortBy(_._1))
-        body.append("constraint=").append(n).append(':')
-          .append(e).append('\n')
-      body.append("ts=").append(System.currentTimeMillis()).append('\n')
-      // bloom-index headers: only for files this commit still lists —
-      // an entry whose file was rewritten/removed must not survive
-      // (its bits say nothing about the replacement file's keys)
-      val mergedFiles = merged.values.flatten.toSet
-      val bloomByFile = bloomOverride.getOrElse(
-        prev.map(_.blooms).getOrElse(Map.empty) ++ newBlooms)
-      for ((f, cs) <- bloomByFile.toSeq.sortBy(_._1) if mergedFiles(f);
-           (c, ref) <- cs.toSeq.sortBy(_._1))
-        body.append("bloom=").append(c).append('\t')
-          .append(ref.path).append('\t').append(f).append('\n')
-      for ((l, p) <- colMap.toSeq.sortBy(_._1))
-        body.append("colmap=").append(l).append('\t').append(p)
-          .append('\n')
-      for (d <- droppedSet.toSeq.sorted)
-        body.append("dropped=").append(d).append('\n')
-      val generatedMap = newGenerated.getOrElse(
-        prev.map(_.generated).getOrElse(Map.empty))
-      for ((c, e) <- generatedMap.toSeq.sortBy(_._1))
-        body.append("generated=").append(c).append('\t').append(e)
-          .append('\n')
-      val txnMap = prev.map(_.txns).getOrElse(Map.empty) ++ newTxns
-      for ((a, v) <- txnMap.toSeq.sortBy(_._1))
-        body.append("txn=").append(a).append('\t').append(v)
-          .append('\n')
-      // surviving files keep the stats their own commit harvested;
-      // new files bring theirs — a file's zone map never changes
-      // after the immutable file is written
-      val statsByFile = prev.map(_.stats).getOrElse(Map.empty) ++ newStats
-      // dv refs ride the file line: surviving files keep theirs,
-      // newDvs overlays (a dv commit extends a file's chain), and a
-      // file absent from `merged` (rewritten/removed) sheds its entry
-      // by construction
-      val dvByFile = dvOverride.getOrElse(
-        prev.map(_.dvs).getOrElse(Map.empty) ++ newDvs)
-      for ((p, fs) <- merged.toSeq.sortBy(_._1); f <- fs.sorted) {
-        body.append(p).append('\t').append(f)
-        val st = statsByFile.get(f)
-        st.foreach(s => body.append('\t').append(LakeStats.toJson(s)))
-        dvByFile.get(f).foreach { dv =>
-          if (st.isEmpty) body.append('\t') // keep the dv field fourth
-          body.append('\t').append("dv:").append(dv.n).append(':')
-            .append(dv.paths.mkString(","))
-        }
-        body.append('\n')
-      }
-      if (store.tryCommit(root, version, body.toString))
+      lazy val present = prev.fold(Set.empty[String])(_.allFiles.toSet)
+      for ((read, what) <- Seq(dvFiles -> "dv commit", removeFiles -> "rewrite")
+           if read.nonEmpty; gone = read -- present if gone.nonEmpty)
+        throw new java.util.ConcurrentModificationException(
+          s"${gone.size} file(s) this $what read were replaced " +
+            s"since (e.g. ${gone.head}); re-run against the new snapshot")
+      val landing = prev.getOrElse(Snapshot(0L, partitionCols, Map.empty))
+      val version = landing.version + 1
+      val next = edit(landing)
+      val live = next.allFiles.toSet
+      val body = Snapshot.render(next.copy(version = version,
+        partitionCols = partitionCols, kind = kind,
+        ts = Some(System.currentTimeMillis()),
+        stats = next.stats.filter(e => live(e._1)),
+        dvs = next.dvs.filter(e => live(e._1)),
+        blooms = next.blooms.filter(e => live(e._1))))
+      if (store.tryCommit(root, version, body))
         return version
-      // else: lost the race — merge against the winner and retry
+      // else: lost the race — re-run the edit against the winner
     }
     throw new IllegalStateException(
       s"commit contention: gave up after $attempts attempts")
   }
 
-  /** Refuse `batch` if it violates any of the table's CHECK
-    * constraints, BEFORE anything is staged. SQL CHECK semantics: a
-    * row violates only when the predicate evaluates FALSE — null
-    * passes. All constraints are checked in ONE aggregation job; a
-    * table without constraints pays nothing (no job at all).
-    */
   /** Materialize ABSENT generated columns on a write batch (the
-    * provided ones are validated instead — see [[prepareBatch]]).
+    * provided ones are validated instead — see [[violations]]).
     */
   private def applyGenerated(batch: DataFrame,
       gen: Map[String, String]): DataFrame =
@@ -756,52 +656,67 @@ object AtomicLake {
       else d.withColumn(g, org.apache.spark.sql.functions.expr(e))
     }
 
-  /** (message, per-row violation condition) for each generated column
-    * the batch PROVIDES: the value must null-safe-equal its
-    * expression (Delta's GENERATED ALWAYS AS write contract).
+  /** A per-row violation condition: `msg` names it in a refusal, `tag`
+    * in a quarantined row's `_violated` list.
     */
-  private def generatedViolations(batch: DataFrame,
-      gen: Map[String, String])
-      : Seq[(String, org.apache.spark.sql.Column)] = {
-    import org.apache.spark.sql.functions.{col, expr, not}
-    gen.toSeq.sortBy(_._1).collect {
+  private final case class Violation(msg: String, tag: String,
+      cond: Column)
+
+  /** The violation conditions new rows of `batch` are held to: each
+    * CHECK constraint (SQL semantics — a row violates only when the
+    * predicate is FALSE, null passes), then each generated column the
+    * batch PROVIDES, which must null-safe-equal its expression (Delta's
+    * GENERATED ALWAYS AS write contract).
+    */
+  private def violations(batch: DataFrame, snap: Snapshot): Seq[Violation] = {
+    import org.apache.spark.sql.functions.{coalesce, col, expr, lit, not}
+    snap.constraints.toSeq.sortBy(_._1).map { case (n, e) =>
+      Violation(s"CHECK constraint '$n' ($e)", n,
+        coalesce(expr(e), lit(true)) === lit(false))
+    } ++ snap.generated.toSeq.sortBy(_._1).collect {
       case (g, e) if batch.columns.exists(_.equalsIgnoreCase(g)) =>
-        (s"generated column '$g' does not match its expression ($e)",
-          not(col(g) <=> expr(e)))
+        Violation(s"generated column '$g' does not match its expression ($e)",
+          s"generated:$g", not(col(g) <=> expr(e)))
     }
   }
 
-  /** Pre-write batch preparation, ONE snapshot read + at most ONE
+  /** One aggregate per violation condition: its violating-row count. */
+  private def violationCounts(vs: Seq[Violation]): Seq[Column] = {
+    import org.apache.spark.sql.functions.{sum, when}
+    vs.zipWithIndex.map { case (v, i) =>
+      sum(when(v.cond, 1L).otherwise(0L)).as(s"__viol_$i")
+    }
+  }
+
+  /** Refuse the batch whose [[violationCounts]] (in `row`) are not all
+    * zero, naming the first violated condition.
+    */
+  private def refuseViolations(vs: Seq[Violation],
+      row: org.apache.spark.sql.Row): Unit =
+    vs.zipWithIndex.foreach { case (v, i) =>
+      val at = row.fieldIndex(s"__viol_$i")
+      val bad = if (row.isNullAt(at)) 0L else row.getLong(at)
+      if (bad > 0)
+        throw new IllegalStateException(
+          s"${v.msg} violated by $bad row(s) of this batch; " +
+            "nothing was committed")
+    }
+
+  /** Pre-write batch preparation against `snap`, at most ONE
     * aggregation job: absent generated columns materialize from their
     * expressions (so a generated partition column costs writers
     * nothing), then CHECK constraints and provided-generated-column
     * equality validate together over the completed frame. Returns the
     * frame to stage; tables with neither feature pay nothing.
     */
-  private def prepareBatch(batch: DataFrame, root: String,
-      store: CommitStore): DataFrame = {
-    val snap = currentSnapshot(root, store)
-    val gen = snap.map(_.generated).getOrElse(Map.empty)
-    val cons = snap.map(_.constraints).getOrElse(Map.empty)
-    val genViol = generatedViolations(batch, gen)
-    val out = applyGenerated(batch, gen)
-    if (cons.isEmpty && genViol.isEmpty) return out
-    import org.apache.spark.sql.functions.{coalesce, expr, lit, sum, when}
-    val checks: Seq[(String, org.apache.spark.sql.Column)] =
-      cons.toSeq.sortBy(_._1).map { case (n, e) =>
-        (s"CHECK constraint '$n' ($e)",
-          coalesce(expr(e), lit(true)) === lit(false))
-      } ++ genViol
-    val aggs = checks.zipWithIndex.map { case ((_, cond), i) =>
-      sum(when(cond, 1L).otherwise(0L)).as(s"c$i")
-    }
-    val row = out.agg(aggs.head, aggs.tail: _*).head()
-    checks.zipWithIndex.foreach { case ((msg, _), i) =>
-      val bad = if (row.isNullAt(i)) 0L else row.getLong(i)
-      if (bad > 0)
-        throw new IllegalStateException(
-          s"$msg violated by $bad row(s) of " +
-            "this batch; nothing was committed")
+  private def prepareBatch(batch: DataFrame,
+      snap: Option[Snapshot]): DataFrame = {
+    val checks = snap.fold(Seq.empty[Violation])(violations(batch, _))
+    val out = applyGenerated(batch,
+      snap.fold(Map.empty[String, String])(_.generated))
+    if (checks.nonEmpty) {
+      val counts = violationCounts(checks)
+      refuseViolations(checks, out.agg(counts.head, counts.tail: _*).head())
     }
     out
   }
@@ -820,8 +735,7 @@ object AtomicLake {
       s"constraint name must be non-empty without ':' or newline: $name")
     require(!predicate.contains('\n'),
       "constraint predicate must be single-line SQL")
-    val snap = currentSnapshot(root, store).getOrElse(
-      throw new IllegalStateException(s"no commits at $root"))
+    val snap = latest(root, store)
     import org.apache.spark.sql.functions.{coalesce, expr, lit}
     val bad = readSnapshot(spark, root, snap)
       .filter(coalesce(expr(predicate), lit(true)) === lit(false))
@@ -830,9 +744,8 @@ object AtomicLake {
       throw new IllegalStateException(
         s"cannot add CHECK constraint '$name' ($predicate): $bad " +
           "existing row(s) violate it")
-    commitReplacing(root, Set.empty, Map.empty, snap.partitionCols,
-      store = store, kind = "constraint",
-      newConstraints = Some(snap.constraints + (name -> predicate)))
+    commit(root, snap.partitionCols, "constraint", store)(s =>
+      s.copy(constraints = s.constraints + (name -> predicate)))
   }
 
   /** DROP CONSTRAINT — metadata-only commit removing the named CHECK
@@ -842,14 +755,12 @@ object AtomicLake {
     */
   def dropConstraint(root: String, name: String,
       store: CommitStore = HardlinkCommitStore): Long = {
-    val snap = currentSnapshot(root, store).getOrElse(
-      throw new IllegalStateException(s"no commits at $root"))
+    val snap = latest(root, store)
     require(snap.constraints.contains(name),
       s"no CHECK constraint named '$name' " +
         s"(table has: ${snap.constraints.keys.toSeq.sorted.mkString(", ")})")
-    commitReplacing(root, Set.empty, Map.empty, snap.partitionCols,
-      store = store, kind = "constraint",
-      newConstraints = Some(snap.constraints - name))
+    commit(root, snap.partitionCols, "constraint", store)(s =>
+      s.copy(constraints = s.constraints - name))
   }
 
   /** Does SQL text `e` reference column `name`? Conservative
@@ -861,6 +772,12 @@ object AtomicLake {
     ("(?i)(?<![A-Za-z0-9_])" +
       java.util.regex.Pattern.quote(name) +
       "(?![A-Za-z0-9_])").r.findFirstIn(e).isDefined
+
+  /** `s`'s committed schema, for the metadata operation `op`. */
+  private def schemaOf(s: Snapshot, op: String,
+      root: String): org.apache.spark.sql.types.StructType =
+    s.schema.getOrElse(throw new IllegalStateException(
+      s"$op: $root has no committed schema"))
 
   /** Declare `name` GENERATED ALWAYS AS `exprSql` (Delta's generated
     * columns — pipeline.py-style month/year partition derivations
@@ -878,12 +795,10 @@ object AtomicLake {
       store: CommitStore = HardlinkCommitStore): Long = {
     require(!exprSql.contains('\n') && !exprSql.contains('\t'),
       "generation expression must be single-line SQL without tabs")
-    val snap = currentSnapshot(root, store).getOrElse(
-      throw new IllegalStateException(s"no commits at $root"))
+    val snap = latest(root, store)
     // parse errors surface here, not at some future write
     org.apache.spark.sql.functions.expr(exprSql)
-    val schema = snap.schema.getOrElse(throw new IllegalStateException(
-      s"setGeneratedColumn: $root has no committed schema"))
+    val schema = schemaOf(snap, "setGeneratedColumn", root)
     if (schema.fieldNames.exists(_.equalsIgnoreCase(name))) {
       import org.apache.spark.sql.functions.{col, expr, not}
       val bad = readSnapshot(spark, root, snap)
@@ -893,22 +808,19 @@ object AtomicLake {
           s"cannot declare '$name' generated as ($exprSql): $bad " +
             "existing row(s) contradict the expression")
     }
-    commitReplacing(root, Set.empty, Map.empty, snap.partitionCols,
-      store = store, kind = "schema",
-      newGenerated = Some(snap.generated + (name -> exprSql)))
+    commit(root, snap.partitionCols, "schema", store)(s =>
+      s.copy(generated = s.generated + (name -> exprSql)))
   }
 
   /** Remove a generation declaration — the column stays, now plain. */
   def dropGeneratedColumn(root: String, name: String,
       store: CommitStore = HardlinkCommitStore): Long = {
-    val snap = currentSnapshot(root, store).getOrElse(
-      throw new IllegalStateException(s"no commits at $root"))
+    val snap = latest(root, store)
     require(snap.generated.contains(name),
       s"no generated column '$name' " +
         s"(table has: ${snap.generated.keys.toSeq.sorted.mkString(", ")})")
-    commitReplacing(root, Set.empty, Map.empty, snap.partitionCols,
-      store = store, kind = "schema",
-      newGenerated = Some(snap.generated - name))
+    commit(root, snap.partitionCols, "schema", store)(s =>
+      s.copy(generated = s.generated - name))
   }
 
   /** RENAME COLUMN without rewriting a byte (Delta's column mapping,
@@ -923,101 +835,90 @@ object AtomicLake {
     * Refused for: partition columns (their physical form is the
     * directory layout), columns a CHECK constraint references, and
     * columns with a bloom index (drop + rebuild under the new name).
+    * Checked and applied against the snapshot the commit lands on.
     */
   def renameColumn(root: String, from: String, to: String,
-      store: CommitStore = HardlinkCommitStore): Long = {
-    val snap = currentSnapshot(root, store).getOrElse(
-      throw new IllegalStateException(s"no commits at $root"))
-    val schema = snap.schema.getOrElse(throw new IllegalStateException(
-      s"renameColumn: $root has no committed schema"))
-    def nrm(s: String) = s.toLowerCase(java.util.Locale.ROOT)
-    require(schema.fieldNames.contains(from),
-      s"renameColumn: no column '$from' " +
-        s"(table has: ${schema.fieldNames.mkString(", ")})")
-    require(!schema.fieldNames.exists(n => nrm(n) == nrm(to)),
-      s"renameColumn: column '$to' already exists")
-    require(!snap.partitionCols.contains(from),
-      s"renameColumn: '$from' is a partition column — its physical " +
-        "form is the directory layout; rewrite the table instead")
-    for ((n, e) <- snap.constraints if mentionsColumn(e, from))
-      throw new IllegalArgumentException(
-        s"renameColumn: CHECK constraint '$n' references '$from'; " +
-          "drop the constraint first")
-    require(!snap.blooms.values.exists(_.contains(from)),
-      s"renameColumn: a bloom index exists on '$from'; the sidecars " +
-        "key it by name — drop the index (rewrite files or vacuum) " +
-        "and re-create it under the new name")
-    require(!snap.generated.contains(from),
-      s"renameColumn: '$from' is a generated column; drop the " +
-        "generation declaration first")
-    for ((g, e) <- snap.generated if mentionsColumn(e, from))
-      throw new IllegalArgumentException(
-        s"renameColumn: generated column '$g' derives from '$from'; " +
-          "drop the generation declaration first")
-    // the physical slot does not move; also refuse if `to`'s physical
-    // (= itself, were it added later) is tombstoned — harmless here,
-    // but keeps the physical namespace unambiguous
-    require(!snap.dropped.exists(d => nrm(d) == nrm(to)),
-      s"renameColumn: '$to' is a dropped column's physical name")
-    val phys = physicalOf(snap, from)
-    val newSchema = org.apache.spark.sql.types.StructType(
-      schema.fields.map(f =>
-        if (f.name == from) f.copy(name = to) else f))
-    // renaming BACK to the physical name is the identity — drop the
-    // entry instead of recording `v -> v` (which would trip the
-    // stage-time physical-slot guard and clutter every manifest)
-    val newMap =
-      if (to == phys) snap.colMap - from
-      else snap.colMap - from + (to -> phys)
-    commitReplacing(root, Set.empty, Map.empty, snap.partitionCols,
-      batchSchema = Some(newSchema), schemaOverride = true,
-      store = store, kind = "schema",
-      newColMap = Some(newMap))
-  }
+      store: CommitStore = HardlinkCommitStore): Long =
+    commit(root, latest(root, store).partitionCols, "schema", store) { s =>
+      val schema = schemaOf(s, "renameColumn", root)
+      def nrm(n: String) = n.toLowerCase(java.util.Locale.ROOT)
+      require(schema.fieldNames.contains(from),
+        s"renameColumn: no column '$from' " +
+          s"(table has: ${schema.fieldNames.mkString(", ")})")
+      require(!schema.fieldNames.exists(n => nrm(n) == nrm(to)),
+        s"renameColumn: column '$to' already exists")
+      require(!s.partitionCols.contains(from),
+        s"renameColumn: '$from' is a partition column — its physical " +
+          "form is the directory layout; rewrite the table instead")
+      for ((n, e) <- s.constraints if mentionsColumn(e, from))
+        throw new IllegalArgumentException(
+          s"renameColumn: CHECK constraint '$n' references '$from'; " +
+            "drop the constraint first")
+      require(!s.blooms.values.exists(_.contains(from)),
+        s"renameColumn: a bloom index exists on '$from'; the sidecars " +
+          "key it by name — drop the index (rewrite files or vacuum) " +
+          "and re-create it under the new name")
+      require(!s.generated.contains(from),
+        s"renameColumn: '$from' is a generated column; drop the " +
+          "generation declaration first")
+      for ((g, e) <- s.generated if mentionsColumn(e, from))
+        throw new IllegalArgumentException(
+          s"renameColumn: generated column '$g' derives from '$from'; " +
+            "drop the generation declaration first")
+      // the physical slot does not move; also refuse if `to`'s physical
+      // (= itself, were it added later) is tombstoned — harmless here,
+      // but keeps the physical namespace unambiguous
+      require(!s.dropped.exists(d => nrm(d) == nrm(to)),
+        s"renameColumn: '$to' is a dropped column's physical name")
+      val phys = physicalOf(s, from)
+      s.copy(
+        schema = Some(org.apache.spark.sql.types.StructType(
+          schema.fields.map(f =>
+            if (f.name == from) f.copy(name = to) else f))),
+        // renaming BACK to the physical name is the identity — drop the
+        // entry instead of recording `v -> v` (which would trip the
+        // stage-time physical-slot guard and clutter every manifest)
+        colMap = if (to == phys) s.colMap - from
+          else s.colMap - from + (to -> phys))
+    }
 
   /** DROP COLUMN without rewriting a byte: metadata-only — the column
     * leaves the schema and mapping, its physical name is TOMBSTONED
     * (re-adding the name is refused: committed files still hold the
     * old bytes, and a re-add would silently resurrect them — rewrite
     * the table to truly reclaim the name), and any bloom entries on
-    * it are shed. Time travel before the drop still reads it.
+    * it are shed. Time travel before the drop still reads it. Checked
+    * and applied against the snapshot the commit lands on.
     */
   def dropColumn(root: String, name: String,
-      store: CommitStore = HardlinkCommitStore): Long = {
-    val snap = currentSnapshot(root, store).getOrElse(
-      throw new IllegalStateException(s"no commits at $root"))
-    val schema = snap.schema.getOrElse(throw new IllegalStateException(
-      s"dropColumn: $root has no committed schema"))
-    require(schema.fieldNames.contains(name),
-      s"dropColumn: no column '$name' " +
-        s"(table has: ${schema.fieldNames.mkString(", ")})")
-    require(!snap.partitionCols.contains(name),
-      s"dropColumn: '$name' is a partition column")
-    require(schema.fields.length > snap.partitionCols.length + 1,
-      s"dropColumn: '$name' is the table's last data column")
-    for ((n, e) <- snap.constraints if mentionsColumn(e, name))
-      throw new IllegalArgumentException(
-        s"dropColumn: CHECK constraint '$n' references '$name'; " +
-          "drop the constraint first")
-    for ((g, e) <- snap.generated
-         if g != name && mentionsColumn(e, name))
-      throw new IllegalArgumentException(
-        s"dropColumn: generated column '$g' derives from '$name'; " +
-          "drop the generation declaration first")
-    val phys = physicalOf(snap, name)
-    val newSchema = org.apache.spark.sql.types.StructType(
-      schema.fields.filterNot(_.name == name))
-    val bloomsAfter = snap.blooms
-      .map { case (f, cs) => f -> (cs - name) }
-      .filter(_._2.nonEmpty)
-    commitReplacing(root, Set.empty, Map.empty, snap.partitionCols,
-      batchSchema = Some(newSchema), schemaOverride = true,
-      store = store, kind = "schema",
-      newColMap = Some(snap.colMap - name),
-      newDropped = Some(snap.dropped + phys),
-      bloomOverride = Some(bloomsAfter),
-      newGenerated = Some(snap.generated - name))
-  }
+      store: CommitStore = HardlinkCommitStore): Long =
+    commit(root, latest(root, store).partitionCols, "schema", store) { s =>
+      val schema = schemaOf(s, "dropColumn", root)
+      require(schema.fieldNames.contains(name),
+        s"dropColumn: no column '$name' " +
+          s"(table has: ${schema.fieldNames.mkString(", ")})")
+      require(!s.partitionCols.contains(name),
+        s"dropColumn: '$name' is a partition column")
+      require(schema.fields.length > s.partitionCols.length + 1,
+        s"dropColumn: '$name' is the table's last data column")
+      for ((n, e) <- s.constraints if mentionsColumn(e, name))
+        throw new IllegalArgumentException(
+          s"dropColumn: CHECK constraint '$n' references '$name'; " +
+            "drop the constraint first")
+      for ((g, e) <- s.generated
+           if g != name && mentionsColumn(e, name))
+        throw new IllegalArgumentException(
+          s"dropColumn: generated column '$g' derives from '$name'; " +
+            "drop the generation declaration first")
+      s.copy(
+        schema = Some(org.apache.spark.sql.types.StructType(
+          schema.fields.filterNot(_.name == name))),
+        colMap = s.colMap - name,
+        dropped = s.dropped + physicalOf(s, name),
+        blooms = s.blooms.map { case (f, cs) => f -> (cs - name) }
+          .filter(_._2.nonEmpty),
+        generated = s.generated - name)
+    }
 
   /** Expectation-split ingest (the Delta-Live-Tables
     * `expect_or_drop` + quarantine pattern, against this table's
@@ -1043,27 +944,20 @@ object AtomicLake {
       store: CommitStore = HardlinkCommitStore): (Long, Long, Long) = {
     import org.apache.spark.sql.functions._
     val snapOpt = currentSnapshot(root, store)
-    val cons = snapOpt.map(_.constraints).getOrElse(Map.empty)
-    val gen = snapOpt.map(_.generated).getOrElse(Map.empty)
-    val genViol = generatedViolations(batch, gen)
-    if (cons.isEmpty && genViol.isEmpty) {
+    val checks = snapOpt.fold(Seq.empty[Violation])(violations(batch, _))
+    if (checks.isEmpty) {
       // append() materializes absent generated columns itself
       val v = append(batch, root, partitionCols, filesPerPartition,
         store)
       return (v, -1L, 0L) // -1: not counted — no extra job was run
     }
-    val ordered = cons.toSeq.sortBy(_._1)
     // one pinned evaluation serves both sides; each row's violation
-    // list is computed once (SQL CHECK: only FALSE violates). A
-    // PROVIDED generated column that contradicts its expression
-    // quarantines the row like any other expectation failure.
-    val tagged = applyGenerated(batch, gen).withColumn("_violated",
-      array_compact(array(ordered.map { case (n, e) =>
-        when(coalesce(expr(e), lit(true)) === lit(false), lit(n))
-      } ++ gen.toSeq.sortBy(_._1).collect {
-        case (g, e) if batch.columns.exists(_.equalsIgnoreCase(g)) =>
-          when(not(col(g) <=> expr(e)), lit(s"generated:$g"))
-      }: _*))).localCheckpoint()
+    // list is computed once. A PROVIDED generated column that
+    // contradicts its expression quarantines the row like any other
+    // expectation failure.
+    val tagged = applyGenerated(batch, snapOpt.get.generated)
+      .withColumn("_violated", array_compact(array(checks.map(v =>
+        when(v.cond, lit(v.tag))): _*))).localCheckpoint()
     val good = tagged.filter(size(col("_violated")) === 0)
       .drop("_violated")
     val bad = tagged.filter(size(col("_violated")) > 0)
@@ -1077,9 +971,30 @@ object AtomicLake {
         // normal append's enforcement pass re-proves it cheaply on
         // the pinned frame
         append(good, root, partitionCols, filesPerPartition, store)
-      else currentVersion(root, store).getOrElse(
-        throw new IllegalStateException(s"no commits at $root"))
+      else latest(root, store).version
     (v, nGood, nBad)
+  }
+
+  /** The one prepare→stage→commit body of the batch writers: the
+    * batch is prepared against the current snapshot ([[prepareBatch]])
+    * and staged NOW; the returned thunk commits it, replacing the
+    * partitions `replaced` picks from the snapshot the commit lands on
+    * (resolved inside the retry loop, so an overwrite that races a
+    * concurrent upsert still clears the partition the racer added)
+    * and recording `txn`.
+    */
+  private def stagedWrite(batch: DataFrame, root: String,
+      partitionCols: Seq[String], filesPerPartition: Int,
+      store: CommitStore, txn: Option[(String, Long)] = None)(
+      replaced: (Snapshot, Staged) => Set[String]): () => Long = {
+    val snap = currentSnapshot(root, store)
+    val prepared = prepareBatch(batch, snap)
+    val staged = stageFiles(prepared, root, partitionCols,
+      filesPerPartition, colMap = snap.fold(Map.empty[String, String])(_.colMap))
+    () => commit(root, partitionCols, store = store) { s =>
+      s.swap(staged, touched = replaced(s, staged))
+        .evolve(prepared.schema).copy(txns = s.txns ++ txn)
+    }
   }
 
   /** Idempotent partition upsert with a single atomic commit point:
@@ -1088,14 +1003,9 @@ object AtomicLake {
     */
   def upsertPartitions(batch: DataFrame, root: String,
       partitionCols: Seq[String], filesPerPartition: Int = 1,
-      store: CommitStore = HardlinkCommitStore): Long = {
-    val prepared = prepareBatch(batch, root, store)
-    val staged = stageFiles(prepared, root, partitionCols,
-      filesPerPartition, colMap = currentColMap(root, store))
-    commitReplacing(root, staged.keySet, staged.files, partitionCols,
-      batchSchema = Some(prepared.schema), store = store,
-      newStats = staged.stats)
-  }
+      store: CommitStore = HardlinkCommitStore): Long =
+    stagedWrite(batch, root, partitionCols, filesPerPartition, store)(
+      (_, staged) => staged.keySet)()
 
   /** Append-only commit: new files JOIN the existing partitions (no
     * partition is replaced) — the shape for immutable event/audit
@@ -1107,15 +1017,9 @@ object AtomicLake {
       // exactly-once replay for streaming writers: record
       // (appId -> version) with the commit; pair with [[lastTxn]] to
       // skip an already-committed micro-batch on redelivery
-      txn: Option[(String, Long)] = None): Long = {
-    val prepared = prepareBatch(batch, root, store)
-    val staged = stageFiles(prepared, root, partitionCols,
-      filesPerPartition, colMap = currentColMap(root, store))
-    commitReplacing(root, Set.empty, staged.files, partitionCols,
-      batchSchema = Some(prepared.schema), store = store,
-      newStats = staged.stats,
-      newTxns = txn.map(t => Map(t._1 -> t._2)).getOrElse(Map.empty))
-  }
+      txn: Option[(String, Long)] = None): Long =
+    stagedWrite(batch, root, partitionCols, filesPerPartition, store, txn)(
+      (_, _) => Set.empty)()
 
   /** Highest transaction version writer `appId` has committed at
     * `root` (None before its first tagged commit, or before the table
@@ -1151,20 +1055,14 @@ object AtomicLake {
     */
   def overwriteStaged(batch: DataFrame, root: String,
       partitionCols: Seq[String] = Nil, filesPerPartition: Int = 1,
-      store: CommitStore = HardlinkCommitStore): () => Long = {
-    val prepared = prepareBatch(batch, root, store)
-    val staged = stageFiles(prepared, root, partitionCols,
-      filesPerPartition, colMap = currentColMap(root, store))
-    () => commitReplacing(root, Set.empty, staged.files, partitionCols,
-      batchSchema = Some(prepared.schema), store = store,
-      newStats = staged.stats, replaceAll = true)
-  }
+      store: CommitStore = HardlinkCommitStore): () => Long =
+    stagedWrite(batch, root, partitionCols, filesPerPartition, store)(
+      (s, _) => s.files.keySet)
 
   /** Read the newest committed snapshot. */
   def read(spark: SparkSession, root: String,
       store: CommitStore = HardlinkCommitStore): DataFrame =
-    readSnapshot(spark, root, currentSnapshot(root, store).getOrElse(
-      throw new IllegalStateException(s"no commits at $root")))
+    readSnapshot(spark, root, latest(root, store))
 
   /** Stats-pruned read: files whose manifest zone maps PROVE no row
     * can satisfy `filters` are dropped on the driver — no task, no
@@ -1182,29 +1080,42 @@ object AtomicLake {
   def scan(spark: SparkSession, root: String,
       store: CommitStore = HardlinkCommitStore)(
       filters: org.apache.spark.sql.Column*): DataFrame = {
-    val snap = currentSnapshot(root, store).getOrElse(
-      throw new IllegalStateException(s"no commits at $root"))
-    if (filters.isEmpty) return readSnapshot(spark, root, snap)
+    val snap = latest(root, store)
+    if (filters.isEmpty) readSnapshot(spark, root, snap)
+    else readPlanned(spark, root, snap,
+      planFiles(root, snap, filters, Some(spark)), filters)
+  }
+
+  /** The one scan planner: the files of `snap` a read under `filters`
+    * must open. Zone maps first ([[LakeStats.survivors]], driver-only);
+    * then, given a session, bloom indexes drop the files an equality/IN
+    * conjunct on an indexed column proves the key absent from (a
+    * sidecar-sized job; only file names return — see
+    * [[BloomIndex.prunable]]).
+    */
+  private[graft] def planFiles(root: String, snap: Snapshot,
+      filters: Seq[Column],
+      spark: Option[SparkSession] = None): Seq[String] = {
     val exprs = filters.map(
       org.apache.spark.sql.classic.GraftExprBridge.expression)
-    val zoneSurvivors = LakeStats.survivors(snap, exprs)
-    // bloom-index pruning on top of the zone maps: equality/IN
-    // conjuncts on indexed high-cardinality columns drop the files a
-    // bloom proves the key absent from (a sidecar-sized job; only
-    // file names return — see [[BloomIndex.prunable]])
-    val surviving =
-      if (snap.blooms.isEmpty || zoneSurvivors.isEmpty) zoneSurvivors
-      else {
-        val pruned =
-          BloomIndex.prunable(spark, root, snap, exprs, zoneSurvivors)
-        zoneSurvivors.filterNot(pruned)
-      }
+    val zone = LakeStats.survivors(snap, exprs)
+    spark match {
+      case Some(s) if snap.blooms.nonEmpty && zone.nonEmpty =>
+        zone.filterNot(BloomIndex.prunable(s, root, snap, exprs, zone))
+      case _ => zone
+    }
+  }
+
+  /** The one pruned read: `files` of `snap` (planned by [[planFiles]])
+    * with `filters` re-applied on top, so pruning only ever cuts cost.
+    * When every file is pruned, a schema-correct empty frame (partition
+    * columns included) without a single data file read.
+    */
+  private[graft] def readPlanned(spark: SparkSession, root: String,
+      snap: Snapshot, files: Seq[String], filters: Seq[Column]): DataFrame = {
     val base =
-      if (surviving.isEmpty)
-        // every file pruned: schema-correct empty frame (partition
-        // columns included) without planning a single data file
-        readSnapshot(spark, root, snap).limit(0)
-      else readFileSubset(spark, root, surviving, snap)
+      if (files.isEmpty) readSnapshot(spark, root, snap).limit(0)
+      else readFileSubset(spark, root, files, snap)
     filters.foldLeft(base)(_.filter(_))
   }
 
@@ -1245,27 +1156,91 @@ object AtomicLake {
     * files aborts with ConcurrentModificationException — correct, but
     * the caller's remedy is always "re-run against the new snapshot",
     * so deleteWhere/merge do it themselves (Delta's internal OCC
-    * retry). Each attempt re-reads the snapshot and re-derives the
-    * dirty set from scratch; the loser's staged files become orphans
-    * (vacuum reclaims). Bounded attempts: livelock under sustained
-    * compaction churn surfaces the real conflict instead of spinning.
+    * retry). Each attempt re-evaluates `op`, which re-reads the
+    * snapshot and re-derives the dirty set from scratch; the loser's
+    * staged files become orphans (vacuum reclaims). Bounded attempts:
+    * livelock under sustained compaction churn surfaces the real
+    * conflict instead of spinning.
     */
-  private def retryRewrite(op: () => Rewrite): Rewrite = {
+  private def retryRewrite(op: => Rewrite): Rewrite = {
     var attempts = 0
     while (true) {
       attempts += 1
-      try return op()
+      try return op
       catch {
         case _: java.util.ConcurrentModificationException
             if attempts < 8 =>
           // linear backoff de-synchronizes racing writers before the
-          // re-derivation (each attempt re-reads the snapshot and
-          // re-derives the dirty set from scratch)
+          // re-derivation
           Thread.sleep(25L * attempts)
       }
     }
     sys.error("unreachable")
   }
+
+  /** What a copy-on-write rewrite swaps: the `dirty` files, the `rows`
+    * staged in their place, the target rows it changed, and the schema
+    * the commit evolves by (merge's source; None keeps the table's).
+    */
+  private final case class Swap(dirty: Seq[String], changed: Long,
+      rows: DataFrame,
+      schema: Option[org.apache.spark.sql.types.StructType] = None)
+
+  /** The one copy-on-write row rewrite: `find` derives the swap from a
+    * fresh snapshot (None: nothing to change — NO commit, so retries
+    * and scheduled sweeps are free), its rows are staged, Spark's
+    * zero-row placeholder is dropped (a rewrite that empties every row
+    * would otherwise keep a dead manifest line and footer read), and
+    * ONE commit swaps the dirty files for the staged ones. A
+    * concurrent compaction or rewrite that already replaced a dirty
+    * file, or changed its deletion vector, aborts the commit instead
+    * of resurrecting rows, and [[retryRewrite]] re-derives.
+    */
+  private def rewrite(root: String, store: CommitStore,
+      filesPerPartition: Int, kind: String = "write")(
+      find: Snapshot => Option[Swap]): Rewrite =
+    retryRewrite {
+      val snap = latest(root, store)
+      find(snap).fold(Rewrite(snap.version, 0L, 0)) { sw =>
+        val staged = stageFiles(sw.rows, root, snap.partitionCols,
+          filesPerPartition, colMap = snap.colMap)
+        val empties = staged.stats.collect {
+          case (f, st) if st.rows == 0L => f
+        }.toSet
+        empties.foreach(f =>
+          Files.deleteIfExists(Paths.get(root).resolve(f)))
+        val kept = staged.copy(files = staged.files.map { case (p, fs) =>
+          p -> fs.filterNot(empties)
+        }.filter(_._2.nonEmpty))
+        val removed = sw.dirty.toSet
+        val v = commit(root, snap.partitionCols, kind, store,
+            expectedBase = Some(snap), removeFiles = removed) { s =>
+          val next = s.swap(kept, removed = removed)
+          sw.schema.fold(next)(next.evolve)
+        }
+        Rewrite(v, sw.changed, sw.dirty.size)
+      }
+    }
+
+  /** The dirty-file tally: which of `candidates` hold a row `matching`
+    * keeps, and how many such rows — one pass over the candidates
+    * tagged with `_metadata.file_path`; the per-file tally is
+    * file-count-sized driver data, never row data.
+    */
+  private def dirtyFiles(spark: SparkSession, root: String,
+      snap: Snapshot, candidates: Seq[String])(
+      matching: DataFrame => DataFrame): (Seq[String], Long) =
+    if (candidates.isEmpty) (Nil, 0L)
+    else {
+      import org.apache.spark.sql.functions.{col, count, lit}
+      val perFile = matching(
+          readFileSubsetTagged(spark, root, candidates, snap))
+        .groupBy(col("_graft_file"))
+        .agg(count(lit(1)).as("n"))
+        .collect()
+      (toRelative(perFile.map(_.getString(0)).toSeq, candidates, root),
+        perFile.map(_.getLong(1)).sum)
+    }
 
   /** Row-level DELETE with copy-on-write file rewrites — the half of
     * the Delta/Iceberg `DELETE FROM` contract this lake's partition
@@ -1275,30 +1250,34 @@ object AtomicLake {
     *     say they MAY hold a matching row are read at all
     *     ([[LakeStats.survivors]]) — a predicate on one month of a
     *     100-TB table plans that month's files, driver-side.
-    *  2. One pass over the candidates (with `_metadata.file_path`)
-    *     finds the files that ACTUALLY contain matching rows and the
-    *     matched-row count; clean candidates keep their manifest
-    *     lines untouched — write amplification is bounded by dirty
-    *     files, not candidate files. The per-file tally is
-    *     file-count-sized driver data, never row data.
+    *  2. One pass over the candidates ([[dirtyFiles]]) finds the files
+    *     that ACTUALLY contain matching rows and the matched-row
+    *     count; clean candidates keep their manifest lines untouched —
+    *     write amplification is bounded by dirty files, not candidate
+    *     files.
     *  3. Dirty files alone are re-read, their surviving rows (NOT
     *     matching, including predicate-null rows — SQL DELETE
     *     semantics) rewritten, and ONE commit atomically swaps
-    *     removed-for-rewritten. A concurrent compaction or rewrite
-    *     that already replaced a dirty file aborts the commit
-    *     (ConcurrentModificationException) instead of resurrecting
-    *     its rows; time travel and CDC see the swap as a normal
-    *     write commit (old images delete, survivors insert).
+    *     removed-for-rewritten ([[rewrite]]); time travel and CDC see
+    *     the swap as a normal write commit (old images delete,
+    *     survivors insert).
     *
     * No matching rows → NO commit (returns the current version with
-    * rowsChanged = 0), so retries and scheduled sweeps are free.
+    * rowsChanged = 0).
     */
   def deleteWhere(spark: SparkSession, root: String,
       filesPerPartition: Int = 1,
       store: CommitStore = HardlinkCommitStore)(
       predicate: Column): Rewrite =
-    retryRewrite(() =>
-      deleteWhereOnce(spark, root, filesPerPartition, store)(predicate))
+    rewrite(root, store, filesPerPartition) { snap =>
+      import org.apache.spark.sql.functions.{coalesce, lit}
+      val (dirty, matched) = dirtyFiles(spark, root, snap,
+        planFiles(root, snap, Seq(predicate)))(_.filter(predicate))
+      if (dirty.isEmpty) None
+      else Some(Swap(dirty, matched,
+        readFileSubset(spark, root, dirty, snap)
+          .filter(!coalesce(predicate, lit(false)))))
+    }
 
   /** Row-level DELETE as a deletion-vector (merge-on-read) commit —
     * the Delta/Iceberg "deletion vectors" mode: instead of rewriting
@@ -1329,50 +1308,47 @@ object AtomicLake {
   def deleteWhereDV(spark: SparkSession, root: String,
       store: CommitStore = HardlinkCommitStore)(
       predicate: Column): Rewrite =
-    retryRewrite(() => deleteWhereDVOnce(spark, root, store)(predicate))
-
-  private def deleteWhereDVOnce(spark: SparkSession, root: String,
-      store: CommitStore)(predicate: Column): Rewrite = {
-    import org.apache.spark.sql.functions.{col, count, lit}
-    val snap = currentSnapshot(root, store).getOrElse(
-      throw new IllegalStateException(s"no commits at $root"))
-    val candidates = LakeStats.survivors(snap,
-      Seq(org.apache.spark.sql.classic.GraftExprBridge
-        .expression(predicate)))
-    if (candidates.isEmpty) return Rewrite(snap.version, 0L, 0)
-    // uri -> manifest path, so the sidecar stores the key every
-    // future reader translates back ([[dropDeleted]])
-    val uriToRel = candidates.map(f => metaUri(root, f) -> f).toMap
-    import spark.implicits._
-    val uriDf = uriToRel.toSeq.toDF("_uri", "file")
-    // ONE scan of the candidate files (pinned): matched positions are
-    // deleted-row-count-sized — the checkpoint feeds the tally and
-    // the sidecar write without re-scanning the data
-    val matched = readFileSubsetPos(spark, root, candidates, snap)
-      .filter(predicate)
-      .select(metaUriNorm(col("_graft_file")).as("_uri"),
-        col("_graft_pos").as("pos"))
-      .join(org.apache.spark.sql.functions.broadcast(uriDf), Seq("_uri"))
-      .select(col("file"), col("pos"))
-      .localCheckpoint()
-    val tally = matched.groupBy(col("file"))
-      .agg(count(lit(1)).as("n")).collect()
-    if (tally.isEmpty) return Rewrite(snap.version, 0L, 0)
-    val dvRel = s"dv/dv-${java.util.UUID.randomUUID().toString}"
-    matched.write.parquet(Paths.get(root).resolve(dvRel).toString)
-    val newDvs = tally.map { r =>
-      val f = r.getString(0)
-      val n = r.getLong(1)
-      f -> (snap.dvs.get(f) match {
-        case Some(old) => DvRef(old.paths :+ dvRel, old.n + n)
-        case None => DvRef(Seq(dvRel), n)
-      })
-    }.toMap
-    val v = commitReplacing(root, Set.empty, Map.empty,
-      snap.partitionCols, expectedBase = Some(snap), store = store,
-      kind = "dv", newDvs = newDvs)
-    Rewrite(v, tally.map(_.getLong(1)).sum, 0)
-  }
+    retryRewrite {
+      import org.apache.spark.sql.functions.{col, count, lit}
+      val snap = latest(root, store)
+      val candidates = planFiles(root, snap, Seq(predicate))
+      // uri -> manifest path, so the sidecar stores the key every
+      // future reader translates back ([[dropDeleted]])
+      import spark.implicits._
+      val uriDf = candidates.map(f => metaUri(root, f) -> f)
+        .toDF("_uri", "file")
+      // ONE scan of the candidate files (pinned): matched positions are
+      // deleted-row-count-sized — the checkpoint feeds the tally and
+      // the sidecar write without re-scanning the data
+      lazy val matched = readFileSubsetPos(spark, root, candidates, snap)
+        .filter(predicate)
+        .select(metaUriNorm(col("_graft_file")).as("_uri"),
+          col("_graft_pos").as("pos"))
+        .join(org.apache.spark.sql.functions.broadcast(uriDf), Seq("_uri"))
+        .select(col("file"), col("pos"))
+        .localCheckpoint()
+      val tally =
+        if (candidates.isEmpty) Array.empty[org.apache.spark.sql.Row]
+        else matched.groupBy(col("file")).agg(count(lit(1)).as("n"))
+          .collect()
+      if (tally.isEmpty) Rewrite(snap.version, 0L, 0)
+      else {
+        val dvRel = s"dv/dv-${java.util.UUID.randomUUID().toString}"
+        matched.write.parquet(Paths.get(root).resolve(dvRel).toString)
+        val newDvs = tally.map { r =>
+          val f = r.getString(0)
+          val n = r.getLong(1)
+          f -> (snap.dvs.get(f) match {
+            case Some(old) => DvRef(old.paths :+ dvRel, old.n + n)
+            case None => DvRef(Seq(dvRel), n)
+          })
+        }.toMap
+        val v = commit(root, snap.partitionCols, "dv", store,
+          expectedBase = Some(snap), dvFiles = newDvs.keySet)(s =>
+          s.copy(dvs = s.dvs ++ newDvs))
+        Rewrite(v, tally.map(_.getLong(1)).sum, 0)
+      }
+    }
 
   /** Materialize every deletion vector: files carrying a dv are
     * rewritten WITHOUT their deleted rows (one dv-aware read of
@@ -1387,32 +1363,11 @@ object AtomicLake {
   def purgeDeletes(spark: SparkSession, root: String,
       filesPerPartition: Int = 1,
       store: CommitStore = HardlinkCommitStore): Rewrite =
-    retryRewrite(() =>
-      purgeDeletesOnce(spark, root, filesPerPartition, store))
-
-  private def purgeDeletesOnce(spark: SparkSession, root: String,
-      filesPerPartition: Int, store: CommitStore): Rewrite = {
-      val snap = currentSnapshot(root, store).getOrElse(
-        throw new IllegalStateException(s"no commits at $root"))
+    rewrite(root, store, filesPerPartition, kind = "compact") { snap =>
       val dvd = snap.dvs.keys.toSeq.sorted
-      if (dvd.isEmpty) return Rewrite(snap.version, 0L, 0)
-      val survivors = readFileSubset(spark, root, dvd, snap)
-      val staged = stageFiles(survivors, root, snap.partitionCols,
-        filesPerPartition, colMap = snap.colMap)
-      // a fully-deleted rewrite leaves Spark's zero-row placeholder —
-      // drop it like deleteWhere does
-      val empties = staged.stats.collect {
-        case (f, st) if st.rows == 0L => f
-      }.toSet
-      val kept = staged.files.map { case (p, fs) =>
-        p -> fs.filterNot(empties)
-      }.filter(_._2.nonEmpty)
-      empties.foreach(f =>
-        Files.deleteIfExists(Paths.get(root).resolve(f)))
-      val v = commitReplacing(root, Set.empty, kept, snap.partitionCols,
-        expectedBase = Some(snap), store = store, kind = "compact",
-        newStats = staged.stats -- empties, removeFiles = dvd.toSet)
-      Rewrite(v, snap.dvs.values.map(_.n).sum, dvd.size)
+      if (dvd.isEmpty) None
+      else Some(Swap(dvd, snap.dvs.values.map(_.n).sum,
+        readFileSubset(spark, root, dvd, snap)))
     }
 
   /** Row-level UPDATE (Delta's `UPDATE … SET … WHERE`) as a
@@ -1431,96 +1386,33 @@ object AtomicLake {
   def updateWhere(spark: SparkSession, root: String,
       assignments: Seq[(String, Column)], filesPerPartition: Int = 1,
       store: CommitStore = HardlinkCommitStore)(
-      predicate: Column): Rewrite =
-    retryRewrite(() =>
-      updateWhereOnce(spark, root, assignments, filesPerPartition,
-        store)(predicate))
-
-  private def updateWhereOnce(spark: SparkSession, root: String,
-      assignments: Seq[(String, Column)], filesPerPartition: Int,
-      store: CommitStore)(predicate: Column): Rewrite = {
-    import org.apache.spark.sql.functions.{coalesce, col, count, lit, when}
+      predicate: Column): Rewrite = {
+    import org.apache.spark.sql.functions.{coalesce, col, lit, when}
     require(assignments.nonEmpty, "updateWhere: no SET assignments")
-    val snap = currentSnapshot(root, store).getOrElse(
-      throw new IllegalStateException(s"no commits at $root"))
     val byName = assignments.toMap
     require(byName.size == assignments.size,
       "updateWhere: duplicate SET column")
-    snap.schema.foreach { sch =>
-      val unknown = byName.keySet -- sch.fieldNames.toSet
-      require(unknown.isEmpty,
-        s"updateWhere: SET of unknown column(s) ${unknown.mkString(", ")}")
-    }
-    val candidates = LakeStats.survivors(snap,
-      Seq(org.apache.spark.sql.classic.GraftExprBridge
-        .expression(predicate)))
-    if (candidates.isEmpty) return Rewrite(snap.version, 0L, 0)
-    val perFile = readFileSubsetTagged(spark, root, candidates, snap)
-      .filter(predicate)
-      .groupBy(col("_graft_file"))
-      .agg(count(lit(1)).as("n"))
-      .collect()
-    if (perFile.isEmpty) return Rewrite(snap.version, 0L, 0)
-    val matched = perFile.map(_.getLong(1)).sum
-    val dirty = toRelative(perFile.map(_.getString(0)).toSeq,
-      candidates, root)
-    val base = readFileSubset(spark, root, dirty, snap)
-    val rewritten = base.select(base.schema.fields.map { f =>
-      byName.get(f.name) match {
-        case Some(e) =>
-          when(coalesce(predicate, lit(false)),
-            e.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
-        case None => col(f.name)
+    rewrite(root, store, filesPerPartition) { snap =>
+      snap.schema.foreach { sch =>
+        val unknown = byName.keySet -- sch.fieldNames.toSet
+        require(unknown.isEmpty,
+          s"updateWhere: SET of unknown column(s) ${unknown.mkString(", ")}")
       }
-    }.toSeq: _*)
-    val staged = stageFiles(rewritten, root, snap.partitionCols,
-      filesPerPartition, colMap = snap.colMap)
-    val v = commitReplacing(root, Set.empty, staged.files,
-      snap.partitionCols, expectedBase = Some(snap), store = store,
-      newStats = staged.stats, removeFiles = dirty.toSet)
-    Rewrite(v, matched, dirty.size)
-  }
-
-  private def deleteWhereOnce(spark: SparkSession, root: String,
-      filesPerPartition: Int,
-      store: CommitStore)(
-      predicate: Column): Rewrite = {
-    import org.apache.spark.sql.functions.{coalesce, col, count, lit}
-    val snap = currentSnapshot(root, store).getOrElse(
-      throw new IllegalStateException(s"no commits at $root"))
-    val candidates = LakeStats.survivors(snap,
-      Seq(org.apache.spark.sql.classic.GraftExprBridge
-        .expression(predicate)))
-    if (candidates.isEmpty) return Rewrite(snap.version, 0L, 0)
-    val perFile = readFileSubsetTagged(spark, root, candidates, snap)
-      .filter(predicate)
-      .groupBy(col("_graft_file"))
-      .agg(count(lit(1)).as("n"))
-      .collect()
-    if (perFile.isEmpty) return Rewrite(snap.version, 0L, 0)
-    val matched = perFile.map(_.getLong(1)).sum
-    val dirty = toRelative(perFile.map(_.getString(0)).toSeq,
-      candidates, root)
-    val survivors = readFileSubset(spark, root, dirty, snap)
-      .filter(!coalesce(predicate, lit(false)))
-    val staged = stageFiles(survivors, root, snap.partitionCols,
-      filesPerPartition, colMap = snap.colMap)
-    // a delete that empties every row of the rewrite leaves Spark's
-    // single zero-row placeholder file: committing it would keep a
-    // dead manifest line (and a dead footer read) per such delete —
-    // drop it before the commit and reclaim the bytes now
-    val empties = staged.stats.collect {
-      case (f, st) if st.rows == 0L => f
-    }.toSet
-    val kept = staged.files.map { case (p, fs) =>
-      p -> fs.filterNot(empties)
-    }.filter(_._2.nonEmpty)
-    empties.foreach(f =>
-      Files.deleteIfExists(Paths.get(root).resolve(f)))
-    val v = commitReplacing(root, Set.empty, kept,
-      snap.partitionCols, expectedBase = Some(snap), store = store,
-      newStats = staged.stats -- empties, removeFiles = dirty.toSet)
-    Rewrite(v, matched, dirty.size)
+      val (dirty, matched) = dirtyFiles(spark, root, snap,
+        planFiles(root, snap, Seq(predicate)))(_.filter(predicate))
+      if (dirty.isEmpty) None
+      else {
+        val base = readFileSubset(spark, root, dirty, snap)
+        Some(Swap(dirty, matched, base.select(base.schema.fields.map { f =>
+          byName.get(f.name) match {
+            case Some(e) =>
+              when(coalesce(predicate, lit(false)),
+                e.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
+            case None => col(f.name)
+          }
+        }.toSeq: _*)))
+      }
+    }
   }
 
   /** Keyed MERGE (upsert): WHEN MATCHED UPDATE SET * / WHEN NOT
@@ -1551,117 +1443,72 @@ object AtomicLake {
     */
   def merge(spark: SparkSession, root: String, source: DataFrame,
       keyCols: Seq[String], filesPerPartition: Int = 1,
-      store: CommitStore = HardlinkCommitStore): Rewrite =
-    retryRewrite(() =>
-      mergeOnce(spark, root, source, keyCols, filesPerPartition, store))
-
-  private def mergeOnce(spark: SparkSession, root: String,
-      source: DataFrame, keyCols: Seq[String], filesPerPartition: Int,
-      store: CommitStore): Rewrite = {
+      store: CommitStore = HardlinkCommitStore): Rewrite = {
     import org.apache.spark.sql.functions._
     require(keyCols.nonEmpty, "merge needs at least one key column")
-    val snap = currentSnapshot(root, store).getOrElse(
-      throw new IllegalStateException(s"no commits at $root"))
-    val missing = snap.partitionCols.filterNot(p =>
-      source.columns.exists(_.equalsIgnoreCase(p)))
-    require(missing.isEmpty,
-      s"merge source must carry the partition columns; missing: $missing")
-    // LAZY checkpoint: the bounds job below is the first action, so
-    // ONE job materializes the pinned source AND computes the
-    // bounds/dup/constraint aggregates (an eager checkpoint paid a
-    // separate materialization job first — pure scheduling floor).
-    // Generated columns materialize first (the source is the only NEW
-    // rows a merge introduces); provided ones validate in the same
-    // bounds aggregation below.
-    val genViol = generatedViolations(source, snap.generated)
-    val src = applyGenerated(source, snap.generated)
-      .localCheckpoint(eager = false)
-    // one job: row count, duplicate-key check, per-key bounds, AND
-    // the CHECK-constraint validation (the source rows are the only
-    // NEW rows a merge introduces; dirty-file survivors were already
-    // in the table). The dup check covers only fully-keyed rows: a
-    // row with ANY null key field can never match a target row (SQL
-    // join semantics), so two of them are two legitimate inserts,
-    // not a duplicate key.
-    val fullyKeyed = keyCols.map(col(_).isNotNull).reduce(_ && _)
-    val cons = snap.constraints.toSeq.sortBy(_._1)
-    val boundsAggs = count(lit(1)).as("n") +:
-      count(when(fullyKeyed, lit(1))).as("n_keyed") +:
-      count_distinct(when(fullyKeyed, struct(keyCols.map(col): _*)))
-        .as("nk") +:
-      (keyCols.flatMap(k =>
-        Seq(min(col(k)).as(s"min_$k"), max(col(k)).as(s"max_$k"))) ++
-        cons.map { case (n, e) =>
-          sum(when(coalesce(expr(e), lit(true)) === lit(false), 1L)
-            .otherwise(0L)).as(s"__viol_$n")
-        } ++
-        genViol.zipWithIndex.map { case ((_, cond), i) =>
-          sum(when(cond, 1L).otherwise(0L)).as(s"__genviol_$i")
-        })
-    val b = src.agg(boundsAggs.head, boundsAggs.tail: _*).head()
-    val srcRows = b.getLong(0)
-    if (srcRows == 0L) return Rewrite(snap.version, 0L, 0)
-    cons.foreach { case (n, e) =>
-      val i = b.fieldIndex(s"__viol_$n")
-      val bad = if (b.isNullAt(i)) 0L else b.getLong(i)
-      if (bad > 0)
-        throw new IllegalStateException(
-          s"CHECK constraint '$n' ($e) violated by $bad row(s) of " +
-            "this batch; nothing was committed")
+    rewrite(root, store, filesPerPartition) { snap =>
+      val missing = snap.partitionCols.filterNot(p =>
+        source.columns.exists(_.equalsIgnoreCase(p)))
+      require(missing.isEmpty,
+        s"merge source must carry the partition columns; missing: $missing")
+      // LAZY checkpoint: the bounds job below is the first action, so
+      // ONE job materializes the pinned source AND computes the
+      // bounds/dup/constraint aggregates (an eager checkpoint paid a
+      // separate materialization job first — pure scheduling floor).
+      // Generated columns materialize first (the source is the only NEW
+      // rows a merge introduces); provided ones validate in the same
+      // bounds aggregation below.
+      val checks = violations(source, snap)
+      val src = applyGenerated(source, snap.generated)
+        .localCheckpoint(eager = false)
+      // one job: row count, duplicate-key check, per-key bounds, AND
+      // the CHECK-constraint validation (the source rows are the only
+      // NEW rows a merge introduces; dirty-file survivors were already
+      // in the table). The dup check covers only fully-keyed rows: a
+      // row with ANY null key field can never match a target row (SQL
+      // join semantics), so two of them are two legitimate inserts,
+      // not a duplicate key.
+      val fullyKeyed = keyCols.map(col(_).isNotNull).reduce(_ && _)
+      val boundsAggs = count(lit(1)).as("n") +:
+        count(when(fullyKeyed, lit(1))).as("n_keyed") +:
+        count_distinct(when(fullyKeyed, struct(keyCols.map(col): _*)))
+          .as("nk") +:
+        (keyCols.flatMap(k =>
+          Seq(min(col(k)).as(s"min_$k"), max(col(k)).as(s"max_$k"))) ++
+          violationCounts(checks))
+      val b = src.agg(boundsAggs.head, boundsAggs.tail: _*).head()
+      if (b.getLong(0) == 0L) None
+      else {
+        refuseViolations(checks, b)
+        require(b.getLong(2) == b.getLong(1),
+          s"merge source has duplicate keys (${b.getLong(1) - b.getLong(2)} " +
+            "extra rows): delete-then-insert would insert both copies — " +
+            "dedup the source first")
+        // zone-map candidate cut: key ∈ [source min, source max] per key
+        // column; a bound Spark can't express as a literal (null — an
+        // all-null key column — or an exotic type) contributes no
+        // filter, which is merely conservative
+        val bounds = keyCols.flatMap { k =>
+          val (lo, hi) = (b.getAs[Any](s"min_$k"), b.getAs[Any](s"max_$k"))
+          if (lo == null || hi == null) None
+          else scala.util.Try(
+            col(k) >= lit(lo) && col(k) <= lit(hi)).toOption
+        }
+        // no distinct: the dup check above PROVED fully-keyed source
+        // keys unique, and null-keyed rows match nothing in either join
+        val srcKeys = src.select(keyCols.map(col): _*)
+        val (dirty, matched) = dirtyFiles(spark, root, snap,
+          planFiles(root, snap, bounds))(_.join(srcKeys, keyCols, "left_semi"))
+        // survivors of dirty files (unmatched keys) + every source row,
+        // staged together so the swap is ONE atomic commit
+        val survivors =
+          if (dirty.isEmpty) src
+          else readFileSubset(spark, root, dirty, snap)
+            .join(srcKeys, keyCols, "left_anti")
+            .unionByName(src, allowMissingColumns = true)
+        Some(Swap(dirty, matched, survivors, Some(src.schema)))
+      }
     }
-    genViol.zipWithIndex.foreach { case ((msg, _), gi) =>
-      val i = b.fieldIndex(s"__genviol_$gi")
-      val bad = if (b.isNullAt(i)) 0L else b.getLong(i)
-      if (bad > 0)
-        throw new IllegalStateException(
-          s"$msg violated by $bad row(s) of this batch; " +
-            "nothing was committed")
-    }
-    require(b.getLong(2) == b.getLong(1),
-      s"merge source has duplicate keys (${b.getLong(1) - b.getLong(2)} " +
-        "extra rows): delete-then-insert would insert both copies — " +
-        "dedup the source first")
-    // zone-map candidate cut: key ∈ [source min, source max] per key
-    // column; a bound Spark can't express as a literal (null — an
-    // all-null key column — or an exotic type) contributes no filter,
-    // which is merely conservative
-    val bounds = keyCols.flatMap { k =>
-      val (lo, hi) = (b.getAs[Any](s"min_$k"), b.getAs[Any](s"max_$k"))
-      if (lo == null || hi == null) None
-      else scala.util.Try(
-        col(k) >= lit(lo) && col(k) <= lit(hi)).toOption
-    }
-    val candidates = LakeStats.survivors(snap, bounds.map(
-      org.apache.spark.sql.classic.GraftExprBridge.expression))
-    // no distinct: the dup check above PROVED fully-keyed source keys
-    // unique, and null-keyed rows match nothing in either join — the
-    // distinct was a pure extra aggregation in both the tally semi
-    // join and the survivor anti join
-    val srcKeys = src.select(keyCols.map(col): _*)
-    val perFile =
-      if (candidates.isEmpty) Array.empty[org.apache.spark.sql.Row]
-      else readFileSubsetTagged(spark, root, candidates, snap)
-        .join(srcKeys, keyCols, "left_semi")
-        .groupBy(col("_graft_file"))
-        .agg(count(lit(1)).as("n"))
-        .collect()
-    val matched = perFile.map(_.getLong(1)).sum
-    val dirty = toRelative(perFile.map(_.getString(0)).toSeq,
-      candidates, root)
-    // survivors of dirty files (unmatched keys) + every source row,
-    // staged together so the swap is ONE atomic commit
-    val survivors =
-      if (dirty.isEmpty) src
-      else readFileSubset(spark, root, dirty, snap)
-        .join(srcKeys, keyCols, "left_anti")
-        .unionByName(src, allowMissingColumns = true)
-    val staged = stageFiles(survivors, root, snap.partitionCols,
-      filesPerPartition, colMap = snap.colMap)
-    val v = commitReplacing(root, Set.empty, staged.files,
-      snap.partitionCols, expectedBase = Some(snap),
-      batchSchema = Some(src.schema), store = store,
-      newStats = staged.stats, removeFiles = dirty.toSet)
-    Rewrite(v, matched, dirty.size)
   }
 
   /** Time travel: read the table exactly as of `version` — including
@@ -1697,23 +1544,29 @@ object AtomicLake {
     qualifying.max
   }
 
+  /** Rows `s` holds, from the manifest alone: zone-map rows minus
+    * deletion-vector counts (DvRef.n counts distinct positions — the
+    * dv-aware match can never double-delete). None when any file
+    * predates zone-map harvesting.
+    */
+  private def liveRows(s: Snapshot): Option[Long] = {
+    val files = s.allFiles
+    if (files.forall(s.stats.contains))
+      Some(files.map(s.stats(_).rows).sum - s.dvs.values.map(_.n).sum)
+    else None
+  }
+
   /** DESCRIBE HISTORY: every committed version with its kind, file
-    * count, and total rows-from-stats (None when any file predates
-    * zone-map harvesting) — manifest-only, newest first, no Spark
-    * job. The audit surface time travel, restore, and vacuum
-    * retention decisions read.
+    * count, and live rows ([[liveRows]]) — manifest-only, newest
+    * first, no Spark job. The audit surface time travel, restore, and
+    * vacuum retention decisions read.
     */
   def history(root: String,
       store: CommitStore = HardlinkCommitStore)
       : Seq[(Long, String, Int, Option[Long])] =
     store.listVersions(root).sorted.reverse.map { v =>
       val s = readManifest(root, v, store)
-      val files = s.files.values.flatten.toSeq
-      val rows =
-        if (files.forall(s.stats.contains))
-          Some(files.map(s.stats(_).rows).sum)
-        else None
-      (v, s.kind, files.size, rows)
+      (v, s.kind, s.allFiles.size, liveRows(s))
     }
 
   /** SHOW PARTITIONS, manifest-only: per-partition file count, rows
@@ -1723,8 +1576,7 @@ object AtomicLake {
   def partitions(root: String,
       store: CommitStore = HardlinkCommitStore)
       : Seq[(String, Int, Long, Long)] = {
-    val snap = currentSnapshot(root, store).getOrElse(
-      throw new IllegalStateException(s"no commits at $root"))
+    val snap = latest(root, store)
     snap.files.toSeq.sortBy(_._1).map { case (part, fs) =>
       val sts = fs.flatMap(snap.stats.get)
       (part, fs.size,
@@ -1739,9 +1591,8 @@ object AtomicLake {
   def detail(root: String,
       store: CommitStore = HardlinkCommitStore)
       : (Long, Int, Long, Seq[String], Seq[String]) = {
-    val snap = currentSnapshot(root, store).getOrElse(
-      throw new IllegalStateException(s"no commits at $root"))
-    val files = snap.files.values.flatten.toSeq
+    val snap = latest(root, store)
+    val files = snap.allFiles
     (snap.version, files.size,
       files.flatMap(snap.stats.get).map(_.bytes).sum,
       snap.partitionCols, snap.constraints.keys.toSeq.sorted)
@@ -1755,12 +1606,8 @@ object AtomicLake {
   def scanInfo(root: String,
       store: CommitStore = HardlinkCommitStore)(
       filters: Column*): (Int, Int) = {
-    val snap = currentSnapshot(root, store).getOrElse(
-      throw new IllegalStateException(s"no commits at $root"))
-    val total = snap.files.values.flatten.size
-    val planned = LakeStats.survivors(snap, filters.map(
-      org.apache.spark.sql.classic.GraftExprBridge.expression)).size
-    (planned, total)
+    val snap = latest(root, store)
+    (planFiles(root, snap, filters).size, snap.allFiles.size)
   }
 
   /** [[scanInfo]] including bloom-index pruning — needs a session for
@@ -1769,36 +1616,18 @@ object AtomicLake {
     */
   def scanInfo(spark: SparkSession, root: String,
       store: CommitStore)(filters: Column*): (Int, Int) = {
-    val snap = currentSnapshot(root, store).getOrElse(
-      throw new IllegalStateException(s"no commits at $root"))
-    val total = snap.files.values.flatten.size
-    val exprs = filters.map(
-      org.apache.spark.sql.classic.GraftExprBridge.expression)
-    val zone = LakeStats.survivors(snap, exprs)
-    val planned =
-      if (snap.blooms.isEmpty || zone.isEmpty) zone.size
-      else zone.size -
-        BloomIndex.prunable(spark, root, snap, exprs, zone).size
-    (planned, total)
+    val snap = latest(root, store)
+    (planFiles(root, snap, filters, Some(spark)).size, snap.allFiles.size)
   }
 
-  /** O(manifest) row count from the zone-map stats — the instant
-    * `SELECT count(*)` a 100-TB table answers without a single task,
-    * when every current file carries stats (None otherwise: the
-    * caller falls back to a real count).
+  /** O(manifest) row count ([[liveRows]]) — the instant `SELECT
+    * count(*)` a 100-TB table answers without a single task, when
+    * every current file carries stats (None otherwise: the caller
+    * falls back to a real count).
     */
   def rowCount(root: String,
-      store: CommitStore = HardlinkCommitStore): Option[Long] = {
-    val snap = currentSnapshot(root, store).getOrElse(
-      throw new IllegalStateException(s"no commits at $root"))
-    val files = snap.files.values.flatten.toSeq
-    if (files.forall(snap.stats.contains))
-      // deletion vectors subtract exactly (DvRef.n counts distinct
-      // positions — the dv-aware match can never double-delete)
-      Some(files.map(snap.stats(_).rows).sum -
-        snap.dvs.values.map(_.n).sum)
-    else None
-  }
+      store: CommitStore = HardlinkCommitStore): Option[Long] =
+    liveRows(latest(root, store))
 
   /** RESTORE: roll the table back to exactly `toVersion`'s state as a
     * NEW commit (Delta's RESTORE TABLE ... VERSION AS OF) — metadata
@@ -1817,24 +1646,13 @@ object AtomicLake {
   def restore(root: String, toVersion: Long,
       store: CommitStore = HardlinkCommitStore): Long = {
     val target = readManifest(root, toVersion, store)
-    commitReplacing(root, Set.empty, target.files, target.partitionCols,
-      batchSchema = target.schema, store = store, kind = "restore",
-      newStats = target.stats, replaceAll = true,
-      schemaOverride = true,
-      // deletion-vector state rolls back WITH the file list: a file
-      // dv'd after toVersion reads whole again (CDC reports the
-      // resurrected rows), one purged after it gets its vector back
-      dvOverride = Some(target.dvs),
-      // bloom-index state likewise: an index built AFTER toVersion
-      // must not claim to bound rows a rollback resurrects (a dv the
-      // build excluded may return) — the target version's refs are
-      // exactly the ones whose superset contract still holds
-      bloomOverride = Some(target.blooms),
-      // column mapping + tombstones roll back with the schema: a
-      // restore past a rename reads the old logical names again
-      newColMap = Some(target.colMap),
-      newDropped = Some(target.dropped),
-      newGenerated = Some(target.generated))
+    // files, schema, deletion vectors, bloom refs (an index built after
+    // toVersion must not claim to bound rows a rollback resurrects),
+    // column mapping, tombstones and generated columns all roll back;
+    // constraints and txn watermarks stay current
+    commit(root, target.partitionCols, "restore", store)(s =>
+      target.copy(stats = s.stats ++ target.stats,
+        constraints = s.constraints, txns = s.txns))
   }
 
   /** SHALLOW CLONE (Delta's CLONE ... SHALLOW): commit a manifest at
@@ -1858,48 +1676,29 @@ object AtomicLake {
     */
   def clone(srcRoot: String, dstRoot: String,
       store: CommitStore = HardlinkCommitStore): Long = {
-    val snap = currentSnapshot(srcRoot, store).getOrElse(
-      throw new IllegalStateException(s"no commits at $srcRoot"))
-    require(currentVersion(dstRoot, store).isEmpty,
-      s"clone destination $dstRoot already has commits")
-    val absFiles = snap.files.map { case (part, fs) =>
-      part -> fs.map(f =>
-        Paths.get(srcRoot).resolve(f).normalize().toString)
+    val snap = latest(srcRoot, store)
+    def abs(p: String) = Paths.get(srcRoot).resolve(p).normalize().toString
+    commit(dstRoot, snap.partitionCols, "clone", store) { s =>
+      require(s.version == 0L,
+        s"clone destination $dstRoot already has commits")
+      // the clone IS the table, contract included: schema, CHECK
+      // constraints (Delta CLONE copies table properties the same way),
+      // column mapping (name-to-name: carried verbatim), tombstones and
+      // generated columns. Files, zone maps, deletion vectors and bloom
+      // refs key by ABSOLUTE path; dv and bloom sidecars resolve into
+      // the source lake (zero-copy, like the data files). dropDeleted's
+      // and the bloom probe's translations still match source-written
+      // sidecar content (stored source-relative) via the derived-
+      // relative form.
+      snap.copy(
+        files = snap.files.map { case (part, fs) => part -> fs.map(abs) },
+        stats = snap.stats.map { case (f, st) => abs(f) -> st },
+        dvs = snap.dvs.map { case (f, dv) =>
+          abs(f) -> DvRef(dv.paths.map(abs), dv.n) },
+        blooms = snap.blooms.map { case (f, cs) =>
+          abs(f) -> cs.map { case (c, r) => c -> BloomIndex.Ref(abs(r.path)) } },
+        txns = Map.empty)
     }
-    val absStats = snap.stats.map { case (f, st) =>
-      Paths.get(srcRoot).resolve(f).normalize().toString -> st
-    }
-    // deletion vectors carry over with both sides absolutized: the
-    // file KEY matches the clone's manifest line; the sidecar PATHS
-    // resolve into the source lake (zero-copy, like the data files).
-    // dropDeleted's translation still matches source-written sidecar
-    // content (stored source-relative) via the derived-relative form.
-    val absDvs = snap.dvs.map { case (f, dv) =>
-      Paths.get(srcRoot).resolve(f).normalize().toString ->
-        DvRef(dv.paths.map(pp =>
-          Paths.get(srcRoot).resolve(pp).normalize().toString), dv.n)
-    }
-    // bloom refs carry over like dvs: file keys absolutize to match
-    // the clone's manifest lines; sidecar paths absolutize into the
-    // source lake (zero-copy). The pruning job re-derives the
-    // sidecar-relative file keys from the sidecar's own location.
-    val absBlooms = snap.blooms.map { case (f, cs) =>
-      Paths.get(srcRoot).resolve(f).normalize().toString ->
-        cs.map { case (c, r) => c -> BloomIndex.Ref(
-          Paths.get(srcRoot).resolve(r.path).normalize().toString) }
-    }
-    commitReplacing(dstRoot, Set.empty, absFiles, snap.partitionCols,
-      batchSchema = snap.schema, store = store, kind = "clone",
-      newStats = absStats, dvOverride = Some(absDvs),
-      bloomOverride = Some(absBlooms),
-      // column mapping is name-to-name (no paths): carried verbatim
-      newColMap = Some(snap.colMap),
-      newDropped = Some(snap.dropped),
-      newGenerated = Some(snap.generated),
-      // the clone IS the table, contract included: writes against it
-      // must satisfy the same CHECK constraints (Delta CLONE copies
-      // table properties the same way)
-      newConstraints = Some(snap.constraints))
   }
 
   /** File-level diff between two committed versions: (added files,
@@ -1915,17 +1714,11 @@ object AtomicLake {
       s"fileDiff: fromVersion $fromVersion > toVersion $toVersion")
     val from = readManifest(root, fromVersion, store)
     val to = readManifest(root, toVersion, store)
-    val ff = from.files.values.flatten.toSet
-    val tf = to.files.values.flatten.toSet
+    val ff = from.allFiles.toSet
+    val tf = to.allFiles.toSet
     ((tf -- ff).toSeq.sorted, (ff -- tf).toSeq.sorted, from, to)
   }
 
-  /** The data-plane base a manifest file entry reads under: local
-    * (relative) entries live under THIS root's `data/`; absolute
-    * entries — shallow-clone references into another lake — under
-    * THAT lake's `data/`. Spark's partition-dir column recovery needs
-    * the matching basePath per group.
-    */
   /** The canonical single-slash URI form for joining against
     * `_metadata.file_path` (which Hadoop reports as "file:/x/y" where
     * `Path.toUri` says "file:///x/y"). Data-side values normalize to
@@ -1941,6 +1734,12 @@ object AtomicLake {
     org.apache.spark.sql.functions.regexp_replace(c,
       "^file:///", "file:/")
 
+  /** The data-plane base a manifest file entry reads under: local
+    * (relative) entries live under THIS root's `data/`; absolute
+    * entries — shallow-clone references into another lake — under
+    * THAT lake's `data/`. Spark's partition-dir column recovery needs
+    * the matching basePath per group.
+    */
   private def baseOf(root: String, f: String): String =
     if (!Paths.get(f).isAbsolute) dataDir(root).toString
     else {
@@ -2168,7 +1967,7 @@ object AtomicLake {
 
   private def readSnapshot(spark: SparkSession, root: String,
       snap: Snapshot): DataFrame = {
-    val files = snap.files.values.flatten.toSeq
+    val files = snap.allFiles
     if (files.isEmpty)
       // a legitimate state since row-level deletes: a deleteWhere
       // that removed every row commits a zero-file manifest — read
@@ -2203,8 +2002,7 @@ object AtomicLake {
   def compact(spark: SparkSession, root: String,
       filesPerPartition: Int = 1, minFiles: Int = 2,
       store: CommitStore = HardlinkCommitStore): Long = {
-    val snap = currentSnapshot(root, store).getOrElse(
-      throw new IllegalStateException(s"no commits at $root"))
+    val snap = latest(root, store)
     val targets = snap.files.filter(_._2.size >= minFiles).keys.toSet
     if (targets.isEmpty) return snap.version
     val files = snap.files.view.filterKeys(targets).values.flatten
@@ -2215,10 +2013,9 @@ object AtomicLake {
     val batch = readFileSubset(spark, root, files, snap)
     val staged = stageFiles(batch, root, snap.partitionCols,
       filesPerPartition, colMap = snap.colMap)
-    commitReplacing(root, targets ++ staged.keySet, staged.files,
-      snap.partitionCols, expectedBase = Some(snap),
-      batchSchema = Some(batch.schema), store = store, kind = "compact",
-      newStats = staged.stats)
+    val touched = targets ++ staged.keySet
+    commit(root, snap.partitionCols, "compact", store, Some(snap),
+      touched = touched)(_.swap(staged, touched).evolve(batch.schema))
   }
 
   /** Size-targeted compaction (Delta's OPTIMIZE bin-packing): rewrite
@@ -2254,8 +2051,7 @@ object AtomicLake {
       where: Option[Column] = None): Long = {
     require(smallBytes > 0 && targetBytes >= smallBytes,
       s"need 0 < smallBytes <= targetBytes, got $smallBytes/$targetBytes")
-    val snap = currentSnapshot(root, store).getOrElse(
-      throw new IllegalStateException(s"no commits at $root"))
+    val snap = latest(root, store)
     val scoped = where match {
       case None => snap.files
       case Some(pred) =>
@@ -2291,10 +2087,9 @@ object AtomicLake {
     }.reduce(_.unionByName(_))
     val staged = stageFiles(rewritten, root, snap.partitionCols,
       filesPerPartition = 1, distribute = false, colMap = snap.colMap)
-    commitReplacing(root, Set.empty, staged.files, snap.partitionCols,
-      expectedBase = Some(snap), store = store, kind = "compact",
-      newStats = staged.stats,
-      removeFiles = perPart.flatMap(_._2).toSet)
+    val removed = perPart.flatMap(_._2).toSet
+    commit(root, snap.partitionCols, "compact", store, Some(snap),
+      removeFiles = removed)(_.swap(staged, removed = removed))
   }
 
   /** Clustered compaction — `OPTIMIZE ... ZORDER BY` for this lake:
@@ -2335,8 +2130,7 @@ object AtomicLake {
     require(!(zorder && hilbert), "pick ONE curve: zorder or hilbert")
     require(!(zorder || hilbert) || clusterCols.size == 2,
       s"curve layouts interleave exactly 2 columns, got ${clusterCols.size}")
-    val snap = currentSnapshot(root, store).getOrElse(
-      throw new IllegalStateException(s"no commits at $root"))
+    val snap = latest(root, store)
     val batch = readSnapshot(spark, root, snap)
     val nParts = math.max(snap.files.size, 1) * filesPerPartition
     val sortCols = snap.partitionCols.map(col) ++ (
@@ -2357,23 +2151,11 @@ object AtomicLake {
       .sortWithinPartitions(sortCols: _*)
     val staged = stageFiles(laid, root, snap.partitionCols,
       filesPerPartition, distribute = false, colMap = snap.colMap)
-    commitReplacing(root,
-      snap.files.keySet ++ staged.keySet, staged.files,
-      snap.partitionCols, expectedBase = Some(snap),
-      batchSchema = Some(batch.schema), store = store, kind = "compact",
-      newStats = staged.stats)
+    val touched = snap.files.keySet ++ staged.keySet
+    commit(root, snap.partitionCols, "compact", store, Some(snap),
+      touched = touched)(_.swap(staged, touched).evolve(batch.schema))
   }
 
-  /** Garbage-collect the data plane: delete files referenced by NO
-    * retained manifest, and manifests older than the newest
-    * `keepVersions`. Orphans from killed writers and files only
-    * reachable through expired snapshots are reclaimed; every
-    * retained version stays fully readable (time travel unaffected
-    * within the retention window). Safe against in-flight writers:
-    * only files older than `minAgeMs` are touched, so a staged-but-
-    * not-yet-committed upsert younger than the grace window is never
-    * swept. Returns the number of files deleted.
-    */
   /** Build per-file bloom indexes over `cols` (Delta's
     * BLOOMFILTER INDEX role — see [[BloomIndex]] for the full scale
     * contract): ONE dv-aware pass over the files that lack an entry
@@ -2391,10 +2173,8 @@ object AtomicLake {
       store: CommitStore = HardlinkCommitStore): Long = {
     require(cols.nonEmpty, "indexBloom: no columns given")
     require(fpp > 0 && fpp < 0.5, s"indexBloom: fpp out of range: $fpp")
-    val snap = currentSnapshot(root, store).getOrElse(
-      throw new IllegalStateException(s"no commits at $root"))
-    val schema = snap.schema.getOrElse(throw new IllegalStateException(
-      s"indexBloom: $root has no committed schema"))
+    val snap = latest(root, store)
+    val schema = schemaOf(snap, "indexBloom", root)
     val byName = schema.fields.map(f => f.name -> f.dataType).toMap
     val typed = cols.map { c =>
       val dt = byName.getOrElse(c, throw new IllegalArgumentException(
@@ -2405,7 +2185,7 @@ object AtomicLake {
           "(integral or string)")
       (c, dt)
     }
-    val all = snap.files.values.flatten.toSeq
+    val all = snap.allFiles
     val targets = all.filter(f => snap.stats.contains(f) &&
       cols.exists(c => !snap.blooms.getOrElse(f, Map.empty).contains(c)))
     if (targets.isEmpty) return snap.version
@@ -2423,10 +2203,22 @@ object AtomicLake {
       val have = snap.blooms.getOrElse(f, Map.empty)
       f -> (have ++ cols.filterNot(have.contains).map(_ -> ref))
     }.toMap
-    commitReplacing(root, Set.empty, Map.empty, snap.partitionCols,
-      store = store, kind = "index", newBlooms = newBlooms)
+    commit(root, snap.partitionCols, "index", store)(s =>
+      s.copy(blooms = s.blooms ++ newBlooms))
   }
 
+  /** Garbage-collect the data plane: delete files referenced by NO
+    * retained manifest, and manifests older than the newest
+    * `keepVersions`. Orphans from killed writers and files only
+    * reachable through expired snapshots are reclaimed; every
+    * retained version stays fully readable (time travel unaffected
+    * within the retention window). Safe against in-flight writers:
+    * only files older than `minAgeMs` are touched, so a staged-but-
+    * not-yet-committed upsert younger than the grace window is never
+    * swept. Returns the number of data files and sidecar dirs
+    * deleted (a dry run also counts the expired manifests; leftover
+    * staging dirs are reclaimed but never counted).
+    */
   def vacuum(root: String, keepVersions: Int = 10,
       minAgeMs: Long = 3600000L,
       store: CommitStore = HardlinkCommitStore,
@@ -2437,90 +2229,45 @@ object AtomicLake {
     val versions = store.listVersions(root).sorted
     if (versions.isEmpty) return 0
     val keep = versions.takeRight(math.max(keepVersions, 1))
-    val referenced: Set[Path] = keep.flatMap { v =>
-      readManifest(root, v, store).files.values.flatten
-        .map(f => Paths.get(root).resolve(f).normalize())
-    }.toSet
+    // one manifest read per retained version
+    val retained = keep.map(readManifest(root, _, store))
+    def resolved(ps: Iterable[String]): Set[Path] =
+      ps.map(p => Paths.get(root).resolve(p).normalize()).toSet
+    val referenced = resolved(retained.flatMap(_.allFiles))
+    // dv and bloom-index sidecars a retained manifest references —
+    // relative refs only: absolute refs point into a SOURCE lake this
+    // clone must never touch
+    val sidecars = resolved(retained.flatMap(s =>
+      s.dvs.values.flatMap(_.paths) ++
+        s.blooms.values.flatMap(_.values.map(_.path)))
+      .filterNot(p => Paths.get(p).isAbsolute))
     val cutoff = System.currentTimeMillis() - minAgeMs
-    var deleted = 0
     // expired manifests first, so a concurrent reader can no longer
     // resolve a snapshot whose files are about to disappear
-    var wouldDelete = 0
-    for (v <- versions if !keep.contains(v)) {
-      if (dryRun) wouldDelete += 1
-      else store.delete(root, v)
-    }
-    val dd = dataDir(root)
-    if (Files.isDirectory(dd)) {
-      val candidates = {
-        val w = Files.walk(dd)
-        try w.iterator().asScala.filter(Files.isRegularFile(_)).toSeq
-        finally w.close()
+    val expired = versions.filterNot(keep.contains)
+    if (!dryRun) expired.foreach(store.delete(root, _))
+    // entries of `dir` (data: every file below it; sidecar and staging
+    // dirs: its children) that `live` does not claim and that are past
+    // the grace window; returns how many were (or would be) deleted
+    def sweep(dir: Path, deep: Boolean)(live: Path => Boolean): Int =
+      if (!Files.isDirectory(dir)) 0
+      else {
+        val s = if (deep) Files.walk(dir) else Files.list(dir)
+        val entries = try s.iterator().asScala
+          .filter(p => !deep || Files.isRegularFile(p)).toSeq
+        finally s.close()
+        val dead = entries.filter(p => !live(p.normalize()) &&
+          Files.getLastModifiedTime(p).toMillis < cutoff)
+        if (!dryRun) dead.foreach(deleteRecursively)
+        dead.size
       }
-      for (f <- candidates
-           if !referenced.contains(f.normalize())
-           if Files.getLastModifiedTime(f).toMillis < cutoff) {
-        if (!dryRun) Files.deleteIfExists(f)
-        deleted += 1
-      }
-    }
-    // deletion-vector sidecars: keep every dv dir a retained manifest
-    // references (relative refs only — absolute refs point into a
-    // SOURCE lake this clone must never touch); the rest are orphans
-    // of purged/rewritten files and expired versions
-    val referencedDvs: Set[Path] = keep.flatMap { v =>
-      readManifest(root, v, store).dvs.values.flatMap(_.paths)
-        .filterNot(p => Paths.get(p).isAbsolute)
-        .map(p => Paths.get(root).resolve(p).normalize())
-    }.toSet
-    val dvDir = Paths.get(root, "dv")
-    if (Files.isDirectory(dvDir)) {
-      val dirs = {
-        val l = Files.list(dvDir)
-        try l.iterator().asScala.toSeq finally l.close()
-      }
-      for (d <- dirs
-           if !referencedDvs.contains(d.normalize())
-           if Files.getLastModifiedTime(d).toMillis < cutoff) {
-        if (!dryRun) deleteRecursively(d)
-        deleted += 1
-      }
-    }
-    // bloom-index sidecars: same retention rule as dv sidecars —
-    // keep every index dir a retained manifest references (relative
-    // refs only; absolute refs point into a source lake)
-    val referencedBlooms: Set[Path] = keep.flatMap { v =>
-      readManifest(root, v, store).blooms.values
-        .flatMap(_.values.map(_.path))
-        .filterNot(p => Paths.get(p).isAbsolute)
-        .map(p => Paths.get(root).resolve(p).normalize())
-    }.toSet
-    val bloomDir = Paths.get(root, "index")
-    if (Files.isDirectory(bloomDir)) {
-      val dirs = {
-        val l = Files.list(bloomDir)
-        try l.iterator().asScala.toSeq finally l.close()
-      }
-      for (d <- dirs
-           if !referencedBlooms.contains(d.normalize())
-           if Files.getLastModifiedTime(d).toMillis < cutoff) {
-        if (!dryRun) deleteRecursively(d)
-        deleted += 1
-      }
-    }
+    val swept = sweep(dataDir(root), deep = true)(referenced) +
+      // orphans of purged/rewritten files and expired versions
+      sweep(Paths.get(root, "dv"), deep = false)(sidecars) +
+      sweep(Paths.get(root, "index"), deep = false)(sidecars)
     // leftover staging dirs past the grace window are dead writers
-    val st = Paths.get(root, "_staging")
-    if (Files.isDirectory(st)) {
-      val dirs = {
-        val l = Files.list(st)
-        try l.iterator().asScala.toSeq finally l.close()
-      }
-      for (d <- dirs if Files.getLastModifiedTime(d).toMillis < cutoff)
-        if (!dryRun) deleteRecursively(d)
-    }
-    // non-dry keeps the historical contract (data files + sidecars);
-    // a dry run ALSO tallies the expired manifests it would remove
-    if (dryRun) deleted + wouldDelete else deleted
+    sweep(Paths.get(root, "_staging"), deep = false)(_ => false)
+    if (dryRun) swept + expired.size else swept
   }
 
   private def deleteRecursively(p: Path): Unit =

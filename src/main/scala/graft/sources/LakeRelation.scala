@@ -10,11 +10,11 @@ import org.apache.spark.sql.types.StructType
   * `spark.read.format("graft-lake").option("path", root).load()` —
   * with the manifest zone-maps riding Spark's own filter pushdown:
   * the WHERE clause of a plain SQL query over the registered view
-  * arrives here as `sources.Filter`s, prunes files DRIVER-side via
-  * [[LakeStats.survivors]], and only the surviving files are ever
-  * planned. [[AtomicLake.scan]] gives the same skipping to the
-  * programmatic API; this class gives it to SQL users transparently —
-  * no graft API in the query, just `USING graft-lake`.
+  * arrives here as `sources.Filter`s and plans through the same
+  * planner as [[AtomicLake.scan]] ([[AtomicLake.planFiles]]: zone
+  * maps, then bloom indexes), and only the surviving files are ever
+  * read — SQL users get the programmatic API's skipping
+  * transparently, no graft API in the query, just `USING graft-lake`.
   *
   * Correctness posture: every received filter is ALSO reported back
   * as unhandled, so Spark re-applies the full predicate on top of
@@ -32,8 +32,7 @@ final class LakeRelation(override val sqlContext: SQLContext,
 
   private val snap: AtomicLake.Snapshot = versionAsOf match {
     case Some(v) => AtomicLake.snapshotAt(root, v)
-    case None => AtomicLake.currentSnapshot(root).getOrElse(
-      throw new IllegalStateException(s"no commits at $root"))
+    case None => AtomicLake.latest(root)
   }
 
   override val schema: StructType = snap.schema.getOrElse(
@@ -53,28 +52,18 @@ final class LakeRelation(override val sqlContext: SQLContext,
     * the pruning-proof spec; buildScan uses exactly this.
     */
   private[graft] def plannedFiles(filters: Seq[Filter]): Seq[String] =
-    LakeStats.survivors(snap,
-      filters.flatMap(LakeFilters.toColumn).map(
-        org.apache.spark.sql.classic.GraftExprBridge.expression))
+    AtomicLake.planFiles(root, snap, filters.flatMap(LakeFilters.toColumn),
+      Some(sqlContext.sparkSession))
 
   override def buildScan(requiredColumns: Array[String],
       filters: Array[Filter]): RDD[Row] = {
-    val spark = sqlContext.sparkSession
-    val files = plannedFiles(filters.toSeq)
-    val base =
-      if (files.isEmpty)
-        // all files pruned: a schema-correct empty frame without
-        // planning a single data file
-        spark.createDataFrame(
-          new java.util.ArrayList[Row](), schema)
-      else AtomicLake.readFileSubset(spark, root, files, snap)
     // convertible filters also run INSIDE the scan, where Catalyst
     // pushes them into the parquet reader (row-group skipping within
     // surviving files); Spark's outer re-application covers the rest
-    val filtered = filters.toSeq.flatMap(LakeFilters.toColumn)
-      .foldLeft(base)(_.filter(_))
-    val projected = filtered.selectExpr(
-      requiredColumns.map(c => s"`$c`").toIndexedSeq: _*)
+    val projected = AtomicLake.readPlanned(sqlContext.sparkSession, root,
+        snap, plannedFiles(filters.toSeq),
+        filters.toSeq.flatMap(LakeFilters.toColumn))
+      .selectExpr(requiredColumns.map(c => s"`$c`").toIndexedSeq: _*)
     projected.queryExecution.toRdd.asInstanceOf[RDD[Row]]
   }
 }

@@ -70,7 +70,7 @@ class AtomicLakeSpec extends SparkSpec {
       AtomicLake.read(spark, root).select("id").as[Int]
         .collect().toSet shouldBe Set(1, 2)
       // commit point: only now does the reader see the NEW partition
-      AtomicLake.commitReplacing(root, staged.keySet, staged.files, Seq("part"))
+      AtomicLake.commit(root, Seq("part"))(_.swap(staged, staged.keySet))
       AtomicLake.read(spark, root).select("id").as[Int]
         .collect().toSet shouldBe Set(10, 11, 12)
     }
@@ -293,8 +293,8 @@ class AtomicLakeSpec extends SparkSpec {
       // concurrent writer lands partition C between stage and commit
       AtomicLake.upsertPartitions(Seq((2, "C")).toDF("id", "part"),
         root, Seq("part"))
-      AtomicLake.commitReplacing(root, Set.empty, staged.files, Seq("part"),
-        batchSchema = None, replaceAll = true)
+      AtomicLake.commit(root, Seq("part"))(s =>
+        s.swap(staged, touched = s.files.keySet))
       AtomicLake.read(spark, root).select("id").as[Int]
         .collect().toSet shouldBe Set(10) // C's rows are gone
     }
@@ -325,8 +325,8 @@ class AtomicLakeSpec extends SparkSpec {
       AtomicLake.upsertPartitions(Seq((9, "a")).toDF("id", "part"),
         root, Seq("part"))
       a[java.util.ConcurrentModificationException] should be thrownBy
-        AtomicLake.commitReplacing(root, staged.keySet, staged.files,
-          Seq("part"), expectedBase = Some(snap))
+        AtomicLake.commit(root, Seq("part"), expectedBase = Some(snap),
+          touched = staged.keySet)(_.swap(staged, staged.keySet))
       // the winner's data is intact
       AtomicLake.read(spark, root).select("id").as[Int]
         .collect().toSeq shouldBe Seq(9)
@@ -469,8 +469,8 @@ class AtomicLakeSpec extends SparkSpec {
         root, Seq("part"), 1)
       val sB = AtomicLake.stageFiles(Seq((6, "b")).toDF("id", "part"),
         root, Seq("part"), 1)
-      AtomicLake.commitReplacing(root, sA.keySet, sA.files, Seq("part")) shouldBe 2L
-      AtomicLake.commitReplacing(root, sB.keySet, sB.files, Seq("part")) shouldBe 3L
+      AtomicLake.commit(root, Seq("part"))(_.swap(sA, sA.keySet)) shouldBe 2L
+      AtomicLake.commit(root, Seq("part"))(_.swap(sB, sB.keySet)) shouldBe 3L
       AtomicLake.read(spark, root).select("id", "part")
         .as[(Int, String)].collect().toSet shouldBe
         Set((5, "a"), (6, "b"))

@@ -43,6 +43,10 @@ class LakeBloomSpec extends SparkSpec {
           graft.sources.HardlinkCommitStore)(col("id") === 37L)
       total shouldBe 4
       planned should be < 4 // 3 true prunes at fpp 1e-3
+      // SQL reads plan through the same planner, blooms included
+      new graft.sources.LakeRelation(spark.sqlContext, root, None)
+        .plannedFiles(Seq(org.apache.spark.sql.sources.EqualTo("id", 37L)))
+        .size shouldBe planned
       // and the scan result is exactly read().filter()
       val got = AtomicLake.scan(spark, root)(col("id") === 37L)
         .select("id", "sk").as[(Long, String)].collect().toSeq

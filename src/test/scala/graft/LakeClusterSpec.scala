@@ -214,10 +214,10 @@ class LakeClusterSpec extends SparkSpec {
       AtomicLake.upsertPartitions(
         Seq((9, "a")).toDF("k", "part"), root, Seq("part"))
       a[java.util.ConcurrentModificationException] should be thrownBy
-        AtomicLake.commitReplacing(root,
-          snap.files.keySet ++ staged.keySet, staged.files,
-          Seq("part"), expectedBase = Some(snap), kind = "compact",
-          newStats = staged.stats)
+        AtomicLake.commit(root, Seq("part"), "compact",
+          expectedBase = Some(snap),
+          touched = snap.files.keySet ++ staged.keySet)(
+          _.swap(staged, snap.files.keySet ++ staged.keySet))
       AtomicLake.read(spark, root).select("k").as[Int]
         .collect().toSet shouldBe Set(9, 2)
     }

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
-import graft.sources.AtomicLake
+import graft.sources.{AtomicLake, CommitStore, HardlinkCommitStore}
 
 /** CHECK constraints on the lake (Delta's ADD CONSTRAINT … CHECK):
   * metadata commits carry them, every write commit enforces them, SQL
@@ -141,6 +141,45 @@ class LakeConstraintSpec extends SparkSpec {
       ex.getMessage should include("t_nonempty")
       AtomicLake.currentSnapshot(root).get.constraints.keySet shouldBe
         Set("v_pos", "t_nonempty")
+    }
+    it("a metadata commit that loses the version race re-applies " +
+        "its change to the winner's snapshot") {
+      /** Lands `racer` through the plain store on the first claim
+        * attempt, then delegates — so that attempt loses its version.
+        */
+      final class RacingStore(racer: () => Unit) extends CommitStore {
+        private val raced = new java.util.concurrent.atomic.AtomicBoolean
+        override def listVersions(root: String): Seq[Long] =
+          HardlinkCommitStore.listVersions(root)
+        override def readBody(root: String, version: Long): String =
+          HardlinkCommitStore.readBody(root, version)
+        override def tryCommit(root: String, version: Long,
+            body: String): Boolean = {
+          if (raced.compareAndSet(false, true)) racer()
+          HardlinkCommitStore.tryCommit(root, version, body)
+        }
+        override def delete(root: String, version: Long): Unit =
+          HardlinkCommitStore.delete(root, version)
+      }
+      // a constraint the winner added survives
+      val root = freshRoot("race_constraint")
+      AtomicLake.append(Seq((1, 1.0)).toDF("id", "v"), root)
+      AtomicLake.addConstraint(spark, root, "c1", "id > 0")
+      AtomicLake.addConstraint(spark, root, "c2", "v > 0",
+        store = new RacingStore(() =>
+          AtomicLake.addConstraint(spark, root, "c3", "id < 100")))
+      AtomicLake.currentSnapshot(root).get.constraints.keySet shouldBe
+        Set("c1", "c2", "c3")
+      // a column a concurrent append added still reads back
+      val root2 = freshRoot("race_rename")
+      AtomicLake.append(Seq((1, 1.0)).toDF("id", "v"), root2)
+      AtomicLake.renameColumn(root2, "v", "w",
+        store = new RacingStore(() => AtomicLake.append(
+          Seq((2, 2.0, "x")).toDF("id", "v", "extra"), root2)))
+      val back = AtomicLake.read(spark, root2)
+      back.columns.toSeq shouldBe Seq("id", "w", "extra")
+      back.as[(Int, Double, Option[String])].collect().sortBy(_._1)
+        .toSeq shouldBe Seq((1, 1.0, None), (2, 2.0, Some("x")))
     }
   }
 }

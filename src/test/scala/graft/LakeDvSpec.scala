@@ -53,6 +53,8 @@ class LakeDvSpec extends SparkSpec {
       AtomicLake.read(spark, root).select("id").as[Int]
         .collect().toSet shouldBe (1 to 100).filterNot(_ % 4 == 2).toSet
       AtomicLake.history(root).head._2 shouldBe "dv"
+      AtomicLake.history(root).head._4 shouldBe Some(75L)
+      AtomicLake.history(root).head._4 shouldBe AtomicLake.rowCount(root)
     }
 
     it("null-predicate rows survive (SQL DELETE semantics)") {

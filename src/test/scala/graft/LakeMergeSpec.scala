@@ -354,8 +354,9 @@ class LakeMergeSpec extends SparkSpec {
       // concurrent maintenance rewrites both files into one
       AtomicLake.compact(spark, root)
       a[java.util.ConcurrentModificationException] should be thrownBy
-        AtomicLake.commitReplacing(root, Set.empty, Map.empty,
-          Seq("part"), removeFiles = Set(victim))
+        AtomicLake.commit(root, Seq("part"), removeFiles = Set(victim))(
+          _.swap(AtomicLake.Staged(Map.empty, Map.empty),
+            removed = Set(victim)))
       AtomicLake.read(spark, root).count() shouldBe 2
     }
     it("CDC across a delete commit: old images delete, survivors " +
