@@ -1325,7 +1325,7 @@ object AtomicLake {
         .select(metaUriNorm(col("_graft_file")).as("_uri"),
           col("_graft_pos").as("pos"))
         .join(org.apache.spark.sql.functions.broadcast(uriDf), Seq("_uri"))
-        .select(col("file"), col("pos"))
+        .select(dvSchema.fieldNames.toSeq.map(col): _*)
         .localCheckpoint()
       val tally =
         if (candidates.isEmpty) Array.empty[org.apache.spark.sql.Row]
@@ -1848,6 +1848,14 @@ object AtomicLake {
         df("_graft_pos") === dv("_dv_pos"), "left_anti")
   }
 
+  /** A deletion-vector sidecar row: a data file's manifest key and
+    * one deleted row position in it. [[deleteWhereDV]] writes these
+    * columns and [[dvPositions]] reads under this schema, so a read
+    * never runs an inference job over a file the lake wrote itself.
+    */
+  private val dvSchema =
+    org.apache.spark.sql.types.StructType.fromDDL("file STRING, pos BIGINT")
+
   /** The deleted (file-URI, position) pairs `snap`'s deletion vectors
     * record for `files` — an empty 2-column frame when none has one.
     * Sidecars store the WRITING lake's manifest path per file, so the
@@ -1877,7 +1885,7 @@ object AtomicLake {
       alts.map(_ -> uri)
     }
     val transDf = trans.toDF("_dv_key", "_dv_uri")
-    spark.read.parquet(sidecars: _*)
+    spark.read.schema(dvSchema).parquet(sidecars: _*)
       .join(broadcast(transDf), col("file") === col("_dv_key"))
       .select(col("_dv_uri"), col("pos").as("_dv_pos"))
   }

@@ -99,6 +99,13 @@ object BloomIndex {
     (words, k)
   }
 
+  /** A bloom sidecar row. [[buildSidecar]] writes these columns and
+    * the prune read uses this schema, so probing a sidecar runs no
+    * inference job over a file the lake wrote itself.
+    */
+  private val sidecarSchema =
+    StructType.fromDDL("file STRING, colname STRING, k INT, bits ARRAY<BIGINT>")
+
   /** One build pass over `tagged` (rows carry `_graft_file` with the
     * file's absolute URI): key columns normalize to longs IN THE PLAN
     * (integral → value, string → xxhash64 — the exact probe-side
@@ -171,7 +178,7 @@ object BloomIndex {
       }
       .map { case ((f, i), (k, bits)) => (f, names(i), k, bits.toSeq) }
     spark.createDataset(reduced)
-      .toDF("file", "colname", "k", "bits")
+      .toDF(sidecarSchema.fieldNames.toSeq: _*)
       .repartition(1)
       .write.mode("overwrite").parquet(sidecarAbs)
   }
@@ -251,7 +258,7 @@ object BloomIndex {
         val might = keys.map(k =>
           NativeKernels.bloomMightContainColK(lit(k), col("bits"),
             col("k"))).reduce(_ || _)
-        val absent = spark.read.parquet(abs)
+        val absent = spark.read.schema(sidecarSchema).parquet(abs)
           .where(col("colname") === c &&
             col("file").isin(keyToSnap.keys.toSeq: _*))
           .where(!might)

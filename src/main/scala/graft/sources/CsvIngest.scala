@@ -161,10 +161,13 @@ object CsvIngest {
     * `http(s)://` fetches via java.net.http; `file://` copies (used by
     * the spec — this container has no egress). Staging is keyed by a
     * content-independent hash of the URL, so re-ingesting the same
-    * source overwrites its own staging slot (idempotent re-runs).
+    * source overwrites its own staging slot (idempotent re-runs). The
+    * default staging root is `target/staging` under the working
+    * directory.
     */
   def fromUrl(spark: SparkSession, url: String,
-      stagingDir: String = "/root/repo/target/staging",
+      stagingDir: String =
+        java.nio.file.Paths.get("target", "staging").toAbsolutePath.toString,
       sep: String = ",", encoding: String = "UTF-8",
       header: Boolean = true, columns: Seq[String] = Nil,
       retries: Int = 3, retryDelayMs: Long = 1000L): DataFrame = {

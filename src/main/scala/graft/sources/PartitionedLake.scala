@@ -71,7 +71,7 @@ object PartitionedLake {
       .parquet(path)
 
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    ReadSchema.read(spark, path)
 
   /** Z-ordered (Morton-clustered) parquet write: range-partition and
     * sort by the interleaved bits of two columns, so EVERY file's

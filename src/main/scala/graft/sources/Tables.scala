@@ -9,8 +9,9 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * One parquet file-or-directory per table under a scale-factor dir
   * (mirrors the reference's one-table-per-parquet bronze layout,
   * /root/reference/notebooks/1_sprint1_schema_prototyping.ipynb COPY TO
-  * PARQUET cells). Reads are plain `spark.read.parquet` so Catalyst
-  * keeps predicate pushdown + column pruning.
+  * PARQUET cells). Reads are plain parquet scans, so Catalyst keeps
+  * predicate pushdown + column pruning; the schema is resolved on the
+  * driver ([[ReadSchema]]), so building a table's frame runs no job.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -18,7 +19,7 @@ object Tables {
     "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    ReadSchema.read(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation")

@@ -95,6 +95,13 @@ class BronzeSpec extends SparkSpec {
       // re-ingest overwrites the same staging slot (idempotent)
       CsvIngest.cleanRows(CsvIngest.fromUrl(spark, url, sep = ";",
         stagingDir = s"$scratch/staging")).count() shouldBe 2
+      // the default staging slot lies under the working directory
+      val staged = CsvIngest.fromUrl(spark, url, sep = ";").inputFiles
+      staged should not be empty
+      staged.foreach { f =>
+        Paths.get(new java.net.URI(f)).startsWith(
+          Paths.get("target", "staging").toAbsolutePath) shouldBe true
+      }
     }
     it("rejects unsupported URL schemes") {
       an[IllegalArgumentException] should be thrownBy

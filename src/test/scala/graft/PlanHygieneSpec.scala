@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.FileSourceScanExec
-import graft.sources.{PartitionedLake, Tables}
+import graft.sources.{AtomicLake, PartitionedLake, ReadSchema, Tables}
 
 /** Plan-shape regression guards: the properties that make these
   * queries survive a 100× scale-up, asserted on the actual physical
@@ -45,6 +45,129 @@ class PlanHygieneSpec extends SparkSpec {
       scan.relation.location.listFiles(
         scan.partitionFilters, scan.dataFilters).map(_.files.size).sum shouldBe 1
       q.select("id").as[Int].collect() shouldBe Array(2)
+    }
+  }
+
+  describe("read hygiene") {
+    val scratch = java.nio.file.Paths.get("target", "test-scratch",
+      "read_hygiene").toAbsolutePath.toString
+    // the test data's sf0.01 tables sit beside the suite's default dir
+    val sf001 = java.nio.file.Paths.get(sf).resolveSibling("sf0.01").toString
+
+    /** `body`'s result and the Spark jobs started while it ran (the
+      * bus is drained on both sides, so no earlier job leaks in and
+      * none is missed).
+      */
+    def jobsDuring[A](body: => A): (A, Int) = {
+      val sc = spark.sparkContext
+      val n = new java.util.concurrent.atomic.AtomicInteger
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          n.incrementAndGet()
+      }
+      org.apache.spark.GraftListenerBus.drain(sc)
+      sc.addSparkListener(l)
+      try {
+        val a = body
+        org.apache.spark.GraftListenerBus.drain(sc)
+        (a, n.get)
+      } finally sc.removeSparkListener(l)
+    }
+
+    def fresh(name: String): String = {
+      val p = java.nio.file.Paths.get(scratch, name)
+      org.apache.commons.io.FileUtils.deleteDirectory(p.toFile)
+      p.toString
+    }
+
+    def sameAsInference(p: String) = withClue(s"$p: ") {
+      val inferred = spark.read.parquet(p).schema
+      ReadSchema.resolve(spark, p) shouldBe inferred
+      ReadSchema.read(spark, p).schema shouldBe inferred
+    }
+
+    it("resolves every sf0.01 table's schema exactly as inference does") {
+      Tables.all.foreach(t => sameAsInference(s"$sf001/$t.parquet"))
+    }
+
+    it("resolves k=v partitioned, multi-file dirs through PartitionedLake.read") {
+      val dir = fresh("parted")
+      // two partitions whose files carry DIFFERENT data schemas: the
+      // non-merging inference reads the first file in path order only
+      (0 until 40).map(i => (i.toLong, s"a$i", "2024-01-01", i % 3))
+        .toDF("id", "a", "day", "bucket").repartition(4)
+        .write.partitionBy("day", "bucket").parquet(dir)
+      (0 until 40).map(i => (i.toLong, i * 0.5, "2024-01-02", i % 3))
+        .toDF("id", "b", "day", "bucket").repartition(4)
+        .write.mode("append").partitionBy("day", "bucket").parquet(dir)
+      val inferred = spark.read.parquet(dir).schema
+      inferred.fieldNames shouldBe Array("id", "a", "day", "bucket")
+      ReadSchema.resolve(spark, dir) shouldBe inferred
+      PartitionedLake.read(spark, dir).schema shouldBe inferred
+      PartitionedLake.read(spark, dir).count() shouldBe 80
+      // and with merging on, every footer is read and merged
+      spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+      try {
+        val merged = spark.read.parquet(dir).schema
+        merged.fieldNames.toSet shouldBe Set("id", "a", "b", "day", "bucket")
+        ReadSchema.resolve(spark, dir) shouldBe merged
+      } finally spark.conf.unset("spark.sql.parquet.mergeSchema")
+    }
+
+    it("resolves the NTZ and NANOS events encodings as inference does") {
+      // µs TIMESTAMP_NTZ: the current generator's events.ts
+      val ntz = fresh("ntz_events.parquet")
+      Tables.events(spark, sf)
+        .withColumn("ts", col("ts").cast(org.apache.spark.sql.types.TimestampNTZType))
+        .coalesce(1).write.parquet(ntz)
+      sameAsInference(ntz)
+      // TIMESTAMP(NANOS): an older generation's; Spark cannot write it,
+      // so the fixture comes from parquet's own example writer
+      val nanos = fresh("nanos_events.parquet")
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(nanos))
+      val msg = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+        "message e { required int64 ts (TIMESTAMP(NANOS,true)); " +
+          "required binary kind (STRING); }")
+      val conf = new org.apache.hadoop.conf.Configuration()
+      val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+        .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
+          new org.apache.hadoop.fs.Path(s"$nanos/part-0.parquet"), conf))
+        .withType(msg).withConf(conf).build()
+      val groups = new org.apache.parquet.example.data.simple.SimpleGroupFactory(msg)
+      try (0 until 3).foreach(i => w.write(groups.newGroup()
+        .append("ts", 1700000000000000000L + i).append("kind", s"k$i")))
+      finally w.close()
+      sameAsInference(nanos)
+      ReadSchema.resolve(spark, nanos)("ts").dataType shouldBe
+        org.apache.spark.sql.types.LongType // nanosAsLong
+    }
+
+    it("building every Tables.load runs no Spark job") {
+      jobsDuring(Tables.all.foreach(
+        Tables.load(spark, sf001, _)))._2 shouldBe 0
+    }
+
+    it("building a read over a deletion vector runs no Spark job") {
+      val root = fresh("dv_lake")
+      AtomicLake.upsertPartitions((0 until 20).map(i => (i, i % 2))
+        .toDF("id", "p"), root, Seq("p"))
+      AtomicLake.deleteWhereDV(spark, root)($"id" === 3).rowsChanged shouldBe 1
+      val (df, jobs) = jobsDuring(AtomicLake.read(spark, root))
+      jobs shouldBe 0
+      df.count() shouldBe 19
+    }
+
+    it("a bloom-pruned scan runs only its prune job") {
+      val root = fresh("bloom_lake")
+      (0 until 4).foreach { chunk =>
+        AtomicLake.append((0 until 200).filter(_ % 4 == chunk)
+          .map(k => (k.toLong, s"v$k")).toDF("id", "v"), root)
+      }
+      AtomicLake.indexBloom(spark, root, Seq("id"), fpp = 0.001)
+      val (df, jobs) = jobsDuring(AtomicLake.scan(spark, root)($"id" === 37L))
+      jobs shouldBe 1
+      df.select("v").as[String].collect() shouldBe Array("v37")
     }
   }
 
