@@ -54,7 +54,7 @@ object Plans {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val out = if (args.length > 1) args(1) else "/root/repo/PLANS.md"
+    val out = if (args.length > 1) args(1) else Scratch.path("PLANS.md")
     val spark = GraftSession.builder(8).master("local[8]")
       .config("spark.sql.autoBroadcastJoinThreshold", "-1")
       .getOrCreate()
@@ -65,7 +65,7 @@ object Plans {
     // commit + date instead, so header currency is mechanical.
     val sha = try {
       val p = new ProcessBuilder("git", "rev-parse", "--short", "HEAD")
-        .directory(new java.io.File("/root/repo")).start()
+        .start()
       val s = scala.io.Source.fromInputStream(p.getInputStream)
         .mkString.trim
       p.waitFor(); if (s.nonEmpty) s else "unknown"

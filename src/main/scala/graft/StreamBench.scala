@@ -35,7 +35,7 @@ object StreamBench {
   def run(spark: SparkSession, sfDir: String): Seq[Tier] = {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val scratch = "/root/repo/target/bench_stream"
+    val scratch = Scratch.path("target", "bench_stream")
     val fs = new org.apache.hadoop.fs.Path(scratch)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(scratch), true)

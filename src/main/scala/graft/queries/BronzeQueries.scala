@@ -11,11 +11,6 @@ import graft.operators.Salt
   */
 object BronzeQueries {
 
-  /** Lake scratch dir for the upsert proof (inside the repo target so
-    * nothing outside /root/repo is touched).
-    */
-  private val lakeScratch = "/root/repo/target/lake/bronze_upsert"
-
   /** The year-partitioned orders lake the four `lake_*` gates query —
     * built ONCE per (session, sf dir) and memoized: a real deployment
     * HAS its table; the gate should measure the operator under test,
@@ -32,8 +27,7 @@ object BronzeQueries {
     * shared with specs so path changes can't silently strand them.
     */
   def ordersLakeRoot(dir: String): String =
-    "/root/repo/target/lake/orders_base/" +
-      dir.replaceAll("[^A-Za-z0-9.]", "_")
+    graft.Scratch.forDir(dir, "lake", "orders_base")
 
   private def ordersLake(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
@@ -136,8 +130,7 @@ object BronzeQueries {
   private def warcFixture(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
     warcMemo.getOrElseUpdate(s, dir) {
-      val root = "/root/repo/target/warc_roundtrip/" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
+      val root = graft.Scratch.forDir(dir, "warc_roundtrip")
       val rootPath = new org.apache.hadoop.fs.Path(root)
       rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
         .delete(rootPath, true)
@@ -176,8 +169,7 @@ object BronzeQueries {
   private def crawlWarcFixture(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
     crawlWarcMemo.getOrElseUpdate(s, dir) {
-      val root = "/root/repo/target/warc_crawl/" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
+      val root = graft.Scratch.forDir(dir, "warc_crawl")
       val rootPath = new org.apache.hadoop.fs.Path(root)
       rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
         .delete(rootPath, true)
@@ -225,8 +217,7 @@ object BronzeQueries {
   private def crawlIndex(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
     crawlIdxMemo.getOrElseUpdate(s, dir) {
-      val root = "/root/repo/target/lake/crawl_neardup/" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
+      val root = graft.Scratch.forDir(dir, "lake", "crawl_neardup")
       val rootPath = new org.apache.hadoop.fs.Path(root)
       rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
         .delete(rootPath, true)
@@ -240,8 +231,7 @@ object BronzeQueries {
   /** A fresh shallow clone of [[ordersLake]] for a mutating gate. */
   private def clonedOrdersLake(s: org.apache.spark.sql.SparkSession,
       dir: String, name: String): String = {
-    val dst = s"/root/repo/target/lake/$name/" +
-      dir.replaceAll("[^A-Za-z0-9.]", "_")
+    val dst = graft.Scratch.forDir(dir, "lake", name)
     val dstPath = new org.apache.hadoop.fs.Path(dst)
     dstPath.getFileSystem(s.sparkContext.hadoopConfiguration)
       .delete(dstPath, true)
@@ -276,7 +266,7 @@ object BronzeQueries {
       // upsert only replaces partitions present in the batch, so
       // leftover commits from a previous run on a different sf would
       // survive in the manifest and contaminate the read-back.
-      val scratch = s"$lakeScratch/${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+      val scratch = graft.Scratch.forDir(dir, "lake", "bronze_upsert")
       val scratchPath = new org.apache.hadoop.fs.Path(scratch)
       scratchPath.getFileSystem(s.sparkContext.hadoopConfiguration)
         .delete(scratchPath, true)
@@ -357,8 +347,7 @@ object BronzeQueries {
     // row, or any JSON round-trip lossiness hash-mismatches; the
     // quarantine side (exactly the planted garbage) is spec-gated.
     "bronze_jsonl_roundtrip" -> { (s, dir) =>
-      val out = "/root/repo/target/jsonl_ingest/" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
+      val out = graft.Scratch.forDir(dir, "jsonl_ingest")
       val outPath = new org.apache.hadoop.fs.Path(out)
       val fs = outPath.getFileSystem(s.sparkContext.hadoopConfiguration)
       fs.delete(outPath, true)

@@ -317,8 +317,7 @@ object TextQueries {
     // cross sweep, so it shares dedup_cross's exact-Jaccard oracle.
     "dedup_index_cross" -> { (s, dir) =>
       import graft.operators.NearDupIndex
-      val scratch = "/root/repo/target/lake_scratch/neardup_" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
+      val scratch = graft.Scratch.forDir(dir, "lake_scratch", "neardup")
       val p = new org.apache.hadoop.fs.Path(scratch)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       val docs = Tables.documents(s, dir)
@@ -416,8 +415,7 @@ object TextQueries {
     // hash-gated in exactly the shape it ships.
     "dedup_index_cross_capped" -> { (s, dir) =>
       import graft.operators.NearDupIndex
-      val scratch = "/root/repo/target/lake_scratch/neardup_capped_" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
+      val scratch = graft.Scratch.forDir(dir, "lake_scratch", "neardup_capped")
       val p = new org.apache.hadoop.fs.Path(scratch)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       val docs = Tables.documents(s, dir)

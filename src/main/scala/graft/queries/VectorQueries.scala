@@ -17,13 +17,9 @@ object VectorQueries {
   private def fact(s: org.apache.spark.sql.SparkSession, dir: String) =
     Silver.factEventsCached(s, dir)
 
-  /** The persisted index root of an ann_* entry:
-    * `target/lake/<name>/<dir>` resolved against the working directory
-    * (the checkout root under sbt, `graft.Verify` and `tools/check.py`).
-    */
+  /** The persisted index root of an ann_* entry: `target/lake/<name>/<dir>`. */
   private def indexRoot(name: String, dir: String): String =
-    java.nio.file.Paths.get("target", "lake", name,
-      dir.replaceAll("[^A-Za-z0-9.]", "_")).toAbsolutePath.toString
+    graft.Scratch.forDir(dir, "lake", name)
 
   val queries: Map[String, Q] = Map(
 

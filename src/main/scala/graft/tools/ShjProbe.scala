@@ -34,9 +34,10 @@ import org.apache.spark.sql.functions._
   */
 object ShjProbe {
   def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/repo/testdata/sf10")
+    val dir = args.headOption
+      .getOrElse(graft.Scratch.path("testdata", "sf10"))
     val outDir = args.drop(1).headOption
-      .getOrElse("/root/repo/plans/r17")
+      .getOrElse(graft.Scratch.path("plans", "r17"))
     val spark = graft.GraftSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
       .appName("graft-shjprobe").getOrCreate()

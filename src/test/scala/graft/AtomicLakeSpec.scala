@@ -12,7 +12,7 @@ import graft.sources.AtomicLake
 class AtomicLakeSpec extends SparkSpec {
   import spark.implicits._
 
-  private val scratch = "/root/repo/target/test-scratch/atomic_lake"
+  private val scratch = TestScratch("atomic_lake")
 
   private def freshRoot(name: String): String = {
     val p = Paths.get(scratch, name)

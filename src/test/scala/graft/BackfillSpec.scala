@@ -13,7 +13,7 @@ import graft.sources.AtomicLake
 class BackfillSpec extends SparkSpec {
   import spark.implicits._
 
-  private val scratch = "/root/repo/target/test-scratch/backfill"
+  private val scratch = TestScratch("backfill")
 
   private def freshRoot(name: String): String = {
     val p = Paths.get(scratch, name)

@@ -130,7 +130,7 @@ class BpeSpec extends SparkSpec {
 
   describe("Bpe.save/load (versioned tokenizer artifact)") {
     it("round-trips byte-identically and versions immutably") {
-      val root = "/root/repo/target/test-scratch/bpe_model"
+      val root = TestScratch("bpe_model")
       val p = new org.apache.hadoop.fs.Path(root)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .delete(p, true)

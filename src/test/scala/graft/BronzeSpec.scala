@@ -10,7 +10,7 @@ import graft.sources.Tables
 class BronzeSpec extends SparkSpec {
   import spark.implicits._
 
-  private val scratch = "/root/repo/target/test-scratch"
+  private val scratch = TestScratch.root
 
   private def writeFile(name: String, content: String,
       cs: String = "UTF-8"): String = {
@@ -152,7 +152,7 @@ class BronzeSpec extends SparkSpec {
 
     it("round-trips the export losslessly and quarantines exactly the " +
         "planted garbage with per-line reasons") {
-      val out = "/root/repo/target/test-scratch/jsonl_rt"
+      val out = TestScratch("jsonl_rt")
       val p = new org.apache.hadoop.fs.Path(out)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.delete(p, true)
@@ -182,7 +182,7 @@ class BronzeSpec extends SparkSpec {
 
     it("round-trips hostile text losslessly: newlines, quotes, " +
         "backslashes, unicode, tabs") {
-      val out = "/root/repo/target/test-scratch/jsonl_hostile"
+      val out = TestScratch("jsonl_hostile")
       val p = new org.apache.hadoop.fs.Path(out)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.delete(p, true)
@@ -202,7 +202,7 @@ class BronzeSpec extends SparkSpec {
     }
 
     it("a type-mismatched field routes to quarantine, never a null row") {
-      val out = "/root/repo/target/test-scratch/jsonl_types"
+      val out = TestScratch("jsonl_types")
       val p = new org.apache.hadoop.fs.Path(out)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.delete(p, true)

@@ -113,7 +113,7 @@ class CurationSpec extends SparkSpec {
 
   describe("Export.writeJsonlShards") {
     it("writes gzip jsonl per shard that round-trips") {
-      val dir = "/root/repo/target/test_jsonl"
+      val dir = TestScratch("test_jsonl")
       val docs = (1L to 50L).map(i => (i, s"text $i")).toDF("doc_id", "text")
       Export.writeJsonlShards(docs, "doc_id", nShards = 4, path = dir)
       val back = spark.read.json(dir)
@@ -275,7 +275,7 @@ class CurationSpec extends SparkSpec {
       ids.sliding(2).exists(p => p(1) != p(0) + 1) shouldBe true
     }
     it("writeShuffledJsonl lays files out in manifest order") {
-      val dir = "/root/repo/target/test_shuffled_jsonl"
+      val dir = TestScratch("test_shuffled_jsonl")
       val docs = (1L to 60L).map(i => (i, s"text $i")).toDF("doc_id", "text")
       Export.writeShuffledJsonl(docs, "doc_id", seed = 42L, nShards = 3,
         path = dir)
@@ -296,7 +296,7 @@ class CurationSpec extends SparkSpec {
 
   describe("Export.writeSorted") {
     it("range-partitioned files concatenate to the total order") {
-      val dir = "/root/repo/target/test_sorted"
+      val dir = TestScratch("test_sorted")
       val df = (1L to 1000L).map(i => (i * 7919 % 1000, i))
         .toDF("key", "payload")
       Export.writeSorted(df, "key", nFiles = 4, path = dir)
@@ -373,7 +373,7 @@ class CurationSpec extends SparkSpec {
 
   describe("Export.writeShards") {
     it("writes one directory per shard, readable and complete") {
-      val dir = "/root/repo/target/test_shards"
+      val dir = TestScratch("test_shards")
       val docs = (1L to 100L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
       Export.writeShards(docs, "doc_id", nShards = 4, path = dir)
       val back = spark.read.parquet(dir)

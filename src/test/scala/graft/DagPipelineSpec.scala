@@ -13,7 +13,7 @@ class DagPipelineSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshRoot(name: String): String = {
-    val p = Paths.get(s"/root/repo/target/test-scratch/dag_$name")
+    val p = Paths.get(TestScratch(s"dag_$name"))
     if (Files.exists(p))
       Files.walk(p).iterator().asScala.toSeq.reverse
         .foreach(Files.deleteIfExists(_))

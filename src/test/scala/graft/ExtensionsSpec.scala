@@ -10,7 +10,7 @@ class ExtensionsSpec extends SparkSpec {
 
   describe("PolygonBBoxPruning") {
     it("conjoins pushable bbox bounds for a literal-ring filter") {
-      val dir = "/root/repo/target/test-scratch/geo_parquet_opt"
+      val dir = TestScratch("geo_parquet_opt")
       Seq((5.0, 5.0), (20.0, 30.0), (50.0, 50.0)).toDF("x", "y")
         .write.mode("overwrite").parquet(dir)
       val q = spark.read.parquet(dir)
@@ -27,7 +27,7 @@ class ExtensionsSpec extends SparkSpec {
     }
 
     it("pushes the derived bounds down to the parquet scan") {
-      val dir = "/root/repo/target/test-scratch/geo_parquet"
+      val dir = TestScratch("geo_parquet")
       Seq((5.0, 5.0), (20.0, 30.0), (50.0, 50.0)).toDF("x", "y")
         .write.mode("overwrite").parquet(dir)
       val q = spark.read.parquet(dir)
@@ -61,7 +61,7 @@ class ExtensionsSpec extends SparkSpec {
            |  AS hit""".stripMargin)
         .collect()(0).getBoolean(0) shouldBe true
       // the optimizer rule fires on SQL-path filters too
-      val dir = "/root/repo/target/test-scratch/geo_parquet"
+      val dir = TestScratch("geo_parquet")
       spark.read.parquet(dir).createOrReplaceTempView("pts")
       val opt = spark.sql(
         s"SELECT * FROM pts WHERE st_contains_point(st_geomfromtext('$square'), x, y)")

@@ -13,7 +13,7 @@ import graft.sources.GeoJsonIngest
 class GeoJsonIngestSpec extends SparkSpec {
   import spark.implicits._
 
-  private val scratch = "/root/repo/target/test-scratch/geojson"
+  private val scratch = TestScratch("geojson")
   Files.createDirectories(Paths.get(scratch))
 
   private def wkt(geomType: String, coords: String): Option[String] =

@@ -12,7 +12,7 @@ class LakeBloomSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshRoot(name: String): String = {
-    val root = s"/root/repo/target/test-scratch/lakebloom_$name"
+    val root = TestScratch(s"lakebloom_$name")
     val p = new org.apache.hadoop.fs.Path(root)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(p, true)

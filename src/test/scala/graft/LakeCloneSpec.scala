@@ -12,7 +12,7 @@ import graft.sources.AtomicLake
 class LakeCloneSpec extends SparkSpec {
   import spark.implicits._
 
-  private val scratch = "/root/repo/target/test-scratch/lake_clone"
+  private val scratch = TestScratch("lake_clone")
 
   private def freshRoot(name: String): String = {
     val p = Paths.get(scratch, name)

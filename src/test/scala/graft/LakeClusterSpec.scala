@@ -15,7 +15,7 @@ import org.apache.spark.sql.classic.GraftExprBridge
 class LakeClusterSpec extends SparkSpec {
   import spark.implicits._
 
-  private val scratch = "/root/repo/target/test-scratch/lake_cluster"
+  private val scratch = TestScratch("lake_cluster")
 
   private def freshRoot(name: String): String = {
     val p = Paths.get(scratch, name)

@@ -44,7 +44,7 @@ class LakeConcurrencyFuzzSpec extends SparkSpec {
       "snapshot and the commit log replays to every version's contents") {
     var totalCrashes = 0 // non-vacuity witness for the r14 injection
     for (seed <- Seq(13L, 20260815L)) {
-      val root = s"/root/repo/target/test-scratch/lake_cfuzz_$seed"
+      val root = TestScratch(s"lake_cfuzz_$seed")
       val p = new org.apache.hadoop.fs.Path(root)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.delete(p, true)

@@ -13,7 +13,7 @@ import graft.sources.{AtomicLake, CommitStore, HardlinkCommitStore}
 class LakeConstraintSpec extends SparkSpec {
   import spark.implicits._
 
-  private val scratch = "/root/repo/target/test-scratch/lake_constraint"
+  private val scratch = TestScratch("lake_constraint")
 
   private def freshRoot(name: String): String = {
     val p = Paths.get(scratch, name)

@@ -16,7 +16,7 @@ import graft.sources.AtomicLake
 class LakeDvSpec extends SparkSpec {
   import spark.implicits._
 
-  private val scratch = "/root/repo/target/test-scratch/lake_dv"
+  private val scratch = TestScratch("lake_dv")
 
   private def freshRoot(name: String): String = {
     val p = Paths.get(scratch, name)

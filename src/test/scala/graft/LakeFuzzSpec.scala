@@ -26,7 +26,7 @@ class LakeFuzzSpec extends SparkSpec {
     val seeds = Seq(7L, 41L, 20260813L)
     for (seed <- seeds) {
       val rnd = new scala.util.Random(seed)
-      val root = s"/root/repo/target/test-scratch/lake_fuzz_$seed"
+      val root = TestScratch(s"lake_fuzz_$seed")
       val p = new org.apache.hadoop.fs.Path(root)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .delete(p, true)

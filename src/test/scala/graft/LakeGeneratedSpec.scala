@@ -13,7 +13,7 @@ class LakeGeneratedSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshRoot(name: String): String = {
-    val root = s"/root/repo/target/test-scratch/lakegen_$name"
+    val root = TestScratch(s"lakegen_$name")
     val p = new org.apache.hadoop.fs.Path(root)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(p, true)

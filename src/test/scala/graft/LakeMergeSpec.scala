@@ -13,7 +13,7 @@ import graft.sources.AtomicLake
 class LakeMergeSpec extends SparkSpec {
   import spark.implicits._
 
-  private val scratch = "/root/repo/target/test-scratch/lake_merge"
+  private val scratch = TestScratch("lake_merge")
 
   private def freshRoot(name: String): String = {
     val p = Paths.get(scratch, name)

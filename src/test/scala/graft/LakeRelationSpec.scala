@@ -19,7 +19,7 @@ class LakeRelationSpec extends SparkSpec {
     it("serves the version-range diff with _change_type, dv diffs included") {
       import graft.sources.AtomicLake
       import org.apache.spark.sql.functions.col
-      val root = "/root/repo/target/test-scratch/relation_cdf"
+      val root = TestScratch("relation_cdf")
       val p = new org.apache.hadoop.fs.Path(root)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .delete(p, true)
@@ -49,7 +49,7 @@ class LakeRelationSpec extends SparkSpec {
   }
   import spark.implicits._
 
-  private val scratch = "/root/repo/target/test-scratch/lake_relation"
+  private val scratch = TestScratch("lake_relation")
 
   private def freshRoot(name: String): String = {
     val p = Paths.get(scratch, name)

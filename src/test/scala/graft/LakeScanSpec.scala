@@ -15,7 +15,7 @@ class LakeScanSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshRoot(name: String): String = {
-    val root = s"/root/repo/target/test-scratch/lakescan_$name"
+    val root = TestScratch(s"lakescan_$name")
     val p = new org.apache.hadoop.fs.Path(root)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(p, true)

@@ -12,7 +12,7 @@ class LakeSqlSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshRoot(name: String): String = {
-    val root = s"/root/repo/target/test-scratch/lakesql_$name"
+    val root = TestScratch(s"lakesql_$name")
     val p = new org.apache.hadoop.fs.Path(root)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(p, true)
@@ -374,7 +374,7 @@ class LakeSqlSpec extends SparkSpec {
     }
     it("errors loudly on a lake command against a missing root") {
       an[Exception] should be thrownBy
-        spark.sql("DESCRIBE HISTORY '/root/repo/target/no_such_lake'")
+        spark.sql(s"DESCRIBE HISTORY '${TestScratch("no_such_lake")}'")
           .collect()
     }
   }

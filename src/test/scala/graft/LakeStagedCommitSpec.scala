@@ -17,7 +17,7 @@ class LakeStagedCommitSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshRoot(tag: String): String = {
-    val r = s"/root/repo/target/test_staged_$tag"
+    val r = TestScratch(s"test_staged_$tag")
     val p = new org.apache.hadoop.fs.Path(r)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(p, true)

@@ -309,7 +309,7 @@ class NearDupSpec extends SparkSpec {
         (200L -> (base.filter($"doc_id" === 149L)
           .select("text").as[String].head() + " extra"))
       val probe = probeRows.toDF("doc_id", "text")
-      val root = "/root/repo/target/test-scratch/neardup_index_sigdf"
+      val root = TestScratch("neardup_index_sigdf")
       val hp = new org.apache.hadoop.fs.Path(root)
       hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .delete(hp, true)
@@ -342,7 +342,7 @@ class NearDupSpec extends SparkSpec {
       e.getMessage should include("pinned")
       // pre-r14 params JSON (no sigMaxDf key) parses as 0
       val legacyRoot =
-        "/root/repo/target/test-scratch/neardup_index_legacy"
+        TestScratch("neardup_index_legacy")
       val lp = new org.apache.hadoop.fs.Path(legacyRoot)
       lp.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .delete(lp, true)
@@ -366,7 +366,7 @@ class NearDupSpec extends SparkSpec {
       val probe = ((200L until 240L).map(mk) :+ (300L -> nearDup))
         .toDF("doc_id", "text")
       val root =
-        "/root/repo/target/test-scratch/neardup_index_portable"
+        TestScratch("neardup_index_portable")
       val hp = new org.apache.hadoop.fs.Path(root)
       hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .delete(hp, true)
@@ -415,7 +415,7 @@ class NearDupSpec extends SparkSpec {
       val probe = Seq(500L -> spamText, 501L -> nearDup)
         .toDF("doc_id", "text")
       val root =
-        "/root/repo/target/test-scratch/neardup_index_maxbucket"
+        TestScratch("neardup_index_maxbucket")
       val hp = new org.apache.hadoop.fs.Path(root)
       hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .delete(hp, true)
@@ -453,7 +453,7 @@ class NearDupSpec extends SparkSpec {
       val probe = ((300L until 330L).map(mk) ++
         Seq(400L -> spamText, 401L -> nearDup)).toDF("doc_id", "text")
       val root =
-        "/root/repo/target/test-scratch/neardup_index_bcast"
+        TestScratch("neardup_index_bcast")
       val hp = new org.apache.hadoop.fs.Path(root)
       hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .delete(hp, true)
@@ -509,7 +509,7 @@ class NearDupSpec extends SparkSpec {
       val real = (100L until 110L).map(i =>
         (i, s"alpha$i beta$i gamma$i delta$i epsilon$i zeta$i"))
       val base = (boiler ++ real).toDF("doc_id", "text")
-      val root = "/root/repo/target/test-scratch/neardup_fullban"
+      val root = TestScratch("neardup_fullban")
       val hp = new org.apache.hadoop.fs.Path(root)
       hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .delete(hp, true)
@@ -560,7 +560,7 @@ class NearDupSpec extends SparkSpec {
       val docs = Tables.documents(spark, sf)
       val base = docs.filter(pmod($"doc_id", lit(10)) =!= 0)
       val probe = docs.filter(pmod($"doc_id", lit(10)) === 0)
-      val root = "/root/repo/target/test-scratch/neardup_index"
+      val root = TestScratch("neardup_index")
       val p = new org.apache.hadoop.fs.Path(root)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .delete(p, true)
@@ -590,7 +590,7 @@ class NearDupSpec extends SparkSpec {
       import graft.sources.{CatalogCommitStore, CommitCatalog}
       import org.apache.spark.sql.{functions => F}
       val docs = Tables.documents(spark, sf).limit(60)
-      val root = "/root/repo/target/test-scratch/neardup_catalog"
+      val root = TestScratch("neardup_catalog")
       val p = new org.apache.hadoop.fs.Path(root)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .delete(p, true)
@@ -621,7 +621,7 @@ class NearDupSpec extends SparkSpec {
       // commits — the ingestWithIndexSink retry path routes through
       // exists()==true into append(), which must complete the build
       // instead of throwing 'no commits' forever
-      val root = "/root/repo/target/test-scratch/neardup_crashed"
+      val root = TestScratch("neardup_crashed")
       val fs = new org.apache.hadoop.fs.Path(root)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(root), true)
@@ -646,7 +646,7 @@ class NearDupSpec extends SparkSpec {
       // the OTHER build-crash window: sh overwrite landed, the first
       // bands commit never did — repair must band the whole sh table
       // instead of throwing 'no commits' forever
-      val root = "/root/repo/target/test-scratch/neardup_nobands"
+      val root = TestScratch("neardup_nobands")
       val fs = new org.apache.hadoop.fs.Path(root)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(root), true)
@@ -672,7 +672,7 @@ class NearDupSpec extends SparkSpec {
       val docs = Tables.documents(spark, sf)
       val base = docs.filter(pmod($"doc_id", lit(10)) =!= 0)
       val batch = docs.filter(pmod($"doc_id", lit(10)) === 0).limit(20)
-      val root = "/root/repo/target/test-scratch/neardup_torn"
+      val root = TestScratch("neardup_torn")
       val p = new org.apache.hadoop.fs.Path(root)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .delete(p, true)
@@ -801,7 +801,7 @@ class NearDupSpec extends SparkSpec {
         (200L -> (base.filter($"doc_id" === 149L)
           .select("text").as[String].head() + " extra")))
         .toDF("doc_id", "text")
-      val root = "/root/repo/target/test-scratch/neardup_index_budget"
+      val root = TestScratch("neardup_index_budget")
       val hp = new org.apache.hadoop.fs.Path(root)
       hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .delete(hp, true)
@@ -823,7 +823,7 @@ class NearDupSpec extends SparkSpec {
         .select("id1", "id2").as[(Long, Long)].collect().toSet
       got should contain((149L, 200L))
       val twinRoot =
-        "/root/repo/target/test-scratch/neardup_index_budget_twin"
+        TestScratch("neardup_index_budget_twin")
       val tp = new org.apache.hadoop.fs.Path(twinRoot)
       tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .delete(tp, true)
@@ -849,7 +849,7 @@ class NearDupSpec extends SparkSpec {
           threshold = 0.5, sigMaxDf = 5, candidateBudget = budget)
       // legacy params (no candidateBudget key) parse as 0
       val legacyRoot =
-        "/root/repo/target/test-scratch/neardup_index_budget_legacy"
+        TestScratch("neardup_index_budget_legacy")
       val lp = new org.apache.hadoop.fs.Path(legacyRoot)
       lp.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .delete(lp, true)

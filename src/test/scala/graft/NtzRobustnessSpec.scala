@@ -21,7 +21,7 @@ import graft.sources.Tables
   */
 class NtzRobustnessSpec extends SparkSpec {
 
-  private val ntzDir = "/root/repo/target/test-scratch/ntz_sf"
+  private val ntzDir = TestScratch("ntz_sf")
 
   // events-family gates: every SparkEntry query that consumes events.ts
   private val tsQueries = Seq(

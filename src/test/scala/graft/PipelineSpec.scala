@@ -197,7 +197,7 @@ class PipelineSpec extends SparkSpec {
       r shouldBe ((0.0, false))
     }
     it("logTo appends runs to a persistent, partitioned audit table") {
-      val root = "/root/repo/target/test-scratch/dq_log"
+      val root = TestScratch("dq_log")
       val p = java.nio.file.Paths.get(root)
       if (java.nio.file.Files.exists(p)) {
         import scala.jdk.CollectionConverters._

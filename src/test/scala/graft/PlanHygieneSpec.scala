@@ -34,7 +34,7 @@ class PlanHygieneSpec extends SparkSpec {
 
   describe("partition pruning through the lake") {
     it("a date-filtered read scans only the matching partitions") {
-      val lake = "/root/repo/target/test-scratch/prune_lake"
+      val lake = TestScratch("prune_lake")
       Seq((1, "2024-01-01"), (2, "2024-01-02"), (3, "2024-01-03"))
         .toDF("id", "day")
         .write.mode("overwrite").partitionBy("day").parquet(lake)

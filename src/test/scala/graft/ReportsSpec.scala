@@ -75,7 +75,7 @@ class ReportsSpec extends SparkSpec {
         Reports.clusterProfilePng(profile.limit(0))
     }
     it("writes through the Hadoop FS and reads back identical") {
-      val dir = "/root/repo/target/test-scratch/reports_png"
+      val dir = TestScratch("reports_png")
       val p = Reports.writeClusterProfilePng(profile, dir, "consult")
       p should endWith("consult.png")
       Files.readAllBytes(Paths.get(

@@ -59,9 +59,9 @@ class StreamingSinkCrashSpec extends SparkSpec {
     it("a kill at any of the three per-batch commits is detectable " +
         "from the logs and converges on restart with no torn state") {
       implicit val sqlCtx = spark.sqlContext
-      val docsRoot = "/root/repo/target/test-scratch/crash_crawl_docs"
-      val idxRoot = "/root/repo/target/test-scratch/crash_crawl_idx"
-      val ck = "/root/repo/target/test-scratch/crash_crawl_ck"
+      val docsRoot = TestScratch("crash_crawl_docs")
+      val idxRoot = TestScratch("crash_crawl_idx")
+      val ck = TestScratch("crash_crawl_ck")
       wipe(docsRoot, idxRoot, ck)
       val store = new CrashingStore(HardlinkCommitStore)
       def doc(i: Long) = s"crash stream doc $i with private words " +
@@ -160,8 +160,8 @@ class StreamingSinkCrashSpec extends SparkSpec {
     it("a kill before the cells commit leaves staged orphans only; " +
         "the replayed batch lands exactly once") {
       implicit val sqlCtx = spark.sqlContext
-      val root = "/root/repo/target/test-scratch/crash_vec_idx"
-      val ck = "/root/repo/target/test-scratch/crash_vec_ck"
+      val root = TestScratch("crash_vec_idx")
+      val ck = TestScratch("crash_vec_ck")
       wipe(root, ck)
       val store = new CrashingStore(HardlinkCommitStore)
       val emb = graft.sources.Tables.embeddings(spark, sf)

@@ -92,8 +92,8 @@ class StreamingSpec extends SparkSpec {
 
   describe("EventsStream.read (file source)") {
     it("tails a parquet directory end-to-end into the hourly aggregation") {
-      val dir = "/root/repo/target/test-scratch/stream_in"
-      val ck = "/root/repo/target/test-scratch/stream_ck"
+      val dir = TestScratch("stream_in")
+      val ck = TestScratch("stream_ck")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ck))
       // first file lands before the stream starts
@@ -122,8 +122,8 @@ class StreamingSpec extends SparkSpec {
   describe("StreamingLake") {
     it("upserts partitions per micro-batch; replayed data does not duplicate") {
       implicit val sqlCtx = spark.sqlContext
-      val lake = "/root/repo/target/test-scratch/stream_lake"
-      val ck = "/root/repo/target/test-scratch/stream_lake_ck"
+      val lake = TestScratch("stream_lake")
+      val ck = TestScratch("stream_lake_ck")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(lake))
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ck))
       val in = MemoryStream[(Long, String, Double)]
@@ -147,8 +147,8 @@ class StreamingSpec extends SparkSpec {
   describe("StreamingLake atomic sink") {
     it("each micro-batch is one snapshot commit; replay stays exact") {
       implicit val sqlCtx = spark.sqlContext
-      val lake = "/root/repo/target/test-scratch/stream_lake_atomic"
-      val ck = "/root/repo/target/test-scratch/stream_lake_atomic_ck"
+      val lake = TestScratch("stream_lake_atomic")
+      val ck = TestScratch("stream_lake_atomic_ck")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(lake))
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ck))
       val in = MemoryStream[(Long, String, Double)]
@@ -175,8 +175,8 @@ class StreamingSpec extends SparkSpec {
     it("mergeSink upserts by key per micro-batch; last change per " +
         "key wins within a batch") {
       implicit val sqlCtx = spark.sqlContext
-      val lake = "/root/repo/target/test-scratch/stream_lake_merge"
-      val ck = "/root/repo/target/test-scratch/stream_lake_merge_ck"
+      val lake = TestScratch("stream_lake_merge")
+      val ck = TestScratch("stream_lake_merge_ck")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(lake))
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ck))
       val in = MemoryStream[(Long, Long, Double)]
@@ -207,9 +207,9 @@ class StreamingSpec extends SparkSpec {
         "keeps the stream flowing") {
       implicit val sqlCtx = spark.sqlContext
       import graft.sources.AtomicLake
-      val lake = "/root/repo/target/test-scratch/stream_lake_expect"
-      val q0 = "/root/repo/target/test-scratch/stream_lake_expect_q"
-      val ck = "/root/repo/target/test-scratch/stream_lake_expect_ck"
+      val lake = TestScratch("stream_lake_expect")
+      val q0 = TestScratch("stream_lake_expect_q")
+      val ck = TestScratch("stream_lake_expect_ck")
       Seq(lake, q0, ck).foreach(p =>
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
       AtomicLake.append(Seq((0L, 1.0)).toDF("id", "v"), lake)
@@ -231,7 +231,7 @@ class StreamingSpec extends SparkSpec {
     it("JSONL crawl ingest streams clean rows to the lake and garbage " +
         "to quarantine, across drops") {
       import graft.sources.{AtomicLake, JsonlIngest}
-      val base = "/root/repo/target/test-scratch/jsonl_stream"
+      val base = TestScratch("jsonl_stream")
       val (landing, lake, quar, ck) = (s"$base/in", s"$base/lake",
         s"$base/quar", s"$base/ck")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
@@ -271,8 +271,8 @@ class StreamingSpec extends SparkSpec {
       implicit val sqlCtx = spark.sqlContext
       import graft.sources.{AtomicLake, CatalogCommitStore, CommitCatalog}
       val store = new CatalogCommitStore(new CommitCatalog)
-      val lake = "/root/repo/target/test-scratch/stream_lake_catalog"
-      val ck = "/root/repo/target/test-scratch/stream_lake_catalog_ck"
+      val lake = TestScratch("stream_lake_catalog")
+      val ck = TestScratch("stream_lake_catalog_ck")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(lake))
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ck))
       val in = MemoryStream[(Long, String, Double)]
@@ -292,9 +292,9 @@ class StreamingSpec extends SparkSpec {
       implicit val sqlCtx = spark.sqlContext
       import graft.operators.NearDupIndex
       import graft.sources.AtomicLake
-      val docsRoot = "/root/repo/target/test-scratch/stream_crawl_docs"
-      val idxRoot = "/root/repo/target/test-scratch/stream_crawl_idx"
-      val ck = "/root/repo/target/test-scratch/stream_crawl_ck"
+      val docsRoot = TestScratch("stream_crawl_docs")
+      val idxRoot = TestScratch("stream_crawl_idx")
+      val ck = TestScratch("stream_crawl_ck")
       Seq(docsRoot, idxRoot, ck).foreach(d =>
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
       def doc(i: Long) = s"stream document number $i carrying distinct " +

@@ -12,7 +12,7 @@ class VectorIndexSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshRoot(name: String): String = {
-    val root = s"/root/repo/target/test-scratch/vecidx_$name"
+    val root = TestScratch(s"vecidx_$name")
     val p = new org.apache.hadoop.fs.Path(root)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(p, true)

@@ -10,7 +10,7 @@ import graft.sources.WarcIngest
 class WarcIngestSpec extends SparkSpec {
   import spark.implicits._
 
-  private val scratch = "/root/repo/target/test-scratch/warc_spec"
+  private val scratch = TestScratch("warc_spec")
 
   private def rawRecord(headers: Seq[(String, String)],
       payload: Array[Byte]): Array[Byte] = {
