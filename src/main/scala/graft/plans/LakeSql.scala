@@ -39,7 +39,8 @@ import graft.sources.AtomicLake
   *    copy-on-write row-level UPDATE
   *  - `MERGE INTO LAKE '<root>' USING <view|(query)> ON <keys>
   *    WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *`
-  *    — keyed copy-on-write upsert (G26)
+  *    — keyed merge-on-read upsert (G26): deletion vector plus
+  *    staged source rows in one commit
   *
   * Implemented as a delegating [[ParserInterface]]: statements
   * matching the grammar become `LeafRunnableCommand`s over the
@@ -416,10 +417,13 @@ case class UpdateLakeCommand(root: String, sets: String,
   * was the one mutation without one. The source is a registered
   * temp view/table name or a parenthesized query (planned by the
   * session's normal parser at run time). Only the upsert-all clause
-  * pair is accepted — that is the semantics the keyed copy-on-write
-  * merge implements; richer Delta clause shapes are refused at parse
-  * time with the grammar named, never silently approximated. Returns
-  * (version, rows_matched, files_rewritten).
+  * pair is accepted — that is the semantics the keyed merge-on-read
+  * merge implements (matched rows deleted through a deletion vector,
+  * source rows staged as new files, one commit); richer Delta clause
+  * shapes are refused at parse time with the grammar named, never
+  * silently approximated. Returns (version, rows_matched,
+  * files_rewritten); files_rewritten is 0, since [[AtomicLake.compact]]
+  * and REORG … APPLY PURGE pay the rewrite later.
   */
 case class MergeIntoLakeCommand(root: String, source: String,
     keyCols: Seq[String]) extends LeafRunnableCommand {

@@ -546,8 +546,9 @@ object BronzeQueries {
     // G25b — row-level DELETE as DELETION VECTORS (merge-on-read): two
     // chained dv commits mark positions in sidecars — no data file is
     // rewritten — and the read drops them; the aggregate equals the
-    // doubly-NOT-filtered source. Chained vectors, the position
-    // anti-join, and rowCount's subtraction all sit under this gate.
+    // doubly-NOT-filtered source. Chained vectors, the driver-held
+    // position predicate, and rowCount's subtraction all sit under
+    // this gate.
     "lake_delete_dv" -> { (s, dir) =>
       val scratch = clonedOrdersLake(s, dir, "delete_dv")
       graft.sources.AtomicLake.deleteWhereDV(s, scratch)(
@@ -586,22 +587,24 @@ object BronzeQueries {
           exactSum(col("o_totalprice")).as("sum_price"))
     },
 
-    // G26 — keyed MERGE (upsert), copy-on-write: every 50th order key
-    // gets an updated row (price doubled) and a shifted-key sibling
-    // gets inserted; the merged lake is aggregated by month. The
-    // oracle rebuilds the same table relationally (CASE for updates,
-    // UNION ALL for inserts), so double-applied updates, dropped
-    // unmatched rows, or lost inserts all hash-mismatch.
+    // G26 — keyed MERGE (upsert), merge-on-read: every 5th order key
+    // of a three-month window gets an updated row (price doubled) and
+    // a shifted-key sibling gets inserted; the merged lake is
+    // aggregated by month. The oracle rebuilds the same table
+    // relationally (CASE for updates, UNION ALL for inserts), so
+    // double-applied updates, dropped unmatched rows, lost inserts, or
+    // a deletion vector that misses or over-reaches all hash-mismatch.
     "lake_merge_upsert" -> { (s, dir) =>
-      // merge into a SHALLOW CLONE of the shared base (zero-copy)
+      // merge into a SHALLOW CLONE of the shared base (zero-copy): the
+      // deletion vector and the staged source land under the clone
       val scratch = clonedOrdersLake(s, dir, "merge_upsert")
       val orders = graft.sources.AtomicLake.read(s, scratch)
       // a date-localized change set: its keys live only in the
-      // in-range months' files, so the merge's semi-join marks just
-      // those dirty and the rewrite is bounded — the incremental-
-      // correction shape (keys are NOT date-correlated here, so the
-      // key-bounds zone-map cut stays wide and the semi-join does the
-      // real scoping; the candidate pass reads the key column only)
+      // in-range months' files, so the merge's semi-join deletes rows
+      // in just those files — the incremental-correction shape (keys
+      // are NOT date-correlated here, so the key-bounds zone-map cut
+      // stays wide and the semi-join does the real scoping; the
+      // candidate pass reads the key column only)
       val hit = orders.filter(col("o_orderkey") % 5 === 0 &&
         col("o_orderdate") >=
           lit("1995-03-01 00:00:00").cast("timestamp") &&

@@ -78,12 +78,13 @@ object AtomicLake {
       // before the header existed. Informational + timestampAsOf
       // resolution — never part of correctness
       ts: Option[Long] = None,
-      // deletion vectors (merge-on-read DELETE): file -> its chain of
-      // position-sidecar paths + total deleted-row count. A file with
-      // an entry here still holds its original bytes; readers drop
-      // the listed row positions ([[readFileSubset]]). Absent for
-      // files with no row-level deletes; cleared when the file is
-      // rewritten (COW delete/merge/compaction/[[purgeDeletes]])
+      // deletion vectors (merge-on-read DELETE and MERGE): file -> its
+      // chain of position-sidecar paths + total deleted-row count. A
+      // file with an entry here still holds its original bytes;
+      // readers drop the listed row positions ([[readFileSubset]]).
+      // Absent for files with no row-level deletes; cleared when the
+      // file is rewritten (COW delete/update, compaction,
+      // [[purgeDeletes]])
       dvs: Map[String, DvRef] = Map.empty,
       // per-file bloom indexes (file -> column -> sidecar ref): point
       // lookups on high-cardinality columns prune files a bloom
@@ -289,9 +290,9 @@ object AtomicLake {
     * sidecars (parquet dirs of (file, pos) rows, lake-root-relative —
     * absolute only when a shallow clone references the source's), the
     * file's deleted positions being the union across the chain
-    * (append-only — each [[deleteWhereDV]] adds one link; rewrites
-    * clear the whole chain); `n` is the total deleted-row count
-    * (drives [[rowCount]] without opening a sidecar).
+    * (append-only — each [[deleteWhereDV]] or [[merge]] adds one link;
+    * rewrites clear the whole chain); `n` is the total deleted-row
+    * count (drives [[rowCount]] without opening a sidecar).
     */
   final case class DvRef(paths: Seq[String], n: Long)
 
@@ -496,12 +497,11 @@ object AtomicLake {
     // window loses AQE for that window (harmless — plans stay
     // correct).
     val spark = batch.sparkSession
-    AqeScope.enter(spark)
-    try {
+    AqeScope(spark) {
       val writer = distributed.write.mode("overwrite")
       (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*)
        else writer).parquet(staging.toString)
-    } finally AqeScope.exit(spark)
+    }
     // move staged parquet into data/<partition>/<commit>-<file>
     val staged = {
       val w = Files.walk(staging)
@@ -1119,11 +1119,12 @@ object AtomicLake {
     filters.foldLeft(base)(_.filter(_))
   }
 
-  /** A copy-on-write rewrite's outcome: the committed version (the
-    * pre-rewrite version when nothing matched — no empty commit is
-    * ever written), how many target rows were removed (deleted, or
-    * replaced by their merge source row), and how many files were
-    * rewritten to do it.
+  /** A row-level write's outcome: the committed version (the
+    * pre-write version when nothing matched — no empty commit is ever
+    * written), how many target rows were removed (deleted, or replaced
+    * by their merge source row), and how many files were rewritten to
+    * do it (0 for the merge-on-read writes: [[deleteWhereDV]] and
+    * [[merge]]).
     */
   final case class Rewrite(version: Long, rowsChanged: Long,
       filesRewritten: Int)
@@ -1151,16 +1152,16 @@ object AtomicLake {
     }
   }
 
-  /** Re-derive-and-retry for copy-on-write rewrites: a rewrite that
-    * loses to a concurrent compaction/rewrite of one of its dirty
-    * files aborts with ConcurrentModificationException — correct, but
+  /** Re-derive-and-retry for row-level writes: a write that loses
+    * to a concurrent compaction/rewrite/deletion vector of a file it
+    * read aborts with ConcurrentModificationException — correct, but
     * the caller's remedy is always "re-run against the new snapshot",
-    * so deleteWhere/merge do it themselves (Delta's internal OCC
+    * so the row-level writes do it themselves (Delta's internal OCC
     * retry). Each attempt re-evaluates `op`, which re-reads the
-    * snapshot and re-derives the dirty set from scratch; the loser's
-    * staged files become orphans (vacuum reclaims). Bounded attempts:
-    * livelock under sustained compaction churn surfaces the real
-    * conflict instead of spinning.
+    * snapshot and re-derives its matches from scratch; the loser's
+    * staged files and sidecars become orphans (vacuum reclaims).
+    * Bounded attempts: livelock under sustained compaction churn
+    * surfaces the real conflict instead of spinning.
     */
   private def retryRewrite(op: => Rewrite): Rewrite = {
     var attempts = 0
@@ -1179,12 +1180,10 @@ object AtomicLake {
   }
 
   /** What a copy-on-write rewrite swaps: the `dirty` files, the `rows`
-    * staged in their place, the target rows it changed, and the schema
-    * the commit evolves by (merge's source; None keeps the table's).
+    * staged in their place, and the target rows it changed.
     */
   private final case class Swap(dirty: Seq[String], changed: Long,
-      rows: DataFrame,
-      schema: Option[org.apache.spark.sql.types.StructType] = None)
+      rows: DataFrame)
 
   /** The one copy-on-write row rewrite: `find` derives the swap from a
     * fresh snapshot (None: nothing to change — NO commit, so retries
@@ -1214,10 +1213,8 @@ object AtomicLake {
         }.filter(_._2.nonEmpty))
         val removed = sw.dirty.toSet
         val v = commit(root, snap.partitionCols, kind, store,
-            expectedBase = Some(snap), removeFiles = removed) { s =>
-          val next = s.swap(kept, removed = removed)
-          sw.schema.fold(next)(next.evolve)
-        }
+            expectedBase = Some(snap), removeFiles = removed)(
+          _.swap(kept, removed = removed))
         Rewrite(v, sw.changed, sw.dirty.size)
       }
     }
@@ -1279,6 +1276,43 @@ object AtomicLake {
           .filter(!coalesce(predicate, lit(false)))))
     }
 
+  /** The one matched-positions pass: the row positions, per file
+    * (manifest path -> positions), of the `candidates` rows that
+    * `matching` keeps — ONE scan collected to the driver (matched-row-
+    * count-sized, the memory bound every deletion vector read already
+    * has), its `_metadata` URIs translated back to manifest paths
+    * driver-side ([[toRelative]]). The scan is DV-aware, so rows an
+    * earlier vector deleted never match again and a file's chain of
+    * sidecars stays disjoint (`DvRef.n` is exact).
+    */
+  private def matchedPositions(spark: SparkSession, root: String,
+      snap: Snapshot, candidates: Seq[String])(
+      matching: DataFrame => DataFrame): Map[String, Array[Long]] =
+    if (candidates.isEmpty) Map.empty
+    else {
+      val byUri = matching(readFileSubsetPos(spark, root, candidates, snap))
+        .select("_graft_file", "_graft_pos").collect()
+        .groupMap(_.getString(0))(_.getLong(1))
+      val uris = byUri.keys.toSeq
+      toRelative(uris, candidates, root).zip(uris).map { case (f, u) =>
+        f -> byUri(u)
+      }.toMap
+    }
+
+  /** Write `positions` (manifest path -> newly deleted positions) as
+    * ONE sidecar from the driver and return the snapshot edit that
+    * chains it onto each of those files' deletion vectors.
+    */
+  private def deletionEdit(spark: SparkSession, root: String,
+      positions: Map[String, Array[Long]]): Snapshot => Snapshot = {
+    val dvRel = writeDv(root, positions,
+      spark.sparkContext.hadoopConfiguration)
+    s => s.copy(dvs = s.dvs ++ positions.map { case (f, ps) =>
+      f -> s.dvs.get(f).fold(DvRef(Seq(dvRel), ps.length.toLong))(old =>
+        DvRef(old.paths :+ dvRel, old.n + ps.length))
+    })
+  }
+
   /** Row-level DELETE as a deletion-vector (merge-on-read) commit —
     * the Delta/Iceberg "deletion vectors" mode: instead of rewriting
     * every file holding a matching row ([[deleteWhere]]'s
@@ -1290,14 +1324,13 @@ object AtomicLake {
     * (read/scan/time travel/SQL relation/CDC sides) drops the listed
     * positions via [[readFileSubset]].
     *
-    * The matched positions are computed through the DV-AWARE read, so
-    * already-deleted rows never re-match: each commit's sidecar holds
-    * only NEWLY deleted positions and a file's chain of sidecars is
-    * disjoint by construction (`DvRef.n` is exact). Repeated deletes
-    * extend the chain; read cost grows with total deleted positions,
-    * so the steady state wants [[purgeDeletes]] (materialize + drop)
-    * once vectors accumulate — write amplification moves to the
-    * MAINTENANCE job, exactly Delta's DV contract.
+    * One Spark job: the matched-positions pass ([[matchedPositions]])
+    * over the zone-map candidates; the tally, the sidecar write and
+    * the commit run on the driver. Repeated deletes extend the chain;
+    * read cost grows with total deleted positions, so the steady
+    * state wants [[purgeDeletes]] (materialize + drop) once vectors
+    * accumulate — write amplification moves to the MAINTENANCE job,
+    * exactly Delta's DV contract.
     *
     * Concurrency: the commit verifies (against the snapshot the
     * positions were derived from) that no touched file was replaced
@@ -1309,45 +1342,15 @@ object AtomicLake {
       store: CommitStore = HardlinkCommitStore)(
       predicate: Column): Rewrite =
     retryRewrite {
-      import org.apache.spark.sql.functions.{col, count, lit}
       val snap = latest(root, store)
-      val candidates = planFiles(root, snap, Seq(predicate))
-      // uri -> manifest path, so the sidecar stores the key every
-      // future reader translates back ([[dropDeleted]])
-      import spark.implicits._
-      val uriDf = candidates.map(f => metaUri(root, f) -> f)
-        .toDF("_uri", "file")
-      // ONE scan of the candidate files (pinned): matched positions are
-      // deleted-row-count-sized — the checkpoint feeds the tally and
-      // the sidecar write without re-scanning the data
-      lazy val matched = readFileSubsetPos(spark, root, candidates, snap)
-        .filter(predicate)
-        .select(metaUriNorm(col("_graft_file")).as("_uri"),
-          col("_graft_pos").as("pos"))
-        .join(org.apache.spark.sql.functions.broadcast(uriDf), Seq("_uri"))
-        .select(dvSchema.fieldNames.toSeq.map(col): _*)
-        .localCheckpoint()
-      val tally =
-        if (candidates.isEmpty) Array.empty[org.apache.spark.sql.Row]
-        else matched.groupBy(col("file")).agg(count(lit(1)).as("n"))
-          .collect()
-      if (tally.isEmpty) Rewrite(snap.version, 0L, 0)
-      else {
-        val dvRel = s"dv/dv-${java.util.UUID.randomUUID().toString}"
-        matched.write.parquet(Paths.get(root).resolve(dvRel).toString)
-        val newDvs = tally.map { r =>
-          val f = r.getString(0)
-          val n = r.getLong(1)
-          f -> (snap.dvs.get(f) match {
-            case Some(old) => DvRef(old.paths :+ dvRel, old.n + n)
-            case None => DvRef(Seq(dvRel), n)
-          })
-        }.toMap
-        val v = commit(root, snap.partitionCols, "dv", store,
-          expectedBase = Some(snap), dvFiles = newDvs.keySet)(s =>
-          s.copy(dvs = s.dvs ++ newDvs))
-        Rewrite(v, tally.map(_.getLong(1)).sum, 0)
-      }
+      val matched = matchedPositions(spark, root, snap,
+        planFiles(root, snap, Seq(predicate)))(_.filter(predicate))
+      if (matched.isEmpty) Rewrite(snap.version, 0L, 0)
+      else Rewrite(
+        commit(root, snap.partitionCols, "dv", store,
+          expectedBase = Some(snap), dvFiles = matched.keySet)(
+          deletionEdit(spark, root, matched)),
+        matched.valuesIterator.map(_.length.toLong).sum, 0)
     }
 
   /** Materialize every deletion vector: files carrying a dv are
@@ -1416,37 +1419,41 @@ object AtomicLake {
   }
 
   /** Keyed MERGE (upsert): WHEN MATCHED UPDATE SET * / WHEN NOT
-    * MATCHED INSERT * — the Delta `MERGE INTO` core, as copy-on-write
-    * delete-then-insert. The target rows whose key appears in
-    * `source` are replaced by their source row; source rows with new
-    * keys are inserted; every other target row — and every file
-    * without a matched key — is untouched.
+    * MATCHED INSERT * — the Delta `MERGE INTO` core, merge-on-read: the
+    * target rows whose key appears in `source` are deleted through a
+    * deletion vector and every source row stages as new files, both
+    * in ONE commit. No data file is rewritten; every other target row
+    * and every file without a matched key keeps its manifest line.
+    * [[compact]] and [[purgeDeletes]] pay the rewrite later, batched.
     *
-    * Work scoping mirrors [[deleteWhere]], with the candidate set cut
-    * TWICE before any rewrite: zone-maps prune files whose key range
-    * cannot overlap the source's [min, max] key bounds (one small agg
-    * on the source computes bounds, the duplicate-key check, and the
-    * row count together), then a key semi-join over the surviving
-    * candidates finds the files actually holding a matched key. A
-    * month-keyed merge into a 100-TB table reads that month's files
-    * and rewrites only those containing matches. The source is
-    * pinned once and feeds bounds, semi-join, and insert (one
-    * evaluation of an arbitrarily expensive upstream frame).
+    * Work scoping, in at most four Spark jobs: the source is pinned
+    * once and one small aggregate over it computes the row count, the
+    * duplicate-key check, the per-key [min, max] bounds and the CHECK
+    * validation; zone maps prune the files whose key range cannot
+    * overlap those bounds; one matched-positions pass (a key semi-join
+    * over the surviving candidates, [[matchedPositions]]) finds the
+    * rows to delete; the source stages. A month-keyed merge into a
+    * 100-TB table reads that month's files and writes one sidecar plus
+    * the source's own rows.
     *
     * Contract: source keys must be unique (refused loudly otherwise —
     * delete-then-insert would silently insert both copies where
     * Delta errors at match time); null source keys never match
     * (SQL join semantics) and insert as new rows. Source rows must
-    * carry the table's partition columns. Schema evolution applies:
-    * a source with a new column evolves the table exactly like an
-    * upsert; rewritten survivor rows read as null for it.
+    * carry the table's partition columns; a matched key may move
+    * partitions. Schema evolution applies: a source with a new column
+    * evolves the table exactly like an upsert; older rows read null
+    * for it. The commit aborts (and the bounded retry re-derives) when
+    * a concurrent commit changed a partition the merge read or stages
+    * into, or the deletion vector of a file it matched in.
     */
   def merge(spark: SparkSession, root: String, source: DataFrame,
       keyCols: Seq[String], filesPerPartition: Int = 1,
       store: CommitStore = HardlinkCommitStore): Rewrite = {
     import org.apache.spark.sql.functions._
     require(keyCols.nonEmpty, "merge needs at least one key column")
-    rewrite(root, store, filesPerPartition) { snap =>
+    retryRewrite {
+      val snap = latest(root, store)
       val missing = snap.partitionCols.filterNot(p =>
         source.columns.exists(_.equalsIgnoreCase(p)))
       require(missing.isEmpty,
@@ -1463,11 +1470,10 @@ object AtomicLake {
         .localCheckpoint(eager = false)
       // one job: row count, duplicate-key check, per-key bounds, AND
       // the CHECK-constraint validation (the source rows are the only
-      // NEW rows a merge introduces; dirty-file survivors were already
-      // in the table). The dup check covers only fully-keyed rows: a
-      // row with ANY null key field can never match a target row (SQL
-      // join semantics), so two of them are two legitimate inserts,
-      // not a duplicate key.
+      // NEW rows a merge introduces). The dup check covers only
+      // fully-keyed rows: a row with ANY null key field can never match
+      // a target row (SQL join semantics), so two of them are two
+      // legitimate inserts, not a duplicate key.
       val fullyKeyed = keyCols.map(col(_).isNotNull).reduce(_ && _)
       val boundsAggs = count(lit(1)).as("n") +:
         count(when(fullyKeyed, lit(1))).as("n_keyed") +:
@@ -1476,8 +1482,12 @@ object AtomicLake {
         (keyCols.flatMap(k =>
           Seq(min(col(k)).as(s"min_$k"), max(col(k)).as(s"max_$k"))) ++
           violationCounts(checks))
-      val b = src.agg(boundsAggs.head, boundsAggs.tail: _*).head()
-      if (b.getLong(0) == 0L) None
+      // AQE off ([[AqeScope]]): a one-row aggregate has no partitions
+      // to coalesce, and AQE would run each of its shuffle stages (the
+      // distinct-key count takes two) as a Spark job of its own
+      val b = AqeScope(spark)(
+        src.agg(boundsAggs.head, boundsAggs.tail: _*).head())
+      if (b.getLong(0) == 0L) Rewrite(snap.version, 0L, 0)
       else {
         refuseViolations(checks, b)
         require(b.getLong(2) == b.getLong(1),
@@ -1494,19 +1504,36 @@ object AtomicLake {
           else scala.util.Try(
             col(k) >= lit(lo) && col(k) <= lit(hi)).toOption
         }
+        val candidates = planFiles(root, snap, bounds)
+        // the staging write needs only the pinned source, so it runs on
+        // its own thread beside the matched-positions pass: the two
+        // jobs' dispatch floors overlap. A per-call thread inherits the
+        // caller's Spark local properties (job group, execution id).
+        import scala.concurrent.{Await, ExecutionContext, Future}
+        import scala.concurrent.duration.Duration
+        val stager = java.util.concurrent.Executors.newSingleThreadExecutor()
+        val staging = Future(stageFiles(src, root, snap.partitionCols,
+          filesPerPartition, colMap = snap.colMap))(
+          ExecutionContext.fromExecutor(stager))
+        stager.shutdown()
         // no distinct: the dup check above PROVED fully-keyed source
-        // keys unique, and null-keyed rows match nothing in either join
-        val srcKeys = src.select(keyCols.map(col): _*)
-        val (dirty, matched) = dirtyFiles(spark, root, snap,
-          planFiles(root, snap, bounds))(_.join(srcKeys, keyCols, "left_semi"))
-        // survivors of dirty files (unmatched keys) + every source row,
-        // staged together so the swap is ONE atomic commit
-        val survivors =
-          if (dirty.isEmpty) src
-          else readFileSubset(spark, root, dirty, snap)
-            .join(srcKeys, keyCols, "left_anti")
-            .unionByName(src, allowMissingColumns = true)
-        Some(Swap(dirty, matched, survivors, Some(src.schema)))
+        // keys unique, and null-keyed rows match nothing in the join
+        val matched =
+          try matchedPositions(spark, root, snap, candidates)(
+            _.join(src.select(keyCols.map(col): _*), keyCols, "left_semi"))
+          finally Await.ready(staging, Duration.Inf)
+        val staged = Await.result(staging, Duration.Inf)
+        val delete =
+          if (matched.isEmpty) identity[Snapshot] _
+          else deletionEdit(spark, root, matched)
+        val read = candidates.toSet
+        val v = commit(root, snap.partitionCols, store = store,
+            expectedBase = Some(snap), dvFiles = matched.keySet,
+            touched = snap.files.collect {
+              case (p, fs) if fs.exists(read) => p
+            }.toSet ++ staged.keySet)(s =>
+          delete(s.swap(staged)).evolve(src.schema))
+        Rewrite(v, matched.valuesIterator.map(_.length.toLong).sum, 0)
       }
     }
   }
@@ -1661,8 +1688,8 @@ object AtomicLake {
     * size. The clone is immediately a first-class lake: reads resolve
     * the referenced files (per-data-plane basePath groups), zone-map
     * stats carry over so pruned scans prune identically, and every
-    * mutation — upsert, append, deleteWhere, merge, compact — is
-    * copy-on-write INTO THE CLONE's own data dir: the source is never
+    * mutation — upsert, append, deleteWhere, merge, compact — writes
+    * INTO THE CLONE's own data and dv dirs: the source is never
     * touched, which is exactly the dev/test-sandbox workflow (mutate
     * a 100-TB table's clone without copying 100 TB; compaction
     * incidentally materializes the partitions it rewrites).
@@ -1686,7 +1713,7 @@ object AtomicLake {
       // column mapping (name-to-name: carried verbatim), tombstones and
       // generated columns. Files, zone maps, deletion vectors and bloom
       // refs key by ABSOLUTE path; dv and bloom sidecars resolve into
-      // the source lake (zero-copy, like the data files). dropDeleted's
+      // the source lake (zero-copy, like the data files). dvPositions'
       // and the bloom probe's translations still match source-written
       // sidecar content (stored source-relative) via the derived-
       // relative form.
@@ -1719,20 +1746,14 @@ object AtomicLake {
     ((tf -- ff).toSeq.sorted, (ff -- tf).toSeq.sorted, from, to)
   }
 
-  /** The canonical single-slash URI form for joining against
-    * `_metadata.file_path` (which Hadoop reports as "file:/x/y" where
-    * `Path.toUri` says "file:///x/y"). Data-side values normalize to
-    * this form with [[metaUriNorm]].
+  /** The URI `_metadata.file_path` reports for manifest entry `f`:
+    * the Hadoop path's URI, single-slash and percent-encoded ("a b" ->
+    * "a%20b", "c%25d" -> "c%2525d"), where java.nio's `toUri` says
+    * "file:///x/y".
     */
   private def metaUri(root: String, f: String): String =
-    "file:" + Paths.get(root).resolve(f).normalize().toString
-
-  /** Normalize a `_metadata.file_path` column to [[metaUri]]'s form
-    * (idempotent: single-slash values pass through).
-    */
-  private def metaUriNorm(c: Column): Column =
-    org.apache.spark.sql.functions.regexp_replace(c,
-      "^file:///", "file:/")
+    new org.apache.hadoop.fs.Path("file", null,
+      Paths.get(root).resolve(f).normalize().toString).toUri.toString
 
   /** The data-plane base a manifest file entry reads under: local
     * (relative) entries live under THIS root's `data/`; absolute
@@ -1774,17 +1795,20 @@ object AtomicLake {
       keep = Seq("_graft_file", "_graft_pos"))
 
   /** The one physical read: per-data-plane parquet groups under the
-    * snapshot's schema, deletion vectors applied (files with a dv
-    * entry lose their deleted positions via a position anti-join —
-    * the dv side is deleted-row-count-sized and broadcasts), then the
-    * helper columns not in `keep` dropped. The metadata column must
-    * be materialized PER GROUP: `_metadata` does not resolve above
-    * the union a mixed-data-plane (shallow-clone) read produces.
+    * snapshot's schema, deletion vectors applied (files with a vector
+    * lose their deleted positions through a predicate over each row's
+    * file and position, the positions read on the driver by
+    * [[dvPositions]] — no join, no job; files without one are read
+    * plain), then the helper columns not in `keep` dropped. The
+    * metadata column must be materialized PER GROUP: `_metadata` does
+    * not resolve above the union a mixed-data-plane (shallow-clone)
+    * read produces.
     */
   private def readSubset(spark: SparkSession, root: String,
       files: Seq[String], snap: Snapshot, keep: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val (dvd, plain) = files.sorted.partition(snap.dvs.contains)
+    val deleted = dvPositions(spark, root, files, snap)
+    val (dvd, plain) = files.sorted.partition(deleted.contains)
     def grouped(fs: Seq[String], meta: Boolean): DataFrame = {
       val groups = fs.groupBy(baseOf(root, _))
       // column mapping: files store PHYSICAL names — read under the
@@ -1816,8 +1840,8 @@ object AtomicLake {
         else grouped(plain, meta = false))
     val dvDf =
       if (dvd.isEmpty) None
-      else Some(trim(dropDeleted(spark, root,
-        grouped(dvd, meta = true), dvd, snap)))
+      else Some(trim(grouped(dvd, meta = true)
+        .filter(!atPositions(root, deleted))))
     (plainDf, dvDf) match {
       case (Some(a), Some(b)) => a.unionByName(b)
       case (Some(a), None) => a
@@ -1827,67 +1851,104 @@ object AtomicLake {
     }
   }
 
-  /** Anti-join away the positions listed in `dvd`'s deletion vectors.
-    * `df` must carry `_graft_file` (absolute file URI) and
-    * `_graft_pos`. Sidecars store the WRITING lake's manifest path
-    * per file, so the driver-built translation maps both this
-    * snapshot's manifest key and its source-relative form (a clone
-    * reads source-written sidecars whose keys are source-relative) to
-    * the URI the metadata column reports. The translation is
-    * dv'd-file-count-sized; the joined dv side is deleted-position-
-    * sized — both broadcast. When deletion vectors outgrow broadcast
-    * (a mass delete), [[purgeDeletes]] is the remedy: materialize and
-    * drop them.
+  /** Rows of a `_graft_file`/`_graft_pos`-tagged frame at `positions`
+    * (manifest path -> row positions in that file).
     */
-  private def dropDeleted(spark: SparkSession, root: String,
-      df: DataFrame, dvd: Seq[String], snap: Snapshot): DataFrame = {
-    import org.apache.spark.sql.functions.broadcast
-    val dv = dvPositions(spark, root, dvd, snap)
-    df.join(broadcast(dv),
-      metaUriNorm(df("_graft_file")) === dv("_dv_uri") &&
-        df("_graft_pos") === dv("_dv_pos"), "left_anti")
+  private def atPositions(root: String,
+      positions: Map[String, Array[Long]]): Column = {
+    import org.apache.spark.sql.functions.col
+    graft.expressions.AtPositions.column(col("_graft_file"),
+      col("_graft_pos"),
+      positions.map { case (f, ps) => metaUri(root, f) -> ps })
   }
 
-  /** A deletion-vector sidecar row: a data file's manifest key and
-    * one deleted row position in it. [[deleteWhereDV]] writes these
-    * columns and [[dvPositions]] reads under this schema, so a read
-    * never runs an inference job over a file the lake wrote itself.
+  /** The deletion-vector sidecar layout: one (file, pos) row per deleted
+    * row — the data file's manifest key and the row's position in it —
+    * in `dv/dv-<uuid>/part-*.parquet`. [[writeDv]] writes it and
+    * [[readDv]] reads it, both on the driver.
     */
-  private val dvSchema =
-    org.apache.spark.sql.types.StructType.fromDDL("file STRING, pos BIGINT")
+  private val dvSchema = org.apache.parquet.schema.MessageTypeParser
+    .parseMessageType("message spark_schema { " +
+      "optional binary file (STRING); optional int64 pos; }")
 
-  /** The deleted (file-URI, position) pairs `snap`'s deletion vectors
-    * record for `files` — an empty 2-column frame when none has one.
-    * Sidecars store the WRITING lake's manifest path per file, so the
-    * driver-built translation maps both this snapshot's manifest key
-    * and its source-relative form (a clone reads source-written
-    * sidecars whose keys are source-relative) to the URI the metadata
-    * column reports; the translation is file-count-sized and
-    * broadcasts.
+  /** Write `positions` (manifest key -> positions) as one new sidecar;
+    * returns its lake-relative dir. Unreferenced until a commit names
+    * it, so a crash mid-write leaves an orphan [[vacuum]] reclaims.
+    * Written through java.nio like the rest of the data plane's file
+    * moves: Hadoop's local-filesystem create costs ~12 ms a file.
+    */
+  private def writeDv(root: String, positions: Map[String, Array[Long]],
+      conf: org.apache.hadoop.conf.Configuration): String = {
+    val dvRel = s"dv/dv-${UUID.randomUUID()}"
+    val dir = Files.createDirectories(Paths.get(root, dvRel))
+    val out = new org.apache.parquet.io.LocalOutputFile(
+      dir.resolve("part-00000.parquet"))
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(out).withType(dvSchema).withConf(conf).build()
+    val rows =
+      new org.apache.parquet.example.data.simple.SimpleGroupFactory(dvSchema)
+    try for ((f, ps) <- positions.toSeq.sortBy(_._1); p <- ps.sorted)
+      w.write(rows.newGroup().append("file", f).append("pos", p))
+    finally w.close()
+    dvRel
+  }
+
+  /** One sidecar's positions, grouped by manifest key. */
+  private def readDv(root: String, dvRel: String,
+      conf: org.apache.hadoop.conf.Configuration)
+      : Map[String, Array[Long]] = {
+    val dir = Paths.get(root).resolve(dvRel)
+    val parts = {
+      val l = Files.list(dir)
+      try l.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.endsWith(".parquet") && !n.startsWith(".") &&
+          !n.startsWith("_")).toSeq.sorted
+      finally l.close()
+    }
+    val rows = Seq.newBuilder[(String, Long)]
+    for (part <- parts) {
+      val r = LakeStats.openParquet(conf,
+        new org.apache.hadoop.fs.Path(dir.resolve(part).toString))
+      try {
+        val schema = r.getFooter.getFileMetaData.getSchema
+        val io = new org.apache.parquet.io.ColumnIOFactory().getColumnIO(schema)
+        Iterator.continually(r.readNextRowGroup()).takeWhile(_ != null)
+          .foreach { rg =>
+            val rec = io.getRecordReader(rg, new org.apache.parquet.example
+              .data.simple.convert.GroupRecordConverter(schema))
+            for (_ <- 0L until rg.getRowCount) {
+              val g = rec.read()
+              rows += g.getString("file", 0) -> g.getLong("pos", 0)
+            }
+          }
+      } finally r.close()
+    }
+    rows.result().groupMap(_._1)(_._2).map { case (k, ps) => k -> ps.toArray }
+  }
+
+  /** The deleted positions `snap`'s deletion vectors record for
+    * `files` (manifest path -> positions; files without a vector are
+    * absent), read on the driver straight from the sidecars — no Spark
+    * job. A sidecar keys each row by the WRITING lake's manifest path,
+    * so a shallow clone's absolute entry also matches its
+    * source-relative form (source-written sidecars keep those keys).
     */
   private def dvPositions(spark: SparkSession, root: String,
-      files: Seq[String], snap: Snapshot): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col}
-    import spark.implicits._
+      files: Seq[String], snap: Snapshot): Map[String, Array[Long]] = {
     val dvd = files.filter(snap.dvs.contains)
-    if (dvd.isEmpty)
-      return Seq.empty[(String, Long)].toDF("_dv_uri", "_dv_pos")
-    val sidecars = dvd.flatMap(f => snap.dvs(f).paths).distinct
-      .map(p => Paths.get(root).resolve(p).toString)
-    val trans: Seq[(String, String)] = dvd.flatMap { f =>
-      val uri = metaUri(root, f)
-      val alts =
+    val conf = spark.sparkContext.hadoopConfiguration
+    val sidecars = dvd.flatMap(snap.dvs(_).paths).distinct
+      .map(p => p -> readDv(root, p, conf)).toMap
+    dvd.map { f =>
+      val keys =
         if (!Paths.get(f).isAbsolute) Seq(f)
         else {
           val i = f.lastIndexOf("/data/")
           Seq(f) ++ (if (i >= 0) Seq(f.substring(i + 1)) else Nil)
         }
-      alts.map(_ -> uri)
-    }
-    val transDf = trans.toDF("_dv_key", "_dv_uri")
-    spark.read.schema(dvSchema).parquet(sidecars: _*)
-      .join(broadcast(transDf), col("file") === col("_dv_key"))
-      .select(col("_dv_uri"), col("pos").as("_dv_pos"))
+      f -> snap.dvs(f).paths.flatMap(p => keys.flatMap(sidecars(p).get))
+        .flatten.toArray
+    }.toMap
   }
 
   /** The committed snapshot's metadata at a version (files, schema,
@@ -1939,32 +2000,33 @@ object AtomicLake {
     // deletion-vector diff: files PRESENT IN BOTH manifests whose dv
     // state changed carry row-level changes the file diff can't see.
     // Positions in to-but-not-from are delete images (a deleteWhereDV
-    // between the versions); from-but-not-to are re-inserts (a
-    // restore that rolled a vector back). Only the changed files are
-    // opened, and each side reads under ITS snapshot's dv state so
-    // the images are exactly the rows that appeared/vanished.
+    // or merge between the versions); from-but-not-to are re-inserts
+    // (a restore that rolled a vector back). The position sets diff on
+    // the driver; only files with a changed position are opened, each
+    // side under the snapshot the rows are live in.
     val commonChanged = {
       val ff = from.files.values.flatten.toSet
       to.files.values.flatten.filter(f =>
         ff(f) && from.dvs.get(f) != to.dvs.get(f)).toSeq.sorted
     }
-    def dvSide(minus: (DataFrame, DataFrame) => DataFrame,
-        readSnap: Snapshot, tag: String): Option[DataFrame] =
-      if (commonChanged.isEmpty) None
-      else {
-        import org.apache.spark.sql.functions.{col, lit}
-        val fromPos = dvPositions(spark, root, commonChanged, from)
-        val toPos = dvPositions(spark, root, commonChanged, to)
-        val pos = minus(toPos, fromPos)
-        val rows = readFileSubsetPos(spark, root, commonChanged, readSnap)
-          .join(pos, metaUriNorm(col("_graft_file")) === col("_dv_uri") &&
-            col("_graft_pos") === col("_dv_pos"), "left_semi")
-          .drop("_graft_file", "_graft_pos")
-          .withColumn("_change_type", lit(tag))
-        Some(rows)
-      }
-    val dvDeleted = dvSide((t, f) => t.except(f), from, "delete")
-    val dvReinserted = dvSide((t, f) => f.except(t), to, "insert")
+    val fromPos = dvPositions(spark, root, commonChanged, from)
+    val toPos = dvPositions(spark, root, commonChanged, to)
+    // the rows `dels` deletes and `base` does not, read under `snap`
+    def dvSide(dels: Map[String, Array[Long]],
+        base: Map[String, Array[Long]], snap: Snapshot,
+        tag: String): Option[DataFrame] = {
+      val diff = dels.map { case (f, ps) =>
+        val old = base.getOrElse(f, Array.empty[Long]).toSet
+        f -> ps.filterNot(old)
+      }.filter(_._2.nonEmpty)
+      if (diff.isEmpty) None
+      else Some(readFileSubsetPos(spark, root, diff.keys.toSeq.sorted, snap)
+        .filter(atPositions(root, diff))
+        .drop("_graft_file", "_graft_pos")
+        .withColumn("_change_type", org.apache.spark.sql.functions.lit(tag)))
+    }
+    val dvDeleted = dvSide(toPos, fromPos, from, "delete")
+    val dvReinserted = dvSide(fromPos, toPos, to, "insert")
     val parts = Seq(inserted, deleted, dvDeleted, dvReinserted).flatten
     if (parts.isEmpty) // no file or dv changed between the versions
       readSnapshot(spark, root, to).limit(0)
@@ -2286,9 +2348,10 @@ object AtomicLake {
     }
 }
 
-/** Refcounted per-session conf scope for the lake's staging writes:
-  * the FIRST enter records each key's original setting and forces the
-  * staging values; the LAST exit restores the originals. Plain
+/** Refcounted per-session conf scope for the lake's staging writes
+  * and merge's bounds aggregate: the FIRST enter records each key's
+  * original setting and forces the scope's values; the LAST exit
+  * restores the originals. Plain
   * save/restore is not reentrant — with two concurrent
   * [[AtomicLake.stageFiles]] writers on one session, the second would
   * capture the first's temporary values as the ones to restore,
@@ -2323,6 +2386,12 @@ private[graft] object AqeScope {
         Forced.foreach { case (k, v) => spark.conf.set(k, v) }
       case (n, original) => depth.put(spark, (n + 1, original))
     }
+  }
+
+  /** `body` inside the scope. */
+  def apply[A](spark: SparkSession)(body: => A): A = {
+    enter(spark)
+    try body finally exit(spark)
   }
 
   def exit(spark: SparkSession): Unit = depth.synchronized {

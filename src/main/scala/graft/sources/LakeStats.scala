@@ -96,6 +96,16 @@ object LakeStats {
     case _ => None
   }
 
+  /** `file` opened for footer and row-group reads under `conf`. The
+    * one-argument `ParquetFileReader.open` takes its read options from
+    * a fresh Hadoop Configuration, whose first lookup parses the
+    * default resources again (~15 ms a file); `conf` has them loaded.
+    */
+  private[graft] def openParquet(conf: Configuration,
+      file: org.apache.hadoop.fs.Path): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(file, conf),
+      org.apache.parquet.HadoopReadOptions.builder(conf).build())
+
   /** Read one staged parquet file's footer and fold its row-group
     * statistics into per-column file-level bounds. Columns whose
     * physical/logical type can't be mapped safely (INT96 timestamps,
@@ -110,7 +120,7 @@ object LakeStats {
         .flatMap(f => domainOf(f.dataType).map(d =>
           f.name.toLowerCase(java.util.Locale.ROOT) -> d))
         .take(MaxStatsCols).toMap
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+      val reader = openParquet(conf, file)
       try {
         val blocks = reader.getFooter.getBlocks.asScala.toSeq
         val rows = blocks.map(_.getRowCount).sum

@@ -82,6 +82,23 @@ class LakeDvSpec extends SparkSpec {
         .collect().toSet shouldBe (1 to 100).filter(_ % 2 == 1).toSet
     }
 
+    it("vectors apply where the root and partition dirs URI-encode") {
+      // `_metadata.file_path` percent-encodes: "a b" -> a%20b, and a
+      // partition dir Spark escaped to "c%25d" -> c%2525d
+      val root = freshRoot("dv odd %20 root")
+      AtomicLake.upsertPartitions(Seq((1, "a b"), (2, "a b"), (3, "c%d"),
+        (4, "c%d")).toDF("id", "part"), root, Seq("part"))
+      AtomicLake.deleteWhereDV(spark, root)($"id".isin(1, 3))
+        .rowsChanged shouldBe 2
+      AtomicLake.read(spark, root).select("id").as[Int].collect()
+        .sorted shouldBe Array(2, 4)
+      AtomicLake.merge(spark, root,
+        Seq((2, "a b"), (4, "c%d")).toDF("id", "part"), Seq("id"))
+        .rowsChanged shouldBe 2
+      AtomicLake.read(spark, root).select("id").as[Int].collect()
+        .sorted shouldBe Array(2, 4)
+    }
+
     it("zero matches commit nothing") {
       val root = freshRoot("dv_noop")
       seed(root)

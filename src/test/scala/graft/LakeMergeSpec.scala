@@ -5,10 +5,12 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.sources.AtomicLake
 
-/** Row-level DELETE and keyed MERGE as copy-on-write file rewrites:
+/** Row-level DELETE/UPDATE as copy-on-write file rewrites and keyed
+  * MERGE as merge-on-read (a deletion vector plus staged source rows):
   * correctness of the row semantics, and the scale contract that only
-  * files actually CONTAINING affected rows are rewritten — everything
-  * else keeps its manifest line (and its bytes) untouched.
+  * files actually CONTAINING affected rows are rewritten or gain a
+  * deletion vector — everything else keeps its manifest line (and its
+  * bytes) untouched.
   */
 class LakeMergeSpec extends SparkSpec {
   import spark.implicits._
@@ -25,6 +27,19 @@ class LakeMergeSpec extends SparkSpec {
 
   private def allFiles(root: String): Set[String] =
     AtomicLake.currentSnapshot(root).get.files.values.flatten.toSet
+
+  private def dvFiles(root: String): Set[String] =
+    AtomicLake.currentSnapshot(root).get.dvs.keySet
+
+  /** `body` with data file `f` moved out of the lake: any read of it
+    * fails, so a `body` that succeeds never opened it.
+    */
+  private def hidden[A](root: String, f: String)(body: => A): A = {
+    val at = Paths.get(root).resolve(f)
+    val away = Paths.get(scratch, "hidden.parquet")
+    Files.move(at, away)
+    try body finally Files.move(away, at)
+  }
 
   describe("updateWhere") {
     import org.apache.spark.sql.functions.{col, lit}
@@ -216,20 +231,24 @@ class LakeMergeSpec extends SparkSpec {
         .as[(Int, Double)].collect().toSet shouldBe
         Set((1, 10.0), (2, 99.0), (3, 30.0), (4, 40.0))
     }
-    it("rewrites only files holding a matched key") {
+    it("deletion-vectors only files holding a matched key") {
       val root = freshRoot("mrg_cow")
       AtomicLake.upsertPartitions(
         (1 to 30).map(i => (i, 1.0, s"p${i % 3}"))
           .toDF("k", "v", "part"), root, Seq("part"))
       val before = allFiles(root)
+      val p0 = AtomicLake.currentSnapshot(root).get.files("part=p0").toSet
       // keys 3 and 6 both live in partition p0's single file
       val src = Seq((3, 9.0, "p0"), (6, 9.0, "p0"), (100, 9.0, "p1"))
         .toDF("k", "v", "part")
       val r = AtomicLake.merge(spark, root, src, Seq("k"))
       r.rowsChanged shouldBe 2
-      r.filesRewritten shouldBe 1
-      // p2's file untouched; p1 gains the insert but keeps its file
-      (before & allFiles(root)).size shouldBe 2
+      r.filesRewritten shouldBe 0
+      // no data file removed; exactly p0's file gains a vector (p1
+      // gains the insert's file but no vector, p2 is untouched)
+      before.subsetOf(allFiles(root)) shouldBe true
+      dvFiles(root) shouldBe p0
+      AtomicLake.currentSnapshot(root).get.dvs(p0.head).n shouldBe 2
       AtomicLake.read(spark, root).count() shouldBe 31
       AtomicLake.read(spark, root).filter($"v" === 9.0)
         .count() shouldBe 3
@@ -237,25 +256,39 @@ class LakeMergeSpec extends SparkSpec {
     it("zone-map key bounds prune files outside the source's range") {
       val root = freshRoot("mrg_zm")
       AtomicLake.append((1 to 10).map(i => (i, 0.0)).toDF("k", "v"), root)
+      val low = allFiles(root)
       AtomicLake.append((11 to 20).map(i => (i, 0.0)).toDF("k", "v"), root)
       val before = allFiles(root)
-      val r = AtomicLake.merge(spark, root,
-        Seq((12, 5.0)).toDF("k", "v"), Seq("k"))
-      r.filesRewritten shouldBe 1
-      (before & allFiles(root)).size shouldBe 1
+      // the 1-10 file is out of the bounds [12, 12]: the merge must
+      // neither read it (it is moved away meanwhile) nor mark it
+      val r = hidden(root, low.head)(AtomicLake.merge(spark, root,
+        Seq((12, 5.0)).toDF("k", "v"), Seq("k")))
+      r.rowsChanged shouldBe 1
+      r.filesRewritten shouldBe 0
+      before.subsetOf(allFiles(root)) shouldBe true
+      dvFiles(root) shouldBe (before -- low)
       AtomicLake.read(spark, root).filter($"v" === 5.0)
         .count() shouldBe 1
+      AtomicLake.read(spark, root).select("k").as[Int].collect()
+        .sorted shouldBe (1 to 20).toArray
     }
     it("a matched key moving partitions lands in its new partition") {
       val root = freshRoot("mrg_move")
       AtomicLake.upsertPartitions(
         Seq((1, 1.0, "a"), (2, 2.0, "b")).toDF("k", "v", "part"),
         root, Seq("part"))
+      val before = AtomicLake.currentSnapshot(root).get.files
       AtomicLake.merge(spark, root,
         Seq((1, 9.0, "b")).toDF("k", "v", "part"), Seq("k"))
       AtomicLake.read(spark, root).select("k", "v", "part")
         .as[(Int, Double, String)].collect().toSet shouldBe
         Set((1, 9.0, "b"), (2, 2.0, "b"))
+      // the old row is deleted in place in partition a; the new one is
+      // a staged file of partition b
+      val after = AtomicLake.currentSnapshot(root).get
+      after.files("part=a") shouldBe before("part=a")
+      after.dvs.keySet shouldBe before("part=a").toSet
+      after.files("part=b").size shouldBe 2
     }
     it("refuses duplicate source keys loudly") {
       val root = freshRoot("mrg_dup")
@@ -302,6 +335,7 @@ class LakeMergeSpec extends SparkSpec {
       // same key range in both files — zone maps alone can't split
       // them; the semi-join must find the actually-dirty file
       AtomicLake.append(Seq((1, "x1"), (2, "x2")).toDF("k", "t"), root)
+      val first = allFiles(root)
       AtomicLake.append(Seq((3, "y1"), (4, "y2")).toDF("k", "t"), root)
       val before = allFiles(root)
       // wide bounds [1,4] keep both files as candidates, but only
@@ -309,8 +343,103 @@ class LakeMergeSpec extends SparkSpec {
       val r = AtomicLake.merge(spark, root,
         Seq((3, "z"), (4, "z")).toDF("k", "t"), Seq("k"))
       r.rowsChanged shouldBe 2
-      r.filesRewritten shouldBe 1
-      (before & allFiles(root)).size shouldBe 1
+      r.filesRewritten shouldBe 0
+      before.subsetOf(allFiles(root)) shouldBe true
+      dvFiles(root) shouldBe (before -- first)
+      AtomicLake.read(spark, root).select("k", "t").as[(Int, String)]
+        .collect().toSet shouldBe
+        Set((1, "x1"), (2, "x2"), (3, "z"), (4, "z"))
+    }
+  }
+
+  describe("merge on deletion vectors") {
+    def seeded(name: String): String = {
+      val root = freshRoot(name)
+      AtomicLake.upsertPartitions(
+        (1 to 12).map(i => (i, i * 1.0, s"p${i % 2}"))
+          .toDF("k", "v", "part"), root, Seq("part"))
+      root
+    }
+    def rows(root: String): Map[Int, Double] =
+      AtomicLake.read(spark, root).select("k", "v").as[(Int, Double)]
+        .collect().toMap
+
+    it("merge, then deleteWhereDV on overlapping keys") {
+      val root = seeded("mrg_then_dv")
+      val p0 = AtomicLake.currentSnapshot(root).get.files("part=p0")
+      AtomicLake.merge(spark, root,
+        Seq((2, 20.0, "p0"), (3, 30.0, "p1"), (101, 1.0, "p1"))
+          .toDF("k", "v", "part"), Seq("k")).rowsChanged shouldBe 2
+      // 2 and 101 now live in staged files, 4 in an original one
+      AtomicLake.deleteWhereDV(spark, root)($"k".isin(2, 4, 101))
+        .rowsChanged shouldBe 3
+      rows(root) shouldBe
+        ((1 to 12).map(i => i -> i * 1.0).toMap - 2 - 4 + (3 -> 30.0))
+      // p0's original file chains both vectors: key 2 (merge), key 4
+      val dv = AtomicLake.currentSnapshot(root).get.dvs(p0.head)
+      (dv.paths.size, dv.n) shouldBe ((2, 2L))
+      AtomicLake.rowCount(root) shouldBe Some(10L)
+    }
+
+    it("deleteWhereDV, then merge re-inserting a deleted key") {
+      val root = seeded("dv_then_mrg")
+      AtomicLake.deleteWhereDV(spark, root)($"k" === 5).rowsChanged shouldBe 1
+      val dvBefore = AtomicLake.currentSnapshot(root).get.dvs
+      // the deleted row is gone: the merge matches nothing, inserts
+      val r = AtomicLake.merge(spark, root,
+        Seq((5, 55.0, "p1")).toDF("k", "v", "part"), Seq("k"))
+      r.rowsChanged shouldBe 0
+      AtomicLake.currentSnapshot(root).get.dvs shouldBe dvBefore
+      rows(root) shouldBe (1 to 12).map(i => i -> i * 1.0).toMap +
+        (5 -> 55.0)
+      AtomicLake.read(spark, root).filter($"k" === 5).count() shouldBe 1
+    }
+
+    it("a key moving partitions is deleted where it was") {
+      val root = seeded("mrg_move_dv")
+      AtomicLake.merge(spark, root,
+        Seq((3, 33.0, "p0")).toDF("k", "v", "part"), Seq("k"))
+      AtomicLake.read(spark, root).filter($"k" === 3)
+        .select("v", "part").as[(Double, String)].collect() shouldBe
+        Array((33.0, "p0"))
+      val snap = AtomicLake.currentSnapshot(root).get
+      snap.dvs.keySet shouldBe snap.files("part=p1").toSet
+      AtomicLake.read(spark, root).count() shouldBe 12
+    }
+
+    it("merge on a shallow clone leaves the source lake untouched") {
+      val src = seeded("mrg_clone_src")
+      val dst = freshRoot("mrg_clone_dst")
+      AtomicLake.clone(src, dst)
+      val srcVersion = AtomicLake.currentVersion(src)
+      val srcManifest = AtomicLake.currentSnapshot(src).get
+      AtomicLake.merge(spark, dst,
+        Seq((1, 10.0, "p1"), (50, 5.0, "p0")).toDF("k", "v", "part"),
+        Seq("k")).rowsChanged shouldBe 1
+      rows(dst) shouldBe (1 to 12).map(i => i -> i * 1.0).toMap +
+        (1 -> 10.0) + (50 -> 5.0)
+      // the vector and the staged rows live under the clone
+      Files.isDirectory(Paths.get(dst, "dv")) shouldBe true
+      Files.exists(Paths.get(src, "dv")) shouldBe false
+      AtomicLake.currentVersion(src) shouldBe srcVersion
+      AtomicLake.currentSnapshot(src).get shouldBe srcManifest
+      rows(src) shouldBe (1 to 12).map(i => i -> i * 1.0).toMap
+    }
+
+    it("CDC over a merge commit: delete images of exactly the matched " +
+        "rows, insert images of the source") {
+      val root = seeded("mrg_cdc")
+      val v0 = AtomicLake.currentVersion(root).get
+      val src = Seq((2, 20.0, "p0"), (7, 70.0, "p1"), (99, 9.0, "p1"))
+      val r = AtomicLake.merge(spark, root, src.toDF("k", "v", "part"),
+        Seq("k"))
+      val ch = AtomicLake.readChanges(spark, root, v0, r.version)
+      def side(t: String) = ch.filter($"_change_type" === t)
+        .select("k", "v", "part").as[(Int, Double, String)].collect()
+      side("delete").toSet shouldBe Set((2, 2.0, "p0"), (7, 7.0, "p1"))
+      side("delete").length shouldBe 2
+      side("insert").toSet shouldBe src.toSet
+      side("insert").length shouldBe 3
     }
   }
 

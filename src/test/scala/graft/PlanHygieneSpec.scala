@@ -158,6 +158,47 @@ class PlanHygieneSpec extends SparkSpec {
       df.count() shouldBe 19
     }
 
+    def dvLake(name: String): String = {
+      val root = fresh(name)
+      AtomicLake.upsertPartitions((0 until 300).map(i => (i.toLong, i % 7,
+        s"p${i % 3}")).toDF("id", "v", "part"), root, Seq("part"))
+      root
+    }
+
+    it("a deletion-vector delete runs one Spark job") {
+      val root = dvLake("dv_delete_jobs")
+      val (r, jobs) = jobsDuring(
+        AtomicLake.deleteWhereDV(spark, root)($"id".isin(3L, 100L)))
+      r.rowsChanged shouldBe 2
+      jobs shouldBe 1
+    }
+
+    it("a merge runs at most 4 Spark jobs, onto clean or dv'd files") {
+      val root = dvLake("merge_jobs")
+      val (clean, cleanJobs) = jobsDuring(AtomicLake.merge(spark, root,
+        Seq((4L, 9, "p1"), (999L, 9, "p0")).toDF("id", "v", "part"),
+        Seq("id")))
+      clean.rowsChanged shouldBe 1
+      cleanJobs should be <= 4
+      AtomicLake.currentSnapshot(root).get.dvs should not be empty
+      val (dvd, dvdJobs) = jobsDuring(AtomicLake.merge(spark, root,
+        Seq((4L, 8, "p1"), (7L, 8, "p1")).toDF("id", "v", "part"),
+        Seq("id")))
+      dvd.rowsChanged shouldBe 2
+      dvdJobs should be <= 4
+      AtomicLake.read(spark, root).filter($"v" === 8).count() shouldBe 2
+    }
+
+    it("a full read of a dv'd table runs the jobs of an un-dv'd copy") {
+      val dvd = dvLake("read_jobs_dv")
+      val plain = dvLake("read_jobs_plain")
+      AtomicLake.deleteWhereDV(spark, dvd)($"v" === 0)
+      def noop(root: String) = jobsDuring(AtomicLake.read(spark, root)
+        .write.format("noop").mode("overwrite").save())._2
+      noop(dvd) shouldBe noop(plain)
+      AtomicLake.read(spark, dvd).count() shouldBe 300 - 43
+    }
+
     it("a bloom-pruned scan runs only its prune job") {
       val root = fresh("bloom_lake")
       (0 until 4).foreach { chunk =>

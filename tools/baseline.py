@@ -7,12 +7,14 @@ Usage: python3 tools/baseline.py [sf_dir] [out_md]
 Requires a prior Verify dump (for oracle_sql.json) at target/verify_out.
 """
 import json, os, sys, time
+from pathlib import Path
 
 import duckdb
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-OUT = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/BASELINE.md"
-ORACLES = "/root/repo/target/verify_out/oracle_sql.json"
+ROOT = Path(__file__).resolve().parents[1]  # this script's checkout
+OUT = sys.argv[2] if len(sys.argv) > 2 else str(ROOT / "BASELINE.md")
+ORACLES = str(ROOT / "target" / "verify_out" / "oracle_sql.json")
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]

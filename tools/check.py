@@ -10,13 +10,16 @@ columns by name and rows by all columns — the same discipline the
 driver's hash compare implies.
 """
 import json, subprocess, sys, os
+from pathlib import Path
 
 import duckdb
 import pandas as pd
 import numpy as np
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-OUT_DIR = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/target/verify_out"
+# the checkout this script lives in: Verify compiles and runs ITS code
+ROOT = Path(__file__).resolve().parents[1]
+OUT_DIR = sys.argv[2] if len(sys.argv) > 2 else str(ROOT / "target" / "verify_out")
 SKIP = "--skip-verify" in sys.argv
 ONLY = [a for a in sys.argv[3:] if not a.startswith("--")]
 
@@ -39,7 +42,7 @@ def run_verify():
     names = " " + " ".join(ONLY) if ONLY else ""
     r = subprocess.run(
         ["sbt", f'runMain graft.Verify {SF_DIR} {OUT_DIR}{names}'],
-        cwd="/root/repo", env=env, capture_output=True, text=True)
+        cwd=ROOT, env=env, capture_output=True, text=True)
     if r.returncode != 0:
         print(r.stdout[-4000:]); print(r.stderr[-4000:])
         sys.exit("sbt Verify failed")

@@ -33,6 +33,7 @@ Distributions were measured from /root/testdata/sf0.1 (round 13):
             unit vectors, label U[0,10)
 """
 import os, sys, zlib
+from pathlib import Path
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -60,7 +61,8 @@ argv = [a for a in sys.argv
         if a not in ("--open-vocab", "--docs-only", "--emb-only")]
 SF = float(argv[1]) if len(argv) > 1 else 1.0
 OUT = (argv[2] if len(argv) > 2
-       else f"/root/repo/testdata/sf{SF:g}" + ("ov" if OPEN_VOCAB else ""))
+       else str(Path(__file__).resolve().parents[1] / "testdata"
+                / (f"sf{SF:g}" + ("ov" if OPEN_VOCAB else ""))))
 os.makedirs(OUT, exist_ok=True)
 
 def rng(name):
