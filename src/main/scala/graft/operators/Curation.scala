@@ -143,10 +143,11 @@ object Curation {
     // tf is consumed twice (df aggregation + the scored join back), so
     // Catalyst re-plans the subtree and the corpus is scanned+tokenized
     // twice. Recorded negative result: pinning tf with a
-    // localCheckpoint (MinHashLsh.scala:188 pattern) measured SLOWER
-    // (1.50s vs 0.91s at sf0.1) — the materialize+reread cycle costs
-    // more than the second map-side kernel pass, which is the same
-    // trade MinHashLsh.scala:195 recorded for its probe frame.
+    // localCheckpoint (MinHashLsh.nearDuplicates' shingle-frame pin)
+    // measured SLOWER (1.50s vs 0.91s at sf0.1) — the
+    // materialize+reread cycle costs more than the second map-side
+    // kernel pass, the same trade MinHashLsh.nearDuplicates recorded
+    // for its unpinned band rows.
     val tf = df.select(col(idCol),
         explode(graft.expressions.NativeKernels.termFreqsCol(
           col(textCol))).as("t"))

@@ -94,29 +94,25 @@ object MinHashLsh {
       .minHashFromHashesCol(shingleHashes, numHashes, seed)
 
   /** The per-document shingle-hash frame every stage derives from:
-    * (doc_id, sorted array of 8-byte shingle hashes). Sorted ONCE here
-    * because the verify kernel ([[graft.expressions.NativeKernels
-    * .sortedIntersectCount]]) wants sorted inputs; docs too short to
-    * shingle are dropped (they cannot pair).
+    * (doc_id, sorted array of 8-byte shingle hashes) — ONE projection
+    * for the in-memory forms and [[NearDupIndex]]'s build, append and
+    * probe, so no row is hashed under a family its caller didn't ask
+    * for. Sorted ONCE here because the verify kernel
+    * ([[graft.expressions.NativeKernels.sortedIntersectCount]]) wants
+    * sorted inputs; docs too short to shingle are dropped (they cannot
+    * pair). `side`, when given, is carried as the boolean `is_probe`
+    * tag of the cross-corpus form.
     */
-  private def hashedShingles(df: DataFrame, idCol: String,
-      textCol: String, shingleN: Int, portable: Boolean = false)
-      : DataFrame = {
+  private[operators] def hashedShingles(df: DataFrame, idCol: String,
+      textCol: String, shingleN: Int, portable: Boolean,
+      side: Option[Column] = None): DataFrame = {
     val hashes =
       if (portable) Dedup.shinglePortableHashes(col(textCol), shingleN)
       else Dedup.shingleHashes(col(textCol), shingleN)
-    df.select(col(idCol).as("doc_id"), sort_array(hashes).as("sh"))
+    df.select((col(idCol).as("doc_id") +: side.map(_.as("is_probe")).toSeq)
+        :+ sort_array(hashes).as("sh"): _*)
       .filter(size(col("sh")) > 0)
   }
-
-  /** The banded LSH index over a shingle-hash frame: one row per
-    * (doc, band) with the band's bucket hash.
-    */
-  private[graft] def bandedIndex(sh: DataFrame, numHashes: Int,
-      bands: Int, seed: Long, portable: Boolean = false): DataFrame =
-    bandRows(sh.select(col("doc_id"),
-      signatureFromHashes(col("sh"), numHashes, seed).as("sig")),
-      numHashes, bands, portable)
 
   /** Bucket value of one band's signature slice. Default: xxhash64 of
     * the slice's string form (best mixing). Portable: the polynomial
@@ -131,13 +127,9 @@ object MinHashLsh {
     else aggregate(slice, lit(0L),
       (acc, s) => pmod(acc * lit(131L) + s, lit(1000000007L)))
 
-  /** The ONE bucket-layout implementation: band rows from a
-    * (doc_id, sig) frame. Both signature producers (the per-doc
-    * kernel fold and the instance-stream min aggregate) feed this, so
-    * their buckets can never diverge.
-    */
+  /** The bucket layout: band rows from a (doc_id[, extra], sig) frame. */
   private def bandRows(sig: DataFrame, numHashes: Int, bands: Int,
-      portable: Boolean = false, extra: Seq[String] = Nil): DataFrame = {
+      portable: Boolean, extra: Seq[String]): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val rows = numHashes / bands
     val keep = col("doc_id") +: extra.map(col)
@@ -148,146 +140,148 @@ object MinHashLsh {
       .select(keep :+ col("bb.band") :+ col("bb.bucket"): _*)
   }
 
-  /** Banded index from an INSTANCE frame (doc_id, h) — the
-    * ban-filtered signature path. Re-assembling per-doc hash arrays
-    * just to fold them again costs a corpus-wide collect_list shuffle
-    * plus the array-build (measured 28.3 s of the 92 s sf10ov
-    * candidate stage); instead the signature IS an aggregate —
-    * sig_k = min over instances of (a_k·(h mod P) + b_k) mod P — so a
-    * 64-way min groupBy computes it with map-side partial combine:
-    * the shuffle carries numHashes longs per DOC, not per instance.
-    * Bit-parity with `bandedIndex ∘ signatureInput` is spec-gated
-    * (identical integer arithmetic to the kernel fold; min is
-    * order-free; a doc with zero surviving instances disappears from
-    * banding in both forms).
-    */
-  private def bandedFromInstances(inst: DataFrame, numHashes: Int,
-      bands: Int, seed: Long, portable: Boolean = false): DataFrame =
-    bandRows(sigFromInstances(inst, numHashes, seed), numHashes, bands,
-      portable)
-
-  /** The (doc_id, sig) frame from an instance stream — the signature
-    * half of [[bandedFromInstances]], exposed separately so the
-    * capped pipelines can PIN signatures (one row per doc) instead of
-    * band rows (bands× that — at the 5M-doc ladder tier the band-row
-    * checkpoint was 160M rows and the scratch-disk wall; see
-    * [[bucketPairsFromSig]]).
+  /** The (keys, sig) frame from an instance stream (keys..., h):
+    * re-assembling per-doc hash arrays just to fold them again costs a
+    * corpus-wide collect_list shuffle plus the array-build (measured
+    * 28.3 s of the 92 s sf10ov candidate stage); instead the signature
+    * IS an aggregate — sig_k = min over instances of
+    * (a_k·(h mod P) + b_k) mod P — so a numHashes-way min groupBy
+    * computes it with map-side partial combine: the shuffle carries
+    * numHashes longs per DOC, not per instance. Identical integer
+    * arithmetic to the kernel fold (min is order-free), so the banding
+    * of [[banded]] is bit-identical either way, spec-gated against the
+    * fold over [[signatureInput]].
     */
   private def sigFromInstances(inst: DataFrame, numHashes: Int,
-      seed: Long, keys: Seq[String] = Seq("doc_id")): DataFrame = {
+      seed: Long, keys: Seq[String]): DataFrame = {
     val P = MersennePrime
     val hm = pmod(col("h"), lit(P))
     val ps = perms(numHashes, seed)
     val mins = ps.zipWithIndex.map { case ((a, b), k) =>
       min(pmod(hm * lit(a) + lit(b), lit(P))).as(s"__s$k") }
-    // extra grouping keys (r16): the cross-corpus joint path tags each
-    // instance with its side and aggregates BOTH corpora in one pass —
-    // a side flag is functionally dependent on doc_id within a side,
-    // so (doc_id, side) groups are exactly the per-side doc groups.
     inst.groupBy(keys.map(col): _*)
       .agg(mins.head, mins.tail: _*)
       .select(keys.map(col) :+ array(
         (0 until numHashes).map(k => col(s"__s$k")): _*).as("sig"): _*)
   }
 
-  /** The (doc_id, sig) frame under the sigMaxDf dial: the per-doc
-    * kernel fold when off, the instance-stream min aggregate under a
-    * self census when on.
-    */
-  private def sigMaybeCut(sh: DataFrame, numHashes: Int, seed: Long,
-      sigMaxDf: Int): DataFrame =
-    if (sigMaxDf <= 0)
-      sh.select(col("doc_id"),
-        signatureFromHashes(col("sh"), numHashes, seed).as("sig"))
-    else
-      sigFromInstances(
-        sh.select(col("doc_id"), explode(col("sh")).as("h"))
-          .join(bannedCensus(sh, sigMaxDf).select("h"), Seq("h"),
-            "left_anti"),
-        numHashes, seed)
-
-  /** Ban-filtered banded index: drop `banned` (an `h`-column frame)
-    * from the instance stream, then band via the min-aggregate path.
-    */
-  private[graft] def bandedCut(sh: DataFrame, banned: DataFrame,
-      numHashes: Int, bands: Int, seed: Long,
-      portable: Boolean = false): DataFrame =
-    bandedFromInstances(
-      sh.select(col("doc_id"), explode(col("sh")).as("h"))
-        .join(banned.select(col("h")), Seq("h"), "left_anti"),
-      numHashes, bands, seed, portable)
-
-  /** Bucket self-join over a signature frame's banded index: distinct
-    * (id1 < id2) pairs colliding in at least one band. merge hint:
-    * the banded table is bands× the corpus — never broadcast it (see
-    * Dedup.ngramJaccard); shuffle on (band,bucket) and let AQE split
-    * hot buckets.
+  /** THE banding producer: band rows (doc_id[, side], band, bucket) of
+    * a (doc_id[, side], sh) frame. Every form bands through here — the
+    * self and cross joins, and the index's build, append, repair and
+    * probe — so their buckets can never diverge.
     *
-    * `maxBucket > 0` drops buckets holding more than that many docs
-    * BEFORE pair generation — the production-LSH "stop bucket" dial.
-    * A bucket of B members emits B² pairs inside ONE task (a same-key
-    * join is irreducible — AQE cannot split a single key), so one
-    * degenerate bucket at 100 TB stalls the stage; a bucket that
-    * common also carries ~zero discriminative signal. Recall
-    * contract: a true pair is lost only if EVERY band it collides in
-    * is oversized — with exact-dedup upstream (the pipe_clean_corpus
-    * composition) near-dup groups are small and this probability is
-    * negligible; WITHOUT exact-dedup, exact duplicates share all
-    * bands and a cap WILL drop them — dedup exactly first. 0 = off
-    * (the gated queries' semantics).
-    */
-  private def bucketJoin(sig: DataFrame, numHashes: Int, bands: Int,
-      portable: Boolean, maxBucket: Int): DataFrame =
-    bucketPairsRaw(sig, numHashes, bands, portable, maxBucket)
-      .distinct()
-
-  /** [[bucketJoin]] WITHOUT the pair dedup: one row per (pair, band
-    * collision). The verify chain dedups these keyed by id1
-    * ([[dedupKeyed]]) so the dedup's exchange doubles as the first
-    * verify join's partitioning — `.distinct()` here would insert a
-    * separate (id1,id2) exchange the very next operator re-shuffles.
-    * Map-side pre-dedup loses nothing: a pair's duplicate rows come
-    * from DIFFERENT bands, which live in different (band,bucket)
-    * partitions, so a local combine never saw them together anyway.
+    * With no `banned` frame the signature is the per-doc kernel fold,
+    * map-side over `sh`. With one (an `h`-column frame: a census ban
+    * or the index's frozen set) the banned hashes leave the instance
+    * stream by an anti join and the signature is the min-aggregate of
+    * [[sigFromInstances]]; a doc with no surviving instance leaves
+    * banding (the sigMaxDf recall contract, see [[signatureInput]]).
     *
-    * Takes the SIGNATURE frame, not band rows: the capped path must
-    * pin its input (the bucket census and the join side both consume
-    * it), and a signature checkpoint is one row per DOC where a
-    * band-row checkpoint is bands× that — at the 5M-doc open-vocab
-    * ladder tier the band-row pin was 160M rows and (together with
-    * the join's shuffle spill) the single-box scratch-disk wall
-    * (§5.2 r15). Band rows are a cheap projection of the pinned
-    * signatures, re-derived per consumer.
+    * `side` names a tag column carried through (the cross form's
+    * `is_probe`): it is functionally dependent on doc_id within a
+    * side, so (doc_id, side) groups are exactly the per-side doc
+    * groups.
+    *
+    * `pinSig` pins the SIGNATURE frame — one row per doc — for callers
+    * that consume the band rows more than once (the capped paths: cap
+    * census and join sides). Band rows are bands× that: at the 5M-doc
+    * open-vocab ladder tier a band-row pin was 160M rows and, with the
+    * join's shuffle spill, the single-box scratch-disk wall (§5.2
+    * r15); re-deriving band rows from pinned signatures is a cheap
+    * projection per consumer.
     */
-  private def bucketPairsRaw(sig: DataFrame, numHashes: Int,
-      bands: Int, portable: Boolean, maxBucket: Int): DataFrame = {
-    val side =
-      if (maxBucket <= 0) bandRows(sig, numHashes, bands, portable)
-      else {
-        val sp = sig.localCheckpoint()
-        val b = bandRows(sp, numHashes, bands, portable)
-        b.join(
-          b.groupBy(col("band"), col("bucket"))
-            .agg(count(lit(1)).as("__n"))
-            .filter(col("__n") <= maxBucket)
-            .select(col("band"), col("bucket")),
-          Seq("band", "bucket"), "left_semi")
-      }
-    side.as("a").join(side.as("b").hint("merge"),
-        col("a.band") === col("b.band") &&
-          col("a.bucket") === col("b.bucket") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
+  private[graft] def banded(sh: DataFrame, numHashes: Int,
+      bands: Int, seed: Long, portable: Boolean = false,
+      banned: Option[DataFrame] = None, side: Option[String] = None,
+      pinSig: Boolean = false): DataFrame = {
+    val keys = "doc_id" +: side.toSeq
+    val sig = banned match {
+      case None => sh.select(keys.map(col) :+
+        signatureFromHashes(col("sh"), numHashes, seed).as("sig"): _*)
+      case Some(ban) => sigFromInstances(
+        sh.select(keys.map(col) :+ explode(col("sh")).as("h"): _*)
+          .join(ban.select(col("h")), Seq("h"), "left_anti"),
+        numHashes, seed, keys)
+    }
+    bandRows(if (pinSig) sig.localCheckpoint() else sig, numHashes,
+      bands, portable, side.toSeq)
   }
 
-  /** Distinct pairs, partitioned by id1: HashPartitioning(id1)
-    * satisfies the (id1,id2) dedup's clustering requirement (rows
-    * agreeing on both keys agree on id1), and it IS the distribution
-    * the id1 verify join needs — one exchange serves both, where
-    * `.distinct()` + join cost two back-to-back pair-stream shuffles.
+  /** THE candidate join of every form: (id1, id2) for band rows
+    * colliding in at least one (band, bucket), deduplicated.
+    * `b = None` self-joins `a` (id1 < id2);
+    * `Some(b)` pairs `a` (id1) with `b` (id2) with no id ordering —
+    * the sides are different corpora.
+    *
+    * `maxBucket > 0` drops (band, bucket) values holding more than that
+    * many rows of the sides that can pair (`a` for the self join,
+    * `a` ∪ `b` otherwise) BEFORE pair generation — the production-LSH
+    * "stop bucket". A bucket of B members emits B² pairs inside ONE
+    * task (a same-key join is irreducible — AQE cannot split a single
+    * key), so one degenerate bucket at 100 TB stalls the stage; a
+    * bucket that common also carries ~zero discriminative signal.
+    * Across corpora a bucket costs |A∩bucket|·|B∩bucket| ≤
+    * (combined/2)², so the combined count bounds the work like the
+    * self cap. Recall contract: a true pair is lost only if EVERY band
+    * it collides in is oversized — with exact-dedup upstream (the
+    * pipe_clean_corpus composition) near-dup groups are small and this
+    * probability is negligible; WITHOUT exact-dedup, exact duplicates
+    * share all bands and a cap WILL drop them — dedup exactly first.
+    * 0 = off (the gated queries' semantics).
+    *
+    * Shape: a merge join on the bucket keys — band tables are bands×
+    * the corpus, never broadcast them; shuffle on (band, bucket) and
+    * let AQE split hot buckets. `broadcastB` (the index probe of a
+    * small batch, see [[NearDupIndex.pairsAgainstIndex]]) broadcasts
+    * `b` and streams `a` map-side; under a cap it first scopes `a` to
+    * the buckets `b` occupies — a bucket `b` never hashes into emits no
+    * candidates, and for the others the combined membership is
+    * unchanged by the scoping — pinned, as census and join both read
+    * it.
     */
-  private[operators] def dedupKeyed(rawPairs: DataFrame): DataFrame =
-    rawPairs.repartition(col("id1")).dropDuplicates("id1", "id2")
+  private[operators] def candidates(a: DataFrame, b: Option[DataFrame],
+      maxBucket: Int, broadcastB: Boolean = false): DataFrame = {
+    val bk = Seq("band", "bucket")
+    def buckets(f: DataFrame) = f.select(bk.map(col): _*)
+    def semi(f: DataFrame, keys: DataFrame) =
+      f.join(if (broadcastB) broadcast(keys) else keys, bk, "left_semi")
+    val (ka, kb) =
+      if (maxBucket <= 0) (a, b.getOrElse(a))
+      else {
+        val scoped = b match {
+          case Some(bb) if broadcastB =>
+            semi(a, buckets(bb).distinct()).localCheckpoint()
+          case _ => a
+        }
+        val census = (scoped +: b.toSeq).map(buckets)
+          .reduce(_ unionByName _)
+          .groupBy(bk.map(col): _*)
+          .agg(count(lit(1)).as("__n"))
+          .filter(col("__n") <= maxBucket)
+          .select(bk.map(col): _*)
+        // a cross census feeds two semi joins: pin it once
+        val ok = if (b.isEmpty) census else census.localCheckpoint()
+        val ka = semi(scoped, ok)
+        (ka, b.fold(ka)(semi(_, ok)))
+      }
+    val right =
+      if (broadcastB) broadcast(kb.as("b")) else kb.as("b").hint("merge")
+    val on = col("a.band") === col("b.band") &&
+      col("a.bucket") === col("b.bucket")
+    // distinct pairs, partitioned by id1: HashPartitioning(id1)
+    // satisfies the (id1,id2) dedup's clustering requirement (rows
+    // agreeing on both keys agree on id1), and it IS the distribution
+    // the id1 verify join needs — one exchange serves both, where
+    // `.distinct()` + join cost two back-to-back pair-stream shuffles.
+    // A map-side pre-dedup would gain nothing: a pair's duplicate rows
+    // come from DIFFERENT bands, which live in different (band,bucket)
+    // partitions, so a local combine never sees them together.
+    ka.as("a")
+      .join(right, if (b.isEmpty) on && col("a.doc_id") < col("b.doc_id")
+        else on)
+      .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
+      .repartition(col("id1")).dropDuplicates("id1", "id2")
+  }
 
   /** THE exact-verify tail shared by the self-join, cross-corpus and
     * persisted-index paths: candidates (id1, id2) against two pinned
@@ -345,48 +339,42 @@ object MinHashLsh {
     * (it cannot candidate — documented recall contract, same as the
     * too-short-to-shingle drop).
     *
-    * The production path is [[bandedCut]] (instance-stream min
-    * aggregate — no per-doc array rebuild); this re-agg form is kept
-    * as the REFERENCE for its bit-parity spec.
+    * The production path is [[banded]] with a ban frame (instance-
+    * stream min aggregate — no per-doc array rebuild); this re-agg
+    * form is kept as the REFERENCE for its bit-parity spec. `sh` must
+    * be pinned by the caller: it feeds both the census and the anti
+    * join's instance stream.
     */
   private[graft] def signatureInput(sh: DataFrame, sigMaxDf: Int)
       : DataFrame =
     if (sigMaxDf <= 0) sh
-    else {
-      // `sh` must already be pinned by the caller: it feeds both the
-      // df census (via the ONE shared bannedCensus — see below) and
-      // the anti join's instance stream.
+    else
       sh.select(col("doc_id"), explode(col("sh")).as("h"))
         .join(bannedCensus(sh, sigMaxDf).select("h"), Seq("h"),
           "left_anti")
         .groupBy("doc_id")
         .agg(sort_array(collect_list(col("h"))).as("sh"))
-    }
 
   /** Head-shingle ban census of a pinned shingle-hash frame: one row
     * (h, df) per shingle hash appearing in more than `sigMaxDf`
     * documents. THE census implementation — [[signatureInput]], the
-    * self/cross banding paths, and [[NearDupIndex]]'s frozen ban
-    * table all delegate here (r15 ADVICE: three inlined copies of
-    * this arithmetic could silently desynchronize, and the
-    * frozen-ban-set + parity contracts assume they cannot). Banding
-    * consumers select just `h`; the index keeps `df` in its table.
+    * self/cross forms and [[NearDupIndex]]'s frozen ban table all use
+    * it (r15 ADVICE: inlined copies of this arithmetic could silently
+    * desynchronize, and the frozen-ban-set + parity contracts assume
+    * they cannot). Banding consumers select just `h`; the index keeps
+    * `df` in its table.
     */
   private[graft] def bannedCensus(sh: DataFrame, sigMaxDf: Int)
       : DataFrame =
     dfCensus(sh).filter(col("df") > sigMaxDf)
 
   /** The full (h, df) census of a shingle-hash frame — the ONE
-    * aggregation both census consumers (the ban filter above, the
-    * budget resolver below) are filters/summaries of. Factored out
-    * (r16) so a budget path can materialize the census ONCE and
-    * derive the histogram AND the ban set from the same pass instead
-    * of re-aggregating the instance stream per consumer.
+    * aggregation the ban filter above and the budget resolver below
+    * are a filter and a summary of.
     */
-  private[operators] def dfCensus(sh: DataFrame): DataFrame =
+  private def dfCensus(sh: DataFrame): DataFrame =
     sh.select(explode(col("sh")).as("h"))
       .groupBy("h").agg(count(lit(1)).as("df"))
-
 
   /** Resolve the `sigMaxDf` dial from a corpus's shingle-df census
     * against a CANDIDATE budget — §5.2's production guidance made
@@ -416,30 +404,23 @@ object MinHashLsh {
     * by the corpus's max df, in practice thousands), exact integer
     * cumulative sums, no sampling. The same corpus always resolves
     * the same dial, which is what lets [[NearDupIndex]] FREEZE the
-    * resolved value in its committed params.
+    * resolved value in its committed params. Streamed (r17, verdict
+    * #4): nothing is materialized — at budgets the corpus fits (dial
+    * 0) a pinned census was a pure materialization charge
+    * (ov_dedup_minhash_budget ~25 s vs ~19 s for the fixed-dial row
+    * at 500k docs), and a banning caller pays one unpinned census
+    * evaluation in its anti join instead.
     *
     * `sh` is the pinned (doc_id, sh) shingle-hash frame the caller
     * already holds — the census is over hashes, so the resolved dial
     * is hash-family-agnostic (df of a shingle is the same under xx
     * and portable hashing, collisions aside).
     */
-  def resolveSigMaxDf(sh: DataFrame, candidateBudget: Long): Int =
-    resolveFromCensus(dfCensus(sh), candidateBudget)
-
-  /** [[resolveSigMaxDf]] over an ALREADY-AGGREGATED (h, df) census
-    * frame — the shared-pass form (r16): a budget caller pins
-    * `dfCensus(sh).filter(df >= 2)` once (df=1 shingles carry zero
-    * pair mass and can never ban — every positive dial keeps them),
-    * resolves the dial from it here, and filters the SAME frame into
-    * the ban set, instead of paying the explode + aggregate census
-    * pass twice (once to resolve, once to ban).
-    */
-  private[operators] def resolveFromCensus(census: DataFrame,
-      candidateBudget: Long): Int = {
+  def resolveSigMaxDf(sh: DataFrame, candidateBudget: Long): Int = {
     require(candidateBudget > 0, "candidateBudget must be positive")
     // df histogram: (df, number of shingles with that df), df >= 2
     // (df=1 shingles pair nothing — C(1,2) = 0)
-    val hist = census
+    val hist = dfCensus(sh)
       .filter(col("df") >= 2)
       .groupBy("df").agg(count(lit(1)).as("n"))
       .select(col("df").cast("long"), col("n").cast("long"))
@@ -457,8 +438,30 @@ object MinHashLsh {
     if (fitsAll) 0 else best.toInt
   }
 
+  /** (bands, sigMaxDf) of a call — the one preamble of every form and
+    * of [[NearDupIndex.build]]: an explicit dial and a budget are
+    * exclusive, `bands = 0` derives the banding from the verify
+    * threshold ([[autoBands]]), and a budget RESOLVES the dial from
+    * `sh`'s census. `sh` is by-name: forced only under a budget, after
+    * the check.
+    */
+  private[operators] def dials(sh: => DataFrame, numHashes: Int,
+      threshold: Double, bands: Int, sigMaxDf: Int,
+      candidateBudget: Long): (Int, Int) = {
+    require(candidateBudget <= 0 || sigMaxDf <= 0,
+      "pass candidateBudget OR an explicit sigMaxDf, not both — the " +
+        "budget RESOLVES the dial (resolveSigMaxDf)")
+    (if (bands > 0) bands else autoBands(numHashes, threshold),
+      if (candidateBudget > 0) resolveSigMaxDf(sh, candidateBudget)
+      else sigMaxDf)
+  }
+
+  /** The census ban of a dial, None when it is off. */
+  private def banOf(sh: DataFrame, sigMaxDf: Int): Option[DataFrame] =
+    if (sigMaxDf > 0) Some(bannedCensus(sh, sigMaxDf)) else None
+
   /** LSH candidate pairs: documents whose signatures collide in at
-    * least one band. Returns distinct (id1 < id2). See [[bucketJoin]]
+    * least one band. Returns distinct (id1 < id2). See [[candidates]]
     * for the `maxBucket` degenerate-bucket cap and [[signatureInput]]
     * for the `sigMaxDf` head-shingle signature cut.
     */
@@ -468,32 +471,31 @@ object MinHashLsh {
       portableHash: Boolean = false): DataFrame = {
     val sh0 = hashedShingles(df, idCol, textCol, shingleN, portableHash)
     val sh = if (sigMaxDf > 0) sh0.localCheckpoint() else sh0
-    bucketJoin(sigMaybeCut(sh, numHashes, seed, sigMaxDf), numHashes,
-      bands, portableHash, maxBucket)
+    candidates(banded(sh, numHashes, bands, seed, portableHash,
+      banOf(sh, sigMaxDf), pinSig = maxBucket > 0), None, maxBucket)
   }
 
   /** Candidates verified with exact Jaccard ≥ threshold — the full
     * near-dedup output (id1, id2, jaccard). `bands = 0` (the default)
     * derives the banding from the threshold via [[autoBands]], so the
     * candidate recall at the verify boundary is never an accident of
-    * a fixed banding tuned for some other threshold.
+    * a fixed banding tuned for some other threshold. `maxBucket` is
+    * the stop-bucket cap of [[candidates]]; `sigMaxDf` the head-shingle
+    * signature cut of [[signatureInput]], which `candidateBudget`
+    * resolves instead when set ([[resolveSigMaxDf]]).
     */
   def nearDuplicates(df: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.7, shingleN: Int = 3, numHashes: Int = 64,
       bands: Int = 0, seed: Long = 42L, maxBucket: Int = 0,
       sigMaxDf: Int = 0, portableHash: Boolean = false,
       candidateBudget: Long = 0L): DataFrame = {
-    require(candidateBudget <= 0 || sigMaxDf <= 0,
-      "pass candidateBudget OR an explicit sigMaxDf, not both — the " +
-        "budget RESOLVES the dial (resolveSigMaxDf)")
-    val b = if (bands > 0) bands else autoBands(numHashes, threshold)
     // ONE corpus scan: tokenize → shingle → hash → sort each document
     // exactly once, pinned with a localCheckpoint — the band index,
     // BOTH sides of the bucket self-join, and both verify joins read
     // this frame. Without the pin each of those five consumers
     // re-evaluates the whole upstream (round-5's plan scanned the
-    // corpus parquet 6× through them). The banded index is NOT pinned:
-    // the self-join's sides re-run the signature kernel over the
+    // corpus parquet 6× through them). The banded index is NOT pinned
+    // (uncapped): the self-join's sides re-run the signature over the
     // pinned hash frame, and that recompute measured CHEAPER than a
     // second checkpoint job (1.71s vs 2.19s full-query at sf0.1) —
     // the 64-permutation loop is fast once shingle hashing is done,
@@ -502,60 +504,27 @@ object MinHashLsh {
     // at 100 TB this frame is the materialized dedup artifact; on a
     // cluster a persisted artifact table plays this role
     // ([[nearDuplicatesCached]]).
-    val sh = hashedShingles(df, idCol, textCol, shingleN, portableHash)
-      .localCheckpoint()
-    // candidateBudget, lazy census (r17, verdict #4): the dial
-    // RESOLVES from a streamed histogram — explode → per-hash count →
-    // per-df count → a bounded driver collect — with nothing
-    // materialized. Only when a ban results (dial > 0) does the
-    // signature path pay a census pass at all: sigMaybeCut's anti
-    // join is then the census's ONE consumer, so it needs no
-    // checkpoint either. The r16 shape pinned the full census up
-    // front to share it between resolver and ban set, which at tiers
-    // where the dial resolves 0 (the budget fits — the common case
-    // until the corpus outgrows it) bought nothing and charged the
-    // row a census materialization: ov_dedup_minhash_budget ran ~25 s
-    // vs ~19 s for the fixed-dial row at 500k docs. Banning tiers pay
-    // one extra unpinned census evaluation instead of a
-    // checkpoint write + two reads (decade-measured, see
-    // OPTIMIZATION_r17.md).
-    val dial =
-      if (candidateBudget > 0) resolveSigMaxDf(sh, candidateBudget)
-      else sigMaxDf
-    // maxBucket (r14, threaded from bucketPairsRaw): on Zipfian open-
-    // vocab text the head shingle's hash is the min for MANY
-    // permutations at once, so unrelated documents share whole bands
-    // and bucket sizes explode (measured: 19.5x wall for 10x docs on
-    // the sf1ov ladder uncapped vs ~linear capped). A bucket larger
-    // than the corpus's plausible dup-cluster width certifies
-    // nothing; dropping it is the same production posture as
-    // ngramJaccard's maxDf. 0 = uncapped (the closed-vocab gate
-    // setting, exact).
-    // sigMaxDf (r14, two-decade ladder): head shingles out of the
-    // SIGNATURE input — see [[signatureInput]]/[[bandedCut]]. Verify
-    // below is untouched: it reads the full pinned `sh` sets.
-    val cands = dedupKeyed(bucketPairsRaw(
-      sigMaybeCut(sh, numHashes, seed, dial), numHashes, b,
-      portableHash, maxBucket))
+    lazy val sh = hashedShingles(df, idCol, textCol, shingleN,
+      portableHash).localCheckpoint()
+    val (b, dial) = dials(sh, numHashes, threshold, bands, sigMaxDf,
+      candidateBudget)
+    val cands = candidates(banded(sh, numHashes, b, seed, portableHash,
+      banOf(sh, dial), pinSig = maxBucket > 0), None, maxBucket)
     // verify on the HASHED shingle sets, sorted once per document: the
     // per-candidate cost is one two-pointer kernel pass over two long
     // arrays instead of array_intersect + array_union building hash
     // sets and result arrays per pair (same jaccard integers — the
     // 8-byte shingle hashes stand in for the strings exactly as in
-    // Dedup.ngramJaccard, collisions ~n²/2^65). Size-incompatible
-    // pairs are cut before any array ships — see [[verifyPairs]].
+    // Dedup.ngramJaccard, collisions ~n²/2^65).
     verifyPairs(cands, sh, sh, threshold)
   }
 
   /** Cross-corpus near-duplicate pairs: every (base doc, probe doc)
     * pair with exact Jaccard >= threshold — the train/test
     * contamination sweep and the new-batch-vs-existing-corpus dedup
-    * every training-data pipeline runs before adding data. Same
-    * sub-quadratic shape as [[nearDuplicates]] (banded signatures,
-    * bucket join — here ACROSS the two corpora — exact two-pointer
-    * verify), with each corpus shingled/hashed exactly once behind a
-    * localCheckpoint. No id ordering constraint: the sides are
-    * different corpora. Returns (id1 = base id, id2 = probe id,
+    * every training-data pipeline runs before adding data. The two
+    * corpora are tagged and run as one table through
+    * [[nearDuplicatesSplit]]. Returns (id1 = base id, id2 = probe id,
     * jaccard).
     */
   def nearDuplicatesAgainst(base: DataFrame, probe: DataFrame,
@@ -564,33 +533,29 @@ object MinHashLsh {
       seed: Long = 42L, maxBucket: Int = 0, sigMaxDf: Int = 0,
       portableHash: Boolean = false,
       candidateBudget: Long = 0L): DataFrame = {
-    require(candidateBudget <= 0 || sigMaxDf <= 0,
-      "pass candidateBudget OR an explicit sigMaxDf, not both")
-    val b = if (bands > 0) bands else autoBands(numHashes, threshold)
-    val shB = hashedShingles(base, idCol, textCol, shingleN,
-      portableHash).localCheckpoint()
-    val shP = hashedShingles(probe, idCol, textCol, shingleN,
-      portableHash).localCheckpoint()
-    // the dial must resolve over the UNION census — the ban set it
-    // implies is symmetric by construction (crossPairs' contract).
-    // Lazy (r17, verdict #4): the histogram streams off the union
-    // instances, nothing pins; when a ban results, crossPairs' joint
-    // tagged census (one consumer) recomputes the same union census.
-    val dial =
-      if (candidateBudget > 0)
-        resolveSigMaxDf(shB.unionByName(shP), candidateBudget)
-      else sigMaxDf
-    crossPairs(shB, shP, threshold, numHashes, b, seed, maxBucket,
-      dial, portableHash)
+    def tagged(f: DataFrame, isProbe: Boolean) =
+      f.select(col(idCol), col(textCol), lit(isProbe).as("__probe"))
+    nearDuplicatesSplit(tagged(base, false).unionByName(tagged(probe, true)),
+      idCol, textCol, col("__probe"), threshold, shingleN, numHashes,
+      bands, seed, maxBucket, sigMaxDf, portableHash, candidateBudget)
   }
 
-  /** [[nearDuplicatesAgainst]] when both corpora live in ONE table and
-    * a predicate marks the probe side (the usual shape of "dedup the
-    * new crawl batch against the existing corpus" — one batch/source
-    * column): the table is scanned, shingled and hashed exactly ONCE;
-    * the pinned hash frame splits by the predicate, saving a second
-    * corpus scan and checkpoint over calling the two-frame form with
-    * two filters of the same table.
+  /** Cross-corpus near duplicates when both corpora live in ONE table
+    * and a predicate marks the probe side (the usual shape of "dedup
+    * the new crawl batch against the existing corpus" — one
+    * batch/source column): the table is scanned, shingled and hashed
+    * exactly ONCE behind a localCheckpoint, carrying the side tag.
+    * Same sub-quadratic shape as [[nearDuplicates]] — banded
+    * signatures, bucket join ACROSS the sides, exact verify.
+    *
+    * `sigMaxDf` (or the dial `candidateBudget` resolves) bans head
+    * shingles using ONE census over the whole table, i.e. the union of
+    * the two corpora — the ban set MUST be symmetric: LSH only pairs
+    * rows whose signatures agree, so banning a shingle on one side
+    * only would desynchronize a true pair's signatures and silently
+    * lose it. `maxBucket` caps the COMBINED membership of both sides
+    * ([[candidates]]). Returns (id1 = base id, id2 = probe id,
+    * jaccard).
     */
   def nearDuplicatesSplit(df: DataFrame, idCol: String, textCol: String,
       probeSide: Column, threshold: Double = 0.7, shingleN: Int = 3,
@@ -598,121 +563,18 @@ object MinHashLsh {
       maxBucket: Int = 0, sigMaxDf: Int = 0,
       portableHash: Boolean = false,
       candidateBudget: Long = 0L): DataFrame = {
-    require(candidateBudget <= 0 || sigMaxDf <= 0,
-      "pass candidateBudget OR an explicit sigMaxDf, not both")
-    val b = if (bands > 0) bands else autoBands(numHashes, threshold)
-    val hashes =
-      if (portableHash) Dedup.shinglePortableHashes(col(textCol), shingleN)
-      else Dedup.shingleHashes(col(textCol), shingleN)
-    val sh = df.select(col(idCol).as("doc_id"),
-        probeSide.as("is_probe"), sort_array(hashes).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .localCheckpoint()
-    // resolve over the whole table's census — identical to the union
-    // of the two sides (the split partitions the pinned frame). Lazy
-    // (r17, verdict #4): histogram streamed, census recomputed by the
-    // joint cut path's one anti join only when a ban results.
-    val dial =
-      if (candidateBudget > 0) resolveSigMaxDf(sh, candidateBudget)
-      else sigMaxDf
-    crossPairs(
-      sh.filter(!col("is_probe")).select(col("doc_id"), col("sh")),
-      sh.filter(col("is_probe")).select(col("doc_id"), col("sh")),
-      threshold, numHashes, b, seed, maxBucket, dial, portableHash)
-  }
-
-  /** Banded bucket join ACROSS two (already pinned) shingle-hash
-    * frames + exact verify — the shared tail of the cross-corpus
-    * forms. No id ordering constraint: the sides are different
-    * corpora. Returns (id1 = base id, id2 = probe id, jaccard).
-    *
-    * `sigMaxDf` bans head shingles from BOTH sides' signature input
-    * using ONE df census over the union of the two corpora's
-    * instances — the ban set MUST be symmetric: LSH only pairs rows
-    * whose signatures agree, so banning a shingle on one side only
-    * would desynchronize a true pair's signatures and silently lose
-    * it. `maxBucket` drops (band, bucket) values whose COMBINED
-    * membership across both sides exceeds the cap — the candidate
-    * cost of a bucket here is |A∩bucket|·|B∩bucket| ≤ (combined/2)²,
-    * so one combined census bounds the per-bucket work exactly like
-    * the self-join cap.
-    */
-  private def crossPairs(shB: DataFrame, shP: DataFrame,
-      threshold: Double, numHashes: Int, bands: Int, seed: Long,
-      maxBucket: Int = 0, sigMaxDf: Int = 0,
-      portable: Boolean = false): DataFrame = {
-    val (okB, okP) =
-      if (sigMaxDf <= 0) {
-        // per-doc kernel-fold signatures (map-side over the pinned sh
-        // frames — no instance shuffle, nothing shared across sides)
-        val sigB = sigMaybeCut(shB, numHashes, seed, 0)
-        val sigP = sigMaybeCut(shP, numHashes, seed, 0)
-        if (maxBucket <= 0)
-          (bandRows(sigB, numHashes, bands, portable),
-            bandRows(sigP, numHashes, bands, portable))
-        else {
-          // pin the SIGNATURE frames (one row per doc), not the band
-          // rows (bands× that) — the 5M-doc-tier scratch-disk
-          // finding, see bucketPairsRaw
-          val pinB = bandRows(sigB.localCheckpoint(), numHashes, bands,
-            portable)
-          val pinP = bandRows(sigP.localCheckpoint(), numHashes, bands,
-            portable)
-          val ok = pinB.unionByName(pinP)
-            .groupBy(col("band"), col("bucket"))
-            .agg(count(lit(1)).as("__n"))
-            .filter(col("__n") <= maxBucket)
-            .select(col("band"), col("bucket"))
-            .localCheckpoint() // feeds both semi joins once
-          (pinB.join(ok, Seq("band", "bucket"), "left_semi"),
-            pinP.join(ok, Seq("band", "bucket"), "left_semi"))
-        }
-      } else {
-        // JOINT cut path (r16): the ban-filtered signature aggregate
-        // runs ONCE over both corpora instead of once per side. Each
-        // instance is tagged with its side, the union census bans
-        // symmetrically (same ban frame, consumed by ONE anti join
-        // now — no checkpoint needed), and the (doc, side) min
-        // aggregate computes both corpora's signatures in a single
-        // shuffle of the same total bytes the two per-side aggregates
-        // moved. The joint signature frame is pinned once (one row
-        // per doc — the 5M-doc-tier pin policy) and each consumer
-        // (cap census, join sides) re-derives band rows from it.
-        val tagged = shB
-          .select(col("doc_id"), col("sh"), lit(false).as("is_probe"))
-          .unionByName(shP.select(col("doc_id"), col("sh"),
-            lit(true).as("is_probe")))
-        val banned = bannedCensus(tagged, sigMaxDf).select("h")
-        val inst = tagged
-          .select(col("doc_id"), col("is_probe"),
-            explode(col("sh")).as("h"))
-          .join(banned, Seq("h"), "left_anti")
-        val sig = sigFromInstances(inst, numHashes, seed,
-          keys = Seq("doc_id", "is_probe")).localCheckpoint()
-        val bandAll = bandRows(sig, numHashes, bands, portable,
-          extra = Seq("is_probe"))
-        val keep =
-          if (maxBucket <= 0) bandAll
-          else {
-            // combined membership per (band, bucket) — bandAll IS the
-            // union of the two sides' band rows
-            val ok = bandAll.groupBy(col("band"), col("bucket"))
-              .agg(count(lit(1)).as("__n"))
-              .filter(col("__n") <= maxBucket)
-              .select(col("band"), col("bucket"))
-              .localCheckpoint() // feeds both semi-join derivations
-            bandAll.join(ok, Seq("band", "bucket"), "left_semi")
-          }
-        (keep.filter(!col("is_probe")).drop("is_probe"),
-          keep.filter(col("is_probe")).drop("is_probe"))
-      }
-    val cands = dedupKeyed(
-      okB.as("a")
-        .join(okP.as("b").hint("merge"),
-          col("a.band") === col("b.band") &&
-            col("a.bucket") === col("b.bucket"))
-        .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2")))
-    verifyPairs(cands, shB, shP, threshold)
+    lazy val sh = hashedShingles(df, idCol, textCol, shingleN,
+      portableHash, Some(probeSide)).localCheckpoint()
+    val (b, dial) = dials(sh, numHashes, threshold, bands, sigMaxDf,
+      candidateBudget)
+    val bandAll = banded(sh, numHashes, b, seed, portableHash,
+      banOf(sh, dial), Some("is_probe"), pinSig = maxBucket > 0)
+    def part(f: DataFrame, probe: Boolean) =
+      f.filter(col("is_probe") === probe).drop("is_probe")
+    verifyPairs(
+      candidates(part(bandAll, false), Some(part(bandAll, true)),
+        maxBucket),
+      part(sh, false), part(sh, true), threshold)
   }
 
   /** Memoized near-dup pair table per (session, corpusTag, params) —

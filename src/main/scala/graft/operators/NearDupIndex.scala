@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.{AtomicLake, CommitStore, HardlinkCommitStore}
@@ -43,7 +43,11 @@ import graft.sources.{AtomicLake, CommitStore, HardlinkCommitStore}
   */
 object NearDupIndex {
 
-  /** `sigMaxDf` (r14, the §5.2 two-decade finding): shingles whose
+  /** The index's frozen geometry: every persisted hash array, band
+    * row and ban-set row is a function of these, so they are pinned in
+    * the index root and validated on every use.
+    *
+    * `sigMaxDf` (r14, the §5.2 two-decade finding): shingles whose
     * BUILD-corpus document frequency exceeds it are banned from the
     * banding signature (the exact verify always scores full sets).
     * The ban set is FROZEN at build time as a third lake table — a
@@ -52,27 +56,24 @@ object NearDupIndex {
     * silently lose true pairs, so freezing is correctness, not
     * convenience (the stale-IVF-centroids posture: geometry is
     * build-time, rebuild to retrain). 0 = no ban table at all.
-    */
-  /** `portableHash` (r15): hash shingles and band buckets with the
+    *
+    * `portableHash` (r15): hash shingles and band buckets with the
     * engine-portable polynomial pair ([[Dedup.shinglePortableHashes]]
     * + the polynomial bucket fold) instead of xxhash64 — the variant
     * the production-configuration [O] gates replay in DuckDB term by
-    * term. GEOMETRY, like the seed: every persisted hash array and
-    * bucket value is a function of it, so it freezes in the params
-    * (an index probed under the other hash family would silently
+    * term (an index probed under the other hash family would silently
     * produce zero candidates). Pre-r15 params JSON parses as false —
     * exactly what those indexes were built with.
-    */
-  /** `candidateBudget` (r16): when a build passes a budget instead of
+    *
+    * `candidateBudget` (r16): when a build passes a budget instead of
     * an absolute `sigMaxDf`, the dial is RESOLVED from the build
     * corpus's df census ([[MinHashLsh.resolveSigMaxDf]]) and the
     * params freeze BOTH numbers — the budget that was asked for and
-    * the dial it resolved to. The resolved dial is what every
-    * persisted row was banded under, so it is geometry like the seed;
-    * recording the budget too means a rebuild attempt whose corpus
-    * resolves a DIFFERENT dial (data drifted) or whose caller asks a
-    * different budget is refused loudly instead of silently pairing
-    * old band rows with a new census. 0 = dial was set absolutely.
+    * the dial it resolved to. Recording the budget too means a rebuild
+    * attempt whose corpus resolves a DIFFERENT dial (data drifted) or
+    * whose caller asks a different budget is refused loudly instead of
+    * silently pairing old band rows with a new census. 0 = dial was
+    * set absolutely.
     */
   final case class Params(shingleN: Int, numHashes: Int, bands: Int,
       seed: Long, sigMaxDf: Int = 0, portableHash: Boolean = false,
@@ -142,79 +143,41 @@ object NearDupIndex {
     parseParams(store.readBody(paramsRoot(root), vs.max))
   }
 
-  /** The (doc_id, sorted shingle hashes) frame + its banded index for
-    * one corpus/batch — the two row shapes the lake tables hold.
-    * `banned` is the frozen ban-set frame when p.sigMaxDf > 0.
+  /** The pinned (doc_id, sorted shingle hashes) frame of a corpus or
+    * batch under the index's pinned hash family.
     */
-  /** The (doc_id, sorted shingle hashes) projection under the index's
-    * pinned hash family — ONE implementation for build, bootstrap
-    * append and probe, so a row can never be hashed under a family
-    * the params don't pin.
-    */
-  private def shFrame(df: DataFrame, idCol: String, textCol: String,
-      p: Params): DataFrame = {
-    val hashes =
-      if (p.portableHash)
-        Dedup.shinglePortableHashes(col(textCol), p.shingleN)
-      else Dedup.shingleHashes(col(textCol), p.shingleN)
-    df.select(col(idCol).as("doc_id"), sort_array(hashes).as("sh"))
-      .filter(size(col("sh")) > 0)
-  }
+  private def shOf(df: DataFrame, idCol: String, textCol: String,
+      p: Params): DataFrame =
+    MinHashLsh.hashedShingles(df, idCol, textCol, p.shingleN,
+      p.portableHash).localCheckpoint()
 
-  private def frames(df: DataFrame, idCol: String, textCol: String,
-      p: Params, banned: Option[DataFrame]): (DataFrame, DataFrame) = {
-    val sh = shFrame(df, idCol, textCol, p).localCheckpoint()
-    (sh, bandedFromSh(sh, p, banned))
-  }
-
-  /** Band rows derived from a (doc_id, sh) frame — the sh + banned
-    * tables hold everything the band table is a function of, which is
-    * what makes [[repair]] possible without any source text. ONE
-    * implementation of the bucket layout: this delegates to
-    * [[MinHashLsh.bandedIndex]], so the persisted index can never
-    * silently desynchronize from the in-memory operator's banding.
-    * With a ban set, the signature input drops banned hashes first —
-    * a doc whose every shingle is banned leaves banding entirely
-    * (wall-to-wall boilerplate, the in-memory sigMaxDf contract).
+  /** Band rows of a (doc_id, sh) frame under the index params, through
+    * [[MinHashLsh.banded]] — the persisted index can never desynchronize
+    * from the in-memory operator's banding. The sh + banned tables hold
+    * everything the band table is a function of, which is what makes
+    * [[repair]] possible without any source text.
     */
-  private def bandedFromSh(sh: DataFrame, p: Params,
-      banned: Option[DataFrame]): DataFrame = banned match {
-    case None =>
-      MinHashLsh.bandedIndex(sh, p.numHashes, p.bands, p.seed,
-        p.portableHash)
-    case Some(ban) => // instance-aggregate path, same bucket layout
-      MinHashLsh.bandedCut(sh, ban, p.numHashes, p.bands, p.seed,
-        p.portableHash)
-  }
+  private def bandsOf(sh: DataFrame, p: Params,
+      banned: Option[DataFrame], pinSig: Boolean = false): DataFrame =
+    MinHashLsh.banded(sh, p.numHashes, p.bands, p.seed, p.portableHash,
+      banned, pinSig = pinSig)
 
   /** Probe batches whose band-row count (docs × bands) is at or
     * under this broadcast in [[pairsAgainstIndex]] (the ∝-batch
-    * probe shape; ~100 MB of (doc, band, bucket) longs at the
-    * default); larger batches still broadcast when the index is ≥ 8×
-    * the batch (known O(manifest) from the band table's zone-map row
-    * counts — no task runs) up to [[broadcastRelativeCeiling]]
-    * (~400 MB), else fall back to the shuffle shape. Vars only as a
-    * spec seam — the paths are proven pair-identical by forcing each
-    * in NearDupSpec.
+    * probe shape; ~100 MB of (doc, band, bucket) longs); larger
+    * batches still broadcast when the index is ≥ 8× the batch (known
+    * O(manifest) from the band table's zone-map row counts — no task
+    * runs) up to [[broadcastRelativeCeiling]] (~400 MB), else fall
+    * back to the shuffle shape.
     */
-  private[graft] var broadcastMaxBandRows: Long = 4L * 1024 * 1024
-  private[graft] var broadcastRelativeCeiling: Long = 16L * 1024 * 1024
+  private val broadcastMaxBandRows: Long = 4L * 1024 * 1024
+  private val broadcastRelativeCeiling: Long = 16L * 1024 * 1024
 
   /** The frozen ban set for an index, None when p.sigMaxDf == 0. */
   private def readBanned(spark: SparkSession, root: String, p: Params,
       store: CommitStore): Option[DataFrame] =
     if (p.sigMaxDf <= 0) None
     else Some(AtomicLake.read(spark, bannedRoot(root), store))
-
-  /** Census a build corpus's sh frame into its ban-set rows:
-    * (h, df) for every shingle hash with df > sigMaxDf. Bounded by
-    * construction: ≤ total-instances / sigMaxDf rows. ONE census
-    * implementation serves the in-memory operator and this index
-    * (delegation, r15 ADVICE): the frozen-ban-set and parity
-    * contracts both assume the arithmetic can never fork.
-    */
-  private def bannedFrom(sh: DataFrame, sigMaxDf: Int): DataFrame =
-    MinHashLsh.bannedCensus(sh, sigMaxDf)
 
   /** Docs of `sh` that still have >= 1 unbanned shingle — the docs
     * that legitimately CARRY band rows. A doc whose every shingle is
@@ -267,12 +230,6 @@ object NearDupIndex {
       numHashes: Int = 64, seed: Long = 42L, sigMaxDf: Int = 0,
       portableHash: Boolean = false, candidateBudget: Long = 0L,
       store: CommitStore = HardlinkCommitStore): Params = {
-    require(candidateBudget <= 0 || sigMaxDf <= 0,
-      "pass candidateBudget OR an explicit sigMaxDf, not both — the " +
-        "budget RESOLVES the dial from the build corpus's census")
-    val p0 = Params(shingleN, numHashes,
-      MinHashLsh.autoBands(numHashes, threshold), seed, sigMaxDf,
-      portableHash, candidateBudget)
     // Resolution precedes the params claim (it needs the corpus
     // census), but the claim still precedes every TABLE commit —
     // a crash between resolution and claim leaves nothing at all.
@@ -281,30 +238,20 @@ object NearDupIndex {
     // and the dial it resolved freeze in the params, so a rebuild
     // whose corpus resolves differently is refused by claimParams
     // (existing != p), not silently re-banded.
-    // Lazy census (r17, verdict #4): the dial resolves from a
-    // STREAMED df histogram (bounded driver collect, nothing
-    // materialized); only when a ban results does the ban-table write
-    // below pay a census pass — at budgets the corpus fits (dial 0)
-    // the r16 census pin was a pure materialization charge.
-    val shPre =
-      if (candidateBudget > 0)
-        Some(shFrame(corpus, idCol, textCol, p0).localCheckpoint())
-      else None
-    val p = shPre match {
-      case Some(f) => p0.copy(sigMaxDf =
-        MinHashLsh.resolveSigMaxDf(f, candidateBudget))
-      case None => p0
-    }
+    lazy val sh = MinHashLsh.hashedShingles(corpus, idCol, textCol,
+      shingleN, portableHash).localCheckpoint()
+    val (bands, dial) = MinHashLsh.dials(sh, numHashes, threshold, 0,
+      sigMaxDf, candidateBudget)
+    val p = Params(shingleN, numHashes, bands, seed, dial, portableHash,
+      candidateBudget)
     claimParams(root, p, store)
-    val sh = shPre.getOrElse(
-      shFrame(corpus, idCol, textCol, p).localCheckpoint())
     // commit order: params → banned → sh → bands. The ban set is
     // geometry (every band row is a function of it), so it lands
     // before any row hashed under it; a crash after any prefix leaves
     // tables that correctly describe each other.
     val banned =
       if (p.sigMaxDf <= 0) None
-      else Some(bannedFrom(sh, p.sigMaxDf).localCheckpoint())
+      else Some(MinHashLsh.bannedCensus(sh, p.sigMaxDf).localCheckpoint())
     // Staged-write / ordered-commit split (r17, verdict #5, guide
     // §2.6): the three table writes are independent Spark jobs — all
     // derive from the PINNED sh/banned frames, none reads another's
@@ -324,9 +271,8 @@ object NearDupIndex {
           bannedRoot(root), store = store))),
         Some(Future(AtomicLake.overwriteStaged(sh, shRoot(root),
           store = store))),
-        Some(Future(AtomicLake.overwriteStaged(
-          bandedFromSh(sh, p, banned), bandRoot(root),
-          store = store)))).flatten), Duration.Inf)
+        Some(Future(AtomicLake.overwriteStaged(bandsOf(sh, p, banned),
+          bandRoot(root), store = store)))).flatten), Duration.Inf)
       finally pool.shutdown()
     commits.foreach(_.apply()) // banned → sh → bands
     p
@@ -334,126 +280,77 @@ object NearDupIndex {
 
   /** Near-dup pairs (corpus id1, batch id2, jaccard >= threshold) of a
     * NEW batch against the indexed corpus — the corpus text is never
-    * read: candidates come from the persisted band table, verification
-    * from the persisted hash table.
+    * read: candidates come from the persisted band table through
+    * [[MinHashLsh.candidates]], verification from the persisted hash
+    * table through [[MinHashLsh.verifyPairs]] — one implementation
+    * with the in-memory forms, so the index path can never drift.
+    * `maxBucket` caps the combined index + batch bucket membership.
     */
   def pairsAgainstIndex(spark: SparkSession, batch: DataFrame,
       idCol: String, textCol: String, root: String, threshold: Double,
       maxBucket: Int = 0,
-      store: CommitStore = HardlinkCommitStore): DataFrame = {
+      store: CommitStore = HardlinkCommitStore): DataFrame =
+    probe(spark, batch, idCol, textCol, root, threshold, maxBucket,
+      store, None)
+
+  /** [[pairsAgainstIndex]] with the join shape given:
+    * `broadcastBatch = None` picks it by the size rule below.
+    *
+    * THE at-scale design decision of the probe: a sort-merge
+    * candidate join would shuffle the ENTIRE index band table
+    * (bands × corpus rows) for every batch, and the cap census would
+    * shuffle it a second time — per-probe cost ∝ corpus. But
+    * candidates only come from (band, bucket) values the BATCH
+    * occupies, so when the batch is broadcastable the join runs the
+    * other way: broadcast the batch band rows, stream the index band
+    * table map-side (one pruned scan, ZERO index shuffle), and scope
+    * the cap census to batch-touched buckets. Per-probe cost becomes
+    * ∝ batch + matched index rows. Measured at the 500k-doc ov tier
+    * (10% batch): capped probe 27.7 → ~8 s, the census alone was
+    * 12.7 s of the old shape. Batches too big to broadcast keep the
+    * shuffle shape — at that size the "batch" is corpus-scale and the
+    * symmetric cross form applies.
+    *
+    * Broadcasting is only a win when the STREAMED side (the index)
+    * is the bigger one: below the absolute cap the index must be at
+    * least batch-sized (a tiny index under a ~100 MB batch would have
+    * the heuristic broadcast the LARGER join side and hold a
+    * pointless broadcast hash table — the shuffle shape moves almost
+    * nothing there); above it, up to the relative ceiling, only a
+    * strongly index-dominated probe (≥8×) justifies the bigger
+    * broadcast. The index row count is O(manifest) from the band
+    * table's zone maps — when a store can't provide it (None), the
+    * under-cap path keeps the broadcast default (forall), matching
+    * the pre-r16 behavior for stores without stats.
+    *
+    * Pin policy (A/B-measured at the 500k ov tier): uncapped, the
+    * batch band rows are consumed ONCE (the join side) and derive
+    * from the pinned shingle frame — a band-row checkpoint measured
+    * 4.3 s vs a 0.4 s re-derivation; capped, they are consumed by the
+    * census and the join, so the batch signatures pin.
+    */
+  private[graft] def probe(spark: SparkSession, batch: DataFrame,
+      idCol: String, textCol: String, root: String, threshold: Double,
+      maxBucket: Int, store: CommitStore,
+      broadcastBatch: Option[Boolean]): DataFrame = {
     val p = readParams(root, store)
-    val (shB, bandedB0) = frames(batch, idCol, textCol, p,
-      readBanned(spark, root, p, store))
-    val bandedIdx0 = AtomicLake.read(spark, bandRoot(root), store)
-    val shIdx = AtomicLake.read(spark, shRoot(root), store)
-    // THE at-scale design decision of the probe: a sort-merge
-    // candidate join would shuffle the ENTIRE index band table
-    // (bands × corpus rows) for every batch, and the cap census
-    // would shuffle it a second time — per-probe cost ∝ corpus. But
-    // candidates only come from (band, bucket) values the BATCH
-    // occupies, so when the batch is broadcastable we join the other
-    // way: broadcast the batch band rows, stream the index band
-    // table map-side (one pruned scan, ZERO index shuffle), and
-    // scope the cap census to batch-touched buckets — a bucket the
-    // batch never hashes into emits no candidates, so capping it is
-    // a no-op, and for touched buckets the combined membership
-    // (index + batch members) is unchanged by the scoping. Per-probe
-    // cost becomes ∝ batch + matched index rows. Measured at the
-    // 500k-doc ov tier (10% batch): capped probe 27.7 → ~8 s, the
-    // census alone was 12.7 s of the old shape. The fallback keeps
-    // the shuffle shape for batches too big to broadcast
-    // (batch band rows > 4M ≈ 100 MB broadcast) — at that size the
-    // "batch" is corpus-scale and the symmetric cross form applies.
-    val batchBandRows = shB.count() * p.bands
-    // Broadcasting is only a win when the STREAMED side (the index)
-    // is the bigger one: below the absolute cap the index must be at
-    // least batch-sized (a tiny index under a ~100 MB batch would
-    // have the heuristic broadcast the LARGER join side and hold a
-    // pointless driver hash table — the shuffle shape moves almost
-    // nothing there); above it, up to the relative ceiling, only a
-    // strongly index-dominated probe (≥8×) justifies the bigger
-    // broadcast. The index row count is O(manifest) from the band
-    // table's zone maps — when a store can't provide it (None), the
-    // under-cap path keeps the broadcast default (forall), matching
-    // the pre-r16 behavior for stores without stats.
-    val idxBandRows = AtomicLake.rowCount(bandRoot(root), store)
-    val bcast = batchBandRows > 0 &&
-      ((batchBandRows <= broadcastMaxBandRows &&
-          idxBandRows.forall(_ >= batchBandRows)) ||
-        (batchBandRows <= broadcastRelativeCeiling &&
-          idxBandRows.exists(_ >= 8L * batchBandRows)))
-    val cands =
-      if (bcast) {
-        // pin policy (A/B-measured at the 500k ov tier): the capped
-        // path consumes the batch band rows THREE times (bucket
-        // broadcast, census union, bSide semi) — pinned it runs
-        // ~17-20 s vs ~24 s re-deriving; the uncapped path consumes
-        // them ONCE (the broadcast join side), where the pin is pure
-        // overhead (band-row checkpoint alone measured 4.3 s vs a
-        // 0.4 s re-derivation from the pinned shingle frame)
-        val bB =
-          if (maxBucket <= 0) bandedB0 else bandedB0.localCheckpoint()
-        val bBkts = bB.select(col("band"), col("bucket")).distinct()
-        val (idxRows, bSide) =
-          if (maxBucket <= 0)
-            // the inner candidate join below IS the bucket filter —
-            // no semi join needed, the index streams exactly once
-            (bandedIdx0, bB)
-          else {
-            // index rows in batch buckets — consumed by the census
-            // AND the join, and already ≪ index for a real batch
-            val idxT = bandedIdx0.join(broadcast(bBkts),
-                Seq("band", "bucket"), "left_semi")
-              .localCheckpoint()
-            // combined membership for batch buckets is exactly
-            // |idxT ∩ bucket| + |bB ∩ bucket| — scoping the census
-            // to them cannot change which CANDIDATE-PRODUCING
-            // buckets survive
-            val ok = idxT.select(col("band"), col("bucket"))
-              .unionByName(bB.select(col("band"), col("bucket")))
-              .groupBy(col("band"), col("bucket"))
-              .agg(count(lit(1)).as("__n"))
-              .filter(col("__n") <= maxBucket)
-              .select(col("band"), col("bucket"))
-              .localCheckpoint() // feeds both broadcast semi joins
-            (idxT.join(broadcast(ok), Seq("band", "bucket"),
-                "left_semi"),
-              bB.join(broadcast(ok), Seq("band", "bucket"),
-                "left_semi"))
-          }
-        MinHashLsh.dedupKeyed(idxRows.as("a")
-          .join(broadcast(bSide.as("b")),
-            col("a.band") === col("b.band") &&
-              col("a.bucket") === col("b.bucket"))
-          .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2")))
-      } else {
-        // corpus-scale batch: shuffle shape (merge join on the bucket
-        // keys; cap census over the full combined band rows —
-        // MinHashLsh.crossPairs semantics)
-        val (bandedIdx, bandedB) =
-          if (maxBucket <= 0) (bandedIdx0, bandedB0)
-          else {
-            val bB = bandedB0 // re-derived per consumer, see above
-            val ok = bandedIdx0.select(col("band"), col("bucket"))
-              .unionByName(bB.select(col("band"), col("bucket")))
-              .groupBy(col("band"), col("bucket"))
-              .agg(count(lit(1)).as("__n"))
-              .filter(col("__n") <= maxBucket)
-              .select(col("band"), col("bucket"))
-              .localCheckpoint() // feeds both semi joins once
-            (bandedIdx0.join(ok, Seq("band", "bucket"), "left_semi"),
-              bB.join(ok, Seq("band", "bucket"), "left_semi"))
-          }
-        MinHashLsh.dedupKeyed(bandedIdx.as("a")
-          .join(bandedB.as("b").hint("merge"),
-            col("a.band") === col("b.band") &&
-              col("a.bucket") === col("b.bucket"))
-          .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2")))
-      }
-    // shared verify tail (size prefilter + two-pointer kernel) — one
-    // implementation with the in-memory operator, so the index path
-    // can never drift
-    MinHashLsh.verifyPairs(cands, shIdx, shB, threshold)
+    val shB = shOf(batch, idCol, textCol, p)
+    val bB = bandsOf(shB, p, readBanned(spark, root, p, store),
+      pinSig = maxBucket > 0)
+    val bcast = broadcastBatch.getOrElse {
+      val batchBandRows = shB.count() * p.bands
+      val idxBandRows = AtomicLake.rowCount(bandRoot(root), store)
+      batchBandRows > 0 &&
+        ((batchBandRows <= broadcastMaxBandRows &&
+            idxBandRows.forall(_ >= batchBandRows)) ||
+          (batchBandRows <= broadcastRelativeCeiling &&
+            idxBandRows.exists(_ >= 8L * batchBandRows)))
+    }
+    val cands = MinHashLsh.candidates(
+      AtomicLake.read(spark, bandRoot(root), store), Some(bB), maxBucket,
+      broadcastB = bcast)
+    MinHashLsh.verifyPairs(cands, AtomicLake.read(spark, shRoot(root),
+      store), shB, threshold)
   }
 
   /** Make a batch part of the corpus: append its rows to both index
@@ -490,25 +387,24 @@ object NearDupIndex {
     if (AtomicLake.currentVersion(shRoot(root), store).isEmpty) {
       // the batch IS the initial corpus: re-freeze the ban set from
       // it (no committed band row was hashed under any other census)
-      val sh0 = shFrame(batch, idCol, textCol, p).localCheckpoint()
+      val sh0 = shOf(batch, idCol, textCol, p)
       val banned0 =
         if (p.sigMaxDf <= 0) None
         else {
-          val b = bannedFrom(sh0, p.sigMaxDf).localCheckpoint()
+          val b = MinHashLsh.bannedCensus(sh0, p.sigMaxDf).localCheckpoint()
           AtomicLake.overwrite(b, bannedRoot(root), store = store)
           Some(b)
         }
       val shV = AtomicLake.overwrite(sh0, shRoot(root), store = store)
-      val bandV = AtomicLake.overwrite(bandedFromSh(sh0, p, banned0),
+      val bandV = AtomicLake.overwrite(bandsOf(sh0, p, banned0),
         bandRoot(root), store = store)
       return (shV, bandV)
     }
     val existing = AtomicLake.read(spark, shRoot(root), store)
       .select(col("doc_id"))
-    val (sh, banded) = frames(
-      batch.join(existing, batch(idCol) === existing("doc_id"),
-        "left_anti"),
-      idCol, textCol, p, readBanned(spark, root, p, store))
+    val sh = shOf(batch.join(existing, batch(idCol) === existing("doc_id"),
+      "left_anti"), idCol, textCol, p)
+    val banded = bandsOf(sh, p, readBanned(spark, root, p, store))
     // heal a previous torn append BEFORE committing new rows, so the
     // band rows this call derives are exactly its own batch's
     repair(spark, root, store)
@@ -570,7 +466,7 @@ object NearDupIndex {
     // torn-append detector (r15 ADVICE). The never-committed bands
     // table is the one exception — it must gain a v1 to unwedge reads.
     if (n > 0 || bandsMissing) {
-      val banded = bandedFromSh(pinned, p, banned)
+      val banded = bandsOf(pinned, p, banned)
       if (bandsMissing)
         AtomicLake.overwrite(banded, bandRoot(root), store = store)
       else

@@ -67,9 +67,10 @@ class NearDupSpec extends SparkSpec {
       for (df <- Seq(1, 5, 50)) {
         val banned = sh.select(explode($"sh").as("h"))
           .groupBy("h").count().filter($"count" > df).select("h")
-        val fast = MinHashLsh.bandedCut(sh, banned, 64, 32, 42L)
+        val fast = MinHashLsh.banded(sh, 64, 32, 42L,
+            banned = Some(banned))
           .as[(Long, Int, Long)].collect().toSet
-        val ref = MinHashLsh.bandedIndex(
+        val ref = MinHashLsh.banded(
           MinHashLsh.signatureInput(sh, df), 64, 32, 42L)
           .as[(Long, Int, Long)].collect().toSet
         fast shouldBe ref
@@ -128,7 +129,8 @@ class NearDupSpec extends SparkSpec {
         .localCheckpoint()
       MinHashLsh.bannedCensus(sh, 5).count() should be > 0L
       val banned = MinHashLsh.bannedCensus(sh, 5).select("h")
-      val oversized = MinHashLsh.bandedCut(sh, banned, 64, 32, 42L)
+      val oversized = MinHashLsh.banded(sh, 64, 32, 42L,
+          banned = Some(banned))
         .groupBy("band", "bucket").count().filter($"count" > 3)
       oversized.count() should be > 0L
       // and the capped output still finds pairs (not everything died)
@@ -142,7 +144,7 @@ class NearDupSpec extends SparkSpec {
       val shBase = sh.filter(pmod($"doc_id", lit(10)) =!= 0)
       val bannedBase = MinHashLsh.bannedCensus(shBase, 5).select("h")
       bannedBase.count() should be > 0L
-      MinHashLsh.bandedCut(sh, bannedBase, 64, 32, 42L)
+      MinHashLsh.banded(sh, 64, 32, 42L, banned = Some(bannedBase))
         .groupBy("band", "bucket").count().filter($"count" > 3)
         .count() should be > 0L
       // dedup_simhash_ngram's maxBucket=2: >= 1 chunk bucket exceeds it
@@ -460,38 +462,66 @@ class NearDupSpec extends SparkSpec {
       // sigMaxDf > 0 so the probe also bands under the frozen ban
       NearDupIndex.build(base, "doc_id", "text", root,
         threshold = 0.5, sigMaxDf = 60)
-      def pairs(cap: Int) = NearDupIndex.pairsAgainstIndex(spark,
+      // each shape forced through the probe's broadcast argument
+      def pairs(cap: Int, bcast: Boolean) = NearDupIndex.probe(spark,
           probe, "doc_id", "text", root, threshold = 0.5,
-          maxBucket = cap)
+          maxBucket = cap, store = graft.sources.HardlinkCommitStore,
+          broadcastBatch = Some(bcast))
         .select("id1", "id2", "jaccard")
         .as[(Long, Long, Double)].collect().toSet
-      val saved = NearDupIndex.broadcastMaxBandRows
-      val savedCeil = NearDupIndex.broadcastRelativeCeiling
-      try {
-        for (cap <- Seq(0, 4)) {
-          NearDupIndex.broadcastMaxBandRows = Long.MaxValue // broadcast
-          NearDupIndex.broadcastRelativeCeiling = Long.MaxValue
-          val viaBcast = pairs(cap)
-          // force the shuffle shape through BOTH knobs: with only the
-          // absolute cap zeroed, the relative-ceiling branch would
-          // still pick broadcast whenever the fixture's index grows
-          // to ≥8× the batch band rows — a fixture tweak would
-          // silently turn this into broadcast-vs-broadcast (r16
-          // ADVICE)
-          NearDupIndex.broadcastMaxBandRows = 0L
-          NearDupIndex.broadcastRelativeCeiling = 0L
-          val viaShuffle = pairs(cap)
-          viaBcast shouldBe viaShuffle
-          // non-vacuity: the fixture exercises both the planted pair
-          // and (capped) a dropped hot cluster
-          viaBcast.map(t => (t._1, t._2)) should contain((11L, 401L))
-          if (cap == 0)
-            viaBcast.count(_._2 == 400L) shouldBe 6
-          else viaBcast.count(_._2 == 400L) shouldBe 0
-        }
-      } finally {
-        NearDupIndex.broadcastMaxBandRows = saved
-        NearDupIndex.broadcastRelativeCeiling = savedCeil
+      for (cap <- Seq(0, 4)) {
+        val viaBcast = pairs(cap, bcast = true)
+        val viaShuffle = pairs(cap, bcast = false)
+        viaBcast shouldBe viaShuffle
+        // non-vacuity: the fixture exercises both the planted pair
+        // and (capped) a dropped hot cluster
+        viaBcast.map(t => (t._1, t._2)) should contain((11L, 401L))
+        if (cap == 0)
+          viaBcast.count(_._2 == 400L) shouldBe 6
+        else viaBcast.count(_._2 == 400L) shouldBe 0
+      }
+    }
+    it("capped cross forms agree: the in-memory split form equals the " +
+        "index probe under one combined-membership cap, both hash " +
+        "families") {
+      import graft.operators.NearDupIndex
+      val rnd = new scala.util.Random(37L)
+      val spamText = (0 until 30).map(_ => "spam ham eggs").mkString(" ")
+      val mk = (i: Long) => i ->
+        (0 until 25).map(_ => s"t${rnd.nextInt(3000)}").mkString(" ")
+      // base: 100 fillers + an 8-copy hot cluster; probe: one more
+      // copy of the cluster, a near-dup of base doc 3, and fillers
+      val baseRows = (0L until 100L).map(mk) ++
+        (100L until 108L).map(i => i -> spamText)
+      val probeRows = (500L until 520L).map(mk) ++ Seq(
+        600L -> spamText, 601L -> (baseRows(3)._2 + " tail"))
+      val df = (baseRows ++ probeRows).toDF("doc_id", "text")
+      val isProbe = $"doc_id" >= 500L
+      for (portable <- Seq(false, true)) {
+        val root = TestScratch(s"neardup_capped_cross_$portable")
+        val hp = new org.apache.hadoop.fs.Path(root)
+        hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .delete(hp, true)
+        NearDupIndex.build(df.filter(!isProbe), "doc_id", "text", root,
+          threshold = 0.5, portableHash = portable)
+        def split(cap: Int) = MinHashLsh.nearDuplicatesSplit(df,
+            "doc_id", "text", probeSide = isProbe, threshold = 0.5,
+            maxBucket = cap, portableHash = portable)
+          .select("id1", "id2", "jaccard")
+          .as[(Long, Long, Double)].collect().toSet
+        val viaIndex = NearDupIndex.pairsAgainstIndex(spark,
+            df.filter(isProbe), "doc_id", "text", root, threshold = 0.5,
+            maxBucket = 5)
+          .select("id1", "id2", "jaccard")
+          .as[(Long, Long, Double)].collect().toSet
+        val inMem = split(5)
+        inMem shouldBe viaIndex
+        // non-vacuity: uncapped, the probe copy pairs with all 8
+        // cluster docs; the cap (combined membership 9 > 5) drops
+        // them all, and the planted pair survives it
+        split(0).count(_._2 == 600L) shouldBe 8
+        inMem.count(_._2 == 600L) shouldBe 0
+        inMem.map(t => (t._1, t._2)) should contain((3L, 601L))
       }
     }
     it("a fully-banned doc is not a band-table orphan: repair stays " +
