@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import java.util.UUID
 import scala.jdk.CollectionConverters._
 
@@ -22,9 +22,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   *  - A reader resolves max(vN) once and reads that snapshot: a
   *    concurrent upsert is invisible until its single commit point,
   *    after which new readers see all of it (old-or-new, never torn).
-  *  - A killed writer leaves orphan staging/data files and no
-  *    manifest: invisible, re-ingest just works (and its own commit
-  *    supersedes the orphans).
+  *  - A killed writer leaves orphan data files and no manifest:
+  *    invisible, re-ingest just works (and its own commit supersedes
+  *    the orphans).
   *  - Every manifest is retained → time travel ([[readVersion]]) and
   *    audit for free, exactly the DuckLake snapshot feature set the
   *    reference's sprint demos (Sprint-2.md "time travel").
@@ -298,11 +298,6 @@ object AtomicLake {
 
   private def dataDir(root: String): Path = Paths.get(root, "data")
 
-  /** Staged-file count above which the zone-map footer harvest runs
-    * as a distributed Spark job instead of a driver thread pool.
-    */
-  private val DistributedHarvestThreshold = 64
-
   /** Newest committed snapshot, if any commit exists. */
   def currentSnapshot(root: String,
       store: CommitStore = HardlinkCommitStore): Option[Snapshot] = {
@@ -410,7 +405,8 @@ object AtomicLake {
   }
 
   /** [[stageFiles]] output: partition-relative-dir -> new file
-    * relative paths, plus each file's footer-harvested zone map.
+    * relative paths, plus each file's zone map (folded from the footer
+    * its writer closed).
     */
   private[graft] final case class Staged(
       files: Map[String, Seq[String]],
@@ -426,13 +422,15 @@ object AtomicLake {
   private val AutoCompressionGuess = 3L
   private val AutoMaxFiles = 256
 
-  /** Stage `batch` and move its files into the data plane with
-    * commit-unique names — VISIBLE TO NO READER yet (readers only
-    * follow manifests). Returns partition-relative-dir -> new file
-    * relative paths plus per-file stats ([[LakeStats.collect]] over
-    * the just-written footers — metadata-only, no data re-read).
-    * Exposed package-private so the crash-recovery spec can create
-    * exactly the state a killed writer leaves.
+  /** Write `batch` into the data plane with commit-unique names —
+    * VISIBLE TO NO READER yet (readers only follow manifests). One
+    * Spark job whose tasks write each file at its final path
+    * ([[LakeWriter]]): no output committer, staging dir or move, and no
+    * `_SUCCESS` or `.crc` files. Returns partition-relative-dir -> new
+    * file relative paths plus per-file zone maps
+    * ([[LakeStats.fromFooter]] over each footer as its writer closes it
+    * — no re-read). Exposed package-private so the crash-recovery spec
+    * can create exactly the state a killed writer leaves.
     */
   private[graft] def stageFiles(batch: DataFrame, root: String,
       partitionCols: Seq[String], filesPerPartition: Int,
@@ -445,7 +443,6 @@ object AtomicLake {
       // a rename stay byte-compatible with the ones written before it
       colMap: Map[String, String] = Map.empty): Staged = {
     val commitId = UUID.randomUUID().toString.take(12)
-    val staging = Paths.get(root, "_staging", commitId)
     val physical = colMap.foldLeft(batch) { case (d, (l, p)) =>
       if (l != p && d.columns.contains(l)) {
         // the physical slot belongs to the renamed column — a batch
@@ -496,76 +493,10 @@ object AtomicLake {
     // off for the session's lifetime. A concurrent query during the
     // window loses AQE for that window (harmless — plans stay
     // correct).
-    val spark = batch.sparkSession
-    AqeScope(spark) {
-      val writer = distributed.write.mode("overwrite")
-      (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*)
-       else writer).parquet(staging.toString)
-    }
-    // move staged parquet into data/<partition>/<commit>-<file>
-    val staged = {
-      val w = Files.walk(staging)
-      try w.iterator().asScala
-        .filter(p => p.getFileName.toString.endsWith(".parquet"))
-        .toSeq
-      finally w.close()
-    }
-    val out = staged.map { p =>
-      val rel = staging.relativize(p) // day=.../part-00000-....parquet
-      val partRel = Option(rel.getParent).map(_.toString).getOrElse("")
-      val destRel = Paths.get(partRel, s"$commitId-${rel.getFileName}")
-      val dest = dataDir(root).resolve(destRel)
-      Files.createDirectories(dest.getParent)
-      Files.move(p, dest, StandardCopyOption.ATOMIC_MOVE)
-      (partRel, Paths.get("data").resolve(destRel).toString, dest)
-    }
-    deleteRecursively(staging)
-    // Zone-map harvest: one footer read per staged file. Small
-    // commits (the incremental-upsert steady state) use a bounded
-    // driver pool — no job scheduling overhead on the hot path; a
-    // LARGE commit (backfill/compaction staging thousands of files)
-    // distributes the footer reads as one Spark job instead — 100k
-    // driver-serial metadata round-trips would add minutes to the
-    // commit, where the cluster absorbs them in one short stage. Data
-    // columns only — partition values live in the dir name and prune
-    // via [[LakeStats.PartVal]].
-    val statsSchema = org.apache.spark.sql.types.StructType(
-      batch.schema.filterNot(f => partitionCols.contains(f.name)))
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val stats: Map[String, LakeStats.FileStats] =
-      if (out.size > DistributedHarvestThreshold) {
-        val ser =
-          new org.apache.spark.util.SerializableConfiguration(hconf)
-        val pairs = out.map { case (_, relPath, dest) =>
-          (relPath, dest.toString)
-        }
-        val slices = math.min(pairs.size,
-          math.max(1, spark.sparkContext.defaultParallelism * 2))
-        spark.sparkContext.parallelize(pairs, slices)
-          .flatMap { case (rel, abs) =>
-            LakeStats.collect(ser.value,
-              new org.apache.hadoop.fs.Path(abs), statsSchema)
-              .map(rel -> _)
-          }.collect().toMap
-      } else {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(8, math.max(1, out.size)))
-        implicit val ec: ExecutionContext =
-          ExecutionContext.fromExecutor(pool)
-        try {
-          val fs = out.map { case (_, relPath, dest) =>
-            Future(LakeStats.collect(hconf,
-              new org.apache.hadoop.fs.Path(dest.toString), statsSchema)
-              .map(relPath -> _))
-          }
-          Await.result(Future.sequence(fs), Duration.Inf).flatten.toMap
-        } finally pool.shutdown()
-      }
-    Staged(
-      out.groupBy(_._1).map { case (p, fs) => p -> fs.map(_._2) },
-      stats)
+    val written = AqeScope(batch.sparkSession)(
+      LakeWriter.write(distributed, root, commitId, partitionCols))
+    Staged(written.groupBy(_.part).map { case (p, ws) => p -> ws.map(_.rel) },
+      written.flatMap(w => w.stats.map(w.rel -> _)).toMap)
   }
 
   /** The one commit. `edit` maps the snapshot the CAS lands on (an
@@ -1926,19 +1857,29 @@ object AtomicLake {
     rows.result().groupMap(_._1)(_._2).map { case (k, ps) => k -> ps.toArray }
   }
 
+  /** Parsed deletion-vector sidecars by resolved path: a sidecar is
+    * immutable and uuid-named, so a session parses each one once
+    * instead of on every read of a dv'd file. Bounded by sidecar count.
+    */
+  private[graft] val dvMemo =
+    new SessionMemo[String, Map[String, Array[Long]]](maxPerSession = 64)
+
   /** The deleted positions `snap`'s deletion vectors record for
     * `files` (manifest path -> positions; files without a vector are
-    * absent), read on the driver straight from the sidecars — no Spark
-    * job. A sidecar keys each row by the WRITING lake's manifest path,
-    * so a shallow clone's absolute entry also matches its
-    * source-relative form (source-written sidecars keep those keys).
+    * absent), read in-process straight from the sidecars ([[dvMemo]])
+    * — no Spark job. A sidecar keys each row by the WRITING lake's
+    * manifest path, so a shallow clone's absolute entry also matches
+    * its source-relative form (source-written sidecars keep those
+    * keys).
     */
   private def dvPositions(spark: SparkSession, root: String,
       files: Seq[String], snap: Snapshot): Map[String, Array[Long]] = {
     val dvd = files.filter(snap.dvs.contains)
     val conf = spark.sparkContext.hadoopConfiguration
-    val sidecars = dvd.flatMap(snap.dvs(_).paths).distinct
-      .map(p => p -> readDv(root, p, conf)).toMap
+    val sidecars = dvd.flatMap(snap.dvs(_).paths).distinct.map { p =>
+      val abs = Paths.get(root).resolve(p).normalize().toString
+      p -> dvMemo.getOrElseUpdate(spark, abs)(readDv(root, p, conf))
+    }.toMap
     dvd.map { f =>
       val keys =
         if (!Paths.get(f).isAbsolute) Seq(f)
@@ -2335,7 +2276,9 @@ object AtomicLake {
       // orphans of purged/rewritten files and expired versions
       sweep(Paths.get(root, "dv"), deep = false)(sidecars) +
       sweep(Paths.get(root, "index"), deep = false)(sidecars)
-    // leftover staging dirs past the grace window are dead writers
+    // `_staging` dirs past the grace window were left by dead writers
+    // of lakes staged through a committer before files were written
+    // in place
     sweep(Paths.get(root, "_staging"), deep = false)(_ => false)
     if (dryRun) swept + expired.size else swept
   }
@@ -2348,31 +2291,23 @@ object AtomicLake {
     }
 }
 
-/** Refcounted per-session conf scope for the lake's staging writes
-  * and merge's bounds aggregate: the FIRST enter records each key's
-  * original setting and forces the scope's values; the LAST exit
-  * restores the originals. Plain
-  * save/restore is not reentrant — with two concurrent
+/** Refcounted per-session AQE-off scope for the lake's staging
+  * writes and merge's bounds aggregate: the FIRST enter records the
+  * original setting and turns AQE off; the LAST exit restores it.
+  * Plain save/restore is not reentrant — with two concurrent
   * [[AtomicLake.stageFiles]] writers on one session, the second would
-  * capture the first's temporary values as the ones to restore,
-  * pinning them for the session's lifetime.
+  * capture the first's temporary value as the one to restore, pinning
+  * it for the session's lifetime.
   *
-  * Two keys are forced:
-  *  - AQE off: the staging exchange is an EXPLICIT repartition for
-  *    file-count control — AQE only splits shuffle+write into two
-  *    sequential jobs and its coalescing could defeat
-  *    filesPerPartition.
-  *  - parquet timestamps as INT64 µs (not legacy INT96): value-exact
-  *    either way (Spark is µs internally), but INT96 footer
-  *    statistics are deprecated/unusable — LAKE files must carry
-  *    min/max so [[LakeStats]] zone maps can prune timestamp
-  *    predicates. Scoped here, not session-wide, so non-lake outputs
-  *    keep whatever encoding the session default gives them.
+  * The staging exchange is an EXPLICIT repartition for file-count
+  * control — AQE only splits shuffle+write into two sequential jobs
+  * and its coalescing could defeat filesPerPartition. No parquet conf
+  * is flipped here: [[LakeWriter]] sets INT64 µs timestamps in its own
+  * writer conf, so concurrent non-lake writes keep the session's.
   */
 private[graft] object AqeScope {
   private val Forced: Seq[(String, String)] = Seq(
-    "spark.sql.adaptive.enabled" -> "false",
-    "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
+    "spark.sql.adaptive.enabled" -> "false")
   private val depth =
     new java.util.IdentityHashMap[SparkSession, (Int, Map[String, String])]()
 

@@ -30,8 +30,8 @@ import org.json4s.jackson.JsonMethods
   * decision into the already-read manifest — a few MB — so pruned
   * files cost literally nothing: no task, no footer, no GET.
   *
-  * Collection is metadata-only (the footer is written by the staging
-  * job anyway; no data re-read) and covers top-level atomic columns
+  * Collection is metadata-only (the footer the staging writer just
+  * closed; no data re-read) and covers top-level atomic columns
   * (numeric, string, date, timestamp-µs), capped at
   * [[LakeStats.MaxStatsCols]] so manifests stay O(files), never
   * O(files × width). Long string bounds are truncated: a truncated
@@ -106,74 +106,84 @@ object LakeStats {
     ParquetFileReader.open(HadoopInputFile.fromPath(file, conf),
       org.apache.parquet.HadoopReadOptions.builder(conf).build())
 
-  /** Read one staged parquet file's footer and fold its row-group
-    * statistics into per-column file-level bounds. Columns whose
-    * physical/logical type can't be mapped safely (INT96 timestamps,
-    * decimals, missing row-group stats) are simply absent — absent
-    * means never pruned. Returns None if the footer is unreadable
-    * (the commit proceeds stats-free rather than failing).
+  /** Read one parquet file's footer and fold it into a zone map
+    * ([[fromFooter]]). Returns None if the footer is unreadable (the
+    * commit proceeds stats-free rather than failing).
     */
   def collect(conf: Configuration, file: org.apache.hadoop.fs.Path,
       schema: StructType): Option[FileStats] =
+    try {
+      val reader = openParquet(conf, file)
+      try {
+        val bytes =
+          try file.getFileSystem(conf).getFileStatus(file).getLen
+          catch { case scala.util.control.NonFatal(_) => 0L }
+        fromFooter(reader.getFooter, bytes, schema)
+      } finally reader.close()
+    } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** Fold a file's row-group statistics into per-column file-level
+    * bounds — from a reader's footer ([[collect]]) or the footer a
+    * writer just closed, so a staged file needs no re-read. Columns
+    * whose physical/logical type can't be mapped safely (INT96
+    * timestamps, decimals, missing row-group stats) are simply absent —
+    * absent means never pruned.
+    */
+  def fromFooter(footer: org.apache.parquet.hadoop.metadata.ParquetMetadata,
+      bytes: Long, schema: StructType): Option[FileStats] =
     try {
       val wanted: Map[String, String] = schema.fields.iterator
         .flatMap(f => domainOf(f.dataType).map(d =>
           f.name.toLowerCase(java.util.Locale.ROOT) -> d))
         .take(MaxStatsCols).toMap
-      val reader = openParquet(conf, file)
-      try {
-        val blocks = reader.getFooter.getBlocks.asScala.toSeq
-        val rows = blocks.map(_.getRowCount).sum
-        val bytes =
-          try file.getFileSystem(conf).getFileStatus(file).getLen
-          catch { case scala.util.control.NonFatal(_) => 0L }
-        // name -> (domain, mins, maxes, nulls-or-unknown, sawAllBlocks)
-        val acc = scala.collection.mutable.Map[String,
-          (String, List[Bound], List[Bound], Option[Long], Int)]()
-        for (b <- blocks; c <- b.getColumns.asScala) {
-          val path = c.getPath.toArray
-          if (path.length == 1) {
-            val lower = path(0).toLowerCase(java.util.Locale.ROOT)
-            wanted.get(lower).foreach { domain =>
-              val pt = c.getPrimitiveType
-              val st = c.getStatistics
-              val bounds: Option[(Bound, Bound)] =
-                if (st == null || st.isEmpty || !st.hasNonNullValue) None
-                else rawBounds(pt.getPrimitiveTypeName,
-                  pt.getLogicalTypeAnnotation, domain, st)
-              val nulls: Option[Long] =
-                if (st == null || st.isEmpty) None
-                else if (st.isNumNullsSet && st.getNumNulls >= 0)
-                  Some(st.getNumNulls)
-                else None
-              // all-null row group: no non-null bound, but still a
-              // valid (empty) contribution when nulls == rowCount
-              val allNull = nulls.contains(b.getRowCount) &&
-                bounds.isEmpty && st != null && !st.isEmpty
-              if (bounds.isDefined || allNull) {
-                val (d, mins, maxes, nAcc, seen) = acc.getOrElse(path(0),
-                  (domain, Nil, Nil, Some(0L), 0))
-                val (nmins, nmaxes) = bounds match {
-                  case Some((lo, hi)) => (lo :: mins, hi :: maxes)
-                  case None => (mins, maxes)
-                }
-                val nNulls = for (a <- nAcc; n <- nulls) yield a + n
-                acc(path(0)) = (d, nmins, nmaxes, nNulls, seen + 1)
-              } else acc.remove(path(0)) // a block with no stats poisons
-            }
+      val blocks = footer.getBlocks.asScala.toSeq
+      val rows = blocks.map(_.getRowCount).sum
+      // name -> (domain, mins, maxes, nulls-or-unknown, sawAllBlocks)
+      val acc = scala.collection.mutable.Map[String,
+        (String, List[Bound], List[Bound], Option[Long], Int)]()
+      for (b <- blocks; c <- b.getColumns.asScala) {
+        val path = c.getPath.toArray
+        if (path.length == 1) {
+          val lower = path(0).toLowerCase(java.util.Locale.ROOT)
+          wanted.get(lower).foreach { domain =>
+            val pt = c.getPrimitiveType
+            val st = c.getStatistics
+            val bounds: Option[(Bound, Bound)] =
+              if (st == null || st.isEmpty || !st.hasNonNullValue) None
+              else rawBounds(pt.getPrimitiveTypeName,
+                pt.getLogicalTypeAnnotation, domain, st)
+            val nulls: Option[Long] =
+              if (st == null || st.isEmpty) None
+              else if (st.isNumNullsSet && st.getNumNulls >= 0)
+                Some(st.getNumNulls)
+              else None
+            // all-null row group: no non-null bound, but still a
+            // valid (empty) contribution when nulls == rowCount
+            val allNull = nulls.contains(b.getRowCount) &&
+              bounds.isEmpty && st != null && !st.isEmpty
+            if (bounds.isDefined || allNull) {
+              val (d, mins, maxes, nAcc, seen) = acc.getOrElse(path(0),
+                (domain, Nil, Nil, Some(0L), 0))
+              val (nmins, nmaxes) = bounds match {
+                case Some((lo, hi)) => (lo :: mins, hi :: maxes)
+                case None => (mins, maxes)
+              }
+              val nNulls = for (a <- nAcc; n <- nulls) yield a + n
+              acc(path(0)) = (d, nmins, nmaxes, nNulls, seen + 1)
+            } else acc.remove(path(0)) // a block with no stats poisons
           }
         }
-        val cols = acc.iterator.collect {
-          // only columns every block reported on: a missed block means
-          // the fold's bounds don't bound the whole file
-          case (name, (domain, mins, maxes, nulls, seen))
-              if seen == blocks.length =>
-            val lo = mins.reduceOption(minB)
-            val hi = maxes.reduceOption(maxB).flatMap(clampMax)
-            name -> ColStats(domain, lo.map(clampMin), hi, nulls)
-        }.toMap
-        Some(FileStats(rows, cols, bytes))
-      } finally reader.close()
+      }
+      val cols = acc.iterator.collect {
+        // only columns every block reported on: a missed block means
+        // the fold's bounds don't bound the whole file
+        case (name, (domain, mins, maxes, nulls, seen))
+            if seen == blocks.length =>
+          val lo = mins.reduceOption(minB)
+          val hi = maxes.reduceOption(maxB).flatMap(clampMax)
+          name -> ColStats(domain, lo.map(clampMin), hi, nulls)
+      }.toMap
+      Some(FileStats(rows, cols, bytes))
     } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Map one row group's raw parquet statistics into the Spark-domain

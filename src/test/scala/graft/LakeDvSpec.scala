@@ -261,5 +261,38 @@ class LakeDvSpec extends SparkSpec {
       dvDirs shouldBe empty
       AtomicLake.read(spark, root).count() shouldBe 75
     }
+
+    it("memoized sidecars: reads, purge, restore, vacuum and a clone agree with the memo warm") {
+      val root = freshRoot("dv_memo_src")
+      val cl = freshRoot("dv_memo_dst")
+      seed(root)
+      AtomicLake.deleteWhereDV(spark, root)($"m" === 2)
+      AtomicLake.deleteWhereDV(spark, root)($"id" < 10) // chains a sidecar
+      val expect = (1 to 100).filterNot(i => i % 4 == 2 || i < 10).toSet
+      def ids(r: String) =
+        AtomicLake.read(spark, r).select("id").as[Int].collect().toSet
+      ids(root) shouldBe expect // parses and memoizes the chain
+      val dvVersion = AtomicLake.currentVersion(root).get
+      AtomicLake.clone(root, cl)
+      // with the sidecars moved away only the memo can serve them: the
+      // source's relative refs and the clone's absolute refs resolve to
+      // the same entries
+      val dv = Paths.get(root, "dv")
+      val away = Paths.get(root, "dv-away")
+      Files.move(dv, away)
+      try {
+        ids(root) shouldBe expect
+        ids(cl) shouldBe expect
+      } finally Files.move(away, dv)
+      AtomicLake.purgeDeletes(spark, root)
+      dvMap(root) shouldBe empty
+      ids(root) shouldBe expect
+      AtomicLake.restore(root, dvVersion)
+      dvMap(root) should not be empty
+      ids(root) shouldBe expect
+      AtomicLake.vacuum(root, keepVersions = 1, minAgeMs = 0L)
+      ids(root) shouldBe expect
+      ids(cl) shouldBe expect
+    }
   }
 }
