@@ -39,7 +39,6 @@ object GraftSession {
       .config("spark.sql.join.preferSortMergeJoin", "false")
       .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
         "67108864")
-      .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.filterPushdown", "true")
       // default 100 entries churns under many distinct plans (each

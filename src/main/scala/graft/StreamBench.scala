@@ -63,9 +63,9 @@ object StreamBench {
       math.max(1, evRows.size / 10)).toSeq.take(10)
 
     drive[(Long, String, Double, String)]("atomic_upsert", evSlices, ms =>
-      StreamingLake.atomicUpsertSink(
+      StreamingLake.upsertSink(
         ms.toDF().toDF("user_id", "ts", "value", "day"),
-        s"$scratch/upsert_lake", s"$scratch/upsert_ckpt", "day"))
+        s"$scratch/upsert_lake", s"$scratch/upsert_ckpt", Seq("day")))
 
     drive[(Long, String, Double, String)]("merge", evSlices, ms =>
       StreamingLake.mergeSink(

@@ -151,8 +151,8 @@ object Silver {
     * the materialized fact table (the reference materializes
     * lakehouse.silver.fact_mobility once and every gold task queries
     * it). Locally the materialization is an in-memory cache; in
-    * production it is a [[graft.sources.PartitionedLake]] write at
-    * ingest time and a plain parquet read here.
+    * production it is a [[graft.sources.AtomicLake]] write at
+    * ingest time and a lake read here.
     */
   private val factMemo = new graft.sources.SessionMemo[String, DataFrame](
     maxPerSession = 4, onEvict = _.unpersist(blocking = false))

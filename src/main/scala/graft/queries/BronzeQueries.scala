@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.sources.{PartitionedLake, Tables}
+import graft.sources.Tables
 import graft.lakehouse.Silver
 import graft.operators.Salt
 

@@ -479,8 +479,7 @@ object AtomicLake {
     val distributed =
       if (!distribute) physical
       else if (partitionCols.nonEmpty)
-        PartitionedLake.distributeForWrite(physical, partitionCols,
-          effectiveFiles)
+        distributeForWrite(physical, partitionCols, effectiveFiles)
       else physical.repartition(effectiveFiles)
     // The staging write runs with AQE off: its exchange is an EXPLICIT
     // repartition chosen for file-count control, so AQE has nothing to
@@ -497,6 +496,30 @@ object AtomicLake {
       LakeWriter.write(distributed, root, commitId, partitionCols))
     Staged(written.groupBy(_.part).map { case (p, ws) => p -> ws.map(_.rel) },
       written.flatMap(w => w.stats.map(w.rel -> _)).toMap)
+  }
+
+  /** Cluster `batch` by its partition columns (plus a deterministic
+    * salt when `filesPerPartition` > 1) so the partitioned write emits
+    * a bounded number of files per partition. Undistributed, every
+    * task writes one file into every partition it holds rows for
+    * (a 1000-task job over 365 dates emits 365k small files);
+    * distributed, each partition gets `filesPerPartition` files
+    * regardless of upstream parallelism — raise it for skewed or
+    * giant partitions so they keep write parallelism.
+    */
+  private def distributeForWrite(batch: DataFrame,
+      partitionCols: Seq[String], filesPerPartition: Int): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit, pmod, spark_partition_id}
+    if (filesPerPartition <= 1)
+      batch.repartition(partitionCols.map(col): _*)
+    else
+      // spark_partition_id is stable within a task — rows of one input
+      // partition land together, spreading each output partition over
+      // up to filesPerPartition writer tasks without a random salt.
+      batch.withColumn("__write_salt",
+          pmod(spark_partition_id(), lit(filesPerPartition)))
+        .repartition(partitionCols.map(col) :+ col("__write_salt"): _*)
+        .drop("__write_salt")
   }
 
   /** The one commit. `edit` maps the snapshot the CAS lands on (an
@@ -2115,9 +2138,10 @@ object AtomicLake {
     * stats only record what the layout provides.
     *
     * `zorder = true` interleaves the bits of exactly TWO numeric
-    * columns (Morton order, [[PartitionedLake.writeZOrdered]]'s
-    * contract: non-negative, < 2^21 after long cast) so BOTH columns
-    * get tight per-file ranges — the 2-D box-query layout; the
+    * columns (Morton order,
+    * [[graft.expressions.NativeKernels.mortonValue]]'s contract:
+    * non-negative, < 2^21 after long cast) so BOTH columns get tight
+    * per-file ranges — the 2-D box-query layout; the
     * default lexicographic order serves one leading column best.
     *
     * Like [[compact]], the rewrite commits as `kind=compact` (no
@@ -2278,8 +2302,14 @@ object AtomicLake {
       sweep(Paths.get(root, "index"), deep = false)(sidecars)
     // `_staging` dirs past the grace window were left by dead writers
     // of lakes staged through a committer before files were written
-    // in place
-    sweep(Paths.get(root, "_staging"), deep = false)(_ => false)
+    // in place; the dir itself goes once nothing is left in it
+    val staging = Paths.get(root, "_staging")
+    sweep(staging, deep = false)(_ => false)
+    if (!dryRun && Files.isDirectory(staging)) {
+      val rest = Files.list(staging)
+      try if (!rest.iterator().hasNext) Files.deleteIfExists(staging)
+      finally rest.close()
+    }
     if (dryRun) swept + expired.size else swept
   }
 

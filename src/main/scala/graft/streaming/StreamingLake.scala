@@ -1,14 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
-import org.apache.spark.sql.Row
-import graft.sources.PartitionedLake
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.streaming.DataStreamWriter
+import graft.sources.{AtomicLake, CommitStore, HardlinkCommitStore}
 
-/** Streaming ingestion into the partitioned lake (SURVEY.md §2 F6 +
-  * A4 composed): each micro-batch upserts its partitions via dynamic
-  * partition overwrite — the streaming form of the reference's
-  * per-day DELETE+INSERT worker
+/** Streaming ingestion into the lake (SURVEY.md §2 F6 + A4 composed):
+  * each micro-batch of each sink is one atomic [[AtomicLake]] commit —
+  * the streaming form of the reference's per-day DELETE+INSERT worker
   * (/root/reference/airflow/dags/mobility_ingestion_pipeline.py:485-566).
   *
   * Idempotence under replay: a re-delivered micro-batch rewrites the
@@ -16,51 +14,38 @@ import graft.sources.PartitionedLake
   * duplicates, so at-least-once delivery upgrades to effectively-once
   * lake state as long as batches are partition-aligned (the reference
   * makes the same assumption per day-file). State: none beyond the
-  * sink checkpoint; each batch is one shuffle-free partitioned write.
+  * sink checkpoint.
   */
 object StreamingLake {
 
-  /** Attach a partition-upsert sink to a streaming DataFrame. Caller
-    * starts/stops the returned writer.
+  /** The wrapper every sink shares: checkpoint at `checkpoint`, and
+    * run `write` on each non-empty micro-batch.
+    */
+  private def sink(stream: DataFrame, checkpoint: String)(
+      write: DataFrame => Unit): DataStreamWriter[Row] =
+    stream.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        if (!batch.isEmpty) write(batch)
+      }
+
+  /** Partition-upsert sink: each micro-batch replaces the partitions
+    * it carries in ONE atomic snapshot commit
+    * ([[AtomicLake.upsertPartitions]]), so a lake reader concurrent
+    * with the stream sees whole batches only — never a half-written
+    * partition mid-batch. Replayed batches re-commit the same
+    * partitions to the same content (a new version, same data), with
+    * per-batch time travel. `store` is the commit claim: through a
+    * catalog store, micro-batches commit exactly like batch writers
+    * (the object-store deployment shape). Caller starts/stops the
+    * returned writer.
     */
   def upsertSink(stream: DataFrame, path: String, checkpoint: String,
-      partitionCols: String*): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          PartitionedLake.upsertPartitions(batch, path, partitionCols: _*)
-      }
-
-  /** [[upsertSink]] through [[graft.sources.AtomicLake]]: each
-    * micro-batch becomes ONE atomic snapshot commit, so a lake reader
-    * concurrent with the stream sees whole batches only — never a
-    * half-written partition mid-batch. Replayed batches re-commit the
-    * same partitions to the same content (a new version, same data):
-    * the same effectively-once lake state, now with snapshot
-    * isolation and per-batch time travel for free.
-    */
-  def atomicUpsertSink(stream: DataFrame, path: String,
-      checkpoint: String, partitionCols: String*): DataStreamWriter[Row] =
-    atomicUpsertSink(stream, path, checkpoint, partitionCols.toSeq,
-      graft.sources.HardlinkCommitStore)
-
-  /** [[atomicUpsertSink]] against an explicit [[graft.sources.CommitStore]]
-    * — the object-store deployment shape: micro-batches commit through
-    * the catalog exactly like batch writers.
-    */
-  def atomicUpsertSink(stream: DataFrame, path: String,
-      checkpoint: String, partitionCols: Seq[String],
-      store: graft.sources.CommitStore): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          graft.sources.AtomicLake.upsertPartitions(batch, path,
-            partitionCols, store = store)
-          ()
-        }
-      }
+      partitionCols: Seq[String],
+      store: CommitStore = HardlinkCommitStore): DataStreamWriter[Row] =
+    sink(stream, checkpoint) { batch =>
+      AtomicLake.upsertPartitions(batch, path, partitionCols, store = store)
+    }
 
   /** Crawl-ingest sink: the composition of the ACID lake (G11) and
     * the persistent near-dup index (G18). Every micro-batch of
@@ -84,33 +69,23 @@ object StreamingLake {
   def ingestWithIndexSink(stream: DataFrame, idCol: String,
       textCol: String, docsRoot: String, indexRoot: String,
       checkpoint: String, threshold: Double = 0.7,
-      store: graft.sources.CommitStore = graft.sources.HardlinkCommitStore)
-      : DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          import graft.operators.NearDupIndex
-          import graft.sources.AtomicLake
-          if (NearDupIndex.exists(indexRoot, store))
-            NearDupIndex.append(batch, idCol, textCol, indexRoot, store)
-          else
-            NearDupIndex.build(batch, idCol, textCol, indexRoot,
-              threshold, store = store)
-          val fresh =
-            if (AtomicLake.currentVersion(docsRoot, store).isEmpty) batch
-            else {
-              val landed = AtomicLake.read(batch.sparkSession, docsRoot,
-                store).select(idCol)
-              batch.join(landed, batch(idCol) === landed(idCol),
-                "left_anti")
-            }
-          if (!fresh.isEmpty) {
-            AtomicLake.append(fresh, docsRoot, store = store)
-            ()
-          }
+      store: CommitStore = HardlinkCommitStore): DataStreamWriter[Row] =
+    sink(stream, checkpoint) { batch =>
+      import graft.operators.NearDupIndex
+      if (NearDupIndex.exists(indexRoot, store))
+        NearDupIndex.append(batch, idCol, textCol, indexRoot, store)
+      else
+        NearDupIndex.build(batch, idCol, textCol, indexRoot,
+          threshold, store = store)
+      val fresh =
+        if (AtomicLake.currentVersion(docsRoot, store).isEmpty) batch
+        else {
+          val landed = AtomicLake.read(batch.sparkSession, docsRoot,
+            store).select(idCol)
+          batch.join(landed, batch(idCol) === landed(idCol), "left_anti")
         }
-      }
+      if (!fresh.isEmpty) AtomicLake.append(fresh, docsRoot, store = store)
+    }
 
   /** Streaming vector ingest ∘ live ANN index (the embedding twin of
     * [[ingestWithIndexSink]]): each micro-batch of (id, vector) rows
@@ -126,24 +101,18 @@ object StreamingLake {
     */
   def vectorIndexSink(stream: DataFrame, idCol: String,
       vecCol: String, indexRoot: String, checkpoint: String,
-      store: graft.sources.CommitStore =
-        graft.sources.HardlinkCommitStore): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          import graft.operators.VectorIndex
-          require(VectorIndex.exists(indexRoot, store),
-            s"no vector index at $indexRoot: build() one from a seed " +
-              "corpus before streaming into it")
-          VectorIndex.append(batch.sparkSession, batch, idCol, vecCol,
-            indexRoot, store = store)
-          ()
-        }
-      }
+      store: CommitStore = HardlinkCommitStore): DataStreamWriter[Row] =
+    sink(stream, checkpoint) { batch =>
+      import graft.operators.VectorIndex
+      require(VectorIndex.exists(indexRoot, store),
+        s"no vector index at $indexRoot: build() one from a seed " +
+          "corpus before streaming into it")
+      VectorIndex.append(batch.sparkSession, batch, idCol, vecCol,
+        indexRoot, store = store)
+    }
 
   /** Streaming CDC upsert: each micro-batch MERGEs into the lake by
-    * key ([[graft.sources.AtomicLake.merge]]) — matched keys get the
+    * key ([[AtomicLake.merge]]) — matched keys get the
     * batch's row, new keys insert, untouched rows (and untouched
     * FILES, via the merge's zone-map + semi-join scoping) stay as
     * they are. The streaming half of the Delta
@@ -166,35 +135,27 @@ object StreamingLake {
   def mergeSink(stream: DataFrame, path: String, checkpoint: String,
       keyCols: Seq[String], latestBy: Option[String] = None,
       partitionCols: Seq[String] = Nil,
-      store: graft.sources.CommitStore = graft.sources.HardlinkCommitStore)
-      : DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          import org.apache.spark.sql.expressions.Window
-          import org.apache.spark.sql.functions.{col, row_number}
-          val src = latestBy.fold(batch) { ts =>
-            batch.withColumn("_graft_rn", row_number().over(
-                Window.partitionBy(keyCols.map(col): _*)
-                  .orderBy(col(ts).desc)))
-              .filter(col("_graft_rn") === 1).drop("_graft_rn")
-          }
-          val spark = batch.sparkSession
-          if (graft.sources.AtomicLake.currentVersion(path, store).isEmpty)
-            graft.sources.AtomicLake.upsertPartitions(src, path,
-              partitionCols, store = store)
-          else
-            graft.sources.AtomicLake.merge(spark, path, src, keyCols,
-              store = store)
-          ()
-        }
+      store: CommitStore = HardlinkCommitStore): DataStreamWriter[Row] =
+    sink(stream, checkpoint) { batch =>
+      import org.apache.spark.sql.expressions.Window
+      import org.apache.spark.sql.functions.{col, row_number}
+      val src = latestBy.fold(batch) { ts =>
+        batch.withColumn("_graft_rn", row_number().over(
+            Window.partitionBy(keyCols.map(col): _*)
+              .orderBy(col(ts).desc)))
+          .filter(col("_graft_rn") === 1).drop("_graft_rn")
       }
+      if (AtomicLake.currentVersion(path, store).isEmpty)
+        AtomicLake.upsertPartitions(src, path, partitionCols, store = store)
+      else
+        AtomicLake.merge(batch.sparkSession, path, src, keyCols,
+          store = store)
+    }
 
   /** Streaming expectations sink (Delta Live Tables'
     * `expect_or_drop` + quarantine, per micro-batch): each batch
     * splits against the table's CHECK constraints via
-    * [[graft.sources.AtomicLake.appendExpect]] — clean rows append
+    * [[AtomicLake.appendExpect]] — clean rows append
     * to the table, violating rows land in the quarantine lake with
     * their violation names — so one poisoned record slows nothing
     * and loses nothing, instead of failing the trigger the way the
@@ -204,21 +165,9 @@ object StreamingLake {
   def expectSink(stream: DataFrame, path: String,
       quarantinePath: String, checkpoint: String,
       partitionCols: Seq[String] = Nil,
-      store: graft.sources.CommitStore = graft.sources.HardlinkCommitStore)
-      : DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          graft.sources.AtomicLake.appendExpect(batch, path,
-            quarantinePath, partitionCols, store = store)
-          ()
-        }
-      }
-
-  /** Convenience: start with a processing-time trigger. */
-  def start(stream: DataFrame, path: String, checkpoint: String,
-      trigger: Trigger, partitionCols: String*): StreamingQuery =
-    upsertSink(stream, path, checkpoint, partitionCols: _*)
-      .trigger(trigger).start()
+      store: CommitStore = HardlinkCommitStore): DataStreamWriter[Row] =
+    sink(stream, checkpoint) { batch =>
+      AtomicLake.appendExpect(batch, path, quarantinePath, partitionCols,
+        store = store)
+    }
 }

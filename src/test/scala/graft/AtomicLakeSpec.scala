@@ -342,9 +342,20 @@ class AtomicLakeSpec extends SparkSpec {
       // a dead writer's orphan
       AtomicLake.stageFiles(Seq((99, "a")).toDF("id", "part"),
         root, Seq("part"), 1)
+      // a dead committer-era writer's staging dir
+      val staging = Paths.get(root, "_staging")
+      Files.createDirectories(staging.resolve("old"))
+      Files.write(staging.resolve("old").resolve("part.parquet"),
+        Array[Byte](1, 2, 3))
+      // a dry run reports but leaves everything, `_staging` included
+      AtomicLake.vacuum(root, keepVersions = 2, minAgeMs = 0L,
+        dryRun = true) should be >= 3 // + v1's expired manifest
+      Files.exists(staging.resolve("old").resolve("part.parquet")) shouldBe true
       // minAge 0: everything old enough; keep the last 2 versions
       val deleted = AtomicLake.vacuum(root, keepVersions = 2, minAgeMs = 0L)
       deleted should be >= 2 // v1's file + the orphan
+      // the swept staging dir goes with its last entry
+      Files.exists(staging) shouldBe false
       AtomicLake.currentVersion(root) shouldBe Some(3L)
       AtomicLake.read(spark, root).select("id").as[Int]
         .collect().toSeq shouldBe Seq(3)

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.nio.charset.Charset
 import org.apache.spark.sql.functions._
-import graft.sources.{CsvIngest, PartitionedLake}
+import graft.sources.{AtomicLake, CsvIngest}
 import graft.operators.Salt
 import graft.sources.Tables
 
@@ -218,78 +218,31 @@ class BronzeSpec extends SparkSpec {
     }
   }
 
-  describe("PartitionedLake") {
-    it("re-upserting a partition is idempotent and leaves others alone") {
-      val lake = s"$scratch/lake"
-      val day1 = Seq((1, "2024-01-01"), (2, "2024-01-01"))
-        .toDF("id", "day")
-      val day2 = Seq((3, "2024-01-02")).toDF("id", "day")
-      PartitionedLake.upsertPartitions(day1.unionAll(day2), lake, "day")
-      // re-ingest day1 twice over
-      PartitionedLake.upsertPartitions(day1, lake, "day")
-      PartitionedLake.upsertPartitions(day1, lake, "day")
-      val back = PartitionedLake.read(spark, lake)
-      back.count() shouldBe 3
-      back.filter($"day" === "2024-01-02").count() shouldBe 1
-    }
-    it("upsert replaces only the partitions present in the batch") {
-      val lake = s"$scratch/lake2"
-      PartitionedLake.upsertPartitions(
-        Seq((1, "a"), (2, "b")).toDF("id", "part"), lake, "part")
-      PartitionedLake.upsertPartitions(
-        Seq((99, "a")).toDF("id", "part"), lake, "part")
-      val back = PartitionedLake.read(spark, lake)
-        .select("id", "part").as[(Int, String)].collect().toSet
-      back shouldBe Set((99, "a"), (2, "b"))
-    }
-    it("z-ordered layout prunes files for filters on EITHER dimension") {
-      // high-cardinality 2-D data: x, y in [0, 1024)
-      val grid = spark.range(0, 60000).select(
-        (($"id" * 7919L) % 1024L).as("x"),
-        (($"id" * 104729L) % 1024L).as("y"))
-      val zPath = s"$scratch/zorder"
-      val sPath = s"$scratch/singlesort"
-      PartitionedLake.writeZOrdered(grid.toDF(), zPath, "x", "y",
-        files = 16)
-      grid.repartitionByRange(16, $"x").sortWithinPartitions("x")
-        .write.mode("overwrite").parquet(sPath)
-      // files whose footer min-max range intersects a filter — the
-      // exact skipping decision parquet makes from file statistics
-      def touched(path: String, c: String, lo: Long, hi: Long): Long =
-        spark.read.parquet(path)
-          .groupBy(input_file_name())
-          .agg(min(col(c)).as("mn"), max(col(c)).as("mx"))
-          .filter($"mn" <= hi && $"mx" >= lo)
-          .count()
-      // x-only sort: perfect on x-filters but CANNOT skip for y-filters
-      touched(sPath, "x", 0, 63) should be <= 2L
-      touched(sPath, "y", 0, 63) shouldBe 16L
-      // z-order: a 16-file split tiles the plane in ~4x4 quadrants, so
-      // BOTH single-dimension filters skip ~3/4 of the files
-      touched(zPath, "x", 0, 63) should be <= 8L
-      touched(zPath, "y", 0, 63) should be <= 8L
-      spark.read.parquet(zPath).count() shouldBe 60000
-    }
+  describe("AtomicLake.upsertPartitions") {
     it("write distribution bounds files per partition") {
-      def parquetFiles(dir: String): Map[String, Int] = {
-        val root = new java.io.File(dir)
-        root.listFiles().filter(_.isDirectory).map(d =>
-          d.getName -> d.listFiles().count(_.getName.endsWith(".parquet"))
-        ).toMap
+      def fresh(name: String): String = {
+        val p = s"$scratch/$name"
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))
+        p
       }
+      // file count per partition, from the manifest the commit landed
+      def filesPer(root: String): Map[String, Int] =
+        AtomicLake.partitions(root).map(p => p._1 -> p._2).toMap
       // 16 input partitions x 3 dates would emit up to 48 files raw;
       // the distributed write emits exactly 1 per partition...
       val df = spark.range(0, 300, 1, 16)
         .selectExpr("id", "concat('d', id % 3) AS day")
-      val one = s"$scratch/lake_files1"
-      PartitionedLake.upsertPartitions(df.toDF(), one, "day")
-      parquetFiles(one).values.toSet shouldBe Set(1)
+      val one = fresh("lake_files1")
+      AtomicLake.upsertPartitions(df.toDF(), one, Seq("day"))
+      filesPer(one).keySet shouldBe Set("day=d0", "day=d1", "day=d2")
+      filesPer(one).values.toSet shouldBe Set(1)
       // ...and at most filesPerPartition with the skew knob.
-      val three = s"$scratch/lake_files3"
-      PartitionedLake.upsertPartitionsSized(df.toDF(), three, Seq("day"),
+      val three = fresh("lake_files3")
+      AtomicLake.upsertPartitions(df.toDF(), three, Seq("day"),
         filesPerPartition = 3)
-      all(parquetFiles(three).values) should be <= 3
-      PartitionedLake.read(spark, three).count() shouldBe 300
+      filesPer(three) should have size 3
+      all(filesPer(three).values) should be <= 3
+      AtomicLake.read(spark, three).count() shouldBe 300
     }
   }
 
@@ -298,6 +251,7 @@ class BronzeSpec extends SparkSpec {
       val src = writeFile("bronze.csv",
         "id,day,v\n1,2024-01-01,10\n2,2024-01-01,20\nbad,row,has,too,many\n3,2024-01-02,30\n")
       val lake = s"$scratch/bronze_lake"
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(lake))
       val (clean, corrupt) = graft.lakehouse.Bronze.ingestCsv(
         spark, src, lake, "http://src/bronze.csv",
         columns = Seq("id", "day", "v"), partitionCols = Seq("day"))
@@ -307,33 +261,12 @@ class BronzeSpec extends SparkSpec {
       graft.lakehouse.Bronze.ingestCsv(
         spark, src, lake, "http://src/bronze.csv",
         columns = Seq("id", "day", "v"), partitionCols = Seq("day"))
-      val back = PartitionedLake.read(spark, lake)
+      val back = AtomicLake.read(spark, lake)
       back.count() shouldBe 3
       back.columns should contain allOf ("source_url", "filename",
         "ingestion_timestamp")
-    }
-  }
-
-  describe("PartitionedLake.writeBucketed") {
-    it("same-bucketed tables join without a shuffle") {
-      val ord = Tables.orders(spark, sf).select("o_orderkey", "o_totalprice")
-      val li = Tables.lineitem(spark, sf).select("l_orderkey", "l_quantity")
-      PartitionedLake.writeBucketed(ord, "b_orders", "o_orderkey", 4)
-      PartitionedLake.writeBucketed(li, "b_lineitem", "l_orderkey", 4)
-      // disable auto-broadcast so the tiny test tables take the same
-      // join strategy fact-fact data would at scale
-      val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      try {
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val joined = spark.table("b_lineitem")
-          .join(spark.table("b_orders"),
-            col("l_orderkey") === col("o_orderkey"))
-        val plan = joined.queryExecution.executedPlan.toString
-        // co-located: sort-merge join with NO Exchange on either side
-        plan should include("SortMergeJoin")
-        plan should not include "Exchange hashpartitioning"
-        joined.count() shouldBe li.count()
-      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+      // each ingest is one atomic, versioned lake commit
+      AtomicLake.history(lake).map(_._1) shouldBe Seq(2L, 1L)
     }
   }
 

@@ -127,6 +127,15 @@ class CurationSpec extends SparkSpec {
       files should not be empty
       all(files) should endWith(".json.gz")
     }
+    it("a re-export with fewer shards replaces the whole layout") {
+      val dir = TestScratch("test_jsonl_reshard")
+      val docs = (1L to 40L).map(i => (i, s"text $i")).toDF("doc_id", "text")
+      Export.writeJsonlShards(docs, "doc_id", nShards = 4, path = dir)
+      Export.writeJsonlShards(docs, "doc_id", nShards = 2, path = dir)
+      spark.read.json(dir).count() shouldBe 40
+      new java.io.File(dir).listFiles().map(_.getName)
+        .filter(_.startsWith("shard=")).toSet shouldBe Set("shard=0", "shard=1")
+    }
   }
 
   describe("Curation.sharedSpans / trimSharedSpans (H13)") {

@@ -200,10 +200,19 @@ class LakeWriteSpec extends SparkSpec {
         .withColumn("m", lit(9)), Seq("id", "part"))
       AtomicLake.compact(spark, root)
       AtomicLake.cluster(spark, root, Seq("id"))
-      val names = tree(root).map(_.getFileName.toString)
+      // bronze lands its clean rows through the same writer
+      val bronze = fresh("hygiene_bronze")
+      val csv = Paths.get(fresh("hygiene_csv"), "day.csv")
+      Files.createDirectories(csv.getParent)
+      Files.write(csv, "id,day\n1,2024-01-01\n2,2024-01-02\n".getBytes("UTF-8"))
+      graft.lakehouse.Bronze.ingestCsv(spark, csv.toString, bronze,
+        "file://day.csv", columns = Seq("id", "day"),
+        partitionCols = Seq("day"))
+      val names = (tree(root) ++ tree(bronze)).map(_.getFileName.toString)
       names.filter(n => n == "_SUCCESS" || n.endsWith(".crc") ||
         n == "_temporary" || n == "_staging") shouldBe empty
       AtomicLake.read(spark, root).count() shouldBe 18
+      AtomicLake.read(spark, bronze).count() shouldBe 2
     }
 
     it("a small upsert stages in one Spark job whose tasks report their output") {

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.FileSourceScanExec
-import graft.sources.{AtomicLake, PartitionedLake, ReadSchema, Tables}
+import graft.sources.{AtomicLake, ReadSchema, Tables}
 
 /** Plan-shape regression guards: the properties that make these
   * queries survive a 100× scale-up, asserted on the actual physical
@@ -38,7 +38,7 @@ class PlanHygieneSpec extends SparkSpec {
       Seq((1, "2024-01-01"), (2, "2024-01-02"), (3, "2024-01-03"))
         .toDF("id", "day")
         .write.mode("overwrite").partitionBy("day").parquet(lake)
-      val q = PartitionedLake.read(spark, lake).filter($"day" === "2024-01-02")
+      val q = ReadSchema.read(spark, lake).filter($"day" === "2024-01-02")
       val scan = scans(q).head
       scan.metadata("PartitionFilters") should include("day")
       // only one of the three partition directories is actually read
@@ -91,7 +91,7 @@ class PlanHygieneSpec extends SparkSpec {
       Tables.all.foreach(t => sameAsInference(s"$sf001/$t.parquet"))
     }
 
-    it("resolves k=v partitioned, multi-file dirs through PartitionedLake.read") {
+    it("resolves k=v partitioned, multi-file dirs through ReadSchema.read") {
       val dir = fresh("parted")
       // two partitions whose files carry DIFFERENT data schemas: the
       // non-merging inference reads the first file in path order only
@@ -104,8 +104,8 @@ class PlanHygieneSpec extends SparkSpec {
       val inferred = spark.read.parquet(dir).schema
       inferred.fieldNames shouldBe Array("id", "a", "day", "bucket")
       ReadSchema.resolve(spark, dir) shouldBe inferred
-      PartitionedLake.read(spark, dir).schema shouldBe inferred
-      PartitionedLake.read(spark, dir).count() shouldBe 80
+      ReadSchema.read(spark, dir).schema shouldBe inferred
+      ReadSchema.read(spark, dir).count() shouldBe 80
       // and with merging on, every footer is read and merged
       spark.conf.set("spark.sql.parquet.mergeSchema", "true")
       try {

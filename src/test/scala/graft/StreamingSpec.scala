@@ -129,7 +129,7 @@ class StreamingSpec extends SparkSpec {
       val in = MemoryStream[(Long, String, Double)]
       val stream = in.toDF().toDF("id", "day", "trips")
       val q = graft.streaming.StreamingLake
-        .upsertSink(stream, lake, ck, "day").start()
+        .upsertSink(stream, lake, ck, Seq("day")).start()
       try {
         in.addData((1L, "2024-01-01", 1.0), (2L, "2024-01-01", 2.0))
         q.processAllAvailable()
@@ -137,7 +137,7 @@ class StreamingSpec extends SparkSpec {
         in.addData((1L, "2024-01-01", 1.0), (2L, "2024-01-01", 2.0),
           (3L, "2024-01-02", 4.0))
         q.processAllAvailable()
-        val back = graft.sources.PartitionedLake.read(spark, lake)
+        val back = graft.sources.AtomicLake.read(spark, lake)
         back.count() shouldBe 3
         back.filter($"day" === "2024-01-01").count() shouldBe 2
       } finally q.stop()
@@ -154,7 +154,7 @@ class StreamingSpec extends SparkSpec {
       val in = MemoryStream[(Long, String, Double)]
       val stream = in.toDF().toDF("id", "day", "trips")
       val q = graft.streaming.StreamingLake
-        .atomicUpsertSink(stream, lake, ck, "day").start()
+        .upsertSink(stream, lake, ck, Seq("day")).start()
       try {
         in.addData((1L, "2024-01-01", 1.0), (2L, "2024-01-01", 2.0))
         q.processAllAvailable()
@@ -278,7 +278,7 @@ class StreamingSpec extends SparkSpec {
       val in = MemoryStream[(Long, String, Double)]
       val stream = in.toDF().toDF("id", "day", "trips")
       val q = graft.streaming.StreamingLake
-        .atomicUpsertSink(stream, lake, ck, Seq("day"), store).start()
+        .upsertSink(stream, lake, ck, Seq("day"), store).start()
       try {
         in.addData((1L, "2024-01-01", 1.0))
         q.processAllAvailable()
