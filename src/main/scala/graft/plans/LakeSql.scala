@@ -30,13 +30,13 @@ import graft.sources.AtomicLake
   *  - `ALTER LAKE '<root>' ADD CONSTRAINT <name> CHECK (<predicate>)`
   *  - `ALTER LAKE '<root>' DROP CONSTRAINT <name>`
   *  - `VACUUM '<root>' [RETAIN <n> VERSIONS]` — GC unreferenced files
-  *  - `DELETE FROM LAKE '<root>' [USING VECTORS] WHERE <pred>` —
-  *    row-level delete: copy-on-write, or deletion vectors with
-  *    `USING VECTORS`
+  *  - `DELETE FROM LAKE '<root>' WHERE <pred>` — row-level delete
+  *    through a deletion vector (merge-on-read)
   *  - `REORG LAKE '<root>' APPLY PURGE` — materialize deletion
   *    vectors (Delta's REORG … APPLY (PURGE))
   *  - `UPDATE LAKE '<root>' SET c1 = e1, c2 = e2 WHERE <pred>` —
-  *    copy-on-write row-level UPDATE
+  *    merge-on-read row-level UPDATE: deletion vector plus staged
+  *    row images in one commit
   *  - `MERGE INTO LAKE '<root>' USING <view|(query)> ON <keys>
   *    WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *`
   *    — keyed merge-on-read upsert (G26): deletion vector plus
@@ -79,7 +79,7 @@ object LakeSql {
   private val Vacuum: Regex =
     """(?is)\s*VACUUM\s+'([^']+)'(?:\s+RETAIN\s+(\d+)\s+VERSIONS)?(\s+DRY\s+RUN)?\s*;?\s*""".r
   private val DeleteFrom: Regex =
-    """(?is)\s*DELETE\s+FROM\s+LAKE\s+'([^']+)'(\s+USING\s+VECTORS)?\s+WHERE\s+(.+?)\s*;?\s*""".r
+    """(?is)\s*DELETE\s+FROM\s+LAKE\s+'([^']+)'\s+WHERE\s+(.+?)\s*;?\s*""".r
   private val Reorg: Regex =
     """(?is)\s*REORG\s+LAKE\s+'([^']+)'\s+APPLY\s+PURGE\s*;?\s*""".r
   private val UpdateLake: Regex =
@@ -154,8 +154,8 @@ object LakeSql {
     case Vacuum(root, retain, dry) =>
       Some(VacuumLakeCommand(root,
         Option(retain).map(_.toInt).getOrElse(10), dry != null))
-    case DeleteFrom(root, vectors, pred) =>
-      Some(DeleteFromLakeCommand(root, pred.trim, vectors != null))
+    case DeleteFrom(root, pred) =>
+      Some(DeleteFromLakeCommand(root, pred.trim))
     case Reorg(root) => Some(PurgeLakeCommand(root))
     case UpdateLake(root, sets, pred) =>
       Some(UpdateLakeCommand(root, sets.trim, pred.trim))
@@ -328,22 +328,21 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
     delegate.parseDataType(s)
 }
 
-/** DELETE FROM LAKE … WHERE: row-level delete — copy-on-write by
-  * default, merge-on-read deletion vectors with `USING VECTORS`
-  * (`deleteWhereDV`: positions to a sidecar, no file rewritten).
-  * Returns (version, rows_deleted, files_rewritten).
+/** DELETE FROM LAKE … WHERE: row-level delete through a deletion
+  * vector ([[AtomicLake.deleteWhereDV]]: positions to a sidecar, no
+  * file rewritten; REORG … APPLY PURGE pays the rewrite later).
+  * Returns (version, rows_deleted, files_rewritten); files_rewritten
+  * is 0.
   */
-case class DeleteFromLakeCommand(root: String, predicate: String,
-    useVectors: Boolean) extends LeafRunnableCommand {
+case class DeleteFromLakeCommand(root: String, predicate: String)
+    extends LeafRunnableCommand {
   override val output: Seq[Attribute] = Seq(
     LakeSql.attr("version", LongType),
     LakeSql.attr("rows_deleted", LongType),
     LakeSql.attr("files_rewritten", IntegerType))
   override def run(spark: SparkSession): Seq[Row] = {
-    val pred = org.apache.spark.sql.functions.expr(predicate)
-    val r =
-      if (useVectors) AtomicLake.deleteWhereDV(spark, root)(pred)
-      else AtomicLake.deleteWhere(spark, root)(pred)
+    val r = AtomicLake.deleteWhereDV(spark, root)(
+      org.apache.spark.sql.functions.expr(predicate))
     Seq(Row(r.version, r.rowsChanged, r.filesRewritten))
   }
 }
@@ -363,11 +362,13 @@ case class PurgeLakeCommand(root: String) extends LeafRunnableCommand {
   }
 }
 
-/** UPDATE LAKE … SET … WHERE: copy-on-write row-level update via
-  * [[AtomicLake.updateWhere]]. SET assignments split on TOP-LEVEL
-  * commas (function calls keep theirs); each value is a SQL
-  * expression over the table's columns, cast to the column's type.
-  * Returns (version, rows_updated, files_rewritten).
+/** UPDATE LAKE … SET … WHERE: merge-on-read row-level update via
+  * [[AtomicLake.updateWhere]] (matched rows deleted through a deletion
+  * vector, their updated images staged as new files, one commit). SET
+  * assignments split on TOP-LEVEL commas (function calls keep theirs);
+  * each value is a SQL expression over the table's columns, cast to
+  * the column's type. Returns (version, rows_updated,
+  * files_rewritten); files_rewritten is 0.
   */
 case class UpdateLakeCommand(root: String, sets: String,
     predicate: String) extends LeafRunnableCommand {

@@ -514,24 +514,24 @@ object BronzeQueries {
           exactSum(col("o_totalprice")).as("sum_price"))
     },
 
-    // G25 — row-level DELETE, copy-on-write, proven end-to-end: build
-    // a year-partitioned orders lake, deleteWhere a key-modulo
-    // predicate restricted to a date range (zone maps prune the
-    // out-of-range years' files before any read; only files with
-    // actual matches are rewritten — LakeMergeSpec proves the file
+    // G25 — row-level DELETE, proven end-to-end: build a
+    // year-partitioned orders lake, delete a key-modulo predicate
+    // restricted to a date range through a deletion vector (zone maps
+    // prune the out-of-range years' files before any read; only files
+    // with actual matches gain a vector — LakeDvSpec proves the file
     // accounting), aggregate what's left. The oracle aggregates
     // orders under NOT(predicate), so a lost row, a resurrected row,
-    // or a survivor dropped by the rewrite all hash-mismatch.
+    // or a survivor the vector over-reaches all hash-mismatch.
     "lake_delete_where" -> { (s, dir) =>
-      // delete on a SHALLOW CLONE (G29): the rewrite is copy-on-write
-      // against the shared base — zero data copied up front
+      // delete on a SHALLOW CLONE (G29): the vector lands under the
+      // clone, the shared base is never touched — zero data copied
       val scratch = clonedOrdersLake(s, dir, "delete_where")
       // one dirty year out of 7: the zone maps prune the candidate
-      // set to the in-range year's file, and only it is rewritten —
-      // the bounded-rewrite shape a 100-TB retention sweep needs (a
-      // wide-open predicate would rewrite half the table and prove
-      // nothing about scoping)
-      graft.sources.AtomicLake.deleteWhere(s, scratch)(
+      // set to the in-range year's file, and only it is read — the
+      // bounded shape a 100-TB retention sweep needs (a wide-open
+      // predicate would read half the table and prove nothing about
+      // scoping)
+      graft.sources.AtomicLake.deleteWhereDV(s, scratch)(
         col("o_orderkey") % 7 === 0 &&
           col("o_orderdate") >=
             lit("1995-06-01 00:00:00").cast("timestamp") &&
@@ -569,8 +569,9 @@ object BronzeQueries {
           exactSum(col("o_totalprice")).as("sum_price"))
     },
 
-    // G25c — row-level UPDATE (copy-on-write): matched rows get their
-    // price doubled in place; zone maps scope the rewrite to the
+    // G25c — row-level UPDATE (merge-on-read): matched rows are
+    // deleted through a deletion vector and their price-doubled images
+    // staged, in one commit; zone maps scope the positions pass to the
     // in-range year's files. Oracle rebuilds with CASE.
     "lake_update_where" -> { (s, dir) =>
       val scratch = clonedOrdersLake(s, dir, "update_where")

@@ -78,12 +78,12 @@ object AtomicLake {
       // before the header existed. Informational + timestampAsOf
       // resolution — never part of correctness
       ts: Option[Long] = None,
-      // deletion vectors (merge-on-read DELETE and MERGE): file -> its
-      // chain of position-sidecar paths + total deleted-row count. A
-      // file with an entry here still holds its original bytes;
-      // readers drop the listed row positions ([[readFileSubset]]).
-      // Absent for files with no row-level deletes; cleared when the
-      // file is rewritten (COW delete/update, compaction,
+      // deletion vectors (DELETE, UPDATE and MERGE are merge-on-read):
+      // file -> its chain of position-sidecar paths + total
+      // deleted-row count. A file with an entry here still holds its
+      // original bytes; readers drop the listed row positions
+      // ([[readFileSubset]]). Absent for files with no row-level
+      // deletes; cleared when the file is rewritten (compaction,
       // [[purgeDeletes]])
       dvs: Map[String, DvRef] = Map.empty,
       // per-file bloom indexes (file -> column -> sidecar ref): point
@@ -290,9 +290,10 @@ object AtomicLake {
     * sidecars (parquet dirs of (file, pos) rows, lake-root-relative —
     * absolute only when a shallow clone references the source's), the
     * file's deleted positions being the union across the chain
-    * (append-only — each [[deleteWhereDV]] or [[merge]] adds one link;
-    * rewrites clear the whole chain); `n` is the total deleted-row
-    * count (drives [[rowCount]] without opening a sidecar).
+    * (append-only — each [[deleteWhereDV]], [[updateWhere]] or
+    * [[merge]] adds one link; rewrites clear the whole chain); `n` is
+    * the total deleted-row count (drives [[rowCount]] without opening
+    * a sidecar).
     */
   final case class DvRef(paths: Seq[String], n: Long)
 
@@ -537,9 +538,9 @@ object AtomicLake {
     * `expectedBase` and abort (ConcurrentModificationException) when a
     * concurrent commit changed it: `touched` partitions' file lists,
     * the deletion vectors of everything they read, and the presence
-    * of `removeFiles` (copy-on-write rewrites: a file a concurrent
+    * of `removeFiles` (maintenance rewrites: a file a concurrent
     * compaction already replaced would resurrect its rows) and
-    * `dvFiles` (deletion-vector commits). Blind writes pass no base
+    * `dvFiles` (row-level commits). Blind writes pass no base
     * and never conflict. Exposed package-private for the spec's
     * interleaving tests.
     */
@@ -1076,9 +1077,10 @@ object AtomicLake {
   /** A row-level write's outcome: the committed version (the
     * pre-write version when nothing matched — no empty commit is ever
     * written), how many target rows were removed (deleted, or replaced
-    * by their merge source row), and how many files were rewritten to
-    * do it (0 for the merge-on-read writes: [[deleteWhereDV]] and
-    * [[merge]]).
+    * by their updated image or merge source row), and how many files
+    * were rewritten to do it: 0 for the merge-on-read writes
+    * ([[deleteWhereDV]], [[updateWhere]], [[merge]]), the dv'd files
+    * it materialized for [[purgeDeletes]].
     */
   final case class Rewrite(version: Long, rowsChanged: Long,
       filesRewritten: Int)
@@ -1133,103 +1135,6 @@ object AtomicLake {
     sys.error("unreachable")
   }
 
-  /** What a copy-on-write rewrite swaps: the `dirty` files, the `rows`
-    * staged in their place, and the target rows it changed.
-    */
-  private final case class Swap(dirty: Seq[String], changed: Long,
-      rows: DataFrame)
-
-  /** The one copy-on-write row rewrite: `find` derives the swap from a
-    * fresh snapshot (None: nothing to change — NO commit, so retries
-    * and scheduled sweeps are free), its rows are staged, Spark's
-    * zero-row placeholder is dropped (a rewrite that empties every row
-    * would otherwise keep a dead manifest line and footer read), and
-    * ONE commit swaps the dirty files for the staged ones. A
-    * concurrent compaction or rewrite that already replaced a dirty
-    * file, or changed its deletion vector, aborts the commit instead
-    * of resurrecting rows, and [[retryRewrite]] re-derives.
-    */
-  private def rewrite(root: String, store: CommitStore,
-      filesPerPartition: Int, kind: String = "write")(
-      find: Snapshot => Option[Swap]): Rewrite =
-    retryRewrite {
-      val snap = latest(root, store)
-      find(snap).fold(Rewrite(snap.version, 0L, 0)) { sw =>
-        val staged = stageFiles(sw.rows, root, snap.partitionCols,
-          filesPerPartition, colMap = snap.colMap)
-        val empties = staged.stats.collect {
-          case (f, st) if st.rows == 0L => f
-        }.toSet
-        empties.foreach(f =>
-          Files.deleteIfExists(Paths.get(root).resolve(f)))
-        val kept = staged.copy(files = staged.files.map { case (p, fs) =>
-          p -> fs.filterNot(empties)
-        }.filter(_._2.nonEmpty))
-        val removed = sw.dirty.toSet
-        val v = commit(root, snap.partitionCols, kind, store,
-            expectedBase = Some(snap), removeFiles = removed)(
-          _.swap(kept, removed = removed))
-        Rewrite(v, sw.changed, sw.dirty.size)
-      }
-    }
-
-  /** The dirty-file tally: which of `candidates` hold a row `matching`
-    * keeps, and how many such rows — one pass over the candidates
-    * tagged with `_metadata.file_path`; the per-file tally is
-    * file-count-sized driver data, never row data.
-    */
-  private def dirtyFiles(spark: SparkSession, root: String,
-      snap: Snapshot, candidates: Seq[String])(
-      matching: DataFrame => DataFrame): (Seq[String], Long) =
-    if (candidates.isEmpty) (Nil, 0L)
-    else {
-      import org.apache.spark.sql.functions.{col, count, lit}
-      val perFile = matching(
-          readFileSubsetTagged(spark, root, candidates, snap))
-        .groupBy(col("_graft_file"))
-        .agg(count(lit(1)).as("n"))
-        .collect()
-      (toRelative(perFile.map(_.getString(0)).toSeq, candidates, root),
-        perFile.map(_.getLong(1)).sum)
-    }
-
-  /** Row-level DELETE with copy-on-write file rewrites — the half of
-    * the Delta/Iceberg `DELETE FROM` contract this lake's partition
-    * model couldn't express. Three bounded steps:
-    *
-    *  1. Manifest zone-maps scope the work: only files whose stats
-    *     say they MAY hold a matching row are read at all
-    *     ([[LakeStats.survivors]]) — a predicate on one month of a
-    *     100-TB table plans that month's files, driver-side.
-    *  2. One pass over the candidates ([[dirtyFiles]]) finds the files
-    *     that ACTUALLY contain matching rows and the matched-row
-    *     count; clean candidates keep their manifest lines untouched —
-    *     write amplification is bounded by dirty files, not candidate
-    *     files.
-    *  3. Dirty files alone are re-read, their surviving rows (NOT
-    *     matching, including predicate-null rows — SQL DELETE
-    *     semantics) rewritten, and ONE commit atomically swaps
-    *     removed-for-rewritten ([[rewrite]]); time travel and CDC see
-    *     the swap as a normal write commit (old images delete,
-    *     survivors insert).
-    *
-    * No matching rows → NO commit (returns the current version with
-    * rowsChanged = 0).
-    */
-  def deleteWhere(spark: SparkSession, root: String,
-      filesPerPartition: Int = 1,
-      store: CommitStore = HardlinkCommitStore)(
-      predicate: Column): Rewrite =
-    rewrite(root, store, filesPerPartition) { snap =>
-      import org.apache.spark.sql.functions.{coalesce, lit}
-      val (dirty, matched) = dirtyFiles(spark, root, snap,
-        planFiles(root, snap, Seq(predicate)))(_.filter(predicate))
-      if (dirty.isEmpty) None
-      else Some(Swap(dirty, matched,
-        readFileSubset(spark, root, dirty, snap)
-          .filter(!coalesce(predicate, lit(false)))))
-    }
-
   /** The one matched-positions pass: the row positions, per file
     * (manifest path -> positions), of the `candidates` rows that
     * `matching` keeps — ONE scan collected to the driver (matched-row-
@@ -1267,16 +1172,42 @@ object AtomicLake {
     })
   }
 
+  /** The one row-level commit: `matched` positions (when any) go to
+    * one sidecar ([[deletionEdit]]) and `added` staged files (when any)
+    * join the snapshot, its schema evolved by theirs, in ONE commit
+    * against `snap`. A matched file that a concurrent commit replaced,
+    * or whose vector changed, aborts it (and so does any change to a
+    * `touched` partition's file list); [[retryRewrite]] re-derives.
+    */
+  private def rowLevelCommit(spark: SparkSession, root: String,
+      store: CommitStore, snap: Snapshot, kind: String,
+      matched: Map[String, Array[Long]],
+      added: Option[(Staged, org.apache.spark.sql.types.StructType)] = None,
+      touched: Set[String] = Set.empty): Rewrite = {
+    val delete =
+      if (matched.isEmpty) identity[Snapshot] _
+      else deletionEdit(spark, root, matched)
+    val v = commit(root, snap.partitionCols, kind, store,
+        expectedBase = Some(snap), touched = touched,
+        dvFiles = matched.keySet) { s =>
+      added.fold(delete(s)) { case (staged, schema) =>
+        delete(s).swap(staged).evolve(schema)
+      }
+    }
+    Rewrite(v, matched.valuesIterator.map(_.length.toLong).sum, 0)
+  }
+
   /** Row-level DELETE as a deletion-vector (merge-on-read) commit —
-    * the Delta/Iceberg "deletion vectors" mode: instead of rewriting
-    * every file holding a matching row ([[deleteWhere]]'s
-    * copy-on-write), ONE position sidecar records the matched
-    * (file, row-position) pairs and the commit attaches it to the
-    * touched files' manifest lines. No data file is rewritten — a
-    * delete of 100 rows spread over 100 large files costs one small
-    * sidecar write instead of 100 file rewrites — and every read path
-    * (read/scan/time travel/SQL relation/CDC sides) drops the listed
-    * positions via [[readFileSubset]].
+    * the Delta/Iceberg "deletion vectors" mode: ONE position sidecar
+    * records the matched (file, row-position) pairs and the commit
+    * attaches it to the touched files' manifest lines. No data file is
+    * rewritten — a delete of 100 rows spread over 100 large files
+    * costs one small sidecar write instead of 100 file rewrites — and
+    * every read path (read/scan/time travel/SQL relation/CDC sides)
+    * drops the listed positions via [[readFileSubset]]. Zone maps cut
+    * the candidate files driver-side first, so a predicate on one
+    * month of a 100-TB table reads that month's files. Rows whose
+    * predicate is null survive (SQL DELETE semantics).
     *
     * One Spark job: the matched-positions pass ([[matchedPositions]])
     * over the zone-map candidates; the tally, the sidecar write and
@@ -1300,11 +1231,7 @@ object AtomicLake {
       val matched = matchedPositions(spark, root, snap,
         planFiles(root, snap, Seq(predicate)))(_.filter(predicate))
       if (matched.isEmpty) Rewrite(snap.version, 0L, 0)
-      else Rewrite(
-        commit(root, snap.partitionCols, "dv", store,
-          expectedBase = Some(snap), dvFiles = matched.keySet)(
-          deletionEdit(spark, root, matched)),
-        matched.valuesIterator.map(_.length.toLong).sum, 0)
+      else rowLevelCommit(spark, root, store, snap, "dv", matched)
     }
 
   /** Materialize every deletion vector: files carrying a dv are
@@ -1314,60 +1241,96 @@ object AtomicLake {
     * — shedding the whole dv chain. The maintenance half of the DV
     * contract: deletes are O(positions) at write time, this is where
     * the rewrite cost is actually paid, batched and backlog-
-    * proportional (only dv'd files rewrite). Orphaned sidecars age
-    * out through [[vacuum]]. No deletion vectors → no commit.
+    * proportional (only dv'd files rewrite). Spark's zero-row
+    * placeholder is dropped, so a file whose every row was deleted
+    * leaves no manifest line behind. A concurrent compaction that
+    * already replaced a dv'd file, or changed its vector, aborts the
+    * commit instead of resurrecting rows, and [[retryRewrite]]
+    * re-derives. Orphaned sidecars age out through [[vacuum]]. No
+    * deletion vectors → no commit.
     */
   def purgeDeletes(spark: SparkSession, root: String,
       filesPerPartition: Int = 1,
       store: CommitStore = HardlinkCommitStore): Rewrite =
-    rewrite(root, store, filesPerPartition, kind = "compact") { snap =>
+    retryRewrite {
+      val snap = latest(root, store)
       val dvd = snap.dvs.keys.toSeq.sorted
-      if (dvd.isEmpty) None
-      else Some(Swap(dvd, snap.dvs.values.map(_.n).sum,
-        readFileSubset(spark, root, dvd, snap)))
+      if (dvd.isEmpty) Rewrite(snap.version, 0L, 0)
+      else {
+        val staged = stageFiles(readFileSubset(spark, root, dvd, snap),
+          root, snap.partitionCols, filesPerPartition, colMap = snap.colMap)
+        val empties = staged.stats.collect {
+          case (f, st) if st.rows == 0L => f
+        }.toSet
+        empties.foreach(f =>
+          Files.deleteIfExists(Paths.get(root).resolve(f)))
+        val kept = staged.copy(files = staged.files.map { case (p, fs) =>
+          p -> fs.filterNot(empties)
+        }.filter(_._2.nonEmpty))
+        val removed = dvd.toSet
+        val v = commit(root, snap.partitionCols, "compact", store,
+            expectedBase = Some(snap), removeFiles = removed)(
+          _.swap(kept, removed = removed))
+        Rewrite(v, snap.dvs.values.map(_.n).sum, dvd.size)
+      }
     }
 
-  /** Row-level UPDATE (Delta's `UPDATE … SET … WHERE`) as a
-    * copy-on-write rewrite with [[deleteWhere]]'s exact work scoping:
-    * zone maps cut candidate files, one tagged pass finds the files
-    * actually holding matches, ONLY those rewrite — each matched row
-    * replaced by its assigned image (every expression cast to the
-    * column's existing type: UPDATE never evolves the schema),
-    * unmatched and predicate-null rows byte-identical in content —
-    * and one atomic file-level swap commits. Updating a PARTITION
-    * column moves rows between partitions (the rewrite stages under
-    * the new value's directory). DV interaction: the rewrite reads
-    * DV-aware, so deleted rows neither match nor resurrect, and the
-    * rewritten files shed their vectors with their old lines.
+  /** Row-level UPDATE (Delta's `UPDATE … SET … WHERE`), merge-on-read
+    * like [[deleteWhereDV]] and [[merge]]: one matched-positions pass
+    * over the zone-map candidates finds the rows, a deletion vector
+    * deletes them, and their updated images — exactly those positions
+    * re-read, each assigned expression cast to the column's existing
+    * type (UPDATE never evolves the schema) — stage as new files; both
+    * land in ONE commit ([[rowLevelCommit]]). No data file is
+    * rewritten; unmatched and predicate-null rows keep their bytes.
+    * Updating a PARTITION column moves rows between partitions (the
+    * images stage under the new value's directory). The images are
+    * new rows like any write batch's: generated columns the SET does
+    * not assign recompute from their expressions, and CHECK
+    * constraints validate them ([[prepareBatch]] — one aggregate job,
+    * only on tables with either feature). Two Spark jobs otherwise:
+    * the positions pass and the staging write.
+    *
+    * The reads are DV-aware, so deleted rows neither match nor
+    * resurrect; a matched file replaced, or whose vector changed,
+    * since the pass aborts the commit and [[retryRewrite]] re-derives.
+    * No matching rows → NO commit.
     */
   def updateWhere(spark: SparkSession, root: String,
-      assignments: Seq[(String, Column)], filesPerPartition: Int = 1,
+      assignments: Seq[(String, Column)],
       store: CommitStore = HardlinkCommitStore)(
       predicate: Column): Rewrite = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, when}
+    import org.apache.spark.sql.functions.col
     require(assignments.nonEmpty, "updateWhere: no SET assignments")
     val byName = assignments.toMap
     require(byName.size == assignments.size,
       "updateWhere: duplicate SET column")
-    rewrite(root, store, filesPerPartition) { snap =>
+    retryRewrite {
+      val snap = latest(root, store)
       snap.schema.foreach { sch =>
         val unknown = byName.keySet -- sch.fieldNames.toSet
         require(unknown.isEmpty,
           s"updateWhere: SET of unknown column(s) ${unknown.mkString(", ")}")
       }
-      val (dirty, matched) = dirtyFiles(spark, root, snap,
+      val matched = matchedPositions(spark, root, snap,
         planFiles(root, snap, Seq(predicate)))(_.filter(predicate))
-      if (dirty.isEmpty) None
+      if (matched.isEmpty) Rewrite(snap.version, 0L, 0)
       else {
-        val base = readFileSubset(spark, root, dirty, snap)
-        Some(Swap(dirty, matched, base.select(base.schema.fields.map { f =>
-          byName.get(f.name) match {
-            case Some(e) =>
-              when(coalesce(predicate, lit(false)),
-                e.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
-            case None => col(f.name)
-          }
-        }.toSeq: _*)))
+        val rows = readFileSubsetPos(spark, root, matched.keys.toSeq.sorted,
+            snap).filter(atPositions(root, matched))
+          .drop("_graft_file", "_graft_pos")
+        // a generated column the SET leaves alone would keep its stale
+        // value: drop it so prepareBatch recomputes it
+        def stale(c: String) = !byName.contains(c) &&
+          snap.generated.keys.exists(_.equalsIgnoreCase(c))
+        val images = prepareBatch(rows.select(rows.schema.fields.collect {
+          case f if !stale(f.name) =>
+            byName.get(f.name).fold(col(f.name))(_.cast(f.dataType).as(f.name))
+        }.toSeq: _*), Some(snap))
+        val staged = stageFiles(images, root, snap.partitionCols,
+          filesPerPartition = 1, colMap = snap.colMap)
+        rowLevelCommit(spark, root, store, snap, "write", matched,
+          Some(staged -> images.schema))
       }
     }
   }
@@ -1477,17 +1440,11 @@ object AtomicLake {
             _.join(src.select(keyCols.map(col): _*), keyCols, "left_semi"))
           finally Await.ready(staging, Duration.Inf)
         val staged = Await.result(staging, Duration.Inf)
-        val delete =
-          if (matched.isEmpty) identity[Snapshot] _
-          else deletionEdit(spark, root, matched)
         val read = candidates.toSet
-        val v = commit(root, snap.partitionCols, store = store,
-            expectedBase = Some(snap), dvFiles = matched.keySet,
-            touched = snap.files.collect {
-              case (p, fs) if fs.exists(read) => p
-            }.toSet ++ staged.keySet)(s =>
-          delete(s.swap(staged)).evolve(src.schema))
-        Rewrite(v, matched.valuesIterator.map(_.length.toLong).sum, 0)
+        rowLevelCommit(spark, root, store, snap, "write", matched,
+          Some(staged -> src.schema), touched = snap.files.collect {
+            case (p, fs) if fs.exists(read) => p
+          }.toSet ++ staged.keySet)
       }
     }
   }
@@ -1642,7 +1599,7 @@ object AtomicLake {
     * size. The clone is immediately a first-class lake: reads resolve
     * the referenced files (per-data-plane basePath groups), zone-map
     * stats carry over so pruned scans prune identically, and every
-    * mutation — upsert, append, deleteWhere, merge, compact — writes
+    * mutation — upsert, append, delete, update, merge, compact — writes
     * INTO THE CLONE's own data and dv dirs: the source is never
     * touched, which is exactly the dev/test-sandbox workflow (mutate
     * a 100-TB table's clone without copying 100 TB; compaction
@@ -1731,35 +1688,28 @@ object AtomicLake {
     */
   private[graft] def readFileSubset(spark: SparkSession, root: String,
       files: Seq[String], snap: Snapshot): DataFrame =
-    readSubset(spark, root, files, snap, keep = Nil)
+    readSubset(spark, root, files, snap, positions = false)
 
   /** [[readFileSubset]] with each row tagged by its file's path in a
-    * `_graft_file` column.
-    */
-  private def readFileSubsetTagged(spark: SparkSession, root: String,
-      files: Seq[String], snap: Snapshot): DataFrame =
-    readSubset(spark, root, files, snap, keep = Seq("_graft_file"))
-
-  /** [[readFileSubsetTagged]] plus each row's in-file position as
-    * `_graft_pos` (deletion-vector writes address rows by it).
+    * `_graft_file` column and its in-file position as `_graft_pos`
+    * (deletion-vector writes address rows by them).
     */
   private def readFileSubsetPos(spark: SparkSession, root: String,
       files: Seq[String], snap: Snapshot): DataFrame =
-    readSubset(spark, root, files, snap,
-      keep = Seq("_graft_file", "_graft_pos"))
+    readSubset(spark, root, files, snap, positions = true)
 
   /** The one physical read: per-data-plane parquet groups under the
     * snapshot's schema, deletion vectors applied (files with a vector
     * lose their deleted positions through a predicate over each row's
     * file and position, the positions read on the driver by
     * [[dvPositions]] — no join, no job; files without one are read
-    * plain), then the helper columns not in `keep` dropped. The
-    * metadata column must be materialized PER GROUP: `_metadata` does
-    * not resolve above the union a mixed-data-plane (shallow-clone)
-    * read produces.
+    * plain), the `_graft_file`/`_graft_pos` helper columns kept only
+    * when `positions` asks for them. The metadata column must be
+    * materialized PER GROUP: `_metadata` does not resolve above the
+    * union a mixed-data-plane (shallow-clone) read produces.
     */
   private def readSubset(spark: SparkSession, root: String,
-      files: Seq[String], snap: Snapshot, keep: Seq[String]): DataFrame = {
+      files: Seq[String], snap: Snapshot, positions: Boolean): DataFrame = {
     import org.apache.spark.sql.functions.col
     val deleted = dvPositions(spark, root, files, snap)
     val (dvd, plain) = files.sorted.partition(deleted.contains)
@@ -1785,17 +1735,14 @@ object AtomicLake {
         else df
       }.reduce(_.unionByName(_))
     }
-    def trim(df: DataFrame): DataFrame =
-      Seq("_graft_file", "_graft_pos").diff(keep).foldLeft(df)(_.drop(_))
-    val needMeta = keep.nonEmpty
     val plainDf =
-      if (plain.isEmpty) None
-      else Some(if (needMeta) trim(grouped(plain, meta = true))
-        else grouped(plain, meta = false))
+      if (plain.isEmpty) None else Some(grouped(plain, meta = positions))
     val dvDf =
       if (dvd.isEmpty) None
-      else Some(trim(grouped(dvd, meta = true)
-        .filter(!atPositions(root, deleted))))
+      else {
+        val live = grouped(dvd, meta = true).filter(!atPositions(root, deleted))
+        Some(if (positions) live else live.drop("_graft_file", "_graft_pos"))
+      }
     (plainDf, dvDf) match {
       case (Some(a), Some(b)) => a.unionByName(b)
       case (Some(a), None) => a
@@ -1923,23 +1870,29 @@ object AtomicLake {
     readManifest(root, version, store)
 
   /** Incremental (CDC) read: the rows that changed between two
-    * committed versions, as a snapshot diff of the manifests' file
-    * lists ([[fileDiff]]) — `_change_type` is `insert` for rows in
-    * files present in `toVersion` but not `fromVersion`, `delete` for
-    * rows in files only `fromVersion` references. An append commit
-    * therefore reads as pure inserts; a partition upsert as the old
-    * image deleted + the new image inserted — exactly what a
-    * downstream incremental materialization consumes
-    * ([[graft.operators.Incremental]] merges the insert side; deletes
-    * signal a partition recompute).
+    * committed versions. Two diffs, both exact:
+    *
+    *  - the manifests' file lists ([[fileDiff]]): `_change_type` is
+    *    `insert` for rows in files present in `toVersion` but not
+    *    `fromVersion`, `delete` for rows in files only `fromVersion`
+    *    references — an append reads as pure inserts, a partition
+    *    upsert as the old image deleted + the new image inserted;
+    *  - the deletion vectors of files present in both: positions a
+    *    row-level DELETE, UPDATE or MERGE marked read as `delete`
+    *    images of exactly those rows (an UPDATE's or MERGE's new rows
+    *    are its staged files, so they arrive as inserts), positions a
+    *    restore rolled back as re-inserts.
+    *
+    * That is exactly what a downstream incremental materialization
+    * consumes ([[graft.operators.Incremental]] merges the insert side
+    * and retracts the delete side).
     *
     * Scale: only the CHANGED files are ever opened — consuming one
     * day's upsert on a 100-TB table scans that day's files, not the
-    * table. Deletes are file-level (this lake replaces whole
-    * partitions, never individual rows), so the diff is exact. A
-    * compaction commit rewrites partitions without logical change;
-    * a RANGE-level snapshot diff reports it as delete+insert of the
-    * same rows (net-zero for additive consumers like
+    * table, and a row-level commit opens only the files whose vector
+    * changed. A compaction commit rewrites partitions without logical
+    * change; a RANGE-level snapshot diff reports it as delete+insert
+    * of the same rows (net-zero for additive consumers like
     * [[graft.operators.Incremental.applyChanges]], just wasted IO).
     * Consumers that must skip it walk per-commit and test
     * `snapshotAt(v).kind == "compact"` — exactly what the
@@ -2003,10 +1956,10 @@ object AtomicLake {
       snap: Snapshot): DataFrame = {
     val files = snap.allFiles
     if (files.isEmpty)
-      // a legitimate state since row-level deletes: a deleteWhere
-      // that removed every row commits a zero-file manifest — read
-      // it as the schema-correct empty table (only pre-evolution
-      // manifests, which can't record a schema, must refuse)
+      // a legitimate state: a purgeDeletes that materializes vectors
+      // covering every row commits a zero-file manifest — read it as
+      // the schema-correct empty table (only pre-evolution manifests,
+      // which can't record a schema, must refuse)
       return snap.schema.fold[DataFrame](
         throw new IllegalStateException(
           s"snapshot v${snap.version} at $root is empty and records " +
@@ -2230,7 +2183,7 @@ object AtomicLake {
     val sidecarRel =
       s"index/${java.util.UUID.randomUUID().toString.take(12)}"
     val sidecarAbs = Paths.get(root).resolve(sidecarRel).toString
-    val tagged = readFileSubsetTagged(spark, root, targets, snap)
+    val tagged = readFileSubsetPos(spark, root, targets, snap)
     BloomIndex.buildSidecar(spark, tagged, typed, uriToFile, rowsOf,
       fpp, sidecarAbs)
     val ref = BloomIndex.Ref(sidecarRel)

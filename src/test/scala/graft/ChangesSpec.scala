@@ -128,9 +128,10 @@ class ChangesSpec extends SparkSpec {
           (4, 1.75, "d2")).toDF("id", "value", "day"), root, keys)
       val state1 = Incremental.partialSums(
         AtomicLake.readVersion(spark, root, v1), keys, ms)
-      // copy-on-write delete: the dirty file's old image retracts,
-      // its survivors re-insert — additive consumers converge exactly
-      val r = AtomicLake.deleteWhere(spark, root)($"id" === 2)
+      // deletion-vector delete: the deleted row's image retracts and
+      // nothing else moves — additive consumers converge exactly
+      val r = AtomicLake.deleteWhereDV(spark, root)($"id" === 2)
+      AtomicLake.snapshotAt(root, r.version).dvs should have size 1
       val delta = AtomicLake.readChanges(spark, root, v1, r.version)
       val maintained = Incremental.finalize(
         Incremental.applyChanges(state1, delta, keys, ms), Seq("total"))

@@ -136,8 +136,11 @@ class LakeBloomSpec extends SparkSpec {
       AtomicLake.indexBloom(spark, root, Seq("id"))
       val before = AtomicLake.currentSnapshot(root).get
       before.blooms should have size 4
-      // delete key 0 -> rewrites file (0 mod 4): its entry must shed
-      AtomicLake.deleteWhere(spark, root)(col("id") === 0L)
+      // delete key 0 -> a vector on file (0 mod 4); the purge
+      // rewrites that file, so its entry must shed
+      AtomicLake.deleteWhereDV(spark, root)(col("id") === 0L)
+      AtomicLake.currentSnapshot(root).get.blooms should have size 4
+      AtomicLake.purgeDeletes(spark, root).filesRewritten shouldBe 1
       val after = AtomicLake.currentSnapshot(root).get
       after.blooms.size shouldBe 3
       after.blooms.keySet.subsetOf(

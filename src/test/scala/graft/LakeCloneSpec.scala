@@ -40,8 +40,9 @@ class LakeCloneSpec extends SparkSpec {
         Seq((1, "a"), (2, "b")).toDF("id", "part"), root, Seq("part"))
       AtomicLake.upsertPartitions(
         Seq((99, "a")).toDF("id", "part"), root, Seq("part"))
-      AtomicLake.deleteWhere(spark, root)($"id" === 2)
+      AtomicLake.deleteWhereDV(spark, root)($"id" === 2)
       val vr = AtomicLake.restore(root, v1)
+      AtomicLake.currentSnapshot(root).get.dvs shouldBe empty
       vr should be > v1
       AtomicLake.read(spark, root).select("id").as[Int]
         .collect().toSet shouldBe Set(1, 2)
@@ -108,17 +109,22 @@ class LakeCloneSpec extends SparkSpec {
       AtomicLake.append((11 to 20).toDF("id"), src)
       AtomicLake.clone(src, dst)
       val srcBefore = dataFiles(src).toSet
-      val r = AtomicLake.deleteWhere(spark, dst)($"id" <= 5)
+      val r = AtomicLake.deleteWhereDV(spark, dst)($"id" <= 5)
       r.rowsChanged shouldBe 5
-      r.filesRewritten shouldBe 1 // zone maps kept the 11-20 file clean
-      // rewrite landed in the CLONE's data dir; source bytes untouched
-      dataFiles(dst) should not be empty
+      // zone maps kept the 11-20 file clean: one file carries a vector
+      AtomicLake.currentSnapshot(dst).get.dvs should have size 1
+      // the sidecar landed under the CLONE; source bytes untouched
+      Files.isDirectory(Paths.get(dst, "dv")) shouldBe true
+      Files.exists(Paths.get(src, "dv")) shouldBe false
       dataFiles(src).toSet shouldBe srcBefore
       AtomicLake.read(spark, dst).select("id").as[Int]
         .collect().toSet shouldBe (6 to 20).toSet
       AtomicLake.read(spark, src).count() shouldBe 20
-      // merge through the clone as well
+      // merge through the clone as well: its rows stage into the
+      // clone's own data dir
       AtomicLake.merge(spark, dst, Seq(6, 99).toDF("id"), Seq("id"))
+      dataFiles(dst) should not be empty
+      dataFiles(src).toSet shouldBe srcBefore
       AtomicLake.read(spark, dst).count() shouldBe 16
       AtomicLake.read(spark, src).count() shouldBe 20
     }
@@ -198,7 +204,7 @@ class LakeCloneSpec extends SparkSpec {
       AtomicLake.append((1 to 10).toDF("id"), root)
       AtomicLake.append((11 to 25).toDF("id"), root)
       AtomicLake.rowCount(root) shouldBe Some(25L)
-      AtomicLake.deleteWhere(spark, root)($"id" <= 5)
+      AtomicLake.deleteWhereDV(spark, root)($"id" <= 5)
       AtomicLake.rowCount(root) shouldBe Some(20L)
     }
     it("a clone of a clone references the ORIGINAL files and stays " +

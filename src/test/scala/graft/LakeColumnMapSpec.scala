@@ -84,17 +84,28 @@ class LakeColumnMapSpec extends SparkSpec {
       AtomicLake.append(Seq((1L, "x"), (2L, "y")).toDF("id", "val"),
         root)
       AtomicLake.renameColumn(root, "val", "label")
-      AtomicLake.deleteWhere(spark, root)(col("label") === "x")
+      val before = AtomicLake.currentSnapshot(root).get.allFiles.toSet
+      AtomicLake.updateWhere(spark, root,
+        Seq("label" -> lit("z")))(col("id") === 2L)
+      AtomicLake.deleteWhereDV(spark, root)(col("label") === "x")
       AtomicLake.read(spark, root).select("id", "label")
-        .as[(Long, String)].collect().toSet shouldBe Set((2L, "y"))
-      // the rewritten file again stores physical 'val'
-      val snap = AtomicLake.currentSnapshot(root).get
-      val raw = spark.read.parquet(snap.files.values.flatten.map(f =>
+        .as[(Long, String)].collect().toSet shouldBe Set((2L, "z"))
+      // the update's staged image stores physical 'val'
+      def raw(files: Iterable[String]) = spark.read.parquet(files.map(f =>
         java.nio.file.Paths.get(root).resolve(f).toString).toSeq: _*)
-      raw.columns should contain("val")
+      val image = AtomicLake.currentSnapshot(root).get.allFiles.toSet -- before
+      image should have size 1
+      raw(image).columns should contain("val")
+      raw(image).columns should not contain "label"
+      // and so do the purge's rewrite and the compaction
+      AtomicLake.purgeDeletes(spark, root)
+      raw(AtomicLake.currentSnapshot(root).get.allFiles).columns should
+        contain("val")
       AtomicLake.compact(spark, root)
+      val snap = AtomicLake.currentSnapshot(root).get
+      raw(snap.allFiles).columns should contain("val")
       AtomicLake.read(spark, root).select("id", "label")
-        .as[(Long, String)].collect().toSet shouldBe Set((2L, "y"))
+        .as[(Long, String)].collect().toSet shouldBe Set((2L, "z"))
     }
 
     it("a clone carries the mapping") {

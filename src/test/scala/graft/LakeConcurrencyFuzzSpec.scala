@@ -98,19 +98,14 @@ class LakeConcurrencyFuzzSpec extends SparkSpec {
           }
         }
       }
-      // 1 deleter: alternating COW and DV deletes on residue classes
+      // 1 deleter: four deletion-vector deletes on residue classes
       val deleter = guard("deleter") {
         val rnd = new scala.util.Random(seed * 131)
-        for (i <- 0 until 4) {
+        for (_ <- 0 until 4) {
           val m = 7L + rnd.nextInt(4)
           val r = rnd.nextInt(m.toInt).toLong
-          val res =
-            if (i % 2 == 0)
-              AtomicLake.deleteWhereDV(spark, root)(
-                pmod(col("id"), lit(m)) === r)
-            else
-              AtomicLake.deleteWhere(spark, root)(
-                pmod(col("id"), lit(m)) === r)
+          val res = AtomicLake.deleteWhereDV(spark, root)(
+            pmod(col("id"), lit(m)) === r)
           // a no-match delete commits nothing and consumes no version
           if (res.rowsChanged > 0) opLog.put(res.version, Deleted(m, r))
           Thread.sleep(rnd.nextInt(40).toLong)

@@ -88,6 +88,23 @@ class LakeConstraintSpec extends SparkSpec {
       AtomicLake.read(spark, root).select("v").as[Double]
         .head() shouldBe 9.0
     }
+    it("update validates its row images") {
+      val root = freshRoot("update_check")
+      AtomicLake.append(Seq((1, 1.0), (2, 2.0)).toDF("k", "v"), root)
+      val vc = AtomicLake.addConstraint(spark, root, "v_pos", "v >= 0")
+      val ex = the[IllegalStateException] thrownBy
+        AtomicLake.updateWhere(spark, root,
+          Seq("v" -> lit(-1.0)))(col("k") === 1)
+      ex.getMessage should include("v_pos")
+      // table unchanged: same version, same rows
+      AtomicLake.currentVersion(root).get shouldBe vc
+      AtomicLake.read(spark, root).select("k", "v").as[(Int, Double)]
+        .collect().toSet shouldBe Set((1, 1.0), (2, 2.0))
+      AtomicLake.updateWhere(spark, root,
+        Seq("v" -> lit(9.0)))(col("k") === 1).rowsChanged shouldBe 1
+      AtomicLake.read(spark, root).select("k", "v").as[(Int, Double)]
+        .collect().toSet shouldBe Set((1, 9.0), (2, 2.0))
+    }
     it("appendExpect splits a mixed batch: good rows commit, bad " +
         "rows quarantine with their violation names") {
       val root = freshRoot("expect")

@@ -204,14 +204,23 @@ class LakeDvSpec extends SparkSpec {
         .collect().toSet shouldBe (6 to 50).toSet
     }
 
-    it("copy-on-write deleteWhere over a dv'd file keeps both deletions") {
-      val root = freshRoot("dv_cow")
+    it("two chained vectors over one file keep both deletions") {
+      val root = freshRoot("dv_chain_twice")
       seed(root)
       AtomicLake.deleteWhereDV(spark, root)($"m" === 2)
-      AtomicLake.deleteWhere(spark, root)($"m" === 1)
-      AtomicLake.read(spark, root).select("id").as[Int]
-        .collect().toSet shouldBe
+      AtomicLake.deleteWhereDV(spark, root)($"m" === 1)
+        .rowsChanged shouldBe 25
+      // every partition's file chains both sidecars, disjointly
+      dvMap(root).values.map(_.paths.size).toSet shouldBe Set(2)
+      dvMap(root).values.map(_.n).sum shouldBe 50
+      val expect =
         (1 to 100).filterNot(i => i % 4 == 2 || i % 4 == 1).toSet
+      AtomicLake.read(spark, root).select("id").as[Int]
+        .collect().toSet shouldBe expect
+      // and materializing the chain keeps both
+      AtomicLake.purgeDeletes(spark, root)
+      AtomicLake.read(spark, root).select("id").as[Int]
+        .collect().toSet shouldBe expect
     }
 
     it("merge over a dv'd file updates matches without resurrecting") {

@@ -71,9 +71,10 @@ class LakeFuzzSpec extends SparkSpec {
               model ++= rows
               history :+= (res.version, model, vName)
             }
-          case 2 => // predicate delete
+          case 2 => // predicate delete — the same op as case 5, kept
+            // so the op distribution does not shift
             val (m, r) = (2 + rnd.nextInt(3), rnd.nextInt(2))
-            val res = AtomicLake.deleteWhere(spark, root)(
+            val res = AtomicLake.deleteWhereDV(spark, root)(
               pmod(col("id"), lit(m.toLong)) === r.toLong)
             model = model.filter { case (k, _) => k % m != r }
             history :+= (res.version, model, vName)

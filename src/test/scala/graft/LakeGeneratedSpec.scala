@@ -100,6 +100,33 @@ class LakeGeneratedSpec extends SparkSpec {
         .collect().toSeq shouldBe Seq("generated:month")
     }
 
+    it("update recomputes the generated columns its SET leaves alone " +
+        "and refuses a SET that contradicts one") {
+      val root = freshRoot("update")
+      AtomicLake.upsertPartitions(
+        Seq((1L, 40, 80, "2024-03-15", "2024-03"),
+          (2L, 5, 10, "2024-04-02", "2024-04"))
+          .toDF("id", "v", "v2", "d", "month"), root, Seq("month"))
+      AtomicLake.setGeneratedColumn(spark, root, "v2", "v * 2")
+      AtomicLake.setGeneratedColumn(spark, root, "month",
+        "substr(d, 1, 7)")
+      AtomicLake.updateWhere(spark, root,
+        Seq("v" -> lit(7), "d" -> lit("2024-09-01")))(col("id") === 1L)
+      AtomicLake.read(spark, root).select("id", "v", "v2", "month")
+        .as[(Long, Int, Int, String)].collect().toSet shouldBe
+        Set((1L, 7, 14, "2024-09"), (2L, 5, 10, "2024-04"))
+      // the recomputed generated PARTITION column moved the row
+      AtomicLake.currentSnapshot(root).get.files.keySet should
+        contain("month=2024-09")
+      val v = AtomicLake.currentVersion(root).get
+      val e = intercept[IllegalStateException] {
+        AtomicLake.updateWhere(spark, root,
+          Seq("v2" -> lit(0)))(col("id") === 2L)
+      }
+      e.getMessage should include("generated column 'v2'")
+      AtomicLake.currentVersion(root).get shouldBe v
+    }
+
     it("rename/drop interplay: generated and derived-from columns " +
         "are protected; dropGenerated frees them") {
       val root = freshRoot("interplay")

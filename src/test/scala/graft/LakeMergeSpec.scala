@@ -5,12 +5,13 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.sources.AtomicLake
 
-/** Row-level DELETE/UPDATE as copy-on-write file rewrites and keyed
-  * MERGE as merge-on-read (a deletion vector plus staged source rows):
-  * correctness of the row semantics, and the scale contract that only
-  * files actually CONTAINING affected rows are rewritten or gain a
-  * deletion vector — everything else keeps its manifest line (and its
-  * bytes) untouched.
+/** Row-level UPDATE, DELETE and keyed MERGE, all merge-on-read (a
+  * deletion vector, plus staged rows — updated images or source rows —
+  * for UPDATE and MERGE, in one commit): correctness of the row
+  * semantics, and the scale contract that only files actually
+  * CONTAINING affected rows gain a deletion vector — everything else
+  * keeps its manifest line (and its bytes) untouched. The vectors'
+  * own contract (chains, purge, reads, CDC) is LakeDvSpec's.
   */
 class LakeMergeSpec extends SparkSpec {
   import spark.implicits._
@@ -70,17 +71,30 @@ class LakeMergeSpec extends SparkSpec {
         Set((1, Some(10)), (2, None), (3, Some(2)))
     }
 
-    it("rewrites ONLY files containing matches") {
-      val root = freshRoot("upd_cow")
+    it("marks ONLY files containing matches and stages just the " +
+        "updated images") {
+      val root = freshRoot("upd_scoped")
       AtomicLake.upsertPartitions(
         (1 to 30).map(i => (i, s"p${i % 3}")).toDF("id", "part"),
         root, Seq("part"))
       val before = allFiles(root)
+      val p1 = AtomicLake.currentSnapshot(root).get.files("part=p1").toSet
       val r = AtomicLake.updateWhere(spark, root,
         Seq("id" -> (col("id") + 100)))(
         col("part") === "p1" && col("id") <= 10)
-      r.filesRewritten shouldBe 1
-      (before & allFiles(root)).size shouldBe before.size - 1
+      r.rowsChanged shouldBe 4 // ids 1, 4, 7, 10
+      r.filesRewritten shouldBe 0
+      // no data file removed; p1's file gains the vector, and the one
+      // staged file holds exactly the four images
+      before.subsetOf(allFiles(root)) shouldBe true
+      dvFiles(root) shouldBe p1
+      val staged = allFiles(root) -- before
+      staged.size shouldBe 1
+      AtomicLake.currentSnapshot(root).get.stats(staged.head)
+        .rows shouldBe 4
+      AtomicLake.read(spark, root).select("id").as[Int].collect()
+        .toSet shouldBe ((1 to 30).toSet -- Set(1, 4, 7, 10)) ++
+        Set(101, 104, 107, 110)
     }
 
     it("updating a partition column moves rows between partitions") {
@@ -111,6 +125,20 @@ class LakeMergeSpec extends SparkSpec {
       }.getMessage should include("unknown")
     }
 
+    it("CDC over an update commit: delete images of the old rows, " +
+        "insert images of the new") {
+      val root = freshRoot("upd_cdc")
+      val v0 = AtomicLake.append(
+        (1 to 10).map(i => (i, i)).toDF("id", "v"), root)
+      val r = AtomicLake.updateWhere(spark, root,
+        Seq("v" -> (col("v") * 10)))(col("id") <= 2)
+      val ch = AtomicLake.readChanges(spark, root, v0, r.version)
+      def side(t: String) = ch.filter($"_change_type" === t)
+        .select("id", "v").as[(Int, Int)].collect().sorted.toSeq
+      side("delete") shouldBe Seq((1, 1), (2, 2))
+      side("insert") shouldBe Seq((1, 10), (2, 20))
+    }
+
     it("zero matches commit nothing") {
       val root = freshRoot("upd_noop")
       AtomicLake.upsertPartitions(
@@ -122,13 +150,14 @@ class LakeMergeSpec extends SparkSpec {
     }
   }
 
+  // DELETE … WHERE: `deleteWhereDV`, the lake's one row-level delete
   describe("deleteWhere") {
     it("removes exactly the matching rows; result equals filter") {
       val root = freshRoot("del_rows")
       val base = (1 to 100).map(i => (i, i % 4, s"p${i % 3}"))
         .toDF("id", "m", "part")
       AtomicLake.upsertPartitions(base, root, Seq("part"))
-      val r = AtomicLake.deleteWhere(spark, root)($"m" === 2)
+      val r = AtomicLake.deleteWhereDV(spark, root)($"m" === 2)
       r.rowsChanged shouldBe 25
       AtomicLake.read(spark, root).select("id").as[Int]
         .collect().toSet shouldBe
@@ -139,25 +168,25 @@ class LakeMergeSpec extends SparkSpec {
       AtomicLake.upsertPartitions(
         Seq((1, Some(10)), (2, None), (3, Some(30)))
           .toDF("id", "v"), root, Nil)
-      val r = AtomicLake.deleteWhere(spark, root)($"v" > 20)
+      val r = AtomicLake.deleteWhereDV(spark, root)($"v" > 20)
       r.rowsChanged shouldBe 1
       AtomicLake.read(spark, root).select("id").as[Int]
         .collect().toSet shouldBe Set(1, 2)
     }
-    it("rewrites ONLY files containing matches; clean files keep " +
-        "their manifest lines byte-identical") {
-      val root = freshRoot("del_cow")
+    it("marks ONLY files containing matches; clean files keep their " +
+        "manifest lines and vectors") {
+      val root = freshRoot("del_scoped")
       // one file per partition; matches live only in part p1
       AtomicLake.upsertPartitions(
         (1 to 30).map(i => (i, s"p${i % 3}")).toDF("id", "part"),
         root, Seq("part"))
-      val before = allFiles(root)
-      val r = AtomicLake.deleteWhere(spark, root)(
+      val before = AtomicLake.currentSnapshot(root).get.files
+      val r = AtomicLake.deleteWhereDV(spark, root)(
         $"part" === "p1" && $"id" <= 10)
-      r.filesRewritten shouldBe 1
-      val after = allFiles(root)
-      // the two clean partitions' files survive AS THE SAME files
-      (before & after).size shouldBe 2
+      r.rowsChanged shouldBe 4 // ids 1, 4, 7, 10
+      r.filesRewritten shouldBe 0
+      AtomicLake.currentSnapshot(root).get.files shouldBe before
+      dvFiles(root) shouldBe before("part=p1").toSet
       AtomicLake.read(spark, root).count() shouldBe 30 - r.rowsChanged
     }
     it("zone-maps prune candidates driver-side: a range predicate " +
@@ -165,12 +194,13 @@ class LakeMergeSpec extends SparkSpec {
       val root = freshRoot("del_zm")
       // unpartitioned, one file per commit → id ranges 1-10, 11-20
       AtomicLake.append((1 to 10).toDF("id"), root)
+      val low = allFiles(root)
       AtomicLake.append((11 to 20).toDF("id"), root)
-      val before = allFiles(root)
-      val r = AtomicLake.deleteWhere(spark, root)($"id" >= 15)
-      r.filesRewritten shouldBe 1
-      // the 1-10 file was pruned by stats and survives untouched
-      (before & allFiles(root)).size shouldBe 1
+      // the 1-10 file is moved away: a delete that opened it would fail
+      val r = hidden(root, low.head)(
+        AtomicLake.deleteWhereDV(spark, root)($"id" >= 15))
+      r.rowsChanged shouldBe 6
+      dvFiles(root) shouldBe (allFiles(root) -- low)
       AtomicLake.read(spark, root).select("id").as[Int]
         .collect().toSet shouldBe (1 to 14).toSet
     }
@@ -179,7 +209,7 @@ class LakeMergeSpec extends SparkSpec {
       AtomicLake.upsertPartitions(
         Seq((1, "a")).toDF("id", "part"), root, Seq("part"))
       val v0 = AtomicLake.currentVersion(root).get
-      val r = AtomicLake.deleteWhere(spark, root)($"id" > 100)
+      val r = AtomicLake.deleteWhereDV(spark, root)($"id" > 100)
       r shouldBe AtomicLake.Rewrite(v0, 0L, 0)
       AtomicLake.currentVersion(root).get shouldBe v0
     }
@@ -188,30 +218,38 @@ class LakeMergeSpec extends SparkSpec {
       val v0 = AtomicLake.upsertPartitions(
         (1 to 10).map(i => (i, "a")).toDF("id", "part"),
         root, Seq("part"))
-      AtomicLake.deleteWhere(spark, root)($"id" <= 5)
+      AtomicLake.deleteWhereDV(spark, root)($"id" <= 5)
       AtomicLake.readVersion(spark, root, v0).count() shouldBe 10
       AtomicLake.read(spark, root).count() shouldBe 5
     }
     it("deleting EVERY row leaves a readable empty table") {
       val root = freshRoot("del_everything")
       AtomicLake.append((1 to 10).toDF("id"), root)
-      val r = AtomicLake.deleteWhere(spark, root)($"id" > 0)
+      val r = AtomicLake.deleteWhereDV(spark, root)($"id" > 0)
       r.rowsChanged shouldBe 10
-      val back = AtomicLake.read(spark, root)
+      def back = AtomicLake.read(spark, root)
+      back.count() shouldBe 0
+      back.columns.toSeq shouldBe Seq("id")
+      // the purge drops the emptied file: a zero-file manifest
+      AtomicLake.purgeDeletes(spark, root).rowsChanged shouldBe 10
+      allFiles(root) shouldBe empty
       back.count() shouldBe 0
       back.columns.toSeq shouldBe Seq("id")
       // and the table accepts new data afterwards
       AtomicLake.append(Seq(99).toDF("id"), root)
-      AtomicLake.read(spark, root).select("id").as[Int]
-        .collect().toSet shouldBe Set(99)
+      back.select("id").as[Int].collect().toSet shouldBe Set(99)
     }
     it("a delete emptying a whole file drops it without replacement") {
       val root = freshRoot("del_all")
       AtomicLake.append((1 to 10).toDF("id"), root)
       AtomicLake.append((11 to 20).toDF("id"), root)
-      val r = AtomicLake.deleteWhere(spark, root)($"id" <= 10)
+      val r = AtomicLake.deleteWhereDV(spark, root)($"id" <= 10)
       r.rowsChanged shouldBe 10
-      allFiles(root).size shouldBe 1
+      val kept = allFiles(root) -- dvFiles(root)
+      // the purge pays the rewrite: the emptied file leaves, with no
+      // zero-row placeholder, and the other stays as is
+      AtomicLake.purgeDeletes(spark, root).filesRewritten shouldBe 1
+      allFiles(root) shouldBe kept
       AtomicLake.read(spark, root).select("id").as[Int]
         .collect().toSet shouldBe (11 to 20).toSet
     }
@@ -492,7 +530,10 @@ class LakeMergeSpec extends SparkSpec {
         "re-insert — net effect is the deletion") {
       val root = freshRoot("rw_cdc")
       val v0 = AtomicLake.append((1 to 10).toDF("id"), root)
-      val r = AtomicLake.deleteWhere(spark, root)($"id" <= 3)
+      AtomicLake.deleteWhereDV(spark, root)($"id" <= 3)
+      // the purge rewrites the dv'd file: across both commits the
+      // file diff sees the old image leave and the survivors arrive
+      val r = AtomicLake.purgeDeletes(spark, root)
       val ch = AtomicLake.readChanges(spark, root, v0, r.version)
       ch.filter($"_change_type" === "delete").count() shouldBe 10
       ch.filter($"_change_type" === "insert").select("id").as[Int]

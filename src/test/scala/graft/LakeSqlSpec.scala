@@ -57,6 +57,8 @@ class LakeSqlSpec extends SparkSpec {
   }
 
   describe("DELETE FROM LAKE / REORG APPLY PURGE") {
+    // Copy-on-write is now a DELETE followed by a purge: the purge is
+    // the rewrite, and it reports the files it rewrote.
     it("copy-on-write DELETE removes matching rows and reports the rewrite") {
       val root = freshRoot("delete_cow")
       AtomicLake.append((1 to 20).map(i => (i, i % 2)).toDF("id", "m"),
@@ -64,25 +66,40 @@ class LakeSqlSpec extends SparkSpec {
       val r = spark.sql(s"DELETE FROM LAKE '$root' WHERE m = 1")
         .as[(Long, Long, Int)].head()
       r._2 shouldBe 10L // rows_deleted
-      r._3 should be >= 1 // files_rewritten
-      AtomicLake.read(spark, root).count() shouldBe 10
+      val p = spark.sql(s"REORG LAKE '$root' APPLY PURGE")
+        .as[(Long, Long, Int)].head()
+      p._3 should be >= 1 // files_rewritten
+      AtomicLake.currentSnapshot(root).get.dvs shouldBe empty
+      AtomicLake.read(spark, root).select("id").as[Int]
+        .collect().sorted shouldBe (2 to 20 by 2).toArray
     }
+    // Every DELETE now uses vectors; the clause itself is refused below.
     it("USING VECTORS deletes merge-on-read; REORG APPLY PURGE materializes") {
       val root = freshRoot("delete_dv")
       AtomicLake.append((1 to 20).map(i => (i, i % 2)).toDF("id", "m"),
         root)
-      val r = spark.sql(
-        s"DELETE FROM LAKE '$root' USING VECTORS WHERE m = 0")
+      val files = AtomicLake.currentSnapshot(root).get.allFiles
+      val r = spark.sql(s"DELETE FROM LAKE '$root' WHERE m = 0")
         .as[(Long, Long, Int)].head()
-      r._2 shouldBe 10L
+      r._2 shouldBe 10L // rows_deleted
       r._3 shouldBe 0 // nothing rewritten — positions went to a sidecar
-      AtomicLake.currentSnapshot(root).get.dvs should not be empty
+      AtomicLake.currentSnapshot(root).get.dvs.keySet shouldBe files.toSet
       AtomicLake.read(spark, root).count() shouldBe 10
       val p = spark.sql(s"REORG LAKE '$root' APPLY PURGE")
         .as[(Long, Long, Int)].head()
       p._2 shouldBe 10L // rows purged
+      p._3 shouldBe 1 // files_rewritten
       AtomicLake.currentSnapshot(root).get.dvs shouldBe empty
       AtomicLake.read(spark, root).count() shouldBe 10
+    }
+    it("a USING VECTORS clause is no longer lake grammar: Spark's " +
+        "parser refuses it and nothing commits") {
+      val root = freshRoot("delete_using_vectors")
+      val v = AtomicLake.append(Seq((1, 0)).toDF("id", "m"), root)
+      an[org.apache.spark.sql.catalyst.parser.ParseException] should be
+        thrownBy(spark.sql(
+          s"DELETE FROM LAKE '$root' USING VECTORS WHERE m = 0"))
+      AtomicLake.currentVersion(root).get shouldBe v
     }
     it("UPDATE LAKE SET ... WHERE updates in place, commas in calls intact") {
       val root = freshRoot("update_sql")
@@ -93,6 +110,9 @@ class LakeSqlSpec extends SparkSpec {
           "WHERE id <= 3")
         .as[(Long, Long, Int)].head()
       r._2 shouldBe 3L
+      r._3 shouldBe 0 // images staged, matched rows behind a vector
+      AtomicLake.currentSnapshot(root).get.dvs should have size 1
+      AtomicLake.read(spark, root).count() shouldBe 10
       AtomicLake.read(spark, root)
         .filter($"id" > 100).select("id", "v").as[(Int, Double)]
         .collect().toSet shouldBe

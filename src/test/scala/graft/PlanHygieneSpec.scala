@@ -173,6 +173,24 @@ class PlanHygieneSpec extends SparkSpec {
       jobs shouldBe 1
     }
 
+    it("an update runs at most 2 Spark jobs: the positions pass and " +
+        "the staging write") {
+      val root = dvLake("update_jobs")
+      val (r, jobs) = jobsDuring(AtomicLake.updateWhere(spark, root,
+        Seq("v" -> lit(99)))($"id".isin(3L, 100L)))
+      r.rowsChanged shouldBe 2
+      jobs should be <= 2
+      AtomicLake.read(spark, root).filter($"v" === 99).count() shouldBe 2
+    }
+
+    it("a SQL DELETE FROM LAKE runs one Spark job") {
+      val root = dvLake("sql_delete_jobs")
+      val (_, jobs) = jobsDuring(
+        spark.sql(s"DELETE FROM LAKE '$root' WHERE id IN (3, 100)"))
+      jobs shouldBe 1
+      AtomicLake.rowCount(root) shouldBe Some(298L)
+    }
+
     it("a merge runs at most 4 Spark jobs, onto clean or dv'd files") {
       val root = dvLake("merge_jobs")
       val (clean, cleanJobs) = jobsDuring(AtomicLake.merge(spark, root,
